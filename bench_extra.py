@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Per-query isolation bench (guide §1.4): times each named query with the
-noop sink on the bench session config, best-of-N, and optionally dumps
-``explain("formatted")`` to a plans directory.  Does NOT replace bench.py
-(frozen); this is the measurement harness for optimization work.
+"""Per-query isolation bench (guide §1.4): times each named query (default:
+``bench.HEADLINE``) with the noop sink on the bench session config,
+best-of-N, and optionally dumps ``explain("formatted")`` to a plans
+directory.  Does NOT replace bench.py (frozen); this is the measurement
+harness for optimization work.
 
     python bench_extra.py --sf-dir /root/testdata/sf1.0 --plans plans/r06 \
         --suffix before [--names q1_pricing_summary ...]
@@ -21,22 +22,6 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-HEADLINE = (
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q_regional_revenue",
-    "token_stats",
-    "quality_score",
-    "o3_sessionize",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "similarity_cosine_topk",
-    "extract_documents",
-    "boilerplate_strip",
-    "corpus_curation",
-)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
@@ -49,6 +34,8 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry
+    from bench import HEADLINE
+    from extractor.plan_lint import formatted_plan
     from extractor.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -73,8 +60,7 @@ def main() -> None:
         print(f"[bench_extra] {name}: {best:.3f}s", file=sys.stderr, flush=True)
         if args.plans:
             df = fn(spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+            plan = formatted_plan(df)
             with open(os.path.join(
                     args.plans, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(plan)

@@ -5,12 +5,14 @@ reference converter (Trinq2003/document-converter) as a Spark DataFrame
 pipeline over multi-turn transcript tables:
 
 - ``extractor.kernel``    — the pure T2–T10 extraction function (Arrow-batched)
-- ``extractor.pipeline``  — DataFrame pipeline: partition/salt/sort/extract
+- ``extractor.pipeline``  — DataFrame pipeline: partition/salt/sort/extract,
+                             plus per-partition lineage + throughput
+                             metrics (``lineage_manifest``)
 - ``extractor.checkpoint``— partition-level checkpoint + resume (left-anti join)
-- ``extractor.metrics``   — per-partition lineage + throughput metrics
 - ``extractor.transcripts``— deterministic synthetic transcripts generator
 - ``extractor.ops``       — training-data-pipeline operators (dedup,
-                             similarity, text stats, multimodal plumbing)
+                             similarity, sampling, text stats, multimodal
+                             plumbing, ...) and the shared ``md5_bucket``
 
 Deployable via ``spark-submit --py-files extractor.zip`` (see scripts/make_zip.sh).
 """

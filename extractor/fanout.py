@@ -15,7 +15,8 @@ provably starved AND provably small:
   (``inputFiles()`` is a driver-side listing, ~1 ms — at production file
   counts the guard never fires and no shuffle is added);
 - small: the files are local and their on-disk size is under
-  ``FAN_OUT_MAX_BYTES`` (driver-side ``os.path.getsize``, no Spark job).
+  ``FAN_OUT_MAX_BYTES`` = 1 GiB, a fixed constant (driver-side
+  ``os.path.getsize``, no Spark job).
   Remote URIs (hdfs://, s3a://) or unknown sizes fail safe to
   "don't shuffle" — a few huge files are better served by row-group
   splits than by a full payload shuffle.
@@ -36,9 +37,7 @@ from pyspark.sql import functions as F
 # Cap on the bytes a fan-out shuffle may move (compressed, on-disk).
 # Tables needing the fix are maxPartitionBytes-bounded single splits by
 # construction; 1 GiB of headroom covers multi-file-but-starved layouts.
-FAN_OUT_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(1 << 30))
-)
+FAN_OUT_MAX_BYTES = 1 << 30
 
 
 def fan_out_scan(

@@ -8,5 +8,38 @@ an ANSI/DuckDB SQL oracle used by the driver's correctness gate:
                     language-ID heuristic, fingerprinting
 - ``dedup``       — exact, MinHash+LSH, SimHash, n-gram Jaccard
 - ``similarity``  — brute-force cosine top-k + LSH-bucketed ANN
-- ``multimodal``  — binary-column decode/feature plumbing (decode stubbed)
+- ``sampling``    — keyed sampling, corpus mixing, training order
+- ``tokenize``    — BPE merge learning + map-only encode
+- ``convops``     — conversation-level curation over transcript-shaped data
+- ``temporal``    — as-of and interval-containment joins
+- ``links``       — anchor/link extraction and link-graph ops
+- ``structure``   — heading-outline side table from the DOM parser
+- ``export``      — JSONL training-shard sink with a verified manifest
+- ``maintenance`` — small-file compaction of parquet tables
+- ``multimodal``  — binary-column decode/feature plumbing
+
+The keyed-uniform bucket (first 8 md5 hex digits of ``salt || key``)
+has one Spark helper, ``md5_bucket`` below; its DuckDB twin is
+``__spark_entry__._dd_md5_bucket``.
 """
+
+from __future__ import annotations
+
+from pyspark.sql import Column, functions as F
+
+
+def md5_bucket(
+    salt: str, *parts: str | Column, mod: int | None = None
+) -> Column:
+    """The engine's keyed-uniform primitive: the first 8 md5 hex digits of
+    ``salt || parts...`` read as a BIGINT in [0, 2^32), then ``% mod``
+    when *mod* is given.  A ``str`` part names a column and is cast to
+    string; a Column part is concatenated as is.  A NULL part gives NULL.
+
+    Its DuckDB twin is ``__spark_entry__._dd_md5_bucket``, which
+    reproduces it bit for bit."""
+    cols = [F.col(p).cast("string") if isinstance(p, str) else p for p in parts]
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit(salt), *cols)), 1, 8), 16, 10
+    ).cast("long")
+    return h if mod is None else h % mod

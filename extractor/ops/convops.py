@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from extractor.ops import md5_bucket
+
 
 def derived_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic transcript-shaped relation from the ``documents``
@@ -1273,18 +1275,7 @@ def pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: ``(task_id, k, n_attempts, n_correct, pass_ppm)`` for
     tasks with n ≥ k."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    draw = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("pass:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    draw = md5_bucket("pass:", "doc_id", mod=1000)
     t = docs.select(
         F.pmod(F.col("doc_id"), F.lit(PASS_TASK_MOD)).alias("task_id"),
         (draw < PASS_RATE_PPT).cast("long").alias("ok"),

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor.fanout import fan_out_scan, post_shuffle_filter
+from extractor.ops import md5_bucket
 
 N_HASHES = 8
 BAND_SIZE = 2  # 4 bands of 2 hashes
@@ -782,11 +783,7 @@ def train_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes when other docs arrive) — the property random() sampling lacks.
     md5-based so DuckDB reproduces it bit-for-bit."""
     docs = _docs(spark, sf_dir)
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("long")
-        % 1000
-    )
+    bucket = md5_bucket("split:", "doc_id", mod=1000)
     return docs.select(
         "doc_id",
         bucket.alias("split_bucket"),
@@ -878,18 +875,7 @@ def pretrain_pipeline(
         .where(F.col("rn") == 1)
         .select("doc_id", "text")
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    bucket = md5_bucket("split:", "doc_id", mod=1000)
     train = kept.where(bucket < 980)
     return chunk_df(train, chunk_tokens, overlap)
 
@@ -1266,18 +1252,7 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     incoming = docs.where(F.col("doc_id") % 5 == 0)
     existing = docs.where(F.col("doc_id") % 5 != 0)
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ing:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 3
-    )
+    bucket = md5_bucket("ing:", "doc_id", mod=3)
     # plant: bucket 0 copies an existing doc's text, bucket 1 an earlier
     # in-batch doc's text (left joins — missing neighbors keep own text)
     nb_corpus = existing.select(
@@ -1413,18 +1388,7 @@ def winnowing_containment_pairs(
         .where(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("win:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 5
-    )
+    bucket = md5_bucket("win:", "doc_id", mod=5)
     nb = docs.select(
         (F.col("doc_id") - 1).alias("doc_id"),
         F.substring("text", 1, 80).alias("t_nb"),
@@ -1610,9 +1574,12 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str,
     key pairs: ``levenshtein(a, b)`` depends only on the two strings, so
     every same-name key group shares one distance row, and the per-key
     argmin over a name group collapses to that group's minimum key (its
-    second-minimum when the probe key IS the minimum — the only key it
-    must exclude, since keys from other name groups can never collide
-    with it).  The key-pair join that used to materialize
+    second-minimum when the probe key IS the minimum, so a part never
+    matches itself).  The same ``when(k1 != k)`` guard also covers a
+    probe key that appears in another name group (a repeated
+    ``p_partkey`` under a different name): when it is that group's
+    minimum, the group's second-minimum stands in for it there too.
+    The key-pair join that used to materialize
     |block|² rows (50M at sf0.1, where 20k parts carry only 64 distinct
     names) becomes |names|² ≈ 448 banded comparisons plus two map-side-
     combinable key aggregates — the guide-§8 shape: decide on the small
@@ -1903,18 +1870,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: ``(doc_id, n_grams, n_seen, novelty_ppm)`` — test docs with
     at least one 8-gram."""
     _t, _bench, doc_grams = _decon_frames(spark, sf_dir)
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    bucket = md5_bucket("split:", "doc_id", mod=1000)
     train_grams = (
         doc_grams.where(bucket < 980).select("g").distinct()
         .withColumn("seen", F.lit(1))

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from extractor.ops import md5_bucket
+
 LINK_SCHEMA = "doc_id long, href string, anchor string"
 
 
@@ -891,24 +893,7 @@ def deepwalk_corpus(edges: DataFrame, walk_len: int = 4) -> DataFrame:
     frames = [cur.select("start", F.lit(0).alias("step"), "node")]
     for s in range(1, walk_len + 1):
         pick = (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("walk:"),
-                                F.col("node").cast("string"),
-                                F.lit(f":{s}"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.col("deg"),
-            )
+            F.pmod(md5_bucket("walk:", "node", F.lit(f":{s}")), F.col("deg"))
             + 1
         )
         cur = (

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from extractor.ops import md5_bucket
+
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
@@ -795,20 +797,7 @@ def pareto_frontier(
 
     Output: frontier ``(x, y, n_docs)`` ordered by x desc."""
     docs = _read(spark, sf_dir, "documents")
-    y = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("pareto:"), F.col("doc_id").cast("string"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
+    y = md5_bucket("pareto:", "doc_id", mod=1000000)
     pts = (
         docs.select(F.col("n_chars").cast("long").alias("x"), y.alias("y"))
         .groupBy("x", "y")
@@ -907,18 +896,7 @@ def ab_experiment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "user_id", F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents")
     )
-    variant = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("exp:"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    variant = md5_bucket("exp:", "user_id", mod=2)
     per_user = ev.groupBy("user_id").agg(F.sum("cents").alias("cents"))
     v = per_user.select(variant.alias("v"), "cents").groupBy("v").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -985,22 +963,10 @@ def bandit_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms = F.array(*[F.lit(a) for a in BANDIT_ARMS])
     policy_arm = F.element_at(
         arms,
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("policy:"),
-                            (F.col("user_id") % 10).cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % len(BANDIT_ARMS)
+        md5_bucket(
+            "policy:",
+            (F.col("user_id") % 10).cast("string"),
+            mod=len(BANDIT_ARMS),
         ).cast("int")
         + 1,
     )

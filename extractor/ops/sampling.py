@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from extractor.ops import md5_bucket
+
 # Per-language sampling rates in basis points (integer — no float compare).
 STRATA_RATES_BP = {"en": 10000, "de": 5000, "fr": 5000, "es": 2500, "zh": 2500}
 DEFAULT_RATE_BP = 1000
@@ -33,22 +35,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _hash_bucket(salt: str, mod: int):
-    """First 8 md5 hex digits of ``salt || doc_id`` as an integer in
-    [0, mod) — the shared keyed-uniform primitive (same construction as
-    dedup.train_split_assign, which DuckDB reproduces bit-for-bit)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % mod
-    )
-
-
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum (language) keyed sampling at fixed rates: keep a document
     iff its hash bucket falls under the stratum's basis-point rate.  The
@@ -59,7 +45,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.lit(DEFAULT_RATE_BP)
     for lang, bp in STRATA_RATES_BP.items():
         rate = F.when(F.col("lang") == lang, bp).otherwise(rate)
-    bucket = _hash_bucket("strat:", 10000)
+    bucket = md5_bucket("strat:", "doc_id", mod=10000)
     return docs.select(
         "doc_id",
         "lang",
@@ -111,7 +97,7 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rate_ppm"),
         )
     )
-    bucket = _hash_bucket("mix:", 1000000)
+    bucket = md5_bucket("mix:", "doc_id", mod=1000000)
     return (
         with_tok.withColumn("mix_bucket", bucket)
         .join(F.broadcast(rates), "lang")
@@ -131,7 +117,7 @@ def training_order(spark: SparkSession, sf_dir: str, n_shards: int = 16) -> Data
     executor count at real scale."""
     docs = _docs(spark, sf_dir)
     okey = F.md5(F.concat(F.lit("order:"), F.col("doc_id").cast("string")))
-    shard = _hash_bucket("shard:", n_shards)
+    shard = md5_bucket("shard:", "doc_id", mod=n_shards)
     w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
     return (
         docs.select(
@@ -346,7 +332,7 @@ def mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.expr("eppm DIV 1000000").alias("full"),
             (F.col("eppm") % 1000000).alias("frac"),
-            _hash_bucket("epoch:", 1000000).alias("draw"),
+            md5_bucket("epoch:", "doc_id", mod=1000000).alias("draw"),
         )
     )
     return (
@@ -392,25 +378,7 @@ def epoch_training_order(spark: SparkSession, sf_dir: str,
             F.col("doc_id").cast("string"),
         )
     )
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("eshard:"),
-                        F.col("epoch").cast("string"),
-                        F.lit(":"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % n_shards
-    )
+    shard = md5_bucket("eshard:", "epoch", F.lit(":"), "doc_id", mod=n_shards)
     w = Window.partitionBy("epoch", "shard").orderBy("order_key", "doc_id")
     return (
         epochs.select(

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from extractor.ops import md5_bucket
+
 
 def _epoch_us(c: Column) -> Column:
     """Exact epoch microseconds for TIMESTAMP and TIMESTAMP_NTZ alike
@@ -363,6 +365,9 @@ def cogroup_merge_asof(spark, sf_dir: str, buckets: int | None = None) -> DataFr
     gap_us)``; view columns NULL when no view precedes the click."""
     if buckets is None:
         buckets = max(spark.sparkContext.defaultParallelism * 4, 16)
+    if buckets < 1:
+        # pmod(.., 0) is NULL: every user would collapse into one bucket
+        raise ValueError(f"buckets must be >= 1, got {buckets}")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     us = _epoch_us(F.col("ts"))
     # NULL users get the reserved bucket -1 (pmod is always in [0, B)):
@@ -524,20 +529,7 @@ def late_data_audit(spark, sf_dir: str,
             "unix_micros(CAST(ts AS TIMESTAMP_LTZ)) DIV 1000000"
         ).cast("long").alias("ets"),
     )
-    delay = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("delay:"), F.col("event_id").cast("string"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % LATE_MAX_DELAY_S
-    )
+    delay = md5_bucket("delay:", "event_id", mod=LATE_MAX_DELAY_S)
     arr = ev.withColumn("ats", F.col("ets") + delay)
     w = (
         Window.partitionBy("event_type")

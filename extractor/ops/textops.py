@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from extractor.fanout import fan_out_scan
+from extractor.ops import md5_bucket
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 
@@ -778,14 +779,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction pipeline already uses."""
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     toks = docs.select("doc_id", "lang", F.explode(_tok_arr()).alias("tok"))
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("dsir:"), F.col("tok"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % DSIR_BUCKETS
-    )
+    bucket = md5_bucket("dsir:", F.col("tok"), mod=DSIR_BUCKETS)
     tb = toks.select("doc_id", "lang", bucket.alias("b"))
     counts = tb.groupBy("b").agg(
         F.count(F.lit(1)).alias("cr"),
@@ -979,22 +973,8 @@ def _ft_weight(feat):
     [-1000, 1000] derived from the bucket id.  Both hops are the
     engine's shared md5 keyed-uniform primitive, so a SQL oracle
     reproduces every weight bit-for-bit."""
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("ftb:"), feat)), 1, 8), 16, 10)
-        .cast("long")
-        % FT_BUCKETS
-    )
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ftw:"), bucket.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    )
+    bucket = md5_bucket("ftb:", feat, mod=FT_BUCKETS)
+    return md5_bucket("ftw:", bucket.cast("string"), mod=2001) - 1000
 
 
 def hashed_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1071,18 +1051,7 @@ def paragraph_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"transform(sequence(0, CAST(floor((length(text) - 1) / {PARA_W}) AS INT)),"
         f" i -> substr(text, CAST(i * {PARA_W} + 1 AS INT), {PARA_W}))"
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("pdup:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 3
-    )
+    bucket = md5_bucket("pdup:", "doc_id", mod=3)
     paras = (
         F.when(bucket == 0, F.concat(base, F.slice(base, 1, 1)))
         .when((bucket == 1) & (n_win >= 2), F.concat(base, F.slice(base, 1, 2)))
@@ -1153,18 +1122,7 @@ def cms_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
         *[
             F.struct(
                 F.lit(j).cast("int").alias("j"),
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit(f"cms{j}:"), F.col("tok"))),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % CMS_W
-                ).alias("bucket"),
+                md5_bucket(f"cms{j}:", F.col("tok"), mod=CMS_W).alias("bucket"),
             )
             for j in range(CMS_D)
         ]

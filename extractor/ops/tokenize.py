@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from extractor.ops import md5_bucket
+
 END_OF_WORD = "</w>"
 
 
@@ -397,22 +399,7 @@ def span_corruption_plan(
         ).alias("blk"),
     )
     off = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("span:"),
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("blk").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long"),
+        md5_bucket("span:", "doc_id", F.lit(":"), "blk"),
         F.lit(block - span_len + 1),
     )
     return b.select(

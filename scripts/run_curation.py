@@ -80,22 +80,9 @@ def main() -> int:
             .drop("_rn")
         )
     if "split" in stages:
-        bucket = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("split:"), F.col("doc_id").cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 1000
-        )
+        from extractor.ops import md5_bucket
+
+        bucket = md5_bucket("split:", "doc_id", mod=1000)
         docs = docs.withColumn(
             "split",
             F.when(bucket < 980, "train")

@@ -8,6 +8,8 @@ these tests pin the algorithmic invariants the oracle can't see
 import pytest
 from pyspark.sql import functions as F
 
+from extractor.ops import md5_bucket
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -107,18 +109,7 @@ def test_pareto_frontier_matches_naive_dominance(spark):
         for r in pareto_frontier(spark, SF, bucket_width=64).collect()
     }
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    y = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("pareto:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
+    y = md5_bucket("pareto:", "doc_id", mod=1000000)
     pts = (
         docs.select(F.col("n_chars").cast("long").alias("x"), y.alias("y"))
         .groupBy("x", "y")

@@ -16,14 +16,9 @@ from pyspark.sql import functions as F
 
 from extractor.ops import dedup, textops
 from extractor.ops.links import triangle_count
+from extractor.plan_lint import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def _tri(spark, edges):
@@ -62,7 +57,7 @@ def test_triangle_count_skewed_hub(spark):
 
 def test_triangle_count_plan_all_equi_joins(spark):
     df = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "src long, dst long")
-    plan = _plan(triangle_count(df))
+    plan = formatted_plan(triangle_count(df))
     # the wedge and closing joins must be equi joins; the only non-equi
     # nodes allowed are the final three 1-row aggregate cross joins
     assert "CartesianProduct" not in plan, plan
@@ -114,7 +109,7 @@ def test_inverted_index_posting_cap_exercised(spark):
 def test_inverted_index_two_shuffles(spark):
     # (tok, doc_id) agg shuffle + tok shuffle shared by the window and the
     # final agg (the window's hashpartitioning(tok) satisfies the groupBy)
-    plan = _plan(textops.inverted_index(spark, SF))
+    plan = formatted_plan(textops.inverted_index(spark, SF))
     assert plan.count("Exchange (") <= 2, plan
 
 
@@ -150,7 +145,7 @@ def test_nfc_matches_unicodedata(spark):
 
 
 def test_nfc_is_map_only(spark):
-    plan = _plan(textops.nfc_normalize_stats(spark, SF))
+    plan = formatted_plan(textops.nfc_normalize_stats(spark, SF))
     assert "Exchange" not in plan, f"NFC kernel must not shuffle:\n{plan}"
 
 
@@ -182,8 +177,8 @@ def test_decontaminate_bloom_filter_is_join_free(spark):
     # the gram-stream prefilter must be a codegen'd Filter (bit_get over a
     # literal array), NOT a join: exactly the exact path's join count
     t, bench, doc_grams = dedup._decon_frames(spark, SF)
-    exact_plan = _plan(dedup.decontaminate(spark, SF))
-    bloom_plan = _plan(dedup.decontaminate_bloom(spark, SF))
+    exact_plan = formatted_plan(dedup.decontaminate(spark, SF))
+    bloom_plan = formatted_plan(dedup.decontaminate_bloom(spark, SF))
     assert bloom_plan.count("Join") == exact_plan.count("Join"), bloom_plan
     assert "bit_get" in bloom_plan
 
@@ -232,7 +227,7 @@ def test_substring_dup_profile_matches_brute_force(spark):
 def test_substring_dup_profile_plan_no_expand_no_python(spark):
     # two-level distinct-then-count (no count(distinct) Expand pass) and
     # fully JVM-side window generation (no Python/Arrow stage)
-    plan = _plan(dedup.substring_dup_profile(spark, SF))
+    plan = formatted_plan(dedup.substring_dup_profile(spark, SF))
     assert "Expand" not in plan, plan
     assert "Python" not in plan, plan
 

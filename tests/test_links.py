@@ -16,6 +16,7 @@ from extractor.ops.links import (
     normalize_url,
     url_frontier,
 )
+from extractor.plan_lint import formatted_plan
 
 
 def _norm(spark, *urls):
@@ -197,9 +198,7 @@ def test_anchor_text_topk_shape_and_plan(spark):
         # rank must follow (count desc, anchor) deterministically
         by_rank = sorted(rs, key=lambda x: x[0])
         assert by_rank == sorted(rs, key=lambda x: (x[1], x[2]))
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     # top-k filter must be pushed inside the window operator
     assert "WindowGroupLimit" in plan, plan
 

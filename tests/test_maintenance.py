@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from extractor.ops.maintenance import compact_files, _list_parquet_files
+from extractor.plan_lint import formatted_plan
 
 
 def _frag(spark, tmp_path, n_files=12, rows=5000):
@@ -89,9 +90,7 @@ def test_bucketed_colocated_join_zero_exchange(spark):
     from extractor.ops.maintenance import bucketed_colocated_join
 
     df = bucketed_colocated_join(spark, "/root/testdata/sf0.001")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Exchange" not in plan, plan
     assert "SortMergeJoin" in plan, plan
 

@@ -12,14 +12,9 @@ from pyspark.sql import functions as F
 
 from extractor.ops import relational
 from extractor.pipeline import extract_transcripts
+from extractor.plan_lint import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def _n_exchanges(plan: str) -> int:
@@ -31,7 +26,7 @@ def _n_exchanges(plan: str) -> int:
 
 
 def test_point_lookup_pushdown(spark):
-    plan = _plan(relational.s7_point_lookup(spark, SF))
+    plan = formatted_plan(relational.s7_point_lookup(spark, SF))
     assert "PushedFilters" in plan
     assert "EqualTo(doc_id,42)" in plan.replace(" ", "").replace("\n", "") or (
         "doc_id" in plan and "PushedFilters: [" in plan
@@ -39,7 +34,7 @@ def test_point_lookup_pushdown(spark):
 
 
 def test_column_pruning_reaches_scan(spark):
-    plan = _plan(relational.o1_turn_ordering(spark, SF))
+    plan = formatted_plan(relational.o1_turn_ordering(spark, SF))
     # events has 6 columns; this query needs 4 — props/value must be pruned
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schema, plan
@@ -48,14 +43,14 @@ def test_column_pruning_reaches_scan(spark):
 
 
 def test_q3_broadcasts_dimension(spark):
-    plan = _plan(relational.q3_shipping_priority(spark, SF))
+    plan = formatted_plan(relational.q3_shipping_priority(spark, SF))
     assert "BroadcastHashJoin" in plan
     # the customer-side filter must be pushed to its scan
     assert "c_mktsegment" in plan
 
 
 def test_q_regional_static_broadcast_single_exchange(spark):
-    plan = _plan(relational.q_regional_revenue(spark, SF))
+    plan = formatted_plan(relational.q_regional_revenue(spark, SF))
     # All three dim joins must be broadcast, and STATICALLY (the hint is
     # gated on the supplier table's on-disk size): the only Exchange in
     # the plan is the final agg shuffle.  Without the static hint the dim
@@ -73,7 +68,7 @@ def test_map_only_extraction_no_shuffle(spark):
         F.col("text"),
     )
     out = extract_transcripts(df, partition_mode="map_only", sort_output=False)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     assert "Exchange" not in plan, f"map-only plan must not shuffle:\n{plan}"
     assert "MapInPandas" in plan
 
@@ -85,7 +80,7 @@ def test_sorted_output_single_shuffle(spark):
         F.col("text"),
     )
     out = extract_transcripts(df, partition_mode="map_only", sort_output=True)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     # exactly one Exchange node (tree line "Exchange (n)"): the output-layout
     # repartition; formatted output repeats the name in the detail section
     assert plan.count("Exchange (") == 1, plan
@@ -93,7 +88,7 @@ def test_sorted_output_single_shuffle(spark):
 
 
 def test_q1_partial_aggregation(spark):
-    plan = _plan(relational.q1_pricing_summary(spark, SF))
+    plan = formatted_plan(relational.q1_pricing_summary(spark, SF))
     # partial + final aggregate pair => map-side combine before the shuffle
     assert plan.count("HashAggregate (") >= 2, plan
     # and the date filter must reach the scan
@@ -108,7 +103,7 @@ def test_extraction_scan_prunes_unused_columns(spark):
         F.col("props").alias("text"),
     )
     out = extract_transcripts(df, partition_mode="map_only", sort_output=False)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schema
     assert "value" not in read_schema[0]
@@ -118,7 +113,7 @@ def test_extraction_scan_prunes_unused_columns(spark):
 def test_cosine_topk_broadcasts_queries(spark):
     from extractor.ops import similarity
 
-    plan = _plan(similarity.cosine_topk(spark, SF))
+    plan = formatted_plan(similarity.cosine_topk(spark, SF))
     # tiny query side must broadcast (nested-loop for the non-equi condition)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
@@ -157,7 +152,7 @@ def test_merge_upsert_broadcasts_changeset(spark):
     key set would hash 10^12 keys).  Each LeftAnti's BroadcastExchange
     must therefore sit on a *join output* (matched keys, <= |change-set|),
     i.e. a BroadcastHashJoin Inner — never directly on the target scan."""
-    plan = _plan(relational.s3_merge_upsert(spark, SF))
+    plan = formatted_plan(relational.s3_merge_upsert(spark, SF))
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin LeftOuter" in plan, plan
     assert "BroadcastHashJoin LeftAnti" in plan, plan
@@ -189,7 +184,7 @@ def test_entry_has_no_joins(spark):
     itself.  scan → kernel → single agg shuffle (+ tiny sort)."""
     import __spark_entry__ as e
 
-    plan = _plan(e.entry(spark))
+    plan = formatted_plan(e.entry(spark))
     assert "BroadcastExchange" not in plan, plan
     assert "Join" not in plan, plan
     assert "MapInPandas" in plan
@@ -202,7 +197,7 @@ def test_pack_sequences_distributed_prefix_sum(spark):
     bucket-subtotal window (input = one row per bucket, post-aggregation)."""
     from extractor.ops import dedup
 
-    plan = _plan(dedup.pack_sequences(spark, SF))
+    plan = formatted_plan(dedup.pack_sequences(spark, SF))
     # the doc-level running sum is partitioned (parallel)
     assert "hashpartitioning(bucket" in plan, plan
     # exactly one single-partition exchange: the bucket-subtotals window
@@ -217,7 +212,7 @@ def test_global_exact_k_sample_no_global_sort(spark):
     top-k, never a materialized global sort."""
     from extractor.ops import sampling
 
-    plan = _plan(sampling.global_exact_k_sample(spark, SF))
+    plan = formatted_plan(sampling.global_exact_k_sample(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
     assert "Sort (" not in plan, plan
 
@@ -227,7 +222,7 @@ def test_stratified_sample_map_only(spark):
     the decision is a hash + integer compare per row."""
     from extractor.ops import sampling
 
-    plan = _plan(sampling.stratified_sample(spark, SF))
+    plan = formatted_plan(sampling.stratified_sample(spark, SF))
     assert "Exchange" not in plan, f"stratified sample must not shuffle:\n{plan}"
 
 
@@ -237,7 +232,7 @@ def test_corpus_mix_broadcasts_rates(spark):
     that join must NOT shuffle (only the tiny aggregates may)."""
     from extractor.ops import sampling
 
-    plan = _plan(sampling.corpus_mix_sample(spark, SF))
+    plan = formatted_plan(sampling.corpus_mix_sample(spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     lines = _tree_lines(plan)
     join_idx = [
@@ -265,7 +260,7 @@ def test_training_order_single_shuffle(spark):
     the per-shard window; never a global sort / single partition."""
     from extractor.ops import sampling
 
-    plan = _plan(sampling.training_order(spark, SF))
+    plan = formatted_plan(sampling.training_order(spark, SF))
     assert plan.count("Exchange (") == 1, plan
     assert "hashpartitioning(shard" in plan, plan
     assert "SinglePartition" not in plan, plan
@@ -278,7 +273,7 @@ def test_pretrain_pipeline_single_shuffle(spark):
     materialization barriers between operators."""
     from extractor.ops import dedup
 
-    plan = _plan(dedup.pretrain_pipeline(spark, SF))
+    plan = formatted_plan(dedup.pretrain_pipeline(spark, SF))
     assert plan.count("Exchange (") == 1, plan
     assert "Window" in plan and "Generate" in plan  # keeper + chunk explode
 
@@ -290,7 +285,7 @@ def test_salted_join_spreads_hot_keys(spark):
     hot lang spans salt_buckets tasks."""
     from extractor.ops import relational
 
-    plan = _plan(relational.salted_skew_join(spark, SF))
+    plan = formatted_plan(relational.salted_skew_join(spark, SF))
     assert "BroadcastHashJoin" not in plan, plan
     assert "ShuffledHashJoin" in plan, plan
     import re
@@ -304,7 +299,7 @@ def test_vocab_topk_no_global_sort(spark):
     aggregate — never a full global Sort of the vocabulary."""
     from extractor.ops import textops
 
-    plan = _plan(textops.vocab_topk(spark, SF))
+    plan = formatted_plan(textops.vocab_topk(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
     assert plan.count("HashAggregate (") >= 2, plan  # map-side combine
     assert "Sort (" not in plan, plan
@@ -316,7 +311,7 @@ def test_tfidf_rank_filter_inside_window(spark):
     the doc-total + rank windows share one hash partitioning on doc_id."""
     from extractor.ops import textops
 
-    plan = _plan(textops.tfidf_top_terms(spark, SF))
+    plan = formatted_plan(textops.tfidf_top_terms(spark, SF))
     assert "WindowGroupLimit" in plan, plan
     assert plan.count("hashpartitioning(doc_id") >= 1, plan
     # single corpus scan on the ranked branch (+1 tiny n_docs count): the
@@ -344,7 +339,7 @@ def test_pack_sequences_two_level_identical_and_smaller_window(spark):
         for r in dedup.pack_sequences(spark, SF, two_level=True).collect()
     }
     assert single == double
-    plan = _plan(dedup.pack_sequences(spark, SF, two_level=True))
+    plan = formatted_plan(dedup.pack_sequences(spark, SF, two_level=True))
     assert plan.count("SinglePartition") == 1, plan
     assert "hashpartitioning(b2" in plan, plan  # the nested level exists
 
@@ -357,7 +352,7 @@ def test_line_dedup_count_join_shape(spark):
     corpus scale it degrades gracefully to a shuffle join on line_hash."""
     from extractor.ops import dedup
 
-    plan = _plan(dedup.line_dedup(spark, SF))
+    plan = formatted_plan(dedup.line_dedup(spark, SF))
     # partial aggregation: two HashAggregate levels around each count shuffle
     assert plan.count("HashAggregate") >= 4, plan
     assert "ObjectHashAggregate" in plan, plan
@@ -366,7 +361,7 @@ def test_line_dedup_count_join_shape(spark):
 def test_bpe_pair_counts_no_global_sort(spark):
     from extractor.ops.textops import bpe_pair_counts
 
-    plan = _plan(bpe_pair_counts(spark, SF))
+    plan = formatted_plan(bpe_pair_counts(spark, SF))
     # top-k must be TakeOrderedAndProject, never a global Sort+Exchange
     assert "TakeOrderedAndProject" in plan
     assert _n_exchanges(plan) == 1, plan  # the one pair-agg shuffle
@@ -377,7 +372,7 @@ def test_bpe_pair_counts_no_global_sort(spark):
 def test_dsir_two_shuffles_and_broadcasts(spark):
     from extractor.ops.textops import dsir_importance
 
-    plan = _plan(dsir_importance(spark, SF))
+    plan = formatted_plan(dsir_importance(spark, SF))
     # LLR table and totals must broadcast back onto the token stream —
     # never a shuffle join of token-cardinality rows against 256 buckets
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -388,7 +383,7 @@ def test_zscore_single_window_no_join(spark):
     from extractor.ops.temporal import zscore_outliers
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(zscore_outliers(ev))
+    plan = formatted_plan(zscore_outliers(ev))
     assert _n_exchanges(plan) == 1, plan  # one user_id hash partition
     assert "Join" not in plan
     assert "Window" in plan
@@ -398,7 +393,7 @@ def test_conv_ops_single_conv_shuffle(spark):
     from extractor.ops import convops
 
     for fn in (convops.conv_prefix_strip, convops.conv_token_truncate):
-        plan = _plan(fn(spark, SF))
+        plan = formatted_plan(fn(spark, SF))
         assert _n_exchanges(plan) == 1, plan  # conv_id partition only
         assert "Join" not in plan
 
@@ -407,7 +402,7 @@ def test_bfs_frontier_broadcasts(spark):
     import __spark_entry__ as entrymod
 
     df = entrymod.queries()["bfs_hop_distance"](spark, SF)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     # dist is unions of localCheckpoints; no sort-merge join of edges
     assert "SortMergeJoin" not in plan
 
@@ -417,7 +412,7 @@ def test_sft_pair_assembly_bounded_window_single_shuffle(spark):
     window (no unbounded prefix collect), zero joins, zero Python."""
     from extractor.ops import convops
 
-    plan = _plan(convops.sft_pair_assembly(spark, SF))
+    plan = formatted_plan(convops.sft_pair_assembly(spark, SF))
     assert _n_exchanges(plan) == 1, plan
     assert "Join" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
@@ -431,7 +426,7 @@ def test_tool_transitions_partial_agg(spark):
     only (prev_tool, tool) partials, not raw calls."""
     from extractor.ops import convops
 
-    plan = _plan(convops.tool_transitions(spark, SF))
+    plan = formatted_plan(convops.tool_transitions(spark, SF))
     assert "Join" not in plan
     assert plan.count("HashAggregate") >= 2, plan  # partial + final
 
@@ -439,7 +434,7 @@ def test_tool_transitions_partial_agg(spark):
 def test_conv_quality_gate_single_aggregate(spark):
     from extractor.ops import convops
 
-    plan = _plan(convops.conv_quality_gate(spark, SF))
+    plan = formatted_plan(convops.conv_quality_gate(spark, SF))
     assert _n_exchanges(plan) == 1, plan
     assert "Window" not in plan and "Join" not in plan
 
@@ -450,7 +445,7 @@ def test_conv_neardup_join_free(spark):
     re-join, no bucket-member self-join)."""
     from extractor.ops import convops
 
-    plan = _plan(convops.conv_neardup_pairs(spark, SF))
+    plan = formatted_plan(convops.conv_neardup_pairs(spark, SF))
     assert "Join" not in plan, plan
     assert "BatchEvalPython" not in plan
 
@@ -461,7 +456,7 @@ def test_semdedup_pair_search_is_equi_join(spark):
     all-pairs plan the cell topology exists to avoid."""
     from extractor.ops.similarity import semdedup_prune
 
-    plan = _plan(semdedup_prune(spark, SF))
+    plan = formatted_plan(semdedup_prune(spark, SF))
     assert "CartesianProduct" not in plan
 
 
@@ -473,7 +468,7 @@ def test_length_curriculum_no_corpus_sort(spark):
     from extractor.ops.sampling import length_curriculum_buckets
 
     df = length_curriculum_buckets(spark, SF)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert "Window" in plan
     # the bucket assignment itself must be join+project, no row_number
     # over the corpus: exactly one Window operator in the whole plan
@@ -484,7 +479,7 @@ def test_c4_and_mojibake_map_only(spark):
     from extractor.ops import textops
 
     for fn in (textops.c4_page_filter, textops.mojibake_stats):
-        plan = _plan(fn(spark, SF))
+        plan = formatted_plan(fn(spark, SF))
         assert _n_exchanges(plan) == 0, plan
         # scan -> filter -> projections only; no join, no python stage
         assert "Join" not in plan and "InPandas" not in plan
@@ -493,7 +488,7 @@ def test_c4_and_mojibake_map_only(spark):
 def test_matryoshka_windowgrouplimit_and_broadcast(spark):
     from extractor.ops.similarity import matryoshka_eval
 
-    plan = _plan(matryoshka_eval(spark, SF))
+    plan = formatted_plan(matryoshka_eval(spark, SF))
     # per-query top-k must be the map-side partial group limit, not a
     # full sort of the corpus per query
     assert "WindowGroupLimit" in plan, plan
@@ -504,7 +499,7 @@ def test_matryoshka_windowgrouplimit_and_broadcast(spark):
 def test_bin_pack_single_shard_shuffle(spark):
     from extractor.ops.dedup import bin_pack_nextfit
 
-    plan = _plan(bin_pack_nextfit(spark, SF))
+    plan = formatted_plan(bin_pack_nextfit(spark, SF))
     # exactly one Exchange: the hash shuffle into packing shards
     assert _n_exchanges(plan) == 1, plan
     assert "FlatMapGroupsInPandas" in plan
@@ -513,7 +508,7 @@ def test_bin_pack_single_shard_shuffle(spark):
 def test_grounding_audit_conv_locked_join(spark):
     from extractor.ops.convops import grounding_audit_query
 
-    plan = _plan(grounding_audit_query(spark, SF))
+    plan = formatted_plan(grounding_audit_query(spark, SF))
     # the self-join must key on conv_id (hash-partitioned equi-join with
     # the range predicate as join condition), never a cartesian product
     assert "CartesianProduct" not in plan, plan
@@ -522,7 +517,7 @@ def test_grounding_audit_conv_locked_join(spark):
 def test_curation_report_fused_single_scan(spark):
     from extractor.ops.textops import curation_report
 
-    plan = _plan(curation_report(spark, SF))
+    plan = formatted_plan(curation_report(spark, SF))
     # all three verdicts in one scan: exactly one Exchange (the
     # per-source agg) and zero joins
     assert _n_exchanges(plan) == 1, plan
@@ -535,7 +530,7 @@ def test_curation_report_fused_single_scan(spark):
 def test_classifier_auc_histogram_window(spark):
     from extractor.ops.textops import classifier_auc
 
-    plan = _plan(classifier_auc(spark, SF))
+    plan = formatted_plan(classifier_auc(spark, SF))
     # ranks never touch raw rows: the window runs after the
     # distinct-score aggregation, and there is no join
     assert "Join" not in plan
@@ -549,7 +544,7 @@ def test_domain_hits_broadcast_power_iteration(spark):
     # the default (materialize=True) hides the iteration plan behind an
     # eager localCheckpoint's ExistingRDD scan — gate the REAL lazy plan
     # via the materialize=False seam (same pattern as the kcore gate)
-    plan = _plan(
+    plan = formatted_plan(
         hits(e._layered_domain_graph(spark, SF), iterations=3,
              materialize=False)
     )
@@ -571,7 +566,7 @@ def test_domain_pagerank_broadcast_power_iteration(spark):
     import __spark_entry__ as e
     from extractor.ops.links import pagerank
 
-    plan = _plan(
+    plan = formatted_plan(
         pagerank(e._layered_domain_graph(spark, SF), iterations=3,
                  materialize=False)
     )
@@ -585,7 +580,7 @@ def test_domain_pagerank_broadcast_power_iteration(spark):
 def test_fuzzy_match_blocked_equi_join(spark):
     from extractor.ops.dedup import fuzzy_match_parts
 
-    plan = _plan(fuzzy_match_parts(spark, SF))
+    plan = formatted_plan(fuzzy_match_parts(spark, SF))
     # blocking makes the self-join an equi-join: no cartesian product /
     # broadcast nested loop; the argmin is a struct-min aggregate (no
     # row_number window sort)
@@ -604,7 +599,7 @@ def test_domain_kcore_edges_never_reshuffle(spark):
     # scan — gate the REAL lazy plan via the materialize=False seam
     df = kcore(e._layered_domain_graph(spark, SF), k=3, rounds=4,
                materialize=False)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     # every alive-set filter is a broadcast join against the persisted
     # edge table — the only Exchanges are the initial distinct and the
     # per-round degree aggregations (node-cardinality keys)
@@ -615,7 +610,7 @@ def test_domain_kcore_edges_never_reshuffle(spark):
 def test_cogroup_merge_asof_single_copartition(spark):
     from extractor.ops.temporal import cogroup_merge_asof
 
-    plan = _plan(cogroup_merge_asof(spark, SF))
+    plan = formatted_plan(cogroup_merge_asof(spark, SF))
     assert "FlatMapCoGroupsInPandas" in plan
     # one hash co-partitioning per side, nothing else moves
     assert _n_exchanges(plan) == 2, plan
@@ -625,7 +620,7 @@ def test_cogroup_merge_asof_single_copartition(spark):
 def test_zonemap_two_scans_map_side_aggs(spark):
     from extractor.ops.maintenance import zonemap_prune_stats
 
-    plan = _plan(zonemap_prune_stats(spark, SF))
+    plan = formatted_plan(zonemap_prune_stats(spark, SF))
     # one partial+final aggregate pair per layout, no joins
     assert "Join" not in plan
     assert _n_exchanges(plan) == 2, plan
@@ -634,7 +629,7 @@ def test_zonemap_two_scans_map_side_aggs(spark):
 def test_retention_preaggregates_distinct_users(spark):
     import __spark_entry__ as e
 
-    plan = _plan(e._retention_cohorts(spark, SF))
+    plan = formatted_plan(e._retention_cohorts(spark, SF))
     # the distinct-user count must come from the (cell, user) pre-agg,
     # never an Expand-based count(distinct) over raw event rows
     assert "Expand" not in plan, plan
@@ -644,7 +639,7 @@ def test_retention_preaggregates_distinct_users(spark):
 def test_gdpr_cascade_broadcasts_delete_set(spark):
     from extractor.ops.relational import gdpr_delete_cascade
 
-    plan = _plan(gdpr_delete_cascade(spark, SF))
+    plan = formatted_plan(gdpr_delete_cascade(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -652,7 +647,7 @@ def test_gdpr_cascade_broadcasts_delete_set(spark):
 def test_referential_audit_broadcasts_parents(spark):
     from extractor.ops.relational import referential_integrity_audit
 
-    plan = _plan(referential_integrity_audit(spark, SF))
+    plan = formatted_plan(referential_integrity_audit(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan
@@ -661,7 +656,7 @@ def test_referential_audit_broadcasts_parents(spark):
 def test_split_leakage_no_cartesian(spark):
     from extractor.ops.dedup import split_leakage_audit
 
-    plan = _plan(split_leakage_audit(spark, SF))
+    plan = formatted_plan(split_leakage_audit(spark, SF))
     # bucket-local pairing + two key joins; never a cross product
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

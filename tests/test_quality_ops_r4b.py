@@ -15,14 +15,9 @@ from extractor.ops import (
     similarity,
     textops,
 )
+from extractor.plan_lint import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 # ------------------------------------------------------ ColBERT MaxSim
@@ -168,7 +163,7 @@ def test_dq_expectations_rules_and_verdicts(spark):
 
 def test_dpp_pruning_subquery_reaches_fact_scan(spark):
     df = maintenance.dpp_partition_prune(spark, SF)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert "dynamicpruning" in plan.lower(), (
         f"fact scan must carry a runtime pruning subquery:\n{plan}"
     )
@@ -293,7 +288,7 @@ def test_span_plan_rate_and_bounds(spark):
 def test_span_plan_map_only(spark):
     from extractor.ops import tokenize as tk
 
-    plan = _plan(tk.span_corruption_plan(spark, SF))
+    plan = formatted_plan(tk.span_corruption_plan(spark, SF))
     assert "Exchange" not in plan, f"span plan must not shuffle:\n{plan}"
     assert "Generate" in plan
 

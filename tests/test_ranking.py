@@ -9,14 +9,9 @@ import math
 import re
 
 from extractor.ops import textops
+from extractor.plan_lint import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def _brute_force_bm25(k=50):
@@ -89,7 +84,7 @@ def test_bm25_scores_positive_and_bounded(spark):
 
 
 def test_bm25_plan_topk_and_broadcast(spark):
-    plan = _plan(textops.bm25_topk(spark, SF))
+    plan = formatted_plan(textops.bm25_topk(spark, SF))
     # final top-k must be TakeOrderedAndProject (no materialized global
     # sort) and the 3-row query-term join must be a broadcast
     assert "TakeOrderedAndProject" in plan, plan
@@ -141,7 +136,7 @@ def test_collocations_pmi_matches_pure_python(spark):
 
 
 def test_collocations_pmi_plan_topk_no_global_sort(spark):
-    plan = _plan(textops.collocations_pmi(spark, SF))
+    plan = formatted_plan(textops.collocations_pmi(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
 
 
@@ -194,7 +189,7 @@ def test_hybrid_rrf_plan_no_corpus_window(spark):
     from extractor.ops.similarity import hybrid_rrf
 
     df = hybrid_rrf(spark, SF)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     rows = df.collect()
     assert 0 < len(rows) <= 20

@@ -11,7 +11,7 @@ test_entry_contract already enforces:
 import pytest
 from pyspark.sql import functions as F
 
-from extractor.ops import sampling
+from extractor.ops import md5_bucket, sampling
 
 SF = "/root/testdata/sf0.001"
 
@@ -30,9 +30,59 @@ def test_stratified_sample_stability_under_growth(spark):
     rate = F.lit(sampling.DEFAULT_RATE_BP)
     for lang, bp in sampling.STRATA_RATES_BP.items():
         rate = F.when(F.col("lang") == lang, bp).otherwise(rate)
-    bucket = sampling._hash_bucket("strat:", 10000)
+    bucket = md5_bucket("strat:", "doc_id", mod=10000)
     sub = {r["doc_id"] for r in docs.where(bucket < rate).collect()}
     assert sub == {d for d in full if d < 250}
+
+
+def test_md5_bucket_matches_duckdb_twin(spark):
+    """``md5_bucket`` and the oracles' ``_dd_md5_bucket`` agree bit for bit:
+    int key, non-ASCII string key, multi-part key, the empty salt with the
+    1 << 62 modulus, and NULL keys (NULL on both sides)."""
+    import duckdb
+    import pyarrow as pa
+
+    from __spark_entry__ import _dd_md5_bucket
+
+    cols = {
+        "rid": [0, 1, 2, 3],
+        "doc_id": [7, 987654321, None, 0],
+        "tok": ["naïve", "日本語テキスト", None, ""],
+        "epoch": [0, 3, 1, None],
+        "text": ["abcdefgh", "Ünïcödé—text", None, "x"],
+    }
+    schema = "rid long, doc_id long, tok string, epoch long, text string"
+    multi_key = "CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)"
+    cases = [
+        (
+            md5_bucket("split:", "doc_id", mod=1000),
+            _dd_md5_bucket("split:", 1000),
+        ),
+        (
+            md5_bucket("dsir:", F.col("tok"), mod=256),
+            _dd_md5_bucket("dsir:", 256, "tok"),
+        ),
+        (
+            md5_bucket("eshard:", "epoch", F.lit(":"), "doc_id", mod=16),
+            _dd_md5_bucket("eshard:", 16, multi_key),
+        ),
+        (
+            md5_bucket("", F.col("text"), mod=1 << 62),
+            _dd_md5_bucket("", 1 << 62, "text"),
+        ),
+    ]
+    sdf = spark.createDataFrame(list(zip(*cols.values())), schema)
+    got = sdf.select(
+        "rid", *[c.alias(f"c{i}") for i, (c, _) in enumerate(cases)]
+    ).collect()
+    con = duckdb.connect()
+    con.register("t", pa.table(cols))
+    sql = ", ".join(f"{dd} AS c{i}" for i, (_, dd) in enumerate(cases))
+    want = con.execute(f"SELECT rid, {sql} FROM t ORDER BY rid").fetchall()
+    assert sorted(tuple(r) for r in got) == want
+    # row 2 has every key NULL; row 3's multi-part key has a NULL epoch
+    assert want[2][1:] == (None,) * len(cases)
+    assert want[3][3] is None and None not in want[0][1:]
 
 
 def test_stratified_rates_approached(spark):

@@ -5,14 +5,9 @@ query side broadcast (the 100 TB plan shape)."""
 import pytest
 
 from extractor.ops import similarity
+from extractor.plan_lint import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 @pytest.mark.parametrize("layout", ["inline", "lean"])
@@ -65,7 +60,7 @@ def test_ivf_recall_vs_exact(spark):
 
 
 def test_ivf_cell_join_broadcasts_queries(spark):
-    plan = _plan(similarity.ivf_topk(spark, SF))
+    plan = formatted_plan(similarity.ivf_topk(spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     streamed = plan.split("BroadcastHashJoin")[1].split("BroadcastExchange")[0]
     assert "Exchange" not in streamed, plan
@@ -103,7 +98,7 @@ def _assert_streamed_spines_shuffle_free(plan: str):
 
 @pytest.mark.parametrize("layout", ["inline", "lean"])
 def test_ann_candidate_join_is_bucket_local_broadcast(spark, layout):
-    plan = _plan(similarity.ann_topk(spark, SF, index_layout=layout))
+    plan = formatted_plan(similarity.ann_topk(spark, SF, index_layout=layout))
     assert "BroadcastHashJoin" in plan, plan
     # the corpus-side assignment kernel must feed a join directly
     assert "MapInPandas" in plan, plan
@@ -145,9 +140,7 @@ def test_embedding_quantize_plan_map_only(spark):
     from extractor.ops.similarity import embedding_quantize_int8
 
     df = embedding_quantize_int8(spark, "/root/testdata/sf0.001")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Exchange" not in plan, plan
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
         assert node not in plan, node

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from extractor.ops.temporal import asof_join, range_join
+from extractor.plan_lint import formatted_plan
 
 
 def _ts(minutes):
@@ -134,9 +135,7 @@ def test_gap_fill_locf_plan_no_python_no_cartesian(spark):
         [(1, 10, dt.datetime(2024, 1, 1), 1.0)],
         "event_id long, user_id long, ts timestamp_ntz, value double",
     )
-    plan = gap_fill_locf(ev)._sc._jvm.PythonSQLUtils.explainString(
-        gap_fill_locf(ev)._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(gap_fill_locf(ev))
     # no Python execution stage (the createDataFrame source's
     # applySchemaToPythonRDD scan is not one) and no cross product
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",

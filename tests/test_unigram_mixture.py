@@ -14,16 +14,11 @@ import re
 
 from pyspark.sql import functions as F
 
-from extractor.ops import dedup, sampling, tokenize
+from extractor.ops import dedup, md5_bucket, sampling, tokenize
 from extractor.ops.tokenize import _viterbi_segment
+from extractor.plan_lint import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def _n_exchanges(plan: str) -> int:
@@ -115,7 +110,7 @@ def test_mixture_epochs_exact_copy_counts(spark):
         (F.lit(500000) + F.lit(250000)
          * (F.regexp_extract("source", r"([0-9]+)$", 1).cast("long") % 8)
          ).alias("eppm"),
-        (sampling._hash_bucket("epoch:", 1000000)).alias("draw"),
+        (md5_bucket("epoch:", "doc_id", mod=1000000)).alias("draw"),
     ).collect()
     spec = {r["doc_id"]: r for r in docs}
     assert {r["doc_id"] for r in per_doc} <= set(spec)
@@ -146,7 +141,7 @@ def test_mixture_epochs_stable_under_growth(spark):
     d = docs.select(
         "doc_id",
         (F.lit(500000) + F.lit(250000) * (num % 8)).alias("eppm"),
-        sampling._hash_bucket("epoch:", 1000000).alias("draw"),
+        md5_bucket("epoch:", "doc_id", mod=1000000).alias("draw"),
     )
     sub = {
         (r["doc_id"], e)
@@ -160,7 +155,7 @@ def test_mixture_epochs_stable_under_growth(spark):
 
 
 def test_mixture_epochs_map_only_plan(spark):
-    plan = _plan(sampling.mixture_epochs(spark, SF))
+    plan = formatted_plan(sampling.mixture_epochs(spark, SF))
     assert "Exchange" not in plan, f"epoch explode must not shuffle:\n{plan}"
     assert "Generate" in plan  # the sequence/explode node
 
@@ -203,7 +198,7 @@ def test_homoglyph_skeleton_is_fold_invariant(spark):
 
 
 def test_homoglyph_single_shuffle_plan(spark):
-    plan = _plan(dedup.homoglyph_dedup(spark, SF))
+    plan = formatted_plan(dedup.homoglyph_dedup(spark, SF))
     # one md5-keyed aggregate => exactly one Exchange, partial agg below it
     assert _n_exchanges(plan) == 1, plan
     assert plan.count("HashAggregate") >= 2  # map-side combine
