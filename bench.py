@@ -172,10 +172,10 @@ def _extraction_run_inprocess(
 
     from extractor.pipeline import extract_transcripts
 
-    # hash_conv = the north-rule partitioning: salted repartition on
-    # hash(conv_id) before the kernel, hot keys found via the 5% sampled
-    # pre-pass (pipeline.salted_partition_key) — this times the full
-    # skew-handled shuffle path, not just the map-only kernel
+    # hash_conv = the north-rule partitioning: repartition on hash(conv_id)
+    # salted by turn range (pipeline.salted_partition_key) before the
+    # kernel — this times the full skew-handled shuffle path, not just the
+    # map-only kernel
     kw = (
         dict(partition_mode="map_only")
         if mode == "map_only"
@@ -183,7 +183,6 @@ def _extraction_run_inprocess(
             partition_mode="hash_conv",
             salt_threshold=100,
             salt_buckets=8,
-            hot_sample_fraction=0.05,
         )
     )
 
@@ -382,8 +381,8 @@ def main() -> None:
     _progress(
         f"headline extraction: {headline_extraction['turns_per_sec']:.0f} t/s"
     )
-    # salted hash(conv_id) partitioning (north-rule mode, sampled hot-key
-    # pre-pass): recorded so the skew path has measured throughput.  Its
+    # salted hash(conv_id) partitioning (north-rule mode, turn-range
+    # salt): recorded so the skew path has measured throughput.  Its
     # certified quiet-window ratio to the control is ~0.84 (r04n: 117.1k
     # vs 139k ctrl); 0.55 marks a clearly-loaded window worth retrying.
     hash_conv_extraction = _best_bracketed(

@@ -14,9 +14,9 @@ semi-join :285-287) and the queryable task-status registry
   ``completed``/``failed`` after, so the table is live-pollable mid-flight
   (the reference's ``GET /tasks/{id}`` registry, ``app/api/routes.py:41,
   197-203,367-415``): ``job_status`` reduces it to the latest row per
-  bucket.  Resume = **broadcast left-anti join** of input buckets against
-  the completed rows (the reference's ``failed_paths`` set filter,
-  distributed).
+  bucket.  Resume = ``range(n_buckets)`` minus the completed buckets (the
+  reference's ``failed_paths`` set filter), read from the checkpoint table
+  with no input scan.
 - Per-bucket turn counts come from ``df.observe`` on the write job itself
   (one conditional-sum metric per bucket in the group) — no post-commit
   re-read of the output directory.
@@ -375,7 +375,6 @@ def run_with_checkpoint(
     max_retries: int = 3,
     partition_mode: str = "map_only",
     failure_hook=None,
-    bucket_discovery: str = "dense",
 ) -> dict:
     """Run extraction resumably. Returns a summary dict (A4/A5 analogue).
 
@@ -383,14 +382,11 @@ def run_with_checkpoint(
     kernel — the deterministic fault-injection port of the reference's
     mock-based retry test (``test_retry_mechanism.py:99-119``).
 
-    *bucket_discovery*: ``"dense"`` (default) derives the remaining work
-    as ``range(n_buckets)`` minus the checkpoint's completed set — ZERO
-    input scans before round 1 (buckets are dense by construction at
-    scale: pmod(xxhash64) over 10^12 conv_ids leaves no bucket empty; an
-    empty bucket on a tiny corpus just makes its group's job trivially
-    small).  ``"scan"`` enumerates the distinct buckets actually present
-    in the input (one extra column-pruned pass) — only useful to skip
-    empty-bucket groups on very sparse test corpora.
+    The remaining work is ``range(n_buckets)`` minus the checkpoint's
+    completed set — ZERO input scans before round 1 (buckets are dense by
+    construction at scale: pmod(xxhash64) over 10^12 conv_ids leaves no
+    bucket empty; an empty bucket on a tiny corpus just makes its group's
+    job trivially small).
     """
     spark = input_df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -398,13 +394,7 @@ def run_with_checkpoint(
     df = with_bucket(input_df, n_buckets)
     completed = _completed_buckets(spark, ckpt_dir, snapshot_id)
     completed_set = {r["bucket"] for r in completed.collect()}
-    if bucket_discovery == "dense":
-        remaining = sorted(set(range(n_buckets)) - completed_set)
-    else:
-        present = {
-            r["bucket"] for r in df.select("bucket").distinct().collect()
-        }
-        remaining = sorted(present - completed_set)
+    remaining = sorted(set(range(n_buckets)) - completed_set)
     already_done = len(completed_set)
 
     summary = {
@@ -436,9 +426,11 @@ def run_with_checkpoint(
 
                 sub = sub.mapInPandas(_inject, sub.schema)
             out = extract_transcripts(
-                sub.drop("bucket"), partition_mode=partition_mode, sort_output=True
+                sub,
+                partition_mode=partition_mode,
+                sort_output=True,
+                extra_passthrough=("bucket",),
             )
-            out = with_bucket(out, n_buckets)
             # live status: claim the group as running before its job starts
             _record(
                 spark,

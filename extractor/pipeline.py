@@ -19,11 +19,15 @@ Scale rationale (100 TB / 1000 executors):
   scale.
 - ``partition_mode="hash_conv"`` adds the explicit hash(conv_id) partitioning
   the north rule calls for when conversation-colocated processing is needed.
-  Skew (Zipf conversation lengths) is handled by salting: turns of
-  conversations longer than ``salt_threshold`` get ``pmod(xxhash64(turn_idx),
-  salt_buckets)`` appended to the key, splitting a hot conversation across
-  ``salt_buckets`` tasks.  Correct for a row-independent kernel; ordering is
-  restored by the final cluster+sort stage.
+  Skew (Zipf conversation lengths) is handled by salting the key with the
+  turn's range: ``xxhash64(conv_id, pmod(turn_idx div salt_threshold,
+  salt_buckets))``.  A conversation of at most ``salt_threshold`` turns
+  keeps one key; a longer one spreads over up to ``salt_buckets`` keys, each
+  holding at most ``salt_threshold`` of its turns (about 1/``salt_buckets``
+  beyond ``salt_threshold * salt_buckets`` turns).  The key is one column
+  expression, so no pre-pass counts conversation lengths.  Correct for a
+  row-independent kernel; ordering is restored by the final cluster+sort
+  stage.
 - Output layout: one shuffle on conv_id then ``sortWithinPartitions(conv_id,
   turn_idx)`` — the "stable secondary sort on turn_idx" — so each output file
   holds whole conversations in turn order (what a downstream trainer reads).
@@ -127,44 +131,26 @@ def _make_extract_iter(
 
 
 def salted_partition_key(
-    df: DataFrame,
-    salt_threshold: int,
-    salt_buckets: int,
-    hot_sample_fraction: float | None = None,
+    df: DataFrame, salt_threshold: int, salt_buckets: int
 ) -> DataFrame:
-    """Add ``part_key``: xxhash64(conv_id) with per-turn salt for hot convs.
+    """Add ``part_key``: xxhash64(conv_id) salted by the turn's range.
 
-    The hot-key set comes from a cheap pre-pass count (map-side partial agg;
-    at 10^12 turns this aggregates to ~n_convs rows) broadcast-joined back —
-    replaces the reference's absent skew handling (SURVEY.md §4).
-
-    *hot_sample_fraction*: at very large scale the exact pre-pass is a full
-    extra input scan; a seeded sample (e.g. 0.01) finds the same heavy
-    hitters at 1% of the scan cost — salting is a placement hint, so a
-    missed borderline key costs balance, never correctness (the determinism
-    test runs both modes).  The threshold is scaled by the fraction.
+    Turns ``[k*salt_threshold, (k+1)*salt_threshold)`` of a conversation
+    share salt ``k mod salt_buckets``, so a key never holds more than
+    ``salt_threshold`` turns of a conversation up to
+    ``salt_threshold * salt_buckets`` turns long, and about 1/salt_buckets
+    of a longer one.  Short conversations keep a single key.  The salt only
+    places rows; it never changes what the kernel emits.
     """
-    if hot_sample_fraction:
-        source = df.sample(fraction=hot_sample_fraction, seed=42)
-        threshold = max(int(salt_threshold * hot_sample_fraction), 1)
-    else:
-        source, threshold = df, salt_threshold
-    counts = source.groupBy("conv_id").agg(F.count("*").alias("conv_turns"))
-    hot = counts.filter(F.col("conv_turns") > threshold).select(
-        "conv_id", F.lit(True).alias("is_hot")
-    )
-    return (
-        df.join(F.broadcast(hot), "conv_id", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("is_hot"),
-                F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets)),
-            ).otherwise(F.lit(0)),
+    if salt_threshold < 1 or salt_buckets < 1:
+        raise ValueError(
+            f"salt_threshold and salt_buckets must be >= 1, got "
+            f"{salt_threshold} and {salt_buckets}"
         )
-        .withColumn("part_key", F.xxhash64("conv_id", "salt"))
-        .drop("is_hot")
+    salt = F.pmod(
+        F.expr(f"turn_idx div {int(salt_threshold)}"), F.lit(salt_buckets)
     )
+    return df.withColumn("part_key", F.xxhash64("conv_id", salt))
 
 
 def extract_transcripts(
@@ -174,7 +160,6 @@ def extract_transcripts(
     salt_threshold: int = 500,
     salt_buckets: int = 8,
     sort_output: bool = True,
-    hot_sample_fraction: float | None = None,
     extra_passthrough: tuple = (),
     options: ConvertOptions = DEFAULT_OPTIONS,
 ) -> DataFrame:
@@ -209,10 +194,8 @@ def extract_transcripts(
 
     if partition_mode == "hash_conv":
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
-        slim = salted_partition_key(
-            slim, salt_threshold, salt_buckets, hot_sample_fraction
-        )
-        slim = slim.repartition(n, "part_key").drop("salt", "part_key", "conv_turns")
+        slim = salted_partition_key(slim, salt_threshold, salt_buckets)
+        slim = slim.repartition(n, "part_key").drop("part_key")
     elif partition_mode != "map_only":
         raise ValueError(f"unknown partition_mode: {partition_mode}")
 

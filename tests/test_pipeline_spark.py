@@ -144,19 +144,80 @@ def test_stitch_conversations(spark):
     assert stitched[conv]["n_turns"] == len(rows)
 
 
-def test_sampled_hot_detection_same_results(spark, expected):
-    """Sample-based hot-key detection is a placement hint only: output must
-    be identical to exact detection."""
-    df = transcripts_df(spark, n_convs=N_CONVS, mean_turns=MEAN_TURNS, seed=SEED)
+def test_salted_partition_key_bounds(spark):
+    """The turn-range salt, checked on the key itself: a key holds at most
+    ``salt_threshold`` turns of a conversation up to T*B turns long (and
+    T*ceil(ceil(L/T)/B) beyond), short conversations keep one key, and the
+    key does not depend on the input's partitioning."""
+    from collections import Counter
+
+    from extractor.pipeline import salted_partition_key
+
+    t, b = 20, 4
+    df = transcripts_df(spark, n_convs=60, mean_turns=20, seed=13)
+
+    def keys(frame):
+        return {
+            (r["conv_id"], r["turn_idx"]): r["part_key"]
+            for r in salted_partition_key(frame, t, b)
+            .select("conv_id", "turn_idx", "part_key")
+            .collect()
+        }
+
+    by_turn = keys(df)
+    lengths = Counter(conv for conv, _ in by_turn)
+    groups = Counter((conv, key) for (conv, _), key in by_turn.items())
+    n_keys = Counter(conv for conv, _ in groups)
+    assert any(n <= t for n in lengths.values())
+    assert any(t < n <= t * b for n in lengths.values())
+    assert any(n > t * b for n in lengths.values())
+    for (conv, _), n in groups.items():
+        ranges = -(-lengths[conv] // t)
+        assert n <= t * -(-ranges // b), (conv, lengths[conv], n)
+    # one key per turn range, up to b of them: exactly one for L <= t
+    for conv, n in lengths.items():
+        assert n_keys[conv] == min(-(-n // t), b), (conv, n, n_keys[conv])
+
+    assert keys(df.repartition(7)) == by_turn
+
+
+@pytest.mark.parametrize(
+    "threshold,buckets", [(0, 4), (-1, 4), (20, 0), (20, -1)]
+)
+def test_salt_parameters_below_one_rejected(spark, threshold, buckets):
+    from extractor.pipeline import salted_partition_key
+
+    df = transcripts_df(spark, n_convs=2, mean_turns=4, seed=13)
+    with pytest.raises(ValueError, match="must be >= 1"):
+        salted_partition_key(df, threshold, buckets)
+    with pytest.raises(ValueError, match="must be >= 1"):
+        extract_transcripts(
+            df, partition_mode="hash_conv",
+            salt_threshold=threshold, salt_buckets=buckets,
+        )
+
+
+def test_null_turn_idx_row_survives_hash_conv(spark):
+    """A NULL turn_idx gives a NULL salt; the row still gets a key, goes
+    through the kernel and comes out: the row count is preserved."""
+    rows = [
+        ("c1", 0, "user", "<p>a</p>", None, None),
+        ("c1", None, "user", "<b>b</b>", None, None),
+        ("c2", 3, "assistant", "plain", None, None),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
     out = extract_transcripts(
-        df, partition_mode="hash_conv", salt_threshold=30, salt_buckets=4,
-        hot_sample_fraction=0.3,
+        df, partition_mode="hash_conv", salt_threshold=1, salt_buckets=4
     ).collect()
-    assert len(out) == len(expected)
-    for row in out:
-        exp_text, exp_err = expected[(row["conv_id"], row["turn_idx"])]
-        assert row["extracted_text"] == exp_text
-        assert row["error"] == exp_err
+    assert len(out) == len(rows)
+    null_turn = [r for r in out if r["turn_idx"] is None]
+    assert [(r["conv_id"], r["extracted_text"]) for r in null_turn] == [
+        ("c1", convert_text("<b>b</b>").extracted_text)
+    ]
 
 
 def test_split_quarantine(spark):
