@@ -100,17 +100,27 @@ class Element:
         return False
 
     def find_all(self, names, class_filter=None) -> list:
-        """Document-order descendants with tag in *names*.
+        """Document-order descendants with tag in *names* (a tag name or a
+        sequence of them).
 
         *class_filter*, if given, is called once per class token (and with
         ``None`` when the element has no class attribute) — bs4's callable
-        ``class_`` semantics.
+        ``class_`` semantics.  The walk is ``iter_elements``' stack loop,
+        inlined: this is the table converter's per-row and per-cell call.
         """
         if isinstance(names, str):
             names = (names,)
-        names = frozenset(names)
         out = []
-        for el in self.iter_elements():
+        stack = self.children[::-1]
+        pop = stack.pop
+        extend = stack.extend
+        while stack:
+            el = pop()
+            if not isinstance(el, Element):
+                continue
+            children = el.children
+            if children:
+                extend(children[::-1])
             if el.tag not in names:
                 continue
             if class_filter is not None:
@@ -134,7 +144,8 @@ class Element:
         parts: list[str] = []
         self._collect_text(parts)
         if strip:
-            return "".join(p.strip() for p in parts if p.strip())
+            # empty strips add nothing to the join
+            return "".join(map(str.strip, parts))
         return "".join(parts)
 
     def _collect_text(self, parts: list) -> None:
@@ -184,6 +195,12 @@ class Element:
 MAX_DOM_DEPTH = 150
 
 
+def _too_deep() -> RecursionError:
+    return RecursionError(
+        f"maximum recursion depth exceeded (DOM depth > {MAX_DOM_DEPTH})"
+    )
+
+
 class _TreeBuilder(HTMLParser):
     def __init__(self):
         super().__init__(convert_charrefs=True)
@@ -198,9 +215,7 @@ class _TreeBuilder(HTMLParser):
 
     def handle_starttag(self, tag, attrs):
         if len(self.stack) > MAX_DOM_DEPTH:
-            raise RecursionError(
-                f"maximum recursion depth exceeded (DOM depth > {MAX_DOM_DEPTH})"
-            )
+            raise _too_deep()
         closers = _IMPLICIT_CLOSERS.get(tag)
         if closers:
             while len(self.stack) > 1 and self.stack[-1].tag in closers:
@@ -242,115 +257,152 @@ class _TreeBuilder(HTMLParser):
 # ``HTMLParser.goahead`` spends ~half the extraction kernel's time in generic
 # chunk scanning (interesting-char search, position bookkeeping, per-construct
 # dispatch).  Real transcript markup is overwhelmingly plain start/end tags
-# and text runs, so a single compiled regex can tokenize the common case and
-# drive the SAME ``_TreeBuilder`` handle_* methods directly.  Parity contract:
+# and text runs, so one capturing ``re.split`` tokenizes the common case into
+# alternating text runs and tag texts, and the loop below builds the tree on
+# a local element stack — no ``HTMLParser`` instance and no ``handle_*``
+# dispatch; the implicit-closer, void-element and depth-cap rules are the
+# shared tables above, applied exactly as ``_TreeBuilder`` applies them.
+# Parity contract:
 #
 # - the tokenizer only accepts documents made of (a) text runs containing no
-#   ``<`` and (b) start/end tags it re-parses with CPython's OWN
-#   ``tagfind_tolerant``/``attrfind_tolerant`` regexes (imported from
-#   ``html.parser``), reproducing ``parse_starttag``'s attribute loop,
+#   ``<`` and (b) start/end tags; a start tag carrying anything beyond its
+#   name is re-parsed with CPython's OWN ``tagfind_tolerant``/
+#   ``attrfind_tolerant`` regexes (imported from ``html.parser``) on the
+#   matched tag text, reproducing ``parse_starttag``'s attribute loop,
 #   quote-stripping, entity-unescaping and lowercasing bit for bit;
 # - ANY construct outside that subset — comments, declarations, processing
 #   instructions, bogus ``<``, script/style CDATA, junk-in-start-tag,
-#   incomplete tags — returns None and the caller re-parses with the stdlib
+#   incomplete tags, and an ``=`` followed by a quote that the tag text
+#   never closes (the stdlib would scan past this tag's ``>`` for the
+#   closing quote) — returns None and the caller re-parses with the stdlib
 #   ``HTMLParser`` path, which is authoritative.  Falling back is always
-#   correct; the fast path is only taken when it is provably equivalent
-#   (the end-state check below fails closed).
+#   correct; the fast path is only taken when it is provably equivalent.
 #
-# Equivalence is pinned by tests/test_dom_fast.py: tree-identical (tags,
-# attrs, exact text-node chunking) vs the stdlib builder on golden fixture
-# inputs, hand quirks, hypothesis-fuzzed soup, and the full bench corpus
-# (verified offline; see commit message).
+# Equivalence is pinned by tests/test_dom_fast.py (tree-identical — tags,
+# attrs, exact text-node chunking — vs the stdlib builder on golden fixture
+# inputs, hand quirks, hypothesis-fuzzed soup and a transcripts corpus) and
+# by tests/test_kernel_corpus_digest.py (whole-kernel output).
 
 # One combined scan: a '<' not opening a plain start/end tag, or any
 # script/style mention (CDATA content model) — either sends the document
 # to the stdlib parser.
 _FAST_GATE = _re.compile(r"<(?![a-zA-Z]|/[a-zA-Z])|(?i:</?(?:script|style)\b)")
-_FAST_TAG = _re.compile(
-    r"<(?:"
-    r"/\s*(?P<cname>[a-zA-Z][-.a-zA-Z0-9:_]*)\s*"
-    r"|(?P<name>[a-zA-Z][^\t\n\r\f />\x00]*)"
-    r"(?P<body>(?:\"[^\"]*\"|'[^']*'|[^>\"'])*)"
-    r")>"
+# The single capturing group makes ``split`` return [text, tag, text, ...,
+# tag, text]: end tags, and start tags whose body may hold quoted values.
+_FAST_SPLIT = _re.compile(
+    r"(<(?:"
+    r"/\s*[a-zA-Z][-.a-zA-Z0-9:_]*\s*"
+    r"|[a-zA-Z][^\t\n\r\f />\x00]*(?:\"[^\"]*\"|'[^']*'|[^>\"'])*"
+    r")>)"
 )
+# After a value-less attribute name: an '=' whose value failed to match,
+# i.e. a quote the tag text never closes.
+_UNCLOSED_VALUE = _re.compile(r"\s*=")
 
 
 def _fast_parse(text: str):
-    """Tokenize *text* into a ``_TreeBuilder`` tree, or return None when any
+    """Tokenize *text* into a document tree, or return None when any
     construct falls outside the verified common-case subset (caller falls
     back to the stdlib parser).  RecursionError (DOM depth cap) propagates —
     both paths raise it identically."""
     if _FAST_GATE.search(text):
         return None
-    builder = _TreeBuilder()
-    handle_data = builder.handle_data
-    handle_starttag = builder.handle_starttag
-    handle_endtag = builder.handle_endtag
-    pos = 0
-    for m in _FAST_TAG.finditer(text):
-        start = m.start()
-        if start > pos:
-            seg = text[pos:start]
-            if "<" in seg:  # a '<' the master regex skipped: not our subset
+    tokens = _FAST_SPLIT.split(text)
+    tokens.append(None)  # pairs the last text run with no tag
+    root = Element("[document]")
+    stack = [root]
+    top = root
+    it = iter(tokens)
+    for seg, tok in zip(it, it):
+        if seg:
+            if "<" in seg:  # a '<' the split regex skipped: not our subset
                 return None
-            handle_data(_unescape(seg) if "&" in seg else seg)
-        cname, name, body = m.group("cname", "name", "body")
-        if cname is not None:
-            handle_endtag(cname.lower())
-            pos = m.end()
-            continue
-        # Attribute-free shortcut, the dominant case (<p>, <td>, <b>, ...):
-        # with an empty tag body, parse_starttag's tagfind/attrfind matches
-        # reduce to (lowercased name, no attrs, end '>'); a body of exactly
-        # '/' is the bare self-closing form (<br/>), whose '/' tagfind's
-        # trailing consumer never eats (negative lookahead before '>').
-        if not body:
-            handle_starttag(name.lower(), [])
-            pos = m.end()
-            continue
-        if body == "/":
-            builder.handle_startendtag(name.lower(), [])
-            pos = m.end()
-            continue
-        # Start tag: replicate HTMLParser.parse_starttag exactly, using
-        # CPython's own tolerant regexes on the original string.
-        endpos = m.end()
-        tm = _tagfind_tolerant.match(text, start + 1)
-        k = tm.end()
-        tag = tm.group(1).lower()
-        attrs = []
-        while k < endpos:
-            am = _attrfind_tolerant.match(text, k)
-            if not am:
-                break
-            attrname, rest, attrvalue = am.group(1, 2, 3)
-            if not rest:
-                attrvalue = None
-            elif (
-                attrvalue[:1] == "'" == attrvalue[-1:]
-                or attrvalue[:1] == '"' == attrvalue[-1:]
-            ):
-                attrvalue = attrvalue[1:-1]
-            if attrvalue:
-                attrvalue = _unescape(attrvalue)
-            attrs.append((attrname.lower(), attrvalue))
-            k = am.end()
-        end = text[k:endpos].strip()
-        if end == ">":
-            handle_starttag(tag, attrs)
-        elif end == "/>":
-            builder.handle_startendtag(tag, attrs)
+            if "&" in seg:
+                seg = _unescape(seg)
+            if seg:
+                top.children.append(seg)
+        if tok is None:
+            break
+        if tok[1] == "/":
+            # handle_endtag: close the innermost open element of this name
+            # (void elements never open), ignore an unmatched close tag
+            tag = tok[2:-1].strip().lower()
+            if top.tag == tag:
+                stack.pop()
+                top = stack[-1]
+            elif tag not in VOID_ELEMENTS:
+                for i in range(len(stack) - 2, 0, -1):
+                    if stack[i].tag == tag:
+                        del stack[i:]
+                        top = stack[-1]
+                        break
         else:
-            # junk characters in the start tag — stdlib emits the raw tag
-            # text as data; out of subset, fall back
-            return None
-        pos = endpos
-    if pos < len(text):
-        seg = text[pos:]
-        if "<" in seg:
-            return None
-        handle_data(_unescape(seg) if "&" in seg else seg)
-    return builder.root
+            inner = tok[1:-1]
+            # Attribute-free shortcut, the dominant case (<p>, <td>, <h2>):
+            # an alphanumeric body is all name, so parse_starttag's tagfind/
+            # attrfind matches reduce to (lowercased name, no attrs, end
+            # '>'); a trailing '/' is the bare self-closing form (<br/>),
+            # whose '/' tagfind's trailing consumer never eats (negative
+            # lookahead before '>').
+            if inner.isalnum():
+                tag, attrs, start = inner.lower(), {}, True
+            elif inner[-1] == "/" and inner[:-1].isalnum():
+                tag, attrs, start = inner[:-1].lower(), {}, False
+            else:
+                # replicate HTMLParser.parse_starttag exactly, with
+                # CPython's own tolerant regexes on the tag text
+                tm = _tagfind_tolerant.match(tok, 1)
+                k = tm.end()
+                tag = tm.group(1).lower()
+                attrs = {}
+                endpos = len(tok)
+                while k < endpos:
+                    am = _attrfind_tolerant.match(tok, k)
+                    if not am:
+                        break
+                    attrname, rest, attrvalue = am.group(1, 2, 3)
+                    if not rest:
+                        if _UNCLOSED_VALUE.match(tok, am.end(1)):
+                            return None
+                        attrvalue = ""
+                    elif (
+                        attrvalue[:1] == "'" == attrvalue[-1:]
+                        or attrvalue[:1] == '"' == attrvalue[-1:]
+                    ):
+                        attrvalue = attrvalue[1:-1]
+                    if attrvalue:
+                        attrvalue = _unescape(attrvalue)
+                    # first position, last value — like the stdlib
+                    # builder's dict over the (name, value) list
+                    attrs[attrname.lower()] = attrvalue
+                    k = am.end()
+                end = tok[k:].strip()
+                if end == ">":
+                    start = True
+                elif end == "/>":
+                    start = False
+                else:
+                    # junk characters in the start tag — stdlib emits the
+                    # raw tag text as data; out of subset, fall back
+                    return None
+            if start:
+                # handle_starttag: depth cap, implicit closers, then push
+                # unless void; handle_startendtag does none of these
+                if len(stack) > MAX_DOM_DEPTH:
+                    raise _too_deep()
+                closers = _IMPLICIT_CLOSERS.get(tag)
+                if closers:
+                    while len(stack) > 1 and stack[-1].tag in closers:
+                        stack.pop()
+                    top = stack[-1]
+                el = Element(tag, attrs, top)
+                top.children.append(el)
+                if tag not in VOID_ELEMENTS:
+                    stack.append(el)
+                    top = el
+            else:
+                top.children.append(Element(tag, attrs, top))
+    return root
 
 
 def parse_html(text: str) -> Element:

@@ -35,9 +35,22 @@ from __future__ import annotations
 import struct
 import zlib
 
-from extractor.pdf import png_predict_encode
+from extractor.pdf import inflate, png_predict_encode
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+# Largest image a decoder here sizes a pixel buffer for (4096 x 4096): a
+# header declares up to 65535 x 65535 (GIF, JPEG) or 2^32 x 2^32 (PNG,
+# TIFF) in a few bytes, so dimensions are checked before any allocation.
+MAX_IMAGE_PIXELS = 1 << 24
+
+
+def check_pixels(width: int, height: int) -> None:
+    """``ValueError`` for a declared size past ``MAX_IMAGE_PIXELS``."""
+    if width * height > MAX_IMAGE_PIXELS:
+        raise ValueError(
+            "image %dx%d exceeds %d pixels" % (width, height, MAX_IMAGE_PIXELS)
+        )
 
 
 def _contained(fn):
@@ -237,6 +250,7 @@ def png_decode(payload: bytes) -> tuple[int, int, int, bytes]:
                 )
             if comp or filt or interlace not in (0, 1):
                 raise ValueError("bad IHDR compression/filter/interlace")
+            check_pixels(width, height)
         elif tag == b"PLTE":
             palette = body
         elif tag == b"IDAT":
@@ -250,7 +264,7 @@ def png_decode(payload: bytes) -> tuple[int, int, int, bytes]:
         raise ValueError("PNG missing IDAT")
     ch = _PNG_CHANNELS[color_type]
     try:
-        raw = zlib.decompress(bytes(idat))
+        raw = inflate(bytes(idat))
     except zlib.error as exc:
         raise ValueError("corrupt PNG IDAT: %s" % exc) from exc
     if interlace:
@@ -547,6 +561,7 @@ def gif_decode(payload: bytes) -> tuple[int, int, int, bytes]:
         if pos + 9 > len(payload):
             raise ValueError("truncated GIF image descriptor")
         _l, _t, fw, fh = struct.unpack_from("<HHHH", payload, pos)
+        check_pixels(fw, fh)
         ipacked = payload[pos + 8]
         pos += 9
         lct = gct
@@ -679,6 +694,7 @@ def tiff_decode(payload: bytes) -> tuple[int, int, int, bytes]:
     height = tags.get(257, [0])[0]
     if not width or not height:
         raise ValueError("TIFF missing dimensions")
+    check_pixels(width, height)
     spp = tags.get(277, [1])[0]
     bits = tags.get(258, [8] * spp)
     bilevel = list(bits) == [1]

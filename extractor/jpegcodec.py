@@ -37,7 +37,7 @@ import struct
 
 import numpy as np
 
-from extractor.imagecodec import _contained
+from extractor.imagecodec import _contained, check_pixels
 
 # --- constants (ITU T.81 Annex K) -------------------------------------------
 
@@ -775,6 +775,7 @@ def jpeg_decode(payload: bytes) -> tuple[int, int, int, bytes]:
                 raise NotImplementedError("JPEG with %d components" % nc)
             if width == 0 or height == 0:
                 raise ValueError("bad JPEG dimensions")
+            check_pixels(width, height)
             comps = []
             for i in range(nc):
                 cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]
@@ -984,6 +985,7 @@ def _decode_lossless(payload: bytes) -> tuple[int, int, int, bytes]:
                 raise NotImplementedError(
                     "lossless JPEG with %d components" % nc
                 )
+            check_pixels(width, height)
             comps = []
             for i in range(nc):
                 cid, hv, _tq = body[6 + 3 * i : 9 + 3 * i]

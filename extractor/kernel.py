@@ -144,35 +144,48 @@ def _process_table_cell_inner(cell: Element) -> tuple[str, list[dict]]:
     return cell.get_text(strip=True), cell_images
 
 
-def _convert_table_to_markdown(table: Element) -> tuple[str, list[dict]]:
+def _convert_table_to_markdown(
+    table: Element, img_cells: set
+) -> tuple[str, list[dict]]:
     """T4 (reference :154-218): HTML table → pipe table; arity-mismatched rows
     dropped; first row is always the header; trailing blank line.  A failing
-    table degrades to empty content (reference :216-218), not a doc error."""
+    table degrades to empty content (reference :216-218), not a doc error.
+    *img_cells* holds every cell with an ``<img>`` inside; any other cell
+    is just its stripped text."""
     try:
-        return _convert_table_to_markdown_inner(table)
+        return _convert_table_to_markdown_inner(table, img_cells)
     except Exception:
         return "", []
 
 
-def _convert_table_to_markdown_inner(table: Element) -> tuple[str, list[dict]]:
+_CELL_TAGS = ("th", "td")
+
+
+def _row_cells(row: Element, img_cells: set, table_images: list) -> list[str]:
+    cells = []
+    for cell in row.find_all(_CELL_TAGS):
+        if cell in img_cells:
+            content, imgs = _process_table_cell(cell)
+            table_images.extend(imgs)
+        else:
+            # T5 with no <img> to replace: _process_table_cell's try and
+            # its fallback both come down to this one call
+            content = cell.get_text(strip=True)
+        cells.append(content)
+    return cells
+
+
+def _convert_table_to_markdown_inner(
+    table: Element, img_cells: set
+) -> tuple[str, list[dict]]:
     rows = table.find_all("tr")
     if not rows:
         return "", []
     table_images: list[dict] = []
-
-    header_cells: list[str] = []
-    for cell in rows[0].find_all(["th", "td"]):
-        content, imgs = _process_table_cell(cell)
-        header_cells.append(content)
-        table_images.extend(imgs)
-
+    header_cells = _row_cells(rows[0], img_cells, table_images)
     data_rows: list[list[str]] = []
     for row in rows[1:] if header_cells else rows:
-        row_cells = []
-        for cell in row.find_all(["th", "td"]):
-            content, imgs = _process_table_cell(cell)
-            row_cells.append(content)
-            table_images.extend(imgs)
+        row_cells = _row_cells(row, img_cells, table_images)
         if row_cells:
             data_rows.append(row_cells)
 
@@ -263,7 +276,14 @@ def _extract_special_elements(
     math_class_matched: list[Element] = []
     math_tags: list[Element] = []
     imgs: list[Element] = []
-    for el in doc.iter_elements():
+    # iter_elements' stack walk, inlined: one pass over every element
+    stack = doc.children[::-1]
+    while stack:
+        el = stack.pop()
+        if not isinstance(el, Element):
+            continue
+        if el.children:
+            stack.extend(el.children[::-1])
         tag = el.tag
         if tag == "table":
             tables.append(el)
@@ -280,9 +300,21 @@ def _extract_special_elements(
             if tag == "math":
                 math_tags.append(el)
 
+    # every cell with an <img> somewhere inside it (replacements only ever
+    # remove images, so no other cell gains one while tables convert)
+    img_cells = set()
+    if tables:
+        for img in imgs:
+            node = img.parent
+            while node is not None:
+                if node.tag in _CELL_TAGS:
+                    img_cells.add(node)
+                node = node.parent
     for i, table in enumerate(tables):
         placeholder = f"___TABLE_PLACEHOLDER_{i}___"
-        markdown_table, table_images = _convert_table_to_markdown(table)
+        markdown_table, table_images = _convert_table_to_markdown(
+            table, img_cells
+        )
         table_placeholders[placeholder] = markdown_table
         image_list.extend(table_images)
         table.replace_with(placeholder)
@@ -336,27 +368,37 @@ def _restore_special_elements(
     return markdown
 
 
+# (probe, pattern, replacement): every match of a pattern contains its
+# literal probe
 _CLEANUP_STEPS = (
-    (re.compile(r"^>\s*", re.MULTILINE), ""),
-    (re.compile(r"^\t+", re.MULTILINE), ""),
-    (re.compile(r"^    ", re.MULTILINE), ""),
-    (re.compile(r"\n{4,}"), "\n\n\n"),
-    (re.compile(r"\n{3}(?=\n)"), "\n\n"),
-    (re.compile(r"\n+(<table)"), r"\n\1"),
-    (re.compile(r"(</table>)\n+"), r"\1\n\n"),
-    (re.compile(r"\n+(<math)"), r"\n\1"),
-    (re.compile(r"(</math>)\n+"), r"\1\n"),
+    (">", re.compile(r"^>\s*", re.MULTILINE), ""),
+    ("\t", re.compile(r"^\t+", re.MULTILINE), ""),
+    ("    ", re.compile(r"^    ", re.MULTILINE), ""),
+    ("\n\n\n\n", re.compile(r"\n{4,}"), "\n\n\n"),
+    ("\n\n\n\n", re.compile(r"\n{3}(?=\n)"), "\n\n"),
+    ("<table", re.compile(r"\n+(<table)"), r"\n\1"),
+    ("</table>", re.compile(r"(</table>)\n+"), r"\1\n\n"),
+    ("<math", re.compile(r"\n+(<math)"), r"\n\1"),
+    ("</math>", re.compile(r"(</math>)\n+"), r"\1\n"),
 )
 
 
 def clean_markdown(content: str) -> str:
-    """T10 (reference :482-509) — the ordered cleanup regex chain, verbatim.
+    """T10 (reference :482-509) — the ordered cleanup regex chain, verbatim,
+    each step skipped when its literal probe is absent from the string
+    (a skipped step could not have matched, so the output is the
+    unguarded chain's).
+
+    Step 5, ``\\n{3}(?=\\n)``, can never fire: step 4 has just rewritten
+    every run of four or more newlines to three, so its probe always
+    misses.  It is kept verbatim, in its place, and costs one probe.
 
     This sub-operator is SQL-expressible (chained regexp_replace + trim);
     see ``__spark_entry__.oracle_sql``'s ``t10_markdown_cleanup``.
     """
-    for pattern, repl in _CLEANUP_STEPS:
-        content = pattern.sub(repl, content)
+    for probe, pattern, repl in _CLEANUP_STEPS:
+        if probe in content:
+            content = pattern.sub(repl, content)
     return content.strip()
 
 

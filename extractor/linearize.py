@@ -160,6 +160,11 @@ def _escape_md_section_unguarded(text: str) -> str:
     return text
 
 
+# the hard-break marker _render_inline/_render_block put in for <br>, with
+# the collapsed space on either side
+_BR_RE = re.compile(r" ?\x00BR\x00 ?")
+
+
 def _collapse(text: str) -> str:
     return _WS_RE.sub(" ", text)
 
@@ -228,9 +233,9 @@ def _finish_paragraph(parts: list[str], writer: _Writer, prefix: str = "") -> No
     parts.clear()
     if not raw:
         return
-    # Hard breaks: html2text writes two trailing spaces + newline.
-    raw = re.sub(r" ?\x00BR\x00 ?", "  \n", raw)
-    raw = raw.strip("\n")
+    if "\x00" in raw:
+        # Hard breaks: html2text writes two trailing spaces + newline.
+        raw = _BR_RE.sub("  \n", raw).strip("\n")
     if prefix:
         raw = "\n".join(prefix + line for line in raw.split("\n"))
     writer.emit(raw)
@@ -314,7 +319,8 @@ def _render_list(node: Element, ordered: bool, depth: int) -> list[str]:
             else:
                 _render_inline_single(sub, item_parts)
         text = _collapse("".join(item_parts)).strip()
-        text = re.sub(r" ?\x00BR\x00 ?", "  \n" + indent + " " * len(marker), text)
+        if "\x00" in text:
+            text = _BR_RE.sub("  \n" + indent + " " * len(marker), text)
         if text:
             lines.append(indent + marker + text)
         for sub, sub_ordered in nested:

@@ -51,6 +51,30 @@ PAGE_W, PAGE_H = 612, 792  # US Letter, points
 MARGIN_X, TOP_Y = 72, 720
 FONT_SIZE, LEADING = 10, 12
 
+# Output cap of one zlib inflate (a FlateDecode stream here, a PNG's IDAT
+# data in extractor.imagecodec): a few KB of deflate can declare GBs, so
+# past this the payload is refused before the memory is taken.  64 MiB
+# holds any page stream or image this pure-Python decoder gets through in
+# reasonable time.
+MAX_INFLATE_BYTES = 64 << 20
+
+
+def inflate(data: bytes) -> bytes:
+    """``zlib.decompress(data)`` with its output bounded by
+    ``MAX_INFLATE_BYTES``: ``ValueError`` past the cap; ``zlib.error`` on
+    a corrupt or truncated stream, as ``zlib.decompress`` raises."""
+    d = zlib.decompressobj()
+    out = d.decompress(data, MAX_INFLATE_BYTES + 1)
+    if len(out) > MAX_INFLATE_BYTES:
+        raise ValueError(
+            "inflated stream exceeds %d bytes" % MAX_INFLATE_BYTES
+        )
+    if not d.eof:
+        raise zlib.error(
+            "Error -5 while decompressing data: incomplete or truncated stream"
+        )
+    return out
+
 
 def wrap_lines(text: str) -> list[str]:
     """Deterministic hard wrap: each source line (split on ``\\n``) becomes
@@ -748,7 +772,7 @@ def _decode_stream(dict_bytes: bytes, body: bytes) -> bytes:
             continue
         if name == b"FlateDecode":
             try:
-                body = zlib.decompress(body)
+                body = inflate(body)
             except zlib.error as exc:
                 raise ValueError(
                     "corrupt FlateDecode stream: %s" % exc

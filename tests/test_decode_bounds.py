@@ -1,0 +1,99 @@
+"""Bounded decode: a crafted payload — a deflate bomb, or a header that
+declares a huge image — must end in a ``ValueError`` (an ``error`` row in
+the Spark kernels) within bounded time and memory, never an allocation
+that takes the worker down."""
+
+import struct
+import time
+import zlib
+
+import pytest
+
+from extractor import pdf
+from extractor.imagecodec import MAX_IMAGE_PIXELS, _chunk, png_encode
+from extractor.jpegcodec import jpeg_decode
+from extractor.ops.multimodal import decode_payload
+from extractor.pdf import MAX_INFLATE_BYTES, inflate
+
+PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _deflate_bomb(n_bytes: int) -> bytes:
+    """A zlib stream of *n_bytes* zeros, built 1 MiB at a time."""
+    c = zlib.compressobj(9)
+    block = bytes(1 << 20)
+    out = [c.compress(block) for _ in range(n_bytes >> 20)]
+    out.append(c.compress(bytes(n_bytes & ((1 << 20) - 1))))
+    out.append(c.flush())
+    return b"".join(out)
+
+
+def _png(width: int, height: int, idat: bytes) -> bytes:
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+    return (
+        PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat)
+        + _chunk(b"IEND", b"")
+    )
+
+
+def _contained_fast(fn, *args) -> str:
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError) as err:
+        fn(*args)
+    assert time.perf_counter() - t0 < 2.0
+    return str(err.value)
+
+
+@pytest.fixture(scope="module")
+def bomb() -> bytes:
+    return _deflate_bomb(MAX_INFLATE_BYTES + (1 << 20))
+
+
+def test_inflate_matches_zlib_within_cap():
+    data = bytes(range(256)) * 300
+    stream = zlib.compress(data)
+    assert inflate(stream) == zlib.decompress(stream) == data
+    assert inflate(stream + b"trailing") == data
+    # exactly at the cap still inflates
+    assert len(inflate(_deflate_bomb(MAX_INFLATE_BYTES))) == MAX_INFLATE_BYTES
+    for bad in (stream[:-3], b"", b"garbage"):
+        with pytest.raises(zlib.error):
+            zlib.decompress(bad)
+        with pytest.raises(zlib.error):
+            inflate(bad)
+
+
+def test_png_idat_bomb_is_contained(bomb):
+    msg = _contained_fast(decode_payload, _png(1, 1, bomb))
+    assert "exceeds" in msg
+
+
+def test_pdf_flate_bomb_is_contained(bomb):
+    msg = _contained_fast(
+        pdf._decode_stream, b"<< /Filter /FlateDecode >>", bomb
+    )
+    assert "exceeds" in msg
+
+
+def test_huge_png_header_is_contained():
+    payload = _png(65535, 65535, zlib.compress(b"\x00\x00"))
+    msg = _contained_fast(decode_payload, payload)
+    assert "exceeds %d pixels" % MAX_IMAGE_PIXELS in msg
+
+
+def test_huge_jpeg_header_is_contained():
+    for marker in (0xC0, 0xC3):  # baseline and lossless frame headers
+        sof = struct.pack(">BHHB", 8, 65535, 65535, 1) + bytes([1, 0x11, 0])
+        payload = (
+            b"\xff\xd8" + bytes([0xFF, marker])
+            + struct.pack(">H", 2 + len(sof)) + sof + b"\xff\xd9"
+        )
+        msg = _contained_fast(jpeg_decode, payload)
+        assert "exceeds %d pixels" % MAX_IMAGE_PIXELS in msg
+
+
+def test_ordinary_png_still_decodes():
+    side = 64
+    pixels = bytes(range(256)) * (side * side // 256)
+    w, h, out = decode_payload(png_encode(side, side, pixels, 0))
+    assert (w, h, out) == (side, side, pixels)

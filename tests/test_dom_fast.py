@@ -10,9 +10,10 @@ These tests pin that contract on golden fixture inputs, handcrafted
 quirks, hypothesis-fuzzed tag soup, and the bench transcripts corpus.
 """
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
-from extractor.dom import Element, _TreeBuilder, _fast_parse, parse_html
+from extractor.dom import MAX_DOM_DEPTH, Element, _TreeBuilder, _fast_parse, parse_html
 from extractor.fixtures import FIXTURE_CASES, OPTION_CASES
 from extractor.transcripts import generate_conversation
 
@@ -77,6 +78,8 @@ DECLINE_CASES = [
     "</ div>",
     "<3 hearts",
     '<div a=b"c>unterminated quote</div>',
+    # the quote after e= closes only past this tag's '>'
+    "<a b=c'd e='f>g'>x</a>",
 ]
 
 
@@ -95,6 +98,77 @@ def test_parse_html_uses_fallback_transparently():
     # parse_html must give the stdlib tree even for declined documents
     for text in DECLINE_CASES:
         assert _sig(parse_html(text)) == _sig(_stdlib_parse(text)), repr(text)
+
+
+# --- depth cap and attribute details -----------------------------------------
+
+@pytest.mark.parametrize("last", ["<div>", "<br>"])
+def test_depth_cap_raises_on_both_paths(last):
+    # the start tag one past the cap raises, void or not
+    text = "<div>" * MAX_DOM_DEPTH + last
+    with pytest.raises(RecursionError):
+        _fast_parse(text)
+    with pytest.raises(RecursionError):
+        _stdlib_parse(text)
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "<div>" * MAX_DOM_DEPTH,
+        "<div>" * (MAX_DOM_DEPTH - 1) + "<br>",
+        # a self-closing tag is never depth-checked, on either path
+        "<div>" * MAX_DOM_DEPTH + "<br/>",
+    ],
+)
+def test_depth_at_cap_parses_on_both_paths(text):
+    fast = _fast_parse(text)
+    assert fast is not None
+    assert _sig(fast) == _sig(_stdlib_parse(text))
+
+
+def _attr_items(root: Element) -> list:
+    return list(root.children[0].attrs.items())
+
+
+def test_duplicate_attributes_first_position_last_value():
+    text = '<p a="1" b="2" A=\'3\'>x</p>'
+    for root in (_fast_parse(text), _stdlib_parse(text)):
+        assert _attr_items(root) == [("a", "3"), ("b", "2")]
+
+
+def test_uppercase_and_entity_attribute_values():
+    text = (
+        '<IMG SRC="Media/A.PNG" ALT="fish &amp; Chips &lt;HOT&gt;" '
+        "TITLE='&quot;Q&quot; &#65;&#x42;' data-X=&eacute;t&eacute;>"
+    )
+    want = [
+        ("src", "Media/A.PNG"),
+        ("alt", "fish & Chips <HOT>"),
+        ("title", '"Q" AB'),
+        ("data-x", "\u00e9t\u00e9"),
+    ]
+    for root in (_fast_parse(text), _stdlib_parse(text)):
+        assert root.children[0].tag == "img"
+        assert _attr_items(root) == want
+
+
+@pytest.mark.parametrize(
+    "text, tag, attrs, children",
+    [
+        # ' /' ends the attribute list: a self-closing <a> (no children)
+        ("<a b=c />after", "a", [("b", "c")], 0),
+        # unquoted values run to '>' and keep the '/': a void <img>
+        ("<img src=x/>after", "img", [("src", "x/")], 0),
+    ],
+)
+def test_self_closing_forms(text, tag, attrs, children):
+    fast = _fast_parse(text)
+    assert fast is not None
+    assert _sig(fast) == _sig(_stdlib_parse(text))
+    el = fast.children[0]
+    assert (el.tag, list(el.attrs.items()), len(el.children)) == (tag, attrs, children)
+    assert fast.children[1] == "after"
 
 
 # --- golden fixture inputs ---------------------------------------------------

@@ -128,6 +128,31 @@ def test_md_escape_guards_equivalent(text):
     assert escape_md_section(text) == _escape_md_section_unguarded(text)
 
 
+_cleanup_bait = st.lists(
+    st.one_of(
+        st.text(max_size=12),
+        st.sampled_from(
+            ["\n", "\t", "    ", ">", "<table", "</table>", "<math", "</math>",
+             "\n\n\n\n", "\n> ", "\n\t\t", "\n    ", " ", "\r"]
+        ),
+    ),
+    max_size=25,
+).map("".join)
+
+
+@settings(max_examples=500, deadline=None)
+@given(_cleanup_bait)
+def test_cleanup_probes_equivalent(text):
+    """The probe-guarded cleanup chain must be byte-identical to running
+    every step of it unconditionally, in order, then stripping."""
+    from extractor.kernel import _CLEANUP_STEPS, clean_markdown
+
+    unguarded = text
+    for _probe, pattern, repl in _CLEANUP_STEPS:
+        unguarded = pattern.sub(repl, unguarded)
+    assert clean_markdown(text) == unguarded.strip()
+
+
 @settings(max_examples=300, deadline=None)
 @given(st.text(alphabet=st.characters(blacklist_characters="<&"), max_size=200))
 def test_ws_probe_miss_implies_collapse_identity(text):
