@@ -9,6 +9,8 @@ pipeline over multi-turn transcript tables:
                              plus per-partition lineage + throughput
                              metrics (``lineage_manifest``)
 - ``extractor.checkpoint``— partition-level checkpoint + resume (left-anti join)
+- ``extractor.publish``   — the directory commit (stage, swap, crash recovery)
+                             behind every sink that replaces a directory
 - ``extractor.transcripts``— deterministic synthetic transcripts generator
 - ``extractor.ops``       — training-data-pipeline operators (dedup,
                              similarity, sampling, text stats, multimodal

@@ -132,18 +132,28 @@ def _schema_key(cols: list[str]) -> str:
     return ",".join(sorted(cols))
 
 
+def fingerprint_aggs(columns: list[str]) -> list:
+    """The content fingerprint as two aggregates, ``n`` = row count and
+    ``h`` = exact decimal SUM of per-row xxhash64 over *columns* (sorted):
+    order-insensitive, multiplicity-sensitive (see ``changed_buckets``)."""
+    return [
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64(*sorted(columns)).cast(T.DecimalType(38, 0))).alias("h"),
+    ]
+
+
+def content_fingerprint(df: DataFrame) -> tuple:
+    """Whole-table ``(n, h)`` fingerprint, the check a directory rewrite
+    must pass before it is published."""
+    return tuple(df.agg(*fingerprint_aggs(df.columns)).first())
+
+
 def _bucket_fingerprints(df: DataFrame, n_buckets: int) -> DataFrame:
-    """One (n, h) fingerprint row per bucket: exact decimal SUM of per-row
-    xxhash64 over every column — order-insensitive, multiplicity-sensitive
-    (see ``changed_buckets``)."""
-    cols = sorted(df.columns)
+    """One (n, h) fingerprint row per bucket."""
     return (
         with_bucket(df, n_buckets)
         .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64(*cols).cast(T.DecimalType(38, 0))).alias("h"),
-        )
+        .agg(*fingerprint_aggs(df.columns))
     )
 
 
@@ -498,31 +508,6 @@ def run_with_checkpoint(
     return summary
 
 
-def _recover_or_drop_bak(target: str) -> None:
-    """Crash recovery for the rename-aside swap: a leftover .expire-bak
-    with no live target means we died between the two renames — restore
-    it; a .bak alongside a live target means the swap completed."""
-    import os
-    import shutil
-
-    bak = f"{target}.expire-bak"
-    if os.path.exists(bak):
-        if not os.path.exists(target):
-            os.rename(bak, target)
-        else:
-            shutil.rmtree(bak)
-
-
-def _swap_dir(target: str, staged: str) -> None:
-    import os
-    import shutil
-
-    bak = f"{target}.expire-bak"
-    os.rename(target, bak)
-    os.rename(staged, target)
-    shutil.rmtree(bak)
-
-
 def expire_checkpoint_history(
     spark: SparkSession, ckpt_dir: str, keep_last: int = 2
 ) -> dict:
@@ -538,11 +523,10 @@ def expire_checkpoint_history(
     expiration bounds it at O(keep_last · n_buckets) rows.
 
     Safety: the rewrite is content-verified BEFORE any swap (the
-    retained status subset's count + decimal-xxhash fingerprint must be
-    identical in the staged copy — raises and leaves the store untouched
-    otherwise), and each table is swapped with the module's
-    crash-recoverable rename-aside sequence (a leftover ``.expire-bak``
-    from a crash between the two renames is restored on the next call).
+    retained status subset's ``content_fingerprint`` must be identical
+    in the staged copy — raises and leaves the store untouched
+    otherwise), and each table is committed with ``extractor.publish``,
+    which also recovers a crash of an earlier call.
     The newest snapshot's fingerprints are always retained, so the
     incremental fast path (``stored_fingerprints``) survives expiration.
 
@@ -550,13 +534,13 @@ def expire_checkpoint_history(
     recency list (one row per snapshot — bounded metadata, same class
     as the bucket lists this module already collects)."""
     import os
-    import shutil
-    import tempfile
+
+    from extractor import publish
 
     status_dir = f"{ckpt_dir}/status"
     fp_dir = f"{ckpt_dir}/fingerprints"
-    _recover_or_drop_bak(status_dir)
-    _recover_or_drop_bak(fp_dir)
+    new_status = publish.stage(status_dir)
+    new_fp = publish.stage(fp_dir)
 
     status = spark.read.schema(CHECKPOINT_SCHEMA).parquet(status_dir)
     has_fp = os.path.exists(fp_dir)
@@ -584,46 +568,27 @@ def expire_checkpoint_history(
     ]
     kept = set(snaps[:keep_last])
 
-    def fingerprint(df: DataFrame):
-        cols = sorted(df.columns)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64(*cols).cast(T.DecimalType(38, 0))).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
     keep_status = status.where(F.col("snapshot_id").isin(kept))
-    before = fingerprint(keep_status)
+    before = content_fingerprint(keep_status)
     rows_before = status.count()
 
-    # staging must share the store's filesystem so the swap renames are
-    # atomic (a /tmp staging dir would make os.rename fail with EXDEV)
-    staging = tempfile.mkdtemp(
-        prefix="ckpt-expire-", dir=os.path.abspath(ckpt_dir)
+    keep_status.coalesce(1).write.mode("overwrite").parquet(new_status)
+    if has_fp:
+        fp.where(F.col("snapshot_id").isin(kept)).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(new_fp)
+    # verify the staged copy BEFORE swapping anything
+    after = content_fingerprint(
+        spark.read.schema(CHECKPOINT_SCHEMA).parquet(new_status)
     )
-    try:
-        new_status = os.path.join(staging, "status")
-        keep_status.coalesce(1).write.mode("overwrite").parquet(new_status)
-        new_fp = None
-        if has_fp:
-            new_fp = os.path.join(staging, "fingerprints")
-            fp.where(F.col("snapshot_id").isin(kept)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(new_fp)
-        # verify the staged copy BEFORE swapping anything
-        after = fingerprint(
-            spark.read.schema(CHECKPOINT_SCHEMA).parquet(new_status)
+    if after != before:
+        raise RuntimeError(
+            f"expire content mismatch on {ckpt_dir}: "
+            f"{before} -> {after}; not swapping"
         )
-        if after != before:
-            raise RuntimeError(
-                f"expire content mismatch on {ckpt_dir}: "
-                f"{before} -> {after}; not swapping"
-            )
-        _swap_dir(status_dir, new_status)
-        if has_fp:
-            _swap_dir(fp_dir, new_fp)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    publish.publish(status_dir)
+    if has_fp:
+        publish.publish(fp_dir)
     return {
         "snapshots_before": len(snaps),
         "snapshots_after": len(kept),

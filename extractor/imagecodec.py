@@ -35,7 +35,7 @@ from __future__ import annotations
 import struct
 import zlib
 
-from extractor.pdf import inflate, png_predict_encode
+from extractor.pdf import MAX_INFLATE_BYTES, inflate, png_predict_encode
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -414,7 +414,8 @@ def sniff_image(payload: bytes) -> str | None:
 def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
     """Decode a GIF LZW stream (already de-sub-blocked): LSB-first bit
     packing, initial width min_code_size+1, Clear=2^mcs, EOI=Clear+1,
-    width grows when the table fills 2^width, max code 4095."""
+    width grows when the table fills 2^width, max code 4095.  Output is
+    capped at ``MAX_INFLATE_BYTES``."""
     clear = 1 << min_code_size
     eoi = clear + 1
     width = min_code_size + 1
@@ -450,6 +451,10 @@ def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
             else:
                 raise ValueError("corrupt GIF LZW: code out of range")
             out += entry
+            if len(out) > MAX_INFLATE_BYTES:
+                raise ValueError(
+                    "GIF LZW stream exceeds %d bytes" % MAX_INFLATE_BYTES
+                )
             prev = entry
             if len(table) == (1 << width) and width < 12:
                 width += 1

@@ -3,14 +3,11 @@ packed training data into the newline-delimited-JSON shard files a
 trainer's data loader actually reads, with an atomically-published,
 read-back-verified manifest.
 
-Same publish discipline as ``extractor/manifest_sink.py`` and
-``streaming.stream_upsert_sink``: ALL data is written to a ``.tmp``
-staging directory, the manifest is computed by READING THE STAGED FILES
-BACK (not from the upstream DataFrame — the manifest certifies what is
-on disk, not what was supposed to be), written into the staging dir,
-and only then is the directory renamed into place.  A crash anywhere
-before the rename leaves no visible export; a leftover ``.tmp`` is
-ignored by readers and overwritten by the next attempt.
+ALL data is written to a staging directory, the manifest is computed by
+READING THE STAGED FILES BACK (not from the upstream DataFrame — the
+manifest certifies what is on disk, not what was supposed to be),
+written into the staging dir, and only then is the directory committed
+with ``extractor.publish`` (staging, swap and crash recovery).
 
 Scale posture (100 TB): one shuffle (``repartition`` on the shard key)
 co-locates each shard into a single task so ``partitionBy`` emits one
@@ -30,9 +27,10 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from extractor import publish
 
 MANIFEST_NAME = "_export_manifest.json"
 
@@ -44,9 +42,7 @@ def export_jsonl_shards(df: DataFrame, out_dir: str,
     counts computed from the staged files).  Overwrites any previous
     export at *out_dir*."""
     spark = df.sparkSession
-    tmp = out_dir + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+    tmp = publish.stage(out_dir)
     (
         df.repartition(F.col(shard_col))
         .write.mode("overwrite")
@@ -78,14 +74,7 @@ def export_jsonl_shards(df: DataFrame, out_dir: str,
     }
     with open(os.path.join(tmp, MANIFEST_NAME), "w") as f:
         json.dump(manifest, f, sort_keys=True)
-    bak = out_dir + ".bak"
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    if os.path.exists(out_dir):
-        os.rename(out_dir, bak)
-    os.rename(tmp, out_dir)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
+    publish.publish(out_dir)
     return manifest
 
 

@@ -5,17 +5,16 @@ Why it's core at 100 TB: a 10^12-turn table written by thousands of
 streaming micro-batches or bucket-group commits accumulates millions of
 small files; scan throughput then dies on file-open overhead and the
 driver's file index.  The maintenance pass rewrites fragmented partitions
-into target-size files WITHOUT changing content, verified by a
-multiplicity-sensitive content fingerprint (the same decimal xxhash-sum
-used by ``extractor.checkpoint.changed_buckets``).
+into target-size files WITHOUT changing content, verified by
+``extractor.checkpoint.content_fingerprint`` (the multiplicity-sensitive
+decimal xxhash-sum that ``changed_buckets`` compares per bucket).
 
 Scale posture: the rewrite is one round-robin ``repartition(n_target)``
 (a single shuffle of the compacted partition's data — unavoidable, it IS
 the rewrite) + two column-pruned fingerprint scans producing one row
 each.  On Iceberg this maps to ``CALL system.rewrite_data_files(...)``
-with the same verify step free from snapshot statistics.  The swap is the
-crash-safe rename-aside sequence (old → .bak, tmp → live, drop .bak),
-matching ``extractor.streaming.stream_upsert_sink``.
+with the same verify step free from snapshot statistics.  The rewrite is
+committed with ``extractor.publish``.
 """
 from __future__ import annotations
 
@@ -26,7 +25,10 @@ import shutil
 import tempfile
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from extractor import publish
+from extractor.checkpoint import content_fingerprint
 
 _SCRATCH_REGISTERED: set[str] = set()
 _STALE_SCRATCH_SECS = 24 * 3600
@@ -72,15 +74,6 @@ def _session_scratch(spark: SparkSession, name: str) -> str:
     return root
 
 
-def _content_fingerprint(df: DataFrame):
-    cols = sorted(df.columns)
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.sum(F.xxhash64(*cols).cast(T.DecimalType(38, 0))).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), row["h"]
-
-
 def _list_parquet_files(path: str) -> list[str]:
     return sorted(
         os.path.join(path, f)
@@ -100,25 +93,14 @@ def compact_files(
 
     Returns a stats dict; raises if the rewritten content fingerprint does
     not equal the source's (the rewrite is then rolled back by simply not
-    swapping).  Idempotent: re-running on a compacted table rewrites to
+    publishing it; the next call's ``publish.stage`` clears it).  Idempotent: re-running on a compacted table rewrites to
     the same file count.  *codec* (e.g. ``zstd``) recompresses during the
     rewrite — the Iceberg rewrite-with-codec-change maintenance case."""
-    tmp, bak = f"{table_dir}.compact-tmp", f"{table_dir}.compact-bak"
-    # crash recovery (same contract as streaming.stream_upsert_sink): a
-    # death between the two swap renames leaves the table missing and the
-    # backup present — restore it before anything else; a .bak alongside a
-    # live table means the swap completed and the leftover is safe to drop
-    if os.path.exists(bak):
-        if not os.path.exists(table_dir):
-            os.rename(bak, table_dir)
-        else:
-            shutil.rmtree(bak)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # stale partial rewrite
+    tmp = publish.stage(table_dir)
     files_before = _list_parquet_files(table_dir)
     bytes_before = sum(os.path.getsize(f) for f in files_before)
     df = spark.read.parquet(table_dir)
-    n_before, h_before = _content_fingerprint(df)
+    before = content_fingerprint(df)
     n_target = target_files or max(
         1, math.ceil(bytes_before / target_file_bytes)
     )
@@ -127,19 +109,16 @@ def compact_files(
         writer = writer.option("compression", codec)
     writer.parquet(tmp)
 
-    n_after, h_after = _content_fingerprint(spark.read.parquet(tmp))
-    if (n_after, h_after) != (n_before, h_before):
-        shutil.rmtree(tmp)
+    after = content_fingerprint(spark.read.parquet(tmp))
+    if after != before:
         raise RuntimeError(
             f"compaction content mismatch on {table_dir}: "
-            f"{(n_before, h_before)} -> {(n_after, h_after)}; not swapping"
+            f"{before} -> {after}; not swapping"
         )
-    os.rename(table_dir, bak)
-    os.rename(tmp, table_dir)
-    shutil.rmtree(bak)
+    publish.publish(table_dir)
     files_after = _list_parquet_files(table_dir)
     return {
-        "rows": n_before,
+        "rows": before[0],
         "files_before": len(files_before),
         "files_after": len(files_after),
         "bytes_before": bytes_before,

@@ -167,7 +167,8 @@ def lzw_encode(data: bytes, early_change: int = 1) -> bytes:
 def lzw_decode(data: bytes, early_change: int = 1) -> bytes:
     """Inverse of :func:`lzw_encode` — the PDF ``LZWDecode`` filter.
     Accepts any spec-compliant stream (not just our encoder's output):
-    handles mid-stream ClearTable, the KwKwK case, and EarlyChange 0/1."""
+    handles mid-stream ClearTable, the KwKwK case, and EarlyChange 0/1.
+    Output is capped at ``MAX_INFLATE_BYTES`` like :func:`inflate`."""
     out = bytearray()
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
@@ -200,6 +201,10 @@ def lzw_decode(data: bytes, early_change: int = 1) -> bytes:
             else:
                 raise ValueError("corrupt LZW stream: code out of range")
             out += entry
+            if len(out) > MAX_INFLATE_BYTES:
+                raise ValueError(
+                    "LZW stream exceeds %d bytes" % MAX_INFLATE_BYTES
+                )
             prev = entry
             # decoder table lags the encoder's by one entry, so its bump
             # threshold is one lower (enc: next_code+early-1 >= 2^w)

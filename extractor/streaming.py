@@ -169,37 +169,25 @@ def stream_upsert_sink(
     (``relational.s3_merge_upsert`` topology): surviving target rows come
     from an anti join whose BROADCAST side is the batch's key set — the
     10^12-row target never builds a hash table.  On a real deployment the
-    batch body is one Iceberg ``MERGE INTO``; here the CoW result lands
-    via write-temp + rename-aside swap (the parquet stand-in for a
-    snapshot commit).  Spark's streaming checkpoint makes batch delivery
+    batch body is one Iceberg ``MERGE INTO``; here every batch's CoW
+    result, the first one included, is committed with
+    ``extractor.publish``, whose recovery step restores the last
+    published table after a crash mid-commit, so checkpoint replay
+    always merges against it instead of rebuilding the table from one
+    batch.  Spark's streaming checkpoint makes batch delivery
     effectively-once; the merge itself is idempotent (re-running a batch
-    yields the same table), so the sink is exactly-once end-to-end.
-
-    Crash recovery across the swap: the published table is never deleted
-    before its replacement is in place — the old target is renamed ASIDE
-    (``.bak``), the tmp renamed in, then the ``.bak`` dropped.  A crash
-    between any two steps leaves either the old target, or a ``.bak`` that
-    the next batch (or restart) restores before merging, so checkpoint
-    replay always merges against the last published state instead of
-    rebuilding the table from one batch."""
+    yields the same table), so the sink is exactly-once end-to-end."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    from extractor import publish
+
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
-    bak = f"{target_dir}.bak"
 
     def merge_batch(batch_df, batch_id):
-        # recover a crash mid-swap from a previous batch: target missing
-        # but .bak present -> the old table was renamed aside and the crash
-        # hit before (or during) the tmp rename; restore it.
-        if os.path.exists(bak):
-            if not os.path.exists(target_dir):
-                os.rename(bak, target_dir)
-            else:
-                shutil.rmtree(bak)  # swap completed; drop the leftover
+        tmp = publish.stage(target_dir)
         w = Window.partitionBy("conv_id", "turn_idx").orderBy(
             F.desc("ts"), F.desc("role")
         )
@@ -208,21 +196,16 @@ def stream_upsert_sink(
             .where(F.col("rn") == 1)
             .drop("rn")
         )
-        tmp = f"{target_dir}.tmp-{batch_id}"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)  # stale partial write from a replayed batch
+        merged = batch
         if os.path.exists(target_dir):
             target = batch_df.sparkSession.read.parquet(target_dir)
             keys = batch.select("conv_id", "turn_idx")
             kept = target.join(
                 F.broadcast(keys), ["conv_id", "turn_idx"], "left_anti"
             )
-            kept.unionByName(batch).write.mode("overwrite").parquet(tmp)
-            os.rename(target_dir, bak)
-            os.rename(tmp, target_dir)
-            shutil.rmtree(bak)
-        else:
-            batch.write.mode("overwrite").parquet(target_dir)
+            merged = kept.unionByName(batch)
+        merged.write.mode("overwrite").parquet(tmp)
+        publish.publish(target_dir)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)

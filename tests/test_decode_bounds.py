@@ -97,3 +97,67 @@ def test_ordinary_png_still_decodes():
     pixels = bytes(range(256)) * (side * side // 256)
     w, h, out = decode_payload(png_encode(side, side, pixels, 0))
     assert (w, h, out) == (side, side, pixels)
+
+
+def _lzw_bomb(codes, pack, grows) -> bytes:
+    """Bit-pack LZW *codes* (``pack(acc, nbits, code, width)``) at the
+    widths the decoder reads them with: *grows(table_len, width)* says
+    when the decoder bumps its width after a data code."""
+    out = bytearray()
+    acc = nbits = 0
+    width, table_len = 9, 258
+    for i, code in enumerate(codes):
+        acc, nbits = pack(acc, nbits, code, width, out)
+        if i:
+            table_len = min(table_len + 1, 4096)
+        if width < 12 and grows(table_len, width):
+            width += 1
+    if nbits:
+        acc, nbits = pack(acc, nbits, 0, 8 - nbits % 8, out)
+    return bytes(out)
+
+
+def _pack_msb(acc, nbits, code, width, out):
+    acc, nbits = (acc << width) | code, nbits + width
+    while nbits >= 8:
+        nbits -= 8
+        out.append((acc >> nbits) & 0xFF)
+    return acc & ((1 << nbits) - 1), nbits
+
+
+def _pack_lsb(acc, nbits, code, width, out):
+    acc, nbits = acc | (code << nbits), nbits + width
+    while nbits >= 8:
+        out.append(acc & 0xFF)
+        acc, nbits = acc >> 8, nbits - 8
+    return acc, nbits
+
+
+def test_pdf_lzw_bomb_is_contained():
+    # a KwKwK chain builds code 4093 (3,837 zero bytes); repeating it
+    # 20,000 times would decode ~84 MB from a ~35 KB stream
+    codes = [0, *range(258, 4094), *[4093] * 20000]
+    bomb = _lzw_bomb(codes, _pack_msb, lambda n, w: n + 1 >= 1 << w)
+    assert len(bomb) < 40_000
+    msg = _contained_fast(
+        pdf._decode_stream, b"<< /Filter /LZWDecode >>", bomb
+    )
+    assert "exceeds %d bytes" % MAX_INFLATE_BYTES in msg
+
+
+def test_gif_lzw_bomb_is_contained():
+    # min code size 8: Clear 256, EOI 257; the chain fills the table to
+    # code 4095 (3,839 bytes), then that code repeats
+    codes = [0, *range(258, 4096), *[4095] * 20000]
+    lzw = _lzw_bomb(codes, _pack_lsb, lambda n, w: n == 1 << w)
+    blocks = b"".join(
+        bytes([len(lzw[i:i + 255])]) + lzw[i:i + 255]
+        for i in range(0, len(lzw), 255)
+    )
+    gif = (
+        b"GIF89a" + struct.pack("<HHBBB", 1, 1, 0x80, 0, 0) + bytes(6)
+        + b"\x2c" + struct.pack("<HHHHB", 0, 0, 1, 1, 0)
+        + b"\x08" + blocks + b"\x00\x3b"
+    )
+    msg = _contained_fast(decode_payload, gif)
+    assert "exceeds %d bytes" % MAX_INFLATE_BYTES in msg

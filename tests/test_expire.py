@@ -83,9 +83,9 @@ def test_expire_crash_recovery(spark, tmp_path):
     _seed(spark, ckpt)
     # simulate a crash between the two swap renames: status moved aside,
     # replacement never landed
-    os.rename(f"{ckpt}/status", f"{ckpt}/status.expire-bak")
+    os.rename(f"{ckpt}/status", f"{ckpt}/status.bak")
     assert not os.path.exists(f"{ckpt}/status")
     stats = expire_checkpoint_history(spark, ckpt, keep_last=2)
     assert stats["snapshots_after"] == 2
-    assert not os.path.exists(f"{ckpt}/status.expire-bak")
+    assert not os.path.exists(f"{ckpt}/status.bak")
     assert os.path.exists(f"{ckpt}/status")

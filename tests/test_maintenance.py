@@ -48,12 +48,12 @@ def test_size_derived_target(spark, tmp_path):
 
 def test_stale_tmp_and_bak_cleaned(spark, tmp_path):
     path = _frag(spark, tmp_path)
-    os.makedirs(f"{path}.compact-tmp/junk")
-    os.makedirs(f"{path}.compact-bak/junk")
+    os.makedirs(f"{path}.tmp/junk")
+    os.makedirs(f"{path}.bak/junk")
     stats = compact_files(spark, path, target_files=2)
     assert stats["files_after"] == 2
-    assert not os.path.exists(f"{path}.compact-tmp")
-    assert not os.path.exists(f"{path}.compact-bak")
+    assert not os.path.exists(f"{path}.tmp")
+    assert not os.path.exists(f"{path}.bak")
 
 
 def test_codec_change_during_rewrite(spark, tmp_path):
@@ -74,12 +74,12 @@ def test_crash_between_swap_renames_recovers(spark, tmp_path):
     the next compact_files call must restore the backup, not crash."""
     path = _frag(spark, tmp_path, n_files=6, rows=1000)
     before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    os.rename(path, f"{path}.compact-bak")  # simulate the crash window
+    os.rename(path, f"{path}.bak")  # simulate the crash window
     stats = compact_files(spark, path, target_files=2)
     assert stats["files_before"] == 6 and stats["files_after"] == 2
     after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert after == before
-    assert not os.path.exists(f"{path}.compact-bak")
+    assert not os.path.exists(f"{path}.bak")
 
 
 def test_bucketed_colocated_join_zero_exchange(spark):
