@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from bisect import bisect_right
 
+from extractor.pdf import MAX_INFLATE_BYTES
+
 __all__ = [
     "ccitt_encode",
     "ccitt_decode",
@@ -495,7 +497,8 @@ def ccitt_decode(data: bytes, columns: int, rows: int | None = None,
 
     ``rows=None`` decodes until EOFB/RTC or data exhaustion (PDF
     ``/EndOfBlock true`` default); with ``rows`` given, decoding also
-    stops after that many lines (PDF ``/Rows``)."""
+    stops after that many lines (PDF ``/Rows``).  Output is capped at
+    ``MAX_INFLATE_BYTES`` like :func:`extractor.pdf.inflate`."""
     if columns <= 0:
         raise ValueError("columns must be positive")
     r = _BitReader(bytes(data))
@@ -537,6 +540,10 @@ def ccitt_decode(data: bytes, columns: int, rows: int | None = None,
                 break  # trailing padding after last line
             raise
         out += pack_row(cur, columns)
+        if len(out) > MAX_INFLATE_BYTES:
+            raise ValueError(
+                "CCITT stream exceeds %d bytes" % MAX_INFLATE_BYTES
+            )
         ref = cur
         nrows += 1
         if rows is None and r.eof():

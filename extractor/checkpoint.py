@@ -38,6 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
+from . import publish
 from .pipeline import extract_transcripts
 
 CHECKPOINT_SCHEMA = T.StructType(
@@ -52,9 +53,21 @@ CHECKPOINT_SCHEMA = T.StructType(
 )
 
 
+def _table_path(ckpt_dir: str, table: str) -> str:
+    """Path of the checkpoint's *table* (``status`` or ``fingerprints``),
+    first restored if an expiry crashed between its two renames — else a
+    reader would see no history and a writer would start a new table
+    that the next expiry's recovery keeps in place of the backup."""
+    path = f"{ckpt_dir}/{table}"
+    publish.recover(path)
+    return path
+
+
 def _read_status(spark: SparkSession, ckpt_dir: str) -> DataFrame | None:
     try:
-        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(f"{ckpt_dir}/status")
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(
+            _table_path(ckpt_dir, "status")
+        )
     except Exception:
         return None
 
@@ -107,7 +120,7 @@ def _record(
 ) -> None:
     spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
         "append"
-    ).parquet(f"{ckpt_dir}/status")
+    ).parquet(_table_path(ckpt_dir, "status"))
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -174,7 +187,7 @@ def _write_fingerprints(
         )
         .coalesce(1)
         .write.mode("append")
-        .parquet(f"{ckpt_dir}/fingerprints")
+        .parquet(_table_path(ckpt_dir, "fingerprints"))
     )
 
 
@@ -203,7 +216,7 @@ def stored_fingerprints(
 
     try:
         fp = spark.read.schema(FINGERPRINT_SCHEMA).parquet(
-            f"{ckpt_dir}/fingerprints"
+            _table_path(ckpt_dir, "fingerprints")
         )
     except Exception:
         return None
@@ -534,8 +547,6 @@ def expire_checkpoint_history(
     recency list (one row per snapshot — bounded metadata, same class
     as the bucket lists this module already collects)."""
     import os
-
-    from extractor import publish
 
     status_dir = f"{ckpt_dir}/status"
     fp_dir = f"{ckpt_dir}/fingerprints"

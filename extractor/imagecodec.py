@@ -35,7 +35,12 @@ from __future__ import annotations
 import struct
 import zlib
 
-from extractor.pdf import MAX_INFLATE_BYTES, inflate, png_predict_encode
+from extractor.pdf import (
+    MAX_INFLATE_BYTES,
+    inflate,
+    png_predict_decode,
+    png_predict_encode,
+)
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -118,56 +123,6 @@ def png_encode(
         + _chunk(b"IDAT", zlib.compress(raw, 6))
         + _chunk(b"IEND", b"")
     )
-
-
-def _png_unfilter(raw: bytes, width: int, ch: int, depth: int) -> bytes:
-    """Undo PNG row filters for one sub-image at any legal bit depth.
-    Filtering operates on BYTES: bpp = max(1, ch*depth//8) (PNG spec
-    §6.2), so depths <8 unfilter with bpp=1 and depth 16 with bpp=2*ch.
-    Returns the raw (still bit-packed) scanline bytes, filter tags
-    stripped."""
-    rowbytes = (width * ch * depth + 7) // 8
-    bpp = max(1, (ch * depth) // 8)
-    out = bytearray()
-    prev = bytes(rowbytes)
-    pos = 0
-    n = len(raw)
-    while pos < n:
-        ftype = raw[pos]
-        pos += 1
-        frow = raw[pos : pos + rowbytes]
-        pos += len(frow)
-        row = bytearray(len(frow))
-        for i, f in enumerate(frow):
-            a = row[i - bpp] if i >= bpp else 0
-            b = prev[i] if i < len(prev) else 0
-            c = prev[i - bpp] if i >= bpp and i - bpp < len(prev) else 0
-            if ftype == 0:
-                x = f
-            elif ftype == 1:
-                x = (f + a) & 0xFF
-            elif ftype == 2:
-                x = (f + b) & 0xFF
-            elif ftype == 3:
-                x = (f + (a + b) // 2) & 0xFF
-            elif ftype == 4:
-                x = (f + _png_paeth(a, b, c)) & 0xFF
-            else:
-                raise ValueError("bad PNG filter tag %d" % ftype)
-            row[i] = x
-        out += row
-        prev = bytes(row)
-    return bytes(out)
-
-
-def _png_paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
 
 
 def _png_samples_to_bytes(
@@ -281,7 +236,7 @@ def png_decode(payload: bytes) -> tuple[int, int, int, bytes]:
             if len(sub) != sub_len:
                 raise ValueError("truncated Adam7 pass data")
             at += sub_len
-            rows = _png_unfilter(sub, pw, ch, depth)
+            rows = png_predict_decode(sub, pw, ch, depth)
             spx = _png_samples_to_bytes(rows, pw, ph, ch, depth)
             for py in range(ph):
                 for px_ in range(pw):
@@ -295,7 +250,7 @@ def png_decode(payload: bytes) -> tuple[int, int, int, bytes]:
             raise ValueError(
                 "PNG scanline data is %d bytes, want %d" % (len(raw), expected)
             )
-        rows = _png_unfilter(raw, width, ch, depth)
+        rows = png_predict_decode(raw, width, ch, depth)
         pixels = _png_samples_to_bytes(rows, width, height, ch, depth)
     if color_type == 3:
         if not palette or len(palette) % 3:

@@ -1,10 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The *decode* step is REAL for lossless containers — PNG/GIF/TIFF/BMP
-(own stdlib decoders, ``extractor/imagecodec.py``) and PCM WAV audio
-(``extractor/audiocodec.py``) — and stubbed only for lossy codecs
-(JPEG/WebP/MP3 need a codec library not present in this container;
+The *decode* step is REAL for lossless image containers — PNG/GIF/TIFF/BMP
+(own stdlib decoders, ``extractor/imagecodec.py``) — and stubbed only for
+lossy codecs (WebP needs a codec library not present in this container;
 those raise ``NotImplementedError`` → contained error rows).
 Everything Spark-side is real and tested either way: the binary-column
 schema, the Arrow batch shape through ``mapInPandas`` (bytes round-trip),
@@ -182,119 +181,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.select("media_id", "payload").mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-AUDIO_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """Audio decode → fixed-dim RMS-energy profile, as an Arrow-batched
-    kernel — the audio twin of :func:`extract_features`.
-
-    REAL for PCM WAV (stdlib ``wave`` via ``extractor/audiocodec.py``,
-    8/16-bit, any channel layout — channels mixed down before binning);
-    the synthetic ``FAKEIMG|`` payloads decode through a deterministic
-    byte→sample view so the plumbing is exercised without codecs; MP3/
-    Ogg/FLAC raise into contained error rows (O4).  Same scale posture
-    as the image kernel: map-only, O(batch bytes), blob-heavy rows pair
-    with a low Arrow batch size."""
-
-    def kernel(iterator):
-        import numpy as np
-        import pandas as pd
-
-        from extractor.audiocodec import wav_decode
-
-        for pdf in iterator:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    raw = bytes(payload)
-                    if raw.startswith(b"FAKEIMG|"):
-                        _, _w, _h, _fmt, body = raw.split(b"|", 4)
-                        arr = (
-                            np.frombuffer(body, dtype=np.uint8).astype(
-                                np.float32
-                            )
-                            - 128.0
-                        ) / 128.0
-                        nch, rate, nframes = 1, 16000, len(arr)
-                    else:
-                        nch, rate, nframes, arr = wav_decode(raw)
-                        if nch > 1:  # mono mixdown before binning
-                            arr = arr.reshape(-1, nch).mean(axis=1)
-                    pad = (-len(arr)) % FEATURE_DIM
-                    if pad:
-                        arr = np.pad(arr, (0, pad))
-                    rms = np.sqrt(
-                        (arr.reshape(FEATURE_DIM, -1) ** 2).mean(axis=1)
-                    )
-                    out.append(
-                        (
-                            media_id, nch, rate, nframes,
-                            [float(x) for x in rms], None,
-                        )
-                    )
-                except Exception as exc:
-                    out.append(
-                        (media_id, None, None, None, None, str(exc)[:200])
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_channels", "sample_rate", "n_frames",
-                    "features", "error",
-                ],
-            )
-
-    return (
-        media.where(F.col("kind") == "audio")
-        .select("media_id", "payload")
-        .mapInPandas(kernel, AUDIO_FEATURE_SCHEMA)
-    )
-
-
-def resize_meta(media: DataFrame, max_side: int = 32) -> DataFrame:
-    """Resize planning — pure metadata math, fully JVM-side: target dims
-    preserving aspect ratio (the byte-level resample is the stubbed part)."""
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side)
-        / F.greatest(F.col("meta.width"), F.col("meta.height")).cast("double"),
-    )
-    return media.select(
-        "media_id",
-        "kind",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        F.round(F.col("meta.width") * scale).cast("int").alias("target_width"),
-        F.round(F.col("meta.height") * scale).cast("int").alias("target_height"),
-    )
-
-
-def frame_stride_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Stride frame-sampling plan for video rows: explode frame indices
-    0..n step every_n (n proxied from byte length) — the fixed-stride
-    counterpart of :func:`frame_sample_plan` (which spaces a bounded
-    frame count evenly).  Shows the explode-side-table pattern for
-    frame-level work without decoding."""
-    video = media.where(F.col("kind") == "video")
-    n_frames = (F.col("meta.n_bytes") / 256).cast("int")
-    return video.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), n_frames, F.lit(every_n))).alias("frame_idx"),
-    )
 
 
 def dhash_groups(features: DataFrame, bits: int = 8) -> DataFrame:

@@ -51,8 +51,8 @@ PAGE_W, PAGE_H = 612, 792  # US Letter, points
 MARGIN_X, TOP_Y = 72, 720
 FONT_SIZE, LEADING = 10, 12
 
-# Output cap of one zlib inflate (a FlateDecode stream here, a PNG's IDAT
-# data in extractor.imagecodec): a few KB of deflate can declare GBs, so
+# Output cap of one decoded stream (zlib inflate, LZW and CCITT fax, here
+# and in extractor.imagecodec): a few KB of coded data can declare GBs, so
 # past this the payload is refused before the memory is taken.  64 MiB
 # holds any page stream or image this pure-Python decoder gets through in
 # reasonable time.
@@ -194,7 +194,8 @@ def lzw_decode(data: bytes, early_change: int = 1) -> bytes:
                 entry = table[code]
             elif code < len(table):
                 entry = table[code]
-                table.append(prev + entry[:1])
+                if len(table) < 4096:  # no 12-bit code reaches past 4095
+                    table.append(prev + entry[:1])
             elif code == len(table):  # KwKwK
                 entry = prev + prev[:1]
                 table.append(entry)
@@ -942,6 +943,7 @@ def pdf_extract_images(payload: bytes) -> list[dict]:
                 rec.update(width=w, height=h, channels=ch, pixels=px)
             elif flat and flat[-1] == b"CCITTFaxDecode":
                 from extractor.ccittcodec import ccitt_decode
+                from extractor.imagecodec import check_pixels
 
                 body = raw
                 if len(flat) > 1:
@@ -980,6 +982,7 @@ def pdf_extract_images(payload: bytes) -> list[dict]:
                 # pixels are black, so the gray image is the same
                 rowlen = (cols + 7) // 8
                 h = len(packed) // rowlen
+                check_pixels(cols, h)
                 px = bytearray(cols * h)
                 for y in range(h):
                     base = y * rowlen

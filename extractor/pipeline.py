@@ -286,15 +286,3 @@ def stitch_conversations(extracted: DataFrame) -> DataFrame:
         )
 
     return extracted.groupBy("conv_id").applyInPandas(stitch, STITCH_SCHEMA)
-
-
-def split_quarantine(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Route extraction output to (good, quarantine) — the F3/O4 sink split:
-    quarantine rows carry the error (size cap, null input, contained kernel
-    failure) for later triage; good rows are the trainer-facing table.
-    Both sides share one upstream computation (no double kernel run)."""
-    good = extracted.where(F.col("error").isNull())
-    quarantined = extracted.where(F.col("error").isNotNull()).select(
-        "conv_id", "turn_idx", "role", "ts", "bytes_in", "error"
-    )
-    return good, quarantined

@@ -1,6 +1,6 @@
 """Directory commit: the one stage → publish → recover sequence behind
 every sink that replaces a whole directory (small-file compaction,
-checkpoint-history expiry, the streaming upsert sink, the JSONL export).
+checkpoint-history expiry, the JSONL export).
 
 It stands in for an Iceberg snapshot commit on plain parquet/JSON
 directories.  POSIX cannot rename a directory over a non-empty one, so a
@@ -17,7 +17,9 @@ each rename is atomic.  A crash leaves one of three states, and
 - a staging directory: an unfinished or rejected write, so it is removed.
 
 Readers never look at the staging directory; after recovery they see the
-old directory or the new one, never a partial one.
+old directory or the new one, never a partial one.  A reader that must
+not wait for the next commit calls :func:`recover`, which performs only
+the first repair and deletes nothing.
 """
 
 from __future__ import annotations
@@ -26,15 +28,21 @@ import os
 import shutil
 
 
+def recover(target: str) -> None:
+    """Rename ``<target>.bak`` back to *target* when a commit crashed
+    between its two renames (backup present, *target* missing)."""
+    bak = target + ".bak"
+    if os.path.exists(bak) and not os.path.exists(target):
+        os.rename(bak, target)
+
+
 def stage(target: str) -> str:
     """Recover *target* from any interrupted commit and return the (absent)
     staging path the next version must be written to."""
+    recover(target)
     bak = target + ".bak"
     if os.path.exists(bak):
-        if os.path.exists(target):
-            shutil.rmtree(bak)
-        else:
-            os.rename(bak, target)
+        shutil.rmtree(bak)
     staged = target + ".tmp"
     if os.path.exists(staged):
         shutil.rmtree(staged)

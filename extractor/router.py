@@ -240,36 +240,3 @@ def route_batch(
             "error",
         ],
     )
-
-
-ROUTED_SCHEMA = (
-    "format string, extracted_text string, tables_count int, "
-    "math_count int, images_count int, error string"
-)
-
-
-def extract_any(df, payload_col: str = "payload", id_cols=("doc_id",),
-                max_chars: int = MAX_TEXT_CHARS,
-                options: ConvertOptions = DEFAULT_OPTIONS):
-    """DataFrame op: route an opaque binary/string column to markdown.
-
-    Map-only (no shuffle): sniff/decode/convert fuse into a single Python
-    stage per input partition, so the routed path inherits the scan's
-    partitioning — the property the plan gates assert for the main kernel.
-    """
-    id_cols = list(id_cols)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in id_cols
-    )
-    full_schema = f"{schema}, {ROUTED_SCHEMA}" if schema else ROUTED_SCHEMA
-
-    def gen(iterator):
-        for pdf in iterator:
-            routed = route_batch(pdf[payload_col], max_chars, options)
-            for c in reversed(id_cols):
-                routed.insert(0, c, pdf[c].values)
-            yield routed
-
-    return df.select(*id_cols, payload_col).mapInPandas(gen, full_schema)

@@ -84,7 +84,7 @@ def test_docx_run_text_roundtrips(t):
     assert html == f"<p>{h.escape(t, quote=False)}</p>"
 
 
-# --- image/audio codec properties (round 5) ---------------------------------
+# --- image codec properties (round 5) ---------------------------------------
 
 binary_blob = st.binary(min_size=0, max_size=2048)
 
@@ -162,29 +162,6 @@ def test_bmp_roundtrip_any_padding(w, h, rnd):
     assert bmp_decode(bmp_encode(w, h, px)) == (w, h, 3, px)
 
 
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.floats(min_value=-1.0, max_value=1.0, allow_nan=False),
-        min_size=1,
-        max_size=400,
-    ),
-    st.sampled_from([1, 2]),
-    st.sampled_from([8000, 16000, 44100]),
-)
-def test_wav_roundtrip_quantization_bounded(samples, nch, rate):
-    from extractor.audiocodec import wav_decode, wav_encode
-
-    if len(samples) % nch:
-        samples = samples[: len(samples) - len(samples) % nch]
-        if not samples:
-            samples = [0.0] * nch
-    blob = wav_encode(samples, sample_rate=rate, n_channels=nch, sampwidth=2)
-    got_nch, got_rate, frames, arr = wav_decode(blob)
-    assert (got_nch, got_rate, frames) == (nch, rate, len(samples) // nch)
-    assert max(abs(float(a) - b) for a, b in zip(arr, samples)) < 1e-4
-
-
 @settings(max_examples=150, deadline=None)
 @given(st.binary(min_size=0, max_size=64))
 def test_codec_decoders_never_crash_on_garbage(data):
@@ -193,7 +170,6 @@ def test_codec_decoders_never_crash_on_garbage(data):
     those two).  Garbage prefixed with each magic exercises the parsers."""
     import pytest  # noqa: F401
 
-    from extractor.audiocodec import wav_decode
     from extractor.imagecodec import (
         PNG_SIG,
         bmp_decode,
@@ -210,7 +186,6 @@ def test_codec_decoders_never_crash_on_garbage(data):
         (tiff_decode, b"MM\x00*"),
         (bmp_decode, b"BM"),
         (jpeg_decode, b"\xff\xd8\xff\xe0"),
-        (wav_decode, b"RIFF\x24\x00\x00\x00WAVE"),
     ):
         for payload in (data, magic + data):
             try:

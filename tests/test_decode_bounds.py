@@ -161,3 +161,59 @@ def test_gif_lzw_bomb_is_contained():
     )
     msg = _contained_fast(decode_payload, gif)
     assert "exceeds %d bytes" % MAX_INFLATE_BYTES in msg
+
+
+def test_pdf_lzw_bomb_table_stops_at_4096():
+    """Past code 4095 no 12-bit code can name a new entry, so the decoder
+    keeps only the output (up to the cap), not ~60 MB of dead entries."""
+    import tracemalloc
+
+    codes = [0, *range(258, 4094), *[4093] * 20000]
+    bomb = _lzw_bomb(codes, _pack_msb, lambda n, w: n + 1 >= 1 << w)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError):
+            pdf.lzw_decode(bomb)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 96 << 20
+
+
+# 600 rows of one T.6 code each (V0 against an all-white reference row is
+# a whole white row), then EOFB: 78 bytes that decode to 125,000 bytes a
+# row at 1,000,000 columns
+_CCITT_WIDE_COLUMNS = 1_000_000
+
+
+def _ccitt_white_rows(n_rows: int) -> bytes:
+    assert n_rows % 8 == 0
+    return b"\xff" * (n_rows // 8) + b"\x00\x10\x01"
+
+
+def test_ccitt_output_is_capped():
+    from extractor.ccittcodec import ccitt_decode
+
+    stream = _ccitt_white_rows(600)
+    assert len(stream) == 78
+    msg = _contained_fast(ccitt_decode, stream, _CCITT_WIDE_COLUMNS)
+    assert "exceeds %d bytes" % MAX_INFLATE_BYTES in msg
+
+
+def test_pdf_ccitt_image_pixels_are_capped():
+    # 96 rows pack to 12 MB, under the output cap, but are 96M gray pixels
+    stream = _ccitt_white_rows(96)
+    image = (
+        b"900 0 obj\n<< /Type /XObject /Subtype /Image /Width %d"
+        b" /Height 96 /BitsPerComponent 1 /Filter /CCITTFaxDecode"
+        b" /DecodeParms << /K -1 /Columns %d >> /Length %d >>\nstream\n"
+        % (_CCITT_WIDE_COLUMNS, _CCITT_WIDE_COLUMNS, len(stream))
+    ) + stream + b"\nendstream\nendobj\n"
+    payload = pdf.text_to_pdf_bytes("fax").replace(b"%%EOF", image + b"%%EOF")
+    t0 = time.perf_counter()
+    (rec,) = pdf.pdf_extract_images(payload)
+    assert time.perf_counter() - t0 < 2.0
+    assert rec["pixels"] is None
+    assert rec["error"] == "ValueError: image %dx96 exceeds %d pixels" % (
+        _CCITT_WIDE_COLUMNS, MAX_IMAGE_PIXELS,
+    )

@@ -36,30 +36,6 @@ def test_extract_features_shapes_and_errors(spark):
     assert "codec" in out[0]["error"]
 
 
-def test_resize_meta(spark):
-    media = mm.synth_media_df(spark, n=30)
-    for r in mm.resize_meta(media, max_side=32).collect():
-        assert max(r["target_width"], r["target_height"]) <= 32
-        # aspect ratio preserved within rounding
-        if r["width"] >= r["height"]:
-            assert r["target_width"] >= r["target_height"] - 1
-        else:
-            assert r["target_height"] >= r["target_width"] - 1
-
-
-def test_frame_stride_plan(spark):
-    media = mm.synth_media_df(spark, n=60)
-    plan = mm.frame_stride_plan(media, every_n=10)
-    rows = plan.collect()
-    assert rows, "expected some video rows"
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["media_id"], []).append(r["frame_idx"])
-    for idxs in by_id.values():
-        assert sorted(idxs) == idxs or sorted(idxs) == sorted(idxs)
-        assert all(i % 10 == 0 for i in idxs)
-
-
 def test_real_png_bmp_payloads_decode_in_kernel(spark):
     """REAL image bytes (own stdlib PNG/BMP/JPEG codecs) flow through the
     same Arrow feature kernel as the synthetic payloads; corrupt bytes
@@ -340,76 +316,6 @@ def test_png_full_spec_decode():
             w, h, ch,
             b"".join(full[y][x] for y in range(h) for x in range(w)),
         )
-
-
-def test_wav_codec_roundtrip_and_containment():
-    import math
-
-    import pytest
-
-    from extractor.audiocodec import sniff_audio, wav_decode, wav_encode
-
-    # 16-bit stereo sine/cosine, 440/880 Hz at 8 kHz
-    n = 800
-    inter = []
-    for i in range(n):
-        inter.append(math.sin(2 * math.pi * 440 * i / 8000) * 0.5)
-        inter.append(math.cos(2 * math.pi * 880 * i / 8000) * 0.25)
-    blob = wav_encode(inter, sample_rate=8000, n_channels=2, sampwidth=2)
-    assert sniff_audio(blob) == "wav"
-    assert blob == wav_encode(inter, sample_rate=8000, n_channels=2)
-    nch, rate, frames, arr = wav_decode(blob)
-    assert (nch, rate, frames) == (2, 8000, n)
-    assert len(arr) == 2 * n
-    assert abs(float(arr[0]) - inter[0]) < 1e-4  # 16-bit quantization
-    assert max(abs(float(a) - b) for a, b in zip(arr, inter)) < 1e-4
-    # 8-bit mono
-    blob8 = wav_encode(inter[:100], sample_rate=16000, sampwidth=1)
-    nch, rate, frames, arr8 = wav_decode(blob8)
-    assert (nch, rate, frames) == (1, 16000, 100)
-    # 8-bit step is 2/255 and encode(127.5-scale)/decode(128-scale) are
-    # not exactly inverse → worst case just under 0.011
-    assert max(abs(float(a) - b) for a, b in zip(arr8, inter)) < 0.011
-    with pytest.raises(ValueError):
-        wav_decode(b"RIFFxxxxWAVEbroken")
-    with pytest.raises(ValueError):
-        wav_decode(b"not audio at all")
-    assert sniff_audio(b"ID3\x04tag") == "mp3"
-    assert sniff_audio(b"OggS\x00") == "ogg"
-
-
-def test_extract_audio_features_kernel(spark):
-    """Real WAV + synthetic payloads through the audio feature kernel;
-    compressed formats become contained error rows."""
-    import math
-
-    from extractor.audiocodec import wav_encode
-
-    sine = [
-        math.sin(2 * math.pi * 220 * i / 8000) * 0.8 for i in range(640)
-    ]
-    rows = [
-        (1, "audio", bytearray(wav_encode(sine, sample_rate=8000)),
-         {"width": 0, "height": 0, "format": "wav", "n_bytes": 0}),
-        (2, "audio", bytearray(b"ID3\x04 pretend mp3"),
-         {"width": 0, "height": 0, "format": "mp3", "n_bytes": 0}),
-        (3, "image", bytearray(b"ignored: not audio kind"),
-         {"width": 0, "height": 0, "format": "png", "n_bytes": 0}),
-    ]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in mm.extract_audio_features(media).collect()}
-    assert set(out) == {1, 2}  # kind filter: image row never enters
-    ok = out[1]
-    assert ok["error"] is None
-    assert (ok["n_channels"], ok["sample_rate"], ok["n_frames"]) == (1, 8000, 640)
-    assert len(ok["features"]) == mm.FEATURE_DIM
-    # a constant-amplitude sine has near-equal RMS in every bin
-    assert max(ok["features"]) - min(ok["features"]) < 0.05
-    assert out[2]["error"] is not None and out[2]["features"] is None
-    # synthetic payloads ride the fake-decode path (plumbing w/o codecs)
-    synth = mm.synth_media_df(spark, n=60)
-    feats = mm.extract_audio_features(synth).collect()
-    assert feats and all(r["error"] is None for r in feats)
 
 
 def test_tiff_codec_roundtrips_and_shapes():

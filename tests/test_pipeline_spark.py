@@ -220,19 +220,6 @@ def test_null_turn_idx_row_survives_hash_conv(spark):
     ]
 
 
-def test_split_quarantine(spark):
-    from extractor.pipeline import split_quarantine
-
-    df = transcripts_df(spark, n_convs=30, mean_turns=10, seed=17)
-    out = extract_transcripts(df, sort_output=False)
-    good, quarantined = split_quarantine(out)
-    n_good, n_bad, n_all = good.count(), quarantined.count(), out.count()
-    assert n_good + n_bad == n_all
-    assert n_bad > 0  # corpus contains NULL turns
-    assert good.where("error is not null").count() == 0
-    assert quarantined.where("error is null").count() == 0
-
-
 def test_simhash_banding_complete_at_radius(spark):
     """Recall contract of simhash_neardup_pairs: the banded (4x16-bit)
     self-join must emit EXACTLY the pairs with hamming <= SIMHASH_RADIUS —

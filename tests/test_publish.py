@@ -3,7 +3,6 @@ of the commit for each sink that replaces a whole directory, the failed
 rerun an export must survive, and a guard against a second copy of the
 mechanism."""
 
-import datetime as dt
 import os
 import re
 import shutil
@@ -14,7 +13,7 @@ from pyspark.sql import functions as F
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-# --- the four callers -------------------------------------------------------
+# --- the three callers ------------------------------------------------------
 #
 # Each setup function writes an "old" directory under ``root`` and returns
 # ``(target, commit, content)``: ``commit()`` replaces the target with the
@@ -69,40 +68,6 @@ def _expiry(spark, root):
     return f"{ckpt}/status", commit, content
 
 
-def _streaming(spark, root):
-    from extractor.streaming import stream_upsert_sink
-    from extractor.transcripts import TRANSCRIPT_SCHEMA
-
-    inp, target, ck = (os.path.join(root, d) for d in ("in", "tgt", "ck"))
-    t0 = dt.datetime(2024, 1, 1)
-
-    def append(*rows):
-        spark.createDataFrame(list(rows), TRANSCRIPT_SCHEMA).write.mode(
-            "append"
-        ).parquet(inp)
-
-    def commit():
-        q = stream_upsert_sink(spark, inp, target, ck)
-        q.awaitTermination(120)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-
-    append(("a", 0, "user", "v1 a0", None, t0), ("b", 0, "user", "v1 b0", None, t0))
-    commit()
-    append(
-        ("a", 0, "user", "v2 a0", None, t0 + dt.timedelta(seconds=1)),
-        ("c", 0, "user", "v1 c0", None, t0),
-    )
-
-    def content(path):
-        return sorted(
-            (r["conv_id"], r["turn_idx"], r["text"])
-            for r in spark.read.parquet(path).collect()
-        )
-
-    return target, commit, content
-
-
 def _shards(spark, n):
     rows = [(i, i % 3, f"text number {i}") for i in range(n)]
     return spark.createDataFrame(rows, "doc_id long, shard long, text string")
@@ -124,7 +89,6 @@ def _export(spark, root):
 CALLERS = {
     "compaction": _compaction,
     "expiry": _expiry,
-    "streaming": _streaming,
     "export": _export,
 }
 
@@ -213,6 +177,58 @@ def test_crash_at_each_commit_step_recovers(spark, tmp_path, monkeypatch, caller
     assert _leftovers(target) == []
 
 
+def _crash_expiry(spark, root, monkeypatch, nth_rename):
+    """Run the expiry setup, then crash its *nth_rename* ``os.rename``:
+    2 is the status table's rename in, 4 the fingerprint table's."""
+    from extractor import publish
+
+    target, commit, content = _expiry(spark, root)
+    old = content(target)
+    monkeypatch.setattr(publish, "os", _CrashAt(os, "rename", nth_rename))
+    with pytest.raises(OSError):
+        commit()
+    monkeypatch.undo()
+    return os.path.dirname(target), old
+
+
+def test_checkpoint_readers_recover_status_after_expiry_crash(
+    spark, tmp_path, monkeypatch
+):
+    """Between the status table's two renames only ``status.bak`` holds
+    the history: resume, ``job_status`` and the next ``_record`` must use
+    it, and the next expiry must not drop it."""
+    import time
+
+    from extractor.checkpoint import (
+        _completed_buckets,
+        _record,
+        expire_checkpoint_history,
+        job_status,
+    )
+
+    ckpt, old = _crash_expiry(spark, str(tmp_path / "sink"), monkeypatch, 2)
+    assert not os.path.exists(f"{ckpt}/status")
+
+    rows = job_status(spark, ckpt).select("snapshot_id", "bucket").collect()
+    assert sorted(tuple(r) for r in rows) == old
+    done = {r["bucket"] for r in _completed_buckets(spark, ckpt, "s3").collect()}
+    assert done == set(range(8))
+
+    _record(spark, ckpt, [(b, "s4", "completed", 5, time.time(), None) for b in range(8)])
+    expire_checkpoint_history(spark, ckpt, keep_last=2)
+    snaps = {r["snapshot_id"] for r in job_status(spark, ckpt).collect()}
+    assert snaps == {"s3", "s4"}
+
+
+def test_stored_fingerprints_recover_after_expiry_crash(spark, tmp_path, monkeypatch):
+    from extractor.checkpoint import stored_fingerprints
+
+    ckpt, _ = _crash_expiry(spark, str(tmp_path / "sink"), monkeypatch, 4)
+    assert not os.path.exists(f"{ckpt}/fingerprints")
+    fp = stored_fingerprints(spark, ckpt, "s3", "conv_id,text")
+    assert fp is not None and fp.count() == 8
+
+
 def test_export_failed_rerun_keeps_last_export(spark, tmp_path):
     """A crash between the two renames, then a rerun whose write fails:
     the last published export must still be readable."""
@@ -234,10 +250,6 @@ def test_export_failed_rerun_keeps_last_export(spark, tmp_path):
 
 # --- one copy of the mechanism ----------------------------------------------
 
-# the manifest sink replaces ONE FILE (its manifest), not a directory
-_ALLOWED_RENAMES = {("extractor/manifest_sink.py", "os.rename(tmp, manifest)  # atomic")}
-
-
 def test_no_second_directory_commit():
     backup = re.compile(r"\.bak\b|-bak\b")
     hits = []
@@ -252,9 +264,8 @@ def test_no_second_directory_commit():
             with open(path, encoding="utf-8") as f:
                 for line in f:
                     line = line.strip()
-                    if backup.search(line) or (
-                        re.search(r"\bos\.(rename|replace)\(", line)
-                        and (rel, line) not in _ALLOWED_RENAMES
+                    if backup.search(line) or re.search(
+                        r"\bos\.(rename|replace)\(", line
                     ):
                         hits.append((rel, line))
     assert hits == []

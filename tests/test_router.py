@@ -11,7 +11,7 @@ import pytest
 
 from extractor.docx import synth_docx_bytes
 from extractor.pdf import text_to_pdf_bytes
-from extractor.router import extract_any, route_payload, sniff_format
+from extractor.router import route_payload, sniff_format
 
 
 # --- sniffing --------------------------------------------------------------
@@ -116,29 +116,6 @@ def test_route_empty_contained():
         "format": "empty", "extracted_text": None, "tables_count": 0,
         "math_count": 0, "images_count": 0, "error": "empty_payload",
     }
-
-
-# --- Spark plumbing --------------------------------------------------------
-
-def test_extract_any_map_only_plan_and_rows(spark):
-    rows = [
-        (0, bytearray(b"<p>html doc</p>")),
-        (1, bytearray(synth_docx_bytes(6))),
-        (2, bytearray(text_to_pdf_bytes("pdf body"))),
-        (3, bytearray(b"plain body")),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    routed = extract_any(df)
-    # map-only: no Exchange between the scan and the Python stage
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    got = {r["doc_id"]: r.asDict() for r in routed.collect()}
-    assert got[0]["format"] == "html" and got[0]["extracted_text"] == "html doc"
-    assert got[1]["format"] == "docx"
-    assert got[2]["extracted_text"] == "pdf body"
-    assert got[3]["format"] == "text"
-    assert got[4]["format"] == "empty" and got[4]["error"] == "empty_payload"
 
 
 def test_route_image_payloads():

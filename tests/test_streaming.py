@@ -43,294 +43,3 @@ def test_streaming_matches_batch_and_is_exactly_once(spark, tmp_path):
     q = stream_extract(spark, input_dir, out_dir, ckpt)
     q.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == full.count()
-
-
-def test_stream_dedup_drops_redelivered_turns(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: duplicates re-delivered in the same
-    or a later micro-batch (within the watermark) are dropped; output is
-    exactly the distinct turn set."""
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    from extractor.streaming import stream_dedup
-
-    full = transcripts_df(spark, n_convs=12, mean_turns=8, seed=7)
-    n_distinct = full.count()
-
-    # first delivery + an in-batch duplicate of a third of it
-    full.write.mode("append").parquet(inp)
-    full.where("turn_idx % 3 = 0").write.mode("append").parquet(inp)
-    q = stream_dedup(spark, inp, out, ck)
-    q.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n_distinct
-
-    # redelivery of half the corpus in a LATER micro-batch, same checkpoint
-    full.where("turn_idx % 2 = 0").write.mode("append").parquet(inp)
-    q = stream_dedup(spark, inp, out, ck)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == n_distinct
-    assert got.select("conv_id", "turn_idx").distinct().count() == n_distinct
-
-
-def test_stream_upsert_sink_merges_by_key(spark, tmp_path):
-    """CDC upsert sink: a later micro-batch's rows replace same-key rows,
-    new keys append, untouched keys survive — and the target ends with
-    exactly one row per key."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from extractor.streaming import stream_upsert_sink
-    from extractor.transcripts import TRANSCRIPT_SCHEMA
-
-    inp = str(tmp_path / "in")
-    tgt = str(tmp_path / "tgt")
-    ck = str(tmp_path / "ck")
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def rows(*rs):
-        return spark.createDataFrame(list(rs), TRANSCRIPT_SCHEMA)
-
-    # batch 1: keys (a,0) (a,1) (b,0)
-    rows(
-        ("a", 0, "user", "v1 a0", None, t0),
-        ("a", 1, "assistant", "v1 a1", None, t0),
-        ("b", 0, "user", "v1 b0", None, t0),
-    ).write.mode("append").parquet(inp)
-    q = stream_upsert_sink(spark, inp, tgt, ck)
-    q.awaitTermination(120)
-    assert spark.read.parquet(tgt).count() == 3
-
-    # batch 2: update (a,1), insert (c,0) — restart from the same ckpt
-    rows(
-        ("a", 1, "assistant", "v2 a1", None, t0 + dt.timedelta(hours=1)),
-        ("c", 0, "user", "v1 c0", None, t0 + dt.timedelta(hours=1)),
-    ).write.mode("append").parquet(inp)
-    q = stream_upsert_sink(spark, inp, tgt, ck)
-    q.awaitTermination(120)
-
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in spark.read.parquet(tgt).collect()
-    }
-    assert got == {
-        ("a", 0): "v1 a0",
-        ("a", 1): "v2 a1",  # updated
-        ("b", 0): "v1 b0",  # untouched
-        ("c", 0): "v1 c0",  # inserted
-    }
-    # exactly one row per key
-    df = spark.read.parquet(tgt)
-    assert df.count() == df.select("conv_id", "turn_idx").distinct().count()
-
-
-def test_stream_upsert_sink_recovers_crash_mid_swap(spark, tmp_path):
-    """Crash between the two swap renames must not lose the merged table:
-    if the process dies after the old target was renamed aside (.bak) but
-    before tmp was renamed in, the next batch restores .bak and merges
-    against it — previously-merged rows survive checkpoint replay."""
-    import datetime as dt
-    import os
-
-    from extractor.streaming import stream_upsert_sink
-    from extractor.transcripts import TRANSCRIPT_SCHEMA
-
-    inp = str(tmp_path / "in")
-    tgt = str(tmp_path / "tgt")
-    ck = str(tmp_path / "ck")
-    t0 = dt.datetime(2024, 1, 1)
-
-    def rows(*rs):
-        return spark.createDataFrame(list(rs), TRANSCRIPT_SCHEMA)
-
-    rows(
-        ("a", 0, "user", "v1 a0", None, t0),
-        ("b", 0, "user", "v1 b0", None, t0),
-    ).write.mode("append").parquet(inp)
-    q = stream_upsert_sink(spark, inp, tgt, ck)
-    q.awaitTermination(120)
-
-    # simulate the crash window: target renamed aside, tmp never landed
-    os.rename(tgt, f"{tgt}.bak")
-    assert not os.path.exists(tgt)
-
-    rows(("c", 0, "user", "v1 c0", None, t0)).write.mode("append").parquet(inp)
-    q = stream_upsert_sink(spark, inp, tgt, ck)
-    q.awaitTermination(120)
-
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in spark.read.parquet(tgt).collect()
-    }
-    # without recovery, ("a",0)/("b",0) would be gone (table rebuilt from
-    # the c-only batch); with recovery all three keys are present
-    assert got == {
-        ("a", 0): "v1 a0",
-        ("b", 0): "v1 b0",
-        ("c", 0): "v1 c0",
-    }
-    assert not os.path.exists(f"{tgt}.bak")
-
-
-def test_stateful_conversation_progress(spark, tmp_path):
-    """applyInPandasWithState: per-conversation counters must accumulate
-    across micro-batches AND across query restarts (state checkpointed)."""
-    from pyspark.sql import functions as F
-
-    from extractor.streaming import stream_conversation_state
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    full = transcripts_df(spark, n_convs=10, mean_turns=8, seed=5)
-    half_a = full.where("turn_idx % 2 = 0")
-    half_b = full.where("turn_idx % 2 = 1")
-
-    half_a.write.mode("append").parquet(inp)
-    q = stream_conversation_state(spark, inp, out, ck)
-    q.awaitTermination(120)
-
-    half_b.write.mode("append").parquet(inp)
-    q = stream_conversation_state(spark, inp, out, ck)  # RESTART, same ckpt
-    q.awaitTermination(120)
-
-    # latest state row per conversation must equal the full per-conv counts
-    latest = (
-        spark.read.parquet(out)
-        .groupBy("conv_id")
-        .agg(
-            F.max("turns_seen").alias("turns_seen"),
-            F.max("max_turn_idx").alias("max_turn_idx"),
-        )
-        .collect()
-    )
-    truth = {
-        r["conv_id"]: (r["n"], r["mx"])
-        for r in full.groupBy("conv_id")
-        .agg(F.count("*").alias("n"), F.max("turn_idx").alias("mx"))
-        .collect()
-    }
-    assert len(latest) == len(truth)
-    for r in latest:
-        assert (r["turns_seen"], r["max_turn_idx"]) == truth[r["conv_id"]], r
-
-
-def test_windowed_metrics_watermark_finalizes_and_drops_late(spark, tmp_path):
-    """Watermark + event-time window contract: (1) only windows the
-    watermark has passed emit (append mode); (2) emitted counts equal the
-    batch groupBy on the same data; (3) a late row behind the watermark is
-    dropped — already-emitted windows never change."""
-    from pyspark.sql import functions as F
-
-    from extractor.streaming import stream_windowed_metrics
-
-    input_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    # 24 conversations → ts spans 24 hours (conv_index * 3600 s)
-    full = transcripts_df(spark, n_convs=24, mean_turns=8, seed=11)
-    full.write.mode("append").parquet(input_dir)
-    q = stream_windowed_metrics(spark, input_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-
-    got = {
-        (r["window_start"], r["role"]): (r["turns"], r["bytes_in"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got, "watermark must have finalized at least one window"
-
-    # batch truth for the same (window, role) groups
-    truth = {
-        (r["win"]["start"], r["role"]): (r["turns"], r["bytes_in"])
-        for r in (
-            full.groupBy(F.window("ts", "1 hour").alias("win"), "role")
-            .agg(
-                F.count("*").alias("turns"),
-                F.sum(F.length("text")).alias("bytes_in"),
-            )
-            .collect()
-        )
-    }
-    max_ts = full.agg(F.max("ts")).collect()[0][0]
-    for key, vals in got.items():
-        assert truth[key] == vals  # every emitted window exactly right
-    # windows comfortably behind the watermark must all have emitted
-    import datetime as dt
-
-    cutoff = max_ts - dt.timedelta(hours=3)  # watermark 2h + window 1h slack
-    for (start, role), vals in truth.items():
-        if start < cutoff - dt.timedelta(hours=1):
-            assert (start, role) in got, (start, role)
-
-    # a VERY late row (behind the watermark) arrives; restart the stream:
-    # it must be dropped — previously emitted windows unchanged
-    late = full.where("conv_id = 'conv_00000000'").limit(1)
-    late.write.mode("append").parquet(input_dir)
-    q = stream_windowed_metrics(spark, input_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    got2 = {
-        (r["window_start"], r["role"]): (r["turns"], r["bytes_in"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    for key, vals in got.items():
-        assert got2[key] == vals
-
-
-def test_session_windows_stream_matches_batch(spark, tmp_path):
-    """Native session windows: data-driven bounds finalize behind the
-    watermark and equal the batch session_window aggregation."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from extractor.streaming import stream_session_windows
-
-    input_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    full = transcripts_df(spark, n_convs=24, mean_turns=8, seed=11)
-    full.write.mode("append").parquet(input_dir)
-    q = stream_session_windows(spark, input_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-
-    got = {
-        (r["conv_id"], r["session_start"]): (
-            r["session_end"],
-            r["n_turns"],
-            r["total_chars"],
-        )
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got, "watermark must have finalized at least one session"
-
-    truth = {
-        (r["conv_id"], r["sw"]["start"]): (
-            r["sw"]["end"],
-            r["n_turns"],
-            r["total_chars"],
-        )
-        for r in (
-            full.groupBy(
-                F.session_window("ts", "30 minutes").alias("sw"), "conv_id"
-            )
-            .agg(
-                F.count("*").alias("n_turns"),
-                F.sum(F.length("text")).alias("total_chars"),
-            )
-            .collect()
-        )
-    }
-    for key, vals in got.items():
-        assert truth[key] == vals
-    # sessions ending well behind the watermark (2h) must have emitted
-    max_ts = full.agg(F.max("ts")).collect()[0][0]
-    cutoff = max_ts - dt.timedelta(hours=4)
-    for (conv, start), (end, _, _) in truth.items():
-        if end < cutoff:
-            assert (conv, start) in got, (conv, start)
