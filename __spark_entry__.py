@@ -1066,11 +1066,11 @@ def _expire_checkpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-history expiration demo wired for the oracle
     (``extractor/checkpoint.py::expire_checkpoint_history`` — the
     Iceberg ``expire_snapshots`` analogue): three snapshots' worth of
-    per-bucket status rows + fingerprints are committed to a temp
-    checkpoint store (turn counts = the documents corpus bucketed 8
-    ways, so every number derives from the test table), the two newest
-    are retained, and the verified summary is returned.  The oracle
-    recomputes the expected row/turn accounting from ``documents``."""
+    per-bucket status rows are committed to a temp checkpoint store
+    (turn counts = the documents corpus bucketed 8 ways, so every number
+    derives from the test table), the two newest are retained, and the
+    verified summary is returned.  The oracle recomputes the expected
+    row/turn accounting from ``documents``."""
     import shutil
     import tempfile
 
@@ -1078,7 +1078,6 @@ def _expire_checkpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         CHECKPOINT_SCHEMA,
         _record,
         expire_checkpoint_history,
-        record_fingerprints,
         with_bucket,
     )
 
@@ -1104,7 +1103,6 @@ def _expire_checkpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for b, n in sorted(counts.items())
                 ],
             )
-            record_fingerprints(docs, ckpt, snap, 8)
         stats = expire_checkpoint_history(spark, ckpt, keep_last=2)
         turns_retained = (
             spark.read.schema(CHECKPOINT_SCHEMA)

@@ -255,7 +255,6 @@ def _math_class_filter(token) -> bool:
 
 def _extract_special_elements(
     doc: Element,
-    correct_image_path: str = "images",
     math_engine: str = "latex",
 ) -> tuple[dict, dict, list]:
     """T7 (reference :344-422). Mutates *doc* in place.
@@ -333,8 +332,10 @@ def _extract_special_elements(
 
     for img in (el for el in imgs if el.is_attached_to(doc)):
         src = img.get("src", "")
-        if correct_image_path and src:
-            src = f"{correct_image_path}/{_basename(src)}"  # T2 path normalize
+        if src:
+            # T2 path normalize; the reference's caller hardcodes "images"
+            # (app/core/html_processor.py:67-69)
+            src = f"images/{_basename(src)}"
         alt = img.get("alt", "")
         title = img.get("title", "")
         markdown_img = _image_markdown(alt, src, title)

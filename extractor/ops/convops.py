@@ -736,10 +736,6 @@ def mine_contrastive_triplets(turns: DataFrame,
     )
 
 
-def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mine_contrastive_triplets(derived_transcripts(spark, sf_dir))
-
-
 PREFIX_TURNS = 2  # leading turns hashed into the KV-prefix key
 
 

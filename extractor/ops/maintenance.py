@@ -6,8 +6,8 @@ streaming micro-batches or bucket-group commits accumulates millions of
 small files; scan throughput then dies on file-open overhead and the
 driver's file index.  The maintenance pass rewrites fragmented partitions
 into target-size files WITHOUT changing content, verified by
-``extractor.checkpoint.content_fingerprint`` (the multiplicity-sensitive
-decimal xxhash-sum that ``changed_buckets`` compares per bucket).
+``extractor.checkpoint.content_fingerprint`` (a row count plus the
+multiplicity-sensitive decimal sum of per-row xxhash64 values).
 
 Scale posture: the rewrite is one round-robin ``repartition(n_target)``
 (a single shuffle of the compacted partition's data — unavoidable, it IS
@@ -675,7 +675,6 @@ def backfill_partition_overwrite(spark: SparkSession, sf_dir: str,
     )
 
 
-DQ_NULL_TEXT_MAX_BP = 2000  # documents.text null-rate tolerance (20%)
 EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
 
 

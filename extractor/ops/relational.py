@@ -423,9 +423,7 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level snapshot diff — the Iceberg changelog/CDC read
     (``table_changes`` between snapshots) expressed as a relational op:
     classify every key as inserted / deleted / updated between two table
-    states and emit the change rows.  Complements ``changed_buckets``
-    (bucket-granular fingerprint diff for incremental runs) when the
-    consumer needs the actual row deltas.
+    states and emit the change rows.
 
     The "new" snapshot is synthesized deterministically from the old one
     (delete every 97th doc, rewrite text of every 31st, insert a shifted
@@ -433,10 +431,7 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one full-outer equi join on the key, change class from null-side
     and content-hash comparison — the join shuffles both sides by key once
-    (sort-merge at fact scale), no broadcast of anything unbounded; at
-    10^12 rows the same diff runs bucket-parallel after
-    ``changed_buckets`` prunes untouched buckets (two-level: cheap
-    fingerprints first, row join only on changed buckets)."""
+    (sort-merge at fact scale), no broadcast of anything unbounded."""
     old = _read(spark, sf_dir, "documents").select("doc_id", "text")
     new = (
         old.where(F.pmod(F.col("doc_id"), F.lit(97)) != 0)

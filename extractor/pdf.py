@@ -27,17 +27,13 @@ framing, ``z`` shortcut), ``RunLengthDecode`` (PDF 1.7 §7.4.5 packbits-style
 RLE), chains thereof, and ``/Predictor`` post-steps (TIFF 2 horizontal
 differencing; PNG 10-15 per-row None/Sub/Up/Average/Paeth with
 ``/Columns``/``/Colors``/``/BitsPerComponent`` at 1/2/4/8/16-bit
-components).  That is the complete lossless-filter family.  Image XObjects (``/Subtype /Image``)
-are SKIPPED by ``pdf_to_text`` (they carry no text; a real-world document
-with an embedded photo must not fail text extraction) and extracted by
-:func:`pdf_extract_images` instead — ``DCTDecode`` decodes for real via the
-own JPEG codec (``extractor/jpegcodec.py``), ``CCITTFaxDecode`` via the own
-T.4/T.6 fax codec (``extractor/ccittcodec.py``), Flate/LZW-coded raw
-bitmaps via the lossless chain.  Encrypted documents (standard security
-handler, every generation: RC4 R2/R3, AESV2 R4, and the PDF 2.0 AESV3
-R6 hardened handler; empty user password) decrypt for real via
-``extractor/pdfcrypt.py`` + ``extractor/aescodec.py``.  Still out of
-scope (raise ``NotImplementedError``): JPX/JBIG2 image codecs.
+components).  That is the complete lossless-filter family.  Image XObjects
+(``/Subtype /Image``) are SKIPPED by ``pdf_to_text``: they carry no text,
+and a real-world document with an embedded photo must not fail text
+extraction (the router counts them instead).  Encrypted documents
+(standard security handler, every generation: RC4 R2/R3, AESV2 R4, and
+the PDF 2.0 AESV3 R6 hardened handler; empty user password) decrypt for
+real via ``extractor/pdfcrypt.py`` + ``extractor/aescodec.py``.
 """
 from __future__ import annotations
 
@@ -865,7 +861,7 @@ def pdf_to_text(payload: bytes) -> list[list[str]]:
     found_text = False
     for dict_bytes, raw, onum, ogen, _at in _iter_streams(payload):
         if re.search(rb"/Subtype\s*/Image\b", dict_bytes):
-            continue  # image XObject: no text; see pdf_extract_images
+            continue  # image XObject: no text
         # cross-reference streams are NEVER encrypted (ISO 32000-1
         # §7.5.8.2) — "decrypting" one garbles it and the zlib/AES error
         # would fail the whole document; they carry no text either way
@@ -881,137 +877,6 @@ def pdf_to_text(payload: bytes) -> list[list[str]]:
     if not found_text:
         raise ValueError("no text content streams found in PDF")
     return pages
-
-
-def pdf_extract_images(payload: bytes) -> list[dict]:
-    """Extract embedded raster images (``/Subtype /Image`` XObjects).
-
-    Returns one dict per image stream: ``{"width", "height", "channels",
-    "pixels", "error"}`` — ``pixels`` is top-down 8-bit samples on
-    success, ``error`` a contained message for out-of-scope codecs
-    (JPX/JBIG2) or corrupt data (O4 semantics: one bad image never
-    fails the document).  ``DCTDecode`` payloads decode through the own
-    JPEG codec (baseline + progressive, ``extractor/jpegcodec.py``);
-    ``CCITTFaxDecode`` (G3 1-D, G3 mixed K>0, G4 MMR — honoring ``/K``
-    ``/Columns`` ``/Rows`` ``/EncodedByteAlign``) through the own T.4/
-    T.6 codec (``extractor/ccittcodec.py``), expanded to 8-bit gray;
-    lossless-filtered raw bitmaps through the standard chain with
-    dimensions from the image dict."""
-    if payload is None:
-        raise ValueError("null payload")
-    payload = bytes(payload)
-    if not payload.startswith(b"%PDF-"):
-        raise ValueError("not a PDF payload")
-    from extractor.pdfcrypt import decrypt_stream, decryption_key
-
-    crypt = decryption_key(payload)  # None = unencrypted
-    out: list[dict] = []
-    for dict_bytes, raw, onum, ogen, _at in _iter_streams(payload):
-        if not re.search(rb"/Subtype\s*/Image\b", dict_bytes):
-            continue
-        if crypt is not None:
-            raw = decrypt_stream(crypt[0], crypt[1], onum, ogen, raw)
-        rec = {
-            "width": None, "height": None, "channels": None,
-            "pixels": None, "error": None,
-        }
-        try:
-            names = re.findall(
-                rb"/Filter\s*(?:\[\s*((?:/\w+\s*)+)\]|/(\w+))", dict_bytes
-            )
-            flat: list[bytes] = []
-            for arr, single in names:
-                flat.append(single) if single else flat.extend(
-                    re.findall(rb"/(\w+)", arr)
-                )
-            if flat and flat[-1] == b"DCTDecode":
-                # any preceding filters (rare: e.g. A85-wrapped JPEG)
-                body = raw
-                if len(flat) > 1:
-                    pre = re.sub(
-                        rb"/Filter\s*(?:\[[^\]]*\]|/\w+)",
-                        b"/Filter [%s]" % b" ".join(
-                            b"/" + f for f in flat[:-1]
-                        ),
-                        dict_bytes,
-                        count=1,
-                    )
-                    body = _decode_stream(pre, raw)
-                from extractor.jpegcodec import jpeg_decode
-
-                w, h, ch, px = jpeg_decode(body)
-                rec.update(width=w, height=h, channels=ch, pixels=px)
-            elif flat and flat[-1] == b"CCITTFaxDecode":
-                from extractor.ccittcodec import ccitt_decode
-                from extractor.imagecodec import check_pixels
-
-                body = raw
-                if len(flat) > 1:
-                    pre = re.sub(
-                        rb"/Filter\s*(?:\[[^\]]*\]|/\w+)",
-                        b"/Filter [%s]" % b" ".join(
-                            b"/" + f for f in flat[:-1]
-                        ),
-                        dict_bytes,
-                        count=1,
-                    )
-                    body = _decode_stream(pre, raw)
-
-                def _parm(key: bytes, default: int) -> int:
-                    m = re.search(
-                        rb"/%s\s+(-?\d+|true|false)\b" % key, dict_bytes
-                    )
-                    if not m:
-                        return default
-                    v = m.group(1)
-                    return (
-                        {b"true": 1, b"false": 0}[v]
-                        if v in (b"true", b"false")
-                        else int(v)
-                    )
-
-                cols = _parm(b"Columns", 1728)
-                kk = _parm(b"K", 0)
-                nrows = _parm(b"Rows", 0) or _parm(b"Height", 0) or None
-                eba = bool(_parm(b"EncodedByteAlign", 0))
-                packed = ccitt_decode(
-                    body, cols, rows=nrows, k=kk, encoded_byte_align=eba
-                )
-                # expand 1-bit (1 = black per T.4) to 8-bit gray;
-                # /BlackIs1 only flips the SAMPLE convention, not which
-                # pixels are black, so the gray image is the same
-                rowlen = (cols + 7) // 8
-                h = len(packed) // rowlen
-                check_pixels(cols, h)
-                px = bytearray(cols * h)
-                for y in range(h):
-                    base = y * rowlen
-                    for x in range(cols):
-                        if not (packed[base + (x >> 3)]
-                                >> (7 - (x & 7))) & 1:
-                            px[y * cols + x] = 0xFF
-                rec.update(
-                    width=cols, height=h, channels=1, pixels=bytes(px)
-                )
-            else:
-                body = _decode_stream(dict_bytes, raw)
-                wm = re.search(rb"/Width\s+(\d+)", dict_bytes)
-                hm = re.search(rb"/Height\s+(\d+)", dict_bytes)
-                if not (wm and hm):
-                    raise ValueError("image XObject missing /Width|/Height")
-                w, h = int(wm.group(1)), int(hm.group(1))
-                if w * h == 0 or len(body) % (w * h):
-                    raise ValueError(
-                        "image data is %d bytes for %dx%d" % (len(body), w, h)
-                    )
-                rec.update(
-                    width=w, height=h, channels=len(body) // (w * h),
-                    pixels=body,
-                )
-        except (NotImplementedError, ValueError) as exc:
-            rec["error"] = "%s: %s" % (type(exc).__name__, str(exc)[:160])
-        out.append(rec)
-    return out
 
 
 def is_valid_pdf(payload: bytes) -> bool:

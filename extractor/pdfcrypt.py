@@ -9,9 +9,9 @@ hardened hash (Algorithm 2.B: SHA-256/384/512 rounds keyed by
 AES-128-CBC output) with /U validation-salt checks and /UE file-key
 unwrap, and RC4/AES themselves (pinned to the published RC4,
 FIPS-197, and NIST SP 800-38A test vectors via
-``extractor/aescodec.py``) — so ``pdf_to_text`` /
-``pdf_extract_images`` can read the common "owner-locked, empty user
-password" encrypted documents of every standard-handler generation.
+``extractor/aescodec.py``) — so ``pdf_to_text`` can read the common
+"owner-locked, empty user password" encrypted documents of every
+standard-handler generation.
 
 The encrypt side (:func:`encrypt_pdf`) exists as the deterministic
 roundtrip fixture for the decrypt side: it RC4-encrypts every stream

@@ -110,8 +110,7 @@ def route_payload(
     non-DOM formats (PDF/layout/text carry no table/math structure
     after linearization); PDF ``images_count`` counts embedded
     ``/Subtype /Image`` XObjects (the A1/A3 statistics parity for
-    scanned documents — see ``pdf_extract_images`` for the actual
-    pixel decode)."""
+    scanned documents; their pixels are not decoded)."""
     fmt = sniff_format(payload)
     out = {
         "format": fmt,

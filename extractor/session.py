@@ -51,12 +51,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
     )
-    # Cap JVM background threads (GC parallelism) when asked: at full core
-    # saturation the default G1 thread pools oversubscribe the box and the
-    # Python-heavy pipeline degrades superlinearly under external load.
-    gc_opts = os.environ.get("SPARK_GC_OPTS")
-    if gc_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", gc_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

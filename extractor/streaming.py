@@ -8,7 +8,7 @@ ingest* variant for transcript streams:
 
     readStream(parquet dir, file source)
       → mapInPandas(extraction kernel)          # stateless → streaming-safe
-      → writeStream(parquet sink, checkpointLocation, availableNow/continuous)
+      → writeStream(parquet sink, checkpointLocation, availableNow)
 
 Exactly-once: the file-source + file-sink pair is end-to-end exactly-once
 under Spark's streaming checkpoint (source offsets + sink commit log), so a
@@ -42,33 +42,28 @@ def stream_extract(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """Start (and with available_now=True, drain) a streaming extraction.
+    """Start an ``availableNow`` streaming extraction: it drains every file
+    present at start, in as many micro-batches as the source plans, then
+    stops.
 
     Returns the StreamingQuery; caller awaits termination.  Restarting with
     the same checkpoint_dir resumes from the last committed source offset.
     """
-    reader = (
+    stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("latestFirst", "false")
+        .parquet(input_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
-
     extracted = stream.mapInPandas(_make_extract_iter(_PASSTHROUGH), OUTPUT_SCHEMA)
-
-    writer = (
+    return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 EVENTS_SCHEMA = (

@@ -62,9 +62,7 @@ def main() -> int:
     if args.stream:
         from extractor.streaming import stream_extract
 
-        query = stream_extract(
-            spark, args.input, args.output, args.checkpoint, available_now=True
-        )
+        query = stream_extract(spark, args.input, args.output, args.checkpoint)
         query.awaitTermination()
         extracted = spark.read.parquet(args.output)
         lineage_manifest(extracted).write.mode("append").parquet(

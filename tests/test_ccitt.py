@@ -140,56 +140,6 @@ def test_helpers():
     assert pack_row([0], 8) == b"\xff"
 
 
-def test_pdf_ccitt_image_extraction():
-    from extractor.pdf import pdf_extract_images, text_to_pdf_bytes
-
-    rng = random.Random(5)
-    cols, rows = 37, 9
-    rowlen = (cols + 7) // 8
-    bm = _rand_bitmap(rng, cols, rows, 0.4)
-
-    def build(images):
-        base = text_to_pdf_bytes("fax doc")
-        objs = b""
-        for i, (d, b) in enumerate(images):
-            objs += (
-                b"%d 0 obj\n<< /Type /XObject /Subtype /Image %s"
-                b" /Length %d >>\nstream\n" % (900 + i, d, len(b))
-            ) + b + b"\nendstream\nendobj\n"
-        return base.replace(b"%%EOF", objs + b"%%EOF")
-
-    pdf = build([
-        (b"/Width 37 /Height 9 /BitsPerComponent 1 /Filter"
-         b" /CCITTFaxDecode /DecodeParms << /K -1 /Columns 37"
-         b" /Rows 9 >>", ccitt_encode(bm, cols, rows, k=-1)),
-        (b"/Width 37 /Height 9 /BitsPerComponent 1 /Filter"
-         b" /CCITTFaxDecode /DecodeParms << /K 0 /Columns 37 >>",
-         ccitt_encode(bm, cols, rows, k=0)),
-        (b"/Width 37 /Height 9 /BitsPerComponent 1 /Filter"
-         b" /CCITTFaxDecode /DecodeParms << /K 4 /Columns 37"
-         b" /EncodedByteAlign true >>",
-         ccitt_encode(bm, cols, rows, k=4, encoded_byte_align=True)),
-    ])
-    exp = bytearray()
-    for y in range(rows):
-        for x in range(cols):
-            bit = (bm[y * rowlen + (x >> 3)] >> (7 - (x & 7))) & 1
-            exp.append(0 if bit else 255)
-    for rec in pdf_extract_images(pdf):
-        assert rec["error"] is None
-        assert (rec["width"], rec["height"], rec["channels"]) == (
-            cols, rows, 1,
-        )
-        assert rec["pixels"] == bytes(exp)
-    # corrupt data is contained, not raised
-    bad = build([
-        (b"/Width 16 /Height 4 /Filter /CCITTFaxDecode /DecodeParms"
-         b" << /K -1 /Columns 16 /Rows 4 >>", b"\x00\x00\x00\x00"),
-    ])
-    rec = pdf_extract_images(bad)[0]
-    assert rec["pixels"] is None and rec["error"]
-
-
 @pytest.mark.parametrize("comp", ["g3mh", "g4"])
 def test_tiff_ccitt_roundtrip(comp):
     from extractor.imagecodec import tiff_decode, tiff_encode

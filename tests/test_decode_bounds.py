@@ -198,22 +198,3 @@ def test_ccitt_output_is_capped():
     assert len(stream) == 78
     msg = _contained_fast(ccitt_decode, stream, _CCITT_WIDE_COLUMNS)
     assert "exceeds %d bytes" % MAX_INFLATE_BYTES in msg
-
-
-def test_pdf_ccitt_image_pixels_are_capped():
-    # 96 rows pack to 12 MB, under the output cap, but are 96M gray pixels
-    stream = _ccitt_white_rows(96)
-    image = (
-        b"900 0 obj\n<< /Type /XObject /Subtype /Image /Width %d"
-        b" /Height 96 /BitsPerComponent 1 /Filter /CCITTFaxDecode"
-        b" /DecodeParms << /K -1 /Columns %d >> /Length %d >>\nstream\n"
-        % (_CCITT_WIDE_COLUMNS, _CCITT_WIDE_COLUMNS, len(stream))
-    ) + stream + b"\nendstream\nendobj\n"
-    payload = pdf.text_to_pdf_bytes("fax").replace(b"%%EOF", image + b"%%EOF")
-    t0 = time.perf_counter()
-    (rec,) = pdf.pdf_extract_images(payload)
-    assert time.perf_counter() - t0 < 2.0
-    assert rec["pixels"] is None
-    assert rec["error"] == "ValueError: image %dx96 exceeds %d pixels" % (
-        _CCITT_WIDE_COLUMNS, MAX_IMAGE_PIXELS,
-    )

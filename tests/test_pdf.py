@@ -458,99 +458,6 @@ def test_pdf_to_text_skips_image_xobjects():
     assert pdf_to_text(pdf) == [["body text"]]
 
 
-def test_pdf_extract_images_dct_and_flate():
-    import zlib
-
-    import numpy as np
-
-    from extractor.jpegcodec import jpeg_decode, jpeg_encode
-    from extractor.pdf import pdf_extract_images, pdf_to_text
-
-    rng = np.random.RandomState(7)
-    px = (rng.rand(16, 24, 3) * 255).astype(np.uint8).tobytes()
-    jpg = jpeg_encode(24, 16, px, 3, quality=90)
-    raw = bytes(range(40))  # 8x5 gray bitmap
-    pdf = _image_pdf(
-        "hello",
-        [
-            (
-                b"/Width 24 /Height 16 /ColorSpace /DeviceRGB"
-                b" /BitsPerComponent 8 /Filter /DCTDecode",
-                jpg,
-            ),
-            (
-                b"/Width 8 /Height 5 /ColorSpace /DeviceGray"
-                b" /BitsPerComponent 8 /Filter /FlateDecode",
-                zlib.compress(raw),
-            ),
-        ],
-    )
-    imgs = pdf_extract_images(pdf)
-    assert len(imgs) == 2
-    a, b = imgs
-    assert (a["width"], a["height"], a["channels"], a["error"]) == (
-        24, 16, 3, None,
-    )
-    # DCT pixels must equal a direct decode of the same JPEG bytes
-    assert a["pixels"] == jpeg_decode(jpg)[3]
-    assert (b["width"], b["height"], b["channels"], b["error"]) == (
-        8, 5, 1, None,
-    )
-    assert b["pixels"] == raw
-    # text extraction coexists
-    assert pdf_to_text(pdf) == [["hello"]]
-
-
-def test_pdf_extract_images_chained_and_contained():
-    """A85-wrapped JPEG decodes through the pre-filter chain; out-of-scope
-    codecs and corrupt data become contained error rows, never raises."""
-    from extractor.jpegcodec import jpeg_encode
-    from extractor.pdf import a85_encode, pdf_extract_images
-
-    jpg = jpeg_encode(4, 4, bytes(16), 1, quality=75)
-    pdf = _image_pdf(
-        "x",
-        [
-            (
-                b"/Width 4 /Height 4 /Filter [/ASCII85Decode /DCTDecode]",
-                a85_encode(jpg),
-            ),
-            (b"/Width 4 /Height 4 /Filter /JPXDecode", b"\x00" * 8),
-            (b"/Width 4 /Height 4 /Filter /JBIG2Decode", b"\x00" * 8),
-            (b"/Width 3 /Height 3 /Filter /DCTDecode", b"\xff\xd8torn"),
-            # raw bitmap whose byte count is not a multiple of w*h
-            (b"/Width 4 /Height 4", b"\x00" * 9),
-            # missing dimensions entirely
-            (b"/Filter /FlateDecode", __import__("zlib").compress(b"\x00" * 4)),
-        ],
-    )
-    recs = pdf_extract_images(pdf)
-    assert len(recs) == 6
-    ok = recs[0]
-    assert ok["error"] is None and (ok["width"], ok["height"]) == (4, 4)
-    assert ok["channels"] == 1 and len(ok["pixels"]) == 16
-    for r in recs[1:]:
-        assert r["pixels"] is None and r["error"]
-    assert "JPXDecode" in recs[1]["error"]
-    assert "JBIG2Decode" in recs[2]["error"]
-    assert recs[3]["error"].startswith("ValueError")
-    assert "bytes for" in recs[4]["error"]
-    assert "Width" in recs[5]["error"]
-
-
-def test_pdf_extract_images_rejects_non_pdf():
-    import pytest
-
-    from extractor.pdf import pdf_extract_images
-
-    with pytest.raises(ValueError):
-        pdf_extract_images(b"not a pdf")
-    with pytest.raises(ValueError):
-        pdf_extract_images(None)
-    # a PDF with no images: empty list, not an error
-    assert pdf_extract_images(text_to_pdf_bytes("t")) == []
-
-
 def test_predictors_all_bit_depths():
     """PNG filters act bytewise at 1/2/4/8/16-bit components (PNG spec
     §6: step = max(1, colors*bpc/8)); TIFF differencing is per SAMPLE

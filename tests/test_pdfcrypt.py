@@ -1,17 +1,12 @@
 """PDF standard security handler (extractor/pdfcrypt.py): RC4 crypt
-filter, key derivation, and the decrypt path in pdf_to_text /
-pdf_extract_images.
+filter, key derivation, and the decrypt path in pdf_to_text.
 
 Reference analogue: app/core/pandoc_converter.py accepts arbitrary
 real-world PDFs, which include RC4-encrypted (owner-locked) ones.
 """
 import pytest
 
-from extractor.pdf import (
-    pdf_extract_images,
-    pdf_to_text,
-    text_to_pdf_bytes,
-)
+from extractor.pdf import pdf_to_text, text_to_pdf_bytes
 from extractor.pdfcrypt import (
     decryption_key,
     encrypt_pdf,
@@ -61,34 +56,7 @@ def test_wrong_password_raises_right_password_verifies():
     enc = encrypt_pdf(text_to_pdf_bytes(TEXT), user_password=b"hunter2")
     with pytest.raises(ValueError, match="password"):
         pdf_to_text(enc)
-    with pytest.raises(ValueError, match="password"):
-        pdf_extract_images(enc)
     assert decryption_key(enc, b"hunter2") is not None
-
-
-def test_encrypted_images_decode():
-    from extractor.ccittcodec import ccitt_encode, pack_row
-    from extractor.jpegcodec import jpeg_encode
-
-    jpg = jpeg_encode(8, 8, bytes(range(64)), 1, quality=92)
-    bm = b"".join(pack_row([2, 7], 10) for _ in range(4))
-    base = text_to_pdf_bytes("crypt with images")
-    objs = b""
-    for i, (d, b) in enumerate([
-        (b"/Width 8 /Height 8 /BitsPerComponent 8 /Filter /DCTDecode",
-         jpg),
-        (b"/Width 10 /Height 4 /BitsPerComponent 1 /Filter"
-         b" /CCITTFaxDecode /DecodeParms << /K -1 /Columns 10"
-         b" /Rows 4 >>", ccitt_encode(bm, 10, 4, k=-1)),
-    ]):
-        objs += (
-            b"%d 0 obj\n<< /Type /XObject /Subtype /Image %s"
-            b" /Length %d >>\nstream\n" % (900 + i, d, len(b))
-        ) + b + b"\nendstream\nendobj\n"
-    pdf = base.replace(b"%%EOF", objs + b"%%EOF")
-    ref = pdf_extract_images(pdf)
-    assert [r["error"] for r in ref] == [None, None]
-    assert pdf_extract_images(encrypt_pdf(pdf)) == ref
 
 
 def test_parse_encrypt_dict_guards():
@@ -167,25 +135,11 @@ def test_aesv2_roundtrip():
 
 
 def test_aesv2_password_and_images():
-    from extractor.jpegcodec import jpeg_encode
-
     plain = text_to_pdf_bytes(TEXT)
     locked = encrypt_pdf(plain, user_password=b"pw", method="aes")
     with pytest.raises(ValueError, match="password"):
         pdf_to_text(locked)
     assert decryption_key(locked, b"pw")[1] == "aes"
-
-    jpg = jpeg_encode(8, 8, bytes(range(64)), 1, quality=92)
-    base = text_to_pdf_bytes("imgs")
-    obj = (
-        b"900 0 obj\n<< /Type /XObject /Subtype /Image /Width 8"
-        b" /Height 8 /BitsPerComponent 8 /Filter /DCTDecode"
-        b" /Length %d >>\nstream\n" % len(jpg)
-    ) + jpg + b"\nendstream\nendobj\n"
-    pdf = base.replace(b"%%EOF", obj + b"%%EOF")
-    assert pdf_extract_images(
-        encrypt_pdf(pdf, method="aes")
-    ) == pdf_extract_images(pdf)
 
 
 def test_mismatched_v5_cfm_is_honest():
@@ -250,19 +204,3 @@ def test_aesv3_roundtrip_and_password():
     assert len(h) == 32 and h == hash_2b(b"", b"\x01" * 8)
     assert h != hash_2b(b"", b"\x02" * 8)
     assert h != hash_2b(b"x", b"\x01" * 8)
-
-
-def test_aesv3_images():
-    from extractor.jpegcodec import jpeg_encode
-
-    jpg = jpeg_encode(8, 8, bytes(range(64)), 1, quality=92)
-    base = text_to_pdf_bytes("imgs")
-    obj = (
-        b"900 0 obj\n<< /Type /XObject /Subtype /Image /Width 8"
-        b" /Height 8 /BitsPerComponent 8 /Filter /DCTDecode"
-        b" /Length %d >>\nstream\n" % len(jpg)
-    ) + jpg + b"\nendstream\nendobj\n"
-    pdf = base.replace(b"%%EOF", obj + b"%%EOF")
-    assert pdf_extract_images(
-        encrypt_pdf(pdf, method="aes3")
-    ) == pdf_extract_images(pdf)

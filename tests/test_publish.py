@@ -41,14 +41,9 @@ def _expiry(spark, root):
         CHECKPOINT_SCHEMA,
         _record,
         expire_checkpoint_history,
-        record_fingerprints,
     )
 
     ckpt = os.path.join(root, "ckpt")
-    docs = spark.range(40).select(
-        F.col("id").cast("string").alias("conv_id"),
-        F.concat(F.lit("text-"), F.col("id")).alias("text"),
-    )
     for i, snap in enumerate(("s1", "s2", "s3")):
         _record(
             spark,
@@ -56,7 +51,6 @@ def _expiry(spark, root):
             [(b, snap, "completed", 5, float(i * 100 + b), None)
              for b in range(8)],
         )
-        record_fingerprints(docs, ckpt, snap, 8)
 
     def content(path):
         df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
@@ -179,7 +173,7 @@ def test_crash_at_each_commit_step_recovers(spark, tmp_path, monkeypatch, caller
 
 def _crash_expiry(spark, root, monkeypatch, nth_rename):
     """Run the expiry setup, then crash its *nth_rename* ``os.rename``:
-    2 is the status table's rename in, 4 the fingerprint table's."""
+    2 is the status table's rename in."""
     from extractor import publish
 
     target, commit, content = _expiry(spark, root)
@@ -218,15 +212,6 @@ def test_checkpoint_readers_recover_status_after_expiry_crash(
     expire_checkpoint_history(spark, ckpt, keep_last=2)
     snaps = {r["snapshot_id"] for r in job_status(spark, ckpt).collect()}
     assert snaps == {"s3", "s4"}
-
-
-def test_stored_fingerprints_recover_after_expiry_crash(spark, tmp_path, monkeypatch):
-    from extractor.checkpoint import stored_fingerprints
-
-    ckpt, _ = _crash_expiry(spark, str(tmp_path / "sink"), monkeypatch, 4)
-    assert not os.path.exists(f"{ckpt}/fingerprints")
-    fp = stored_fingerprints(spark, ckpt, "s3", "conv_id,text")
-    assert fp is not None and fp.count() == 8
 
 
 def test_export_failed_rerun_keeps_last_export(spark, tmp_path):

@@ -1,7 +1,7 @@
-"""Every ``extractor`` module must be imported, directly or through other
-modules, from an entry point: the driver contract, the spark-submit
-scripts, the benchmarks.  A module only tests import serves no workload,
-so this fails when one appears."""
+"""Every ``extractor`` module, and every top-level ``def`` and ``class`` in
+one, must be reached from an entry point: the contract module
+(``__spark_entry__.py``), the spark-submit scripts, the benchmarks.  Code
+only tests run serves no workload, so these fail when some appears."""
 
 import ast
 import glob
@@ -83,3 +83,89 @@ def _all_modules():
 
 def test_every_extractor_module_is_reached_from_an_entry_point():
     assert sorted(_all_modules() - _reachable() - TEST_TOOLING) == []
+
+
+# test-input encoders and reference forms kept on purpose: encoders that
+# write the fixtures the decoders are tested on, and the reference's own
+# form of a function the pipeline runs in a faster shape
+EXTRA_ROOTS = {
+    "bmp_encode",
+    "gif_encode",
+    "png_encode",
+    "tiff_encode",
+    "jpeg_encode",
+    "jpeg_lossless_encode",
+    "_encrypt_block_public",
+    "_escape_md_section_unguarded",
+    "relative_image_path",
+    "read_export_manifest",
+    "oversized_case",
+}
+
+
+def _referenced(nodes):
+    """Names *nodes* refer to: loaded or assigned names, attribute names,
+    imported names, and the strings of an ``__all__`` list."""
+    out = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.add(node.name.rpartition(".")[2])
+            elif isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__"
+                for t in node.targets
+            ):
+                out.update(
+                    c.value
+                    for c in ast.walk(node.value)
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str)
+                )
+    return out
+
+
+def _parse(path):
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read())
+
+
+def _unreached_defs():
+    """Top-level defs and classes of reachable ``extractor`` modules that no
+    entry point reaches through a chain of name references.
+
+    The walk matches by name only: a reference to ``f`` reaches every
+    top-level ``f`` in ``extractor``, so it can miss a dead def that shares
+    its name with a live one; it never reports a live def as dead."""
+    defs = {}  # name -> [(module, body nodes)]
+    roots = set(EXTRA_ROOTS)
+    for mod in _reachable() - TEST_TOOLING:
+        for node in _parse(_module_file(mod)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append((mod, node))
+            else:
+                roots |= _referenced([node])
+    for pattern in ENTRY_POINTS:
+        for path in glob.glob(os.path.join(REPO, pattern)):
+            roots |= _referenced([_parse(path)])
+
+    seen, todo = set(), [n for n in roots if n in defs]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        body = [node for _, node in defs[name]]
+        todo += [n for n in _referenced(body) - seen if n in defs]
+    return sorted(
+        f"{mod}.{name}"
+        for name, found in defs.items()
+        if name not in seen
+        for mod, _ in found
+    )
+
+
+def test_every_extractor_def_is_reached_from_an_entry_point():
+    assert _unreached_defs() == []

@@ -173,196 +173,38 @@ def test_job_status_pollable_mid_run(spark, corpus, tmp_path):
     assert sum(r["turns"] for r in final.values()) == corpus.count()
 
 
-def test_incremental_between_snapshots(spark, tmp_path):
-    """Append new conversations, rerun incrementally: only changed buckets
-    process; unchanged buckets carry forward; union equals a clean run."""
-    from extractor.checkpoint import changed_buckets, job_status, run_incremental
+def test_resume_leaves_session_overwrite_mode_alone(spark, corpus, tmp_path):
+    """Dynamic partition overwrite is an option of the checkpoint's own
+    writer: a fault run and its resume leave the session's
+    ``partitionOverwriteMode`` as they found it, so later partitioned
+    overwrites in the same session are unaffected."""
+    from extractor.checkpoint import expire_checkpoint_history
 
-    n_buckets = 16
-    old = transcripts_df(spark, n_convs=30, mean_turns=8, seed=7)
-    new = transcripts_df(spark, n_convs=40, mean_turns=8, seed=7)  # superset
-
-    s1 = run_with_checkpoint(
-        old,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        snapshot_id="snap-1",
-        n_buckets=n_buckets,
-        groups_per_round=4,
-    )
-    assert s1["status"] == "COMPLETED"
-
-    changed, deleted = changed_buckets(old, new, n_buckets)
-    assert changed, "appended conversations must dirty at least one bucket"
-    assert len(changed) < n_buckets, "some buckets must be unchanged"
-    assert deleted == [], "append-only diff must not retire any bucket"
-
-    s2 = run_incremental(
-        old,
-        new,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        old_snapshot="snap-1",
-        new_snapshot="snap-2",
-        n_buckets=n_buckets,
-        groups_per_round=4,
-    )
-    assert s2["status"] == "COMPLETED"
-    assert s2["buckets_changed"] == changed
-    # carried forward = snap-1-completed buckets that did not change
-    # (buckets with no conversations never get checkpoint rows)
-    snap1_done = {
-        r["bucket"]
-        for r in job_status(spark, str(tmp_path / "ckpt"), "snap-1")
-        .where(F.col("status") == "completed")
-        .collect()
-    }
-    assert s2["buckets_carried_forward"] == len(snap1_done - set(changed))
-    # only the changed buckets were processed in round 1
-    assert s2["rounds"][0]["processed"] == len(changed)
-
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["extracted_text"], r["error"])
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    )
-    assert got == _clean_rows(spark, new)
-
-
-def test_incremental_fully_deleted_bucket(spark, tmp_path):
-    """A bucket whose rows are ALL gone in the new snapshot must be retired
-    (stale output dropped, completed(turns=0) recorded) — not silently
-    carried forward (round-2 VERDICT blind spot)."""
-    from extractor.checkpoint import changed_buckets, job_status, run_incremental
-
-    n_buckets = 8
-    old = transcripts_df(spark, n_convs=30, mean_turns=8, seed=7)
-    # retire every conversation in one specific bucket
-    victim = int(
-        with_bucket(old, n_buckets).select("bucket").first()["bucket"]
-    )
-    new = (
-        with_bucket(old, n_buckets)
-        .where(F.col("bucket") != victim)
-        .drop("bucket")
-    )
-
-    s1 = run_with_checkpoint(
-        old,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        snapshot_id="snap-1",
-        n_buckets=n_buckets,
-        groups_per_round=4,
-    )
-    assert s1["status"] == "COMPLETED"
-
-    changed, deleted = changed_buckets(old, new, n_buckets)
-    assert deleted == [victim]
-    assert victim not in changed
-
-    s2 = run_incremental(
-        old,
-        new,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        old_snapshot="snap-1",
-        new_snapshot="snap-2",
-        n_buckets=n_buckets,
-        groups_per_round=4,
-    )
-    assert s2["status"] == "COMPLETED"
-    assert s2["buckets_deleted"] == [victim]
-
-    # output equals a clean run on the new snapshot: no stale victim rows
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["extracted_text"], r["error"])
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    )
-    assert got == _clean_rows(spark, new)
-    status = {
-        r["bucket"]: r
-        for r in job_status(spark, str(tmp_path / "ckpt"), "snap-2").collect()
-    }
-    assert status[victim]["status"] == "completed"
-    assert status[victim]["turns"] == 0
-
-
-def test_changed_buckets_catches_nontext_and_multiplicity_changes(spark):
-    """The fingerprint must cover ALL columns (role/tool/ts ride through to
-    the output) and be multiplicity-sensitive ([A,A] -> [B,B] has equal
-    count and cancelling xor — round-2 ADVICE blind spots)."""
-    from extractor.checkpoint import changed_buckets
-
-    n_buckets = 4
-    base = transcripts_df(spark, n_convs=12, mean_turns=4, seed=3)
-
-    # role-only change: same conv_id/turn_idx/text
-    role_changed = base.withColumn(
-        "role", F.when(F.col("turn_idx") == 0, F.lit("flipped")).otherwise(F.col("role"))
-    )
-    changed, deleted = changed_buckets(base, role_changed, n_buckets)
-    assert changed, "role-only change must dirty its buckets"
-    assert deleted == []
-
-    # duplicated-pair swap: [A, A] -> [B, B] within one bucket
-    first_conv = base.select("conv_id").first()["conv_id"]
-    one = base.where(
-        (F.col("conv_id") == first_conv) & (F.col("turn_idx") == 0)
-    )
-    dup_a = base.unionByName(one).unionByName(one)
-    flipped = one.withColumn("text", F.lit("entirely different text"))
-    dup_b = base.unionByName(flipped).unionByName(flipped)
-    changed, deleted = changed_buckets(dup_a, dup_b, n_buckets)
-    assert changed, "even-multiplicity content swap must dirty its bucket"
-
-
-def test_incremental_uses_stored_fingerprints_without_old_scan(
-    spark, tmp_path
-):
-    """Append-only fast path (round-3 VERDICT #5): run_incremental persists
-    its new side's per-bucket fingerprints, so the NEXT incremental step
-    can diff against the stored rows with old_df=None — the old snapshot
-    is provably never scanned (there is no old DataFrame to scan)."""
-    import pytest
-
-    from extractor.checkpoint import job_status, run_incremental
-
-    n_buckets = 16
-    s1_df = transcripts_df(spark, n_convs=30, mean_turns=8, seed=7)
-    s2_df = transcripts_df(spark, n_convs=40, mean_turns=8, seed=7)
-    s3_df = transcripts_df(spark, n_convs=50, mean_turns=8, seed=7)
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    run_with_checkpoint(
-        s1_df, out, ckpt, snapshot_id="snap-1", n_buckets=n_buckets,
-        groups_per_round=4,
-    )
-    # snap-1 was never fingerprinted (run_with_checkpoint alone): the
-    # no-old-df call must fail loudly, not silently full-run
-    with pytest.raises(ValueError, match="no stored fingerprints"):
-        run_incremental(
-            None, s2_df, out, ckpt,
-            old_snapshot="snap-1", new_snapshot="snap-2",
-            n_buckets=n_buckets, groups_per_round=4,
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        state = tmp_path / "state"
+        state.mkdir()
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        hook = _make_hook(str(state), fail_twice=set(), fail_always={1})
+        s1 = run_with_checkpoint(
+            corpus, out, ckpt, n_buckets=N_BUCKETS, groups_per_round=4,
+            max_retries=1, failure_hook=hook,
         )
-    # one-time scan path records snap-2's fingerprints...
-    s2 = run_incremental(
-        s1_df, s2_df, out, ckpt,
-        old_snapshot="snap-1", new_snapshot="snap-2",
-        n_buckets=n_buckets, groups_per_round=4,
-    )
-    assert s2["status"] == "COMPLETED"
-    # ...so snap-2 -> snap-3 runs with NO old DataFrame at all
-    s3 = run_incremental(
-        None, s3_df, out, ckpt,
-        old_snapshot="snap-2", new_snapshot="snap-3",
-        n_buckets=n_buckets, groups_per_round=4,
-    )
-    assert s3["status"] == "COMPLETED"
-    assert s3["buckets_changed"], "appended convs must dirty buckets"
-    assert len(s3["buckets_changed"]) < n_buckets
+        assert s1["status"] == "FAILED"
+        s2 = run_with_checkpoint(
+            corpus, out, ckpt, n_buckets=N_BUCKETS, groups_per_round=4,
+        )
+        assert s2["status"] == "COMPLETED"
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, saved)
     got = sorted(
         (r["conv_id"], r["turn_idx"], r["extracted_text"], r["error"])
         for r in spark.read.parquet(out).collect()
     )
-    assert got == _clean_rows(spark, s3_df)
+    assert got == _clean_rows(spark, corpus)
+    # the status table is the whole checkpoint store
+    expire_checkpoint_history(spark, ckpt, keep_last=1)
+    assert os.listdir(ckpt) == ["status"]
