@@ -162,6 +162,11 @@ def run_with_checkpoint(
     bucket empty; an empty bucket on a tiny corpus just makes its group's
     job trivially small).
     """
+    if min(n_buckets, groups_per_round, max_retries) < 1:
+        raise ValueError(
+            f"n_buckets, groups_per_round and max_retries must be >= 1, got "
+            f"{n_buckets}, {groups_per_round} and {max_retries}"
+        )
     spark = input_df.sparkSession
     df = with_bucket(input_df, n_buckets)
     completed = _completed_buckets(spark, ckpt_dir, snapshot_id)

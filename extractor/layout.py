@@ -66,8 +66,8 @@ def decode_layout(payload) -> dict:
     parser — each show-text line becomes a positioned block at the
     writer's geometry, so the XY-cut linearizer downstream operates on
     genuine PDF bytes.  Flate/LZW/ASCIIHex streams (chains included) and
-    TIFF/PNG predictors decode for real; only lossy image codecs
-    (DCT/JPX/CCITT/JBIG2) remain a codec stub
+    TIFF/PNG predictors decode for real; image filters
+    (DCT/JPX/CCITT/JBIG2) are never decoded
     (``NotImplementedError`` → contained error row)."""
     if payload is None:
         raise ValueError("null payload")

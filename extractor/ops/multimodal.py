@@ -1,18 +1,19 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The *decode* step is REAL for lossless image containers — PNG/GIF/TIFF/BMP
-(own stdlib decoders, ``extractor/imagecodec.py``) — and stubbed only for
-lossy codecs (WebP needs a codec library not present in this container;
-those raise ``NotImplementedError`` → contained error rows).
-Everything Spark-side is real and tested either way: the binary-column
-schema, the Arrow batch shape through ``mapInPandas`` (bytes round-trip),
-partition-size control for large blobs, and the feature-extraction output
-schema.
+Pixels are never decoded: the reference counts extracted media files and
+runs its text conversion with images ignored, and the engine keeps that
+rule (the router sniffs and counts image payloads; ``pdf_to_text`` skips
+image XObjects).  Only the self-describing synthetic ``FAKEIMG|`` payload
+below is parsed; any other payload raises ``NotImplementedError`` →
+contained error rows.  Everything Spark-side is real and tested: the
+binary-column schema, the Arrow batch shape through ``mapInPandas`` (bytes
+round-trip), partition-size control for large blobs, and the
+feature-extraction output schema.
 
 Synthetic payload format (deterministic, self-describing):
     b"FAKEIMG|<width>|<height>|<fmt>|" + pseudo-random pixel bytes
-so the "decoder" can be exercised end-to-end without codecs.
+so the feature kernel can be exercised end-to-end without codecs.
 """
 
 from __future__ import annotations
@@ -94,56 +95,18 @@ def synth_media_df(spark: SparkSession, n: int = 200, seed: int = 42) -> DataFra
 
 
 def decode_payload(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode an image payload to ``(width, height, pixel_bytes)``.
-
-    REAL for the lossless containers: PNG (all 8-bit color types, own
-    stdlib decoder — ``extractor.imagecodec.png_decode``), GIF (own
-    LSB-first LZW, first frame), baseline TIFF (none/PackBits/LZW
-    strips), and 24-bit BI_RGB BMP — and for baseline-sequential JPEG
-    (own DCT+Huffman decoder, ``extractor.jpegcodec``, any sampling
-    factors incl. 4:2:0, validated against real libjpeg-encoded files),
-    all byte-sniffed; also the self-describing synthetic ``FAKEIMG|``
-    payloads used by the oracle-checked contract entries.  JPEG decode
-    covers baseline, extended sequential, AND progressive; only
-    WebP/AVIF (and arithmetic-coded JPEG) remain the honest boundary —
-    they raise ``NotImplementedError``; callers convert that to an
-    error row."""
-    from extractor.imagecodec import (
-        bmp_decode,
-        gif_decode,
-        png_decode,
-        sniff_image,
-        tiff_decode,
-    )
-    from extractor.jpegcodec import jpeg_decode
-
+    """Parse a synthetic ``FAKEIMG|`` payload to ``(width, height,
+    pixel_bytes)``.  Real image bytes carry no codec here — they raise
+    ``NotImplementedError``; callers convert that to an error row."""
     if payload is None:
         raise ValueError("null payload")
     payload = bytes(payload)
-    if payload.startswith(b"FAKEIMG|"):
-        _, w, h, _fmt, body = payload.split(b"|", 4)
-        return int(w), int(h), body
-    kind = sniff_image(payload)
-    if kind == "png":
-        w, h, _ch, pixels = png_decode(payload)
-        return w, h, pixels
-    if kind == "gif":
-        w, h, _ch, pixels = gif_decode(payload)
-        return w, h, pixels
-    if kind == "tiff":
-        w, h, _ch, pixels = tiff_decode(payload)
-        return w, h, pixels
-    if kind == "bmp":
-        w, h, _ch, pixels = bmp_decode(payload)
-        return w, h, pixels
-    if kind == "jpeg":
-        w, h, _ch, pixels = jpeg_decode(payload)
-        return w, h, pixels
-    raise NotImplementedError(
-        "image decoding for %r requires a codec library not available in "
-        "this environment (PNG/GIF/TIFF/BMP/baseline-JPEG decode for real)"
-        % (kind or "unrecognized bytes")
-    )
+    if not payload.startswith(b"FAKEIMG|"):
+        raise NotImplementedError(
+            "no image codec: only synthetic FAKEIMG| payloads are decoded"
+        )
+    _, w, h, _fmt, body = payload.split(b"|", 4)
+    return int(w), int(h), body
 
 
 def extract_features(media: DataFrame) -> DataFrame:

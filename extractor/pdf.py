@@ -30,7 +30,8 @@ differencing; PNG 10-15 per-row None/Sub/Up/Average/Paeth with
 components).  That is the complete lossless-filter family.  Image XObjects
 (``/Subtype /Image``) are SKIPPED by ``pdf_to_text``: they carry no text,
 and a real-world document with an embedded photo must not fail text
-extraction (the router counts them instead).  Encrypted documents
+extraction (the router counts them instead; images are sniffed and
+counted, never decoded).  Encrypted documents
 (standard security handler, every generation: RC4 R2/R3, AESV2 R4, and
 the PDF 2.0 AESV3 R6 hardened handler; empty user password) decrypt for
 real via ``extractor/pdfcrypt.py`` + ``extractor/aescodec.py``.
@@ -47,11 +48,10 @@ PAGE_W, PAGE_H = 612, 792  # US Letter, points
 MARGIN_X, TOP_Y = 72, 720
 FONT_SIZE, LEADING = 10, 12
 
-# Output cap of one decoded stream (zlib inflate, LZW and CCITT fax, here
-# and in extractor.imagecodec): a few KB of coded data can declare GBs, so
-# past this the payload is refused before the memory is taken.  64 MiB
-# holds any page stream or image this pure-Python decoder gets through in
-# reasonable time.
+# Output cap of one decoded stream (zlib inflate and LZW): a few KB of
+# coded data can declare GBs, so past this the payload is refused before
+# the memory is taken.  64 MiB holds any page stream this pure-Python
+# decoder gets through in reasonable time.
 MAX_INFLATE_BYTES = 64 << 20
 
 
@@ -721,8 +721,8 @@ def _decode_stream(dict_bytes: bytes, body: bytes) -> bytes:
     10-15, 8-bit components, ``/Columns``/``/Colors``/``/EarlyChange``
     honored) is undone after THAT filter — DecodeParms array elements are
     paired with their Filter array positions per PDF 1.7 §7.3.8.2.
-    Lossy/image codecs (DCT, JPX, CCITT, JBIG2) raise
-    ``NotImplementedError`` — the remaining honest codec boundary."""
+    Image filters (DCT, JPX, CCITT, JBIG2) raise ``NotImplementedError``:
+    image pixels carry no text and are never decoded."""
     filters = re.findall(rb"/Filter\s*(?:\[\s*((?:/\w+\s*)+)\]|/(\w+))", dict_bytes)
     names: list[bytes] = []
     for arr, single in filters:

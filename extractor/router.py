@@ -13,14 +13,16 @@ sniffs the *content*:
 * ``PK\\x03\\x04`` zip → DOCX      → stdlib OOXML reader
                                      (``extractor/docx.py``) → DOM kernel
 * JSON with "pages"  → layout doc → XY-cut linearizer
-* image magics       → image      → real stdlib PNG/GIF/TIFF/BMP decode
-                                     (``extractor/imagecodec.py``) +
-                                     baseline JPEG (``jpegcodec.py``);
-                                     WebP/arith-coded → contained error
+* image magics       → image      → counted (``images_count=1``), not
+                                     decoded
 * markup tags        → HTML       → DOM kernel (``extractor/kernel.py``)
 * decodable utf-8    → plain text → passthrough (line-ending normalize)
 * anything else      → contained error row (never raises — the reference's
                        per-document containment, ``document_converter.py:95-118``)
+
+Images are sniffed and counted, never decoded — the reference counts the
+extracted media files and renders no pixels, and the PDF branch here
+already counts ``/Subtype /Image`` objects the same way.
 
 Everything runs inside one Arrow ``mapInPandas`` kernel: sniff + decode +
 convert per record batch, zero per-row Python dispatch from Spark's side,
@@ -54,6 +56,34 @@ _HTML_TAG_RE = re.compile(
 _SNIFF_WINDOW = 4096
 
 
+def sniff_image(payload: bytes) -> str | None:
+    """Byte-sniff the image container: 'png' | 'bmp' | 'jpeg' | 'gif' |
+    'tiff' | 'webp' | None (unrecognized)."""
+    head = bytes(payload[:12])
+    if head.startswith(b"\x89PNG\r\n\x1a\n"):
+        return "png"
+    if head[:4] == b"RIFF" and head[8:12] == b"WEBP":
+        return "webp"
+    if head.startswith(b"BM"):
+        # 'BM' alone is two ASCII letters — plain text can start with it
+        # ("BMW report..."), and since the router checks image magics
+        # before text decode a false positive turns a working text
+        # payload into an image row.  Require a plausible DIB header
+        # size at offset 14 before claiming the format.
+        if len(payload) >= 54 and int.from_bytes(
+            bytes(payload[14:18]), "little"
+        ) in (12, 40, 52, 56, 64, 108, 124):
+            return "bmp"
+        return None
+    if head.startswith(b"\xff\xd8\xff"):
+        return "jpeg"
+    if head.startswith((b"GIF87a", b"GIF89a")):
+        return "gif"
+    if head.startswith((b"II*\x00", b"MM\x00*")):
+        return "tiff"
+    return None
+
+
 def sniff_format(payload) -> str:
     """Classify one payload into :data:`FORMATS`.  Never raises."""
     if payload is None:
@@ -66,8 +96,6 @@ def sniff_format(payload) -> str:
             return "empty"
         if raw[:5] == b"%PDF-":
             return "pdf"
-        from extractor.imagecodec import sniff_image
-
         if sniff_image(raw) is not None:
             return "image"
         if raw[:4] == b"PK\x03\x04":
@@ -110,7 +138,8 @@ def route_payload(
     non-DOM formats (PDF/layout/text carry no table/math structure
     after linearization); PDF ``images_count`` counts embedded
     ``/Subtype /Image`` XObjects (the A1/A3 statistics parity for
-    scanned documents; their pixels are not decoded)."""
+    scanned documents) and an image payload counts 1 — pixels are never
+    decoded."""
     fmt = sniff_format(payload)
     out = {
         "format": fmt,
@@ -170,39 +199,7 @@ def route_payload(
                 text.replace("\r\n", "\n").replace("\r", "\n")
             )
         elif fmt == "image":
-            # lossless containers decode for real (own stdlib PNG/BMP
-            # codecs); images carry no text — they route to the media
-            # side table (S6), here counted + validated only
-            from extractor.imagecodec import (
-                bmp_decode,
-                gif_decode,
-                png_decode,
-                sniff_image,
-                tiff_decode,
-            )
-
-            raw = (
-                payload.encode("utf-8") if isinstance(payload, str) else bytes(payload)
-            )
-            kind = sniff_image(raw)
-            if kind == "png":
-                png_decode(raw)  # raises on corrupt bytes → contained below
-            elif kind == "gif":
-                gif_decode(raw)
-            elif kind == "tiff":
-                tiff_decode(raw)
-            elif kind == "bmp":
-                bmp_decode(raw)
-            elif kind == "jpeg":
-                from extractor.jpegcodec import jpeg_decode
-
-                jpeg_decode(raw)
-            else:  # webp/avif: codecs absent — honest boundary
-                raise NotImplementedError(
-                    "image codec for %s not available in this environment"
-                    % kind
-                )
-            out["images_count"] = 1
+            out["images_count"] = 1  # images carry no text
         else:  # zip / binary — no codec for this payload
             out["error"] = f"unsupported_format: {fmt}"
     except Exception as exc:  # containment of last resort, mirrors kernel

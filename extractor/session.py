@@ -36,7 +36,9 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
+        # local[N], local[*], local[N,F] and local[*,F]: threads before the comma
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
+        n = n.split(",")[0]
         shuffle_partitions = cpus if n in ("", "*") else int(n)
     builder = (
         SparkSession.builder.master(master)

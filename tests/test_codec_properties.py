@@ -84,7 +84,7 @@ def test_docx_run_text_roundtrips(t):
     assert html == f"<p>{h.escape(t, quote=False)}</p>"
 
 
-# --- image codec properties (round 5) ---------------------------------------
+# --- PDF stream filter properties -------------------------------------------
 
 binary_blob = st.binary(min_size=0, max_size=2048)
 
@@ -96,99 +96,3 @@ def test_rle_a85_roundtrip_arbitrary_bytes(data):
 
     assert rle_decode(rle_encode(data)) == data
     assert a85_decode(a85_encode(data)) == data
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.sampled_from([0, 2, 4, 6]),
-    st.sampled_from([0, 1, 2, 3, 4]),
-    st.randoms(use_true_random=False),
-)
-def test_png_roundtrip_any_shape_and_filter(w, h, ct, ft, rnd):
-    from extractor.imagecodec import png_decode, png_encode
-
-    ch = {0: 1, 2: 3, 4: 2, 6: 4}[ct]
-    px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
-    assert png_decode(png_encode(w, h, px, ct, ft)) == (w, h, ch, px)
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=256),
-    st.randoms(use_true_random=False),
-)
-def test_gif_roundtrip_any_palette_size(w, h, nc, rnd):
-    from extractor.imagecodec import gif_decode, gif_encode
-
-    pal = bytes(rnd.randrange(256) for _ in range(nc * 3))
-    idx = bytes(rnd.randrange(nc) for _ in range(w * h))
-    want = b"".join(pal[3 * i : 3 * i + 3] for i in idx)
-    assert gif_decode(gif_encode(w, h, idx, pal)) == (w, h, 3, want)
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=20),
-    st.integers(min_value=1, max_value=20),
-    st.sampled_from([1, 3]),
-    st.sampled_from(["none", "packbits", "lzw"]),
-    st.sampled_from(["II", "MM"]),
-    st.integers(min_value=1, max_value=8),
-    st.randoms(use_true_random=False),
-)
-def test_tiff_roundtrip_any_shape(w, h, ch, comp, bo, rps, rnd):
-    from extractor.imagecodec import tiff_decode, tiff_encode
-
-    px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
-    assert tiff_decode(tiff_encode(w, h, px, ch, comp, bo, rps)) == (
-        w, h, ch, px,
-    )
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=32),
-    st.integers(min_value=1, max_value=32),
-    st.randoms(use_true_random=False),
-)
-def test_bmp_roundtrip_any_padding(w, h, rnd):
-    from extractor.imagecodec import bmp_decode, bmp_encode
-
-    px = bytes(rnd.randrange(256) for _ in range(w * h * 3))
-    assert bmp_decode(bmp_encode(w, h, px)) == (w, h, 3, px)
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.binary(min_size=0, max_size=64))
-def test_codec_decoders_never_crash_on_garbage(data):
-    """Every decoder either returns or raises ValueError /
-    NotImplementedError — never an unhandled crash (O4: callers contain
-    those two).  Garbage prefixed with each magic exercises the parsers."""
-    import pytest  # noqa: F401
-
-    from extractor.imagecodec import (
-        PNG_SIG,
-        bmp_decode,
-        gif_decode,
-        png_decode,
-        tiff_decode,
-    )
-    from extractor.jpegcodec import jpeg_decode
-
-    for decode, magic in (
-        (png_decode, PNG_SIG),
-        (gif_decode, b"GIF89a"),
-        (tiff_decode, b"II*\x00"),
-        (tiff_decode, b"MM\x00*"),
-        (bmp_decode, b"BM"),
-        (jpeg_decode, b"\xff\xd8\xff\xe0"),
-    ):
-        for payload in (data, magic + data):
-            try:
-                decode(payload)
-            except (ValueError, NotImplementedError):
-                pass

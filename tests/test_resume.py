@@ -69,6 +69,22 @@ def test_retry_rounds_recover_transient_failures(spark, corpus, tmp_path):
     assert got == _clean_rows(spark, corpus)
 
 
+@pytest.mark.parametrize(
+    "param", ["n_buckets", "groups_per_round", "max_retries"]
+)
+def test_degenerate_parameters_rejected(corpus, tmp_path, param):
+    """Zero buckets would report COMPLETED having written nothing, zero
+    retries left the last error unbound and zero groups divided by zero:
+    each is a ``ValueError`` before any work starts."""
+    kwargs = dict(n_buckets=N_BUCKETS, groups_per_round=2, max_retries=3)
+    kwargs[param] = 0
+    with pytest.raises(ValueError, match=param):
+        run_with_checkpoint(
+            corpus, str(tmp_path / "out"), str(tmp_path / "ckpt"), **kwargs
+        )
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_resume_processes_only_unfinished(spark, corpus, tmp_path):
     state = tmp_path / "state"
     state.mkdir()
