@@ -37,10 +37,12 @@ from __future__ import annotations
 
 import time
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from . import publish
 from .pipeline import extract_transcripts
+from .session import forget_zip_importers
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -195,13 +197,14 @@ def run_with_checkpoint(
             if failure_hook is not None:
                 hook = failure_hook  # capture for closure serialization
 
-                def _inject(iterator, _hook=hook):
-                    for pdf in iterator:
-                        for b in pdf["bucket"].unique():
-                            _hook(int(b))
-                        yield pdf
+                def _inject(batches, _hook=hook):
+                    forget_zip_importers()
+                    for batch in batches:
+                        for b in pc.unique(batch.column("bucket")).to_pylist():
+                            _hook(b)
+                        yield batch
 
-                sub = sub.mapInPandas(_inject, sub.schema)
+                sub = sub.mapInArrow(_inject, sub.schema)
             out = extract_transcripts(
                 sub,
                 partition_mode=partition_mode,

@@ -33,9 +33,10 @@ Reference quirks intentionally reproduced, not fixed:
   (``len(image_list)`` :407).
 
 Scale note: this module is imported on executors and invoked through
-``convert_batch`` over whole Arrow record batches (``pd.Series`` in,
-``pd.DataFrame`` out) — the per-row loop lives here, inside the batch,
-amortized by Arrow transfer; Spark never dispatches per-row Python.
+``convert_batch`` over whole Arrow record batches (the batch's texts in,
+a ``pa.RecordBatch`` typed by ``KERNEL_SCHEMA`` out) — the per-row loop
+lives here, inside the batch, amortized by Arrow transfer; Spark never
+dispatches per-row Python.
 """
 
 from __future__ import annotations
@@ -43,6 +44,8 @@ from __future__ import annotations
 import posixpath
 import re
 from dataclasses import dataclass, field
+
+import pyarrow as pa
 
 from .dom import Element, parse_html
 from .linearize import escape_md_text, linearize
@@ -98,6 +101,32 @@ class ExtractionResult:
     # image inventory (reference ImageInfo, app/models.py:52-58; built at
     # html_processor.py:250-261,408-415) — explodes to the S6 side table
     images: list = field(default_factory=list)
+
+
+# ``convert_batch``'s output: ExtractionResult's fields as Arrow columns.
+# The kernel fields of ``pipeline.OUTPUT_SCHEMA`` are derived from it.
+_SPAN = pa.struct([("kind", pa.string()), ("start", pa.int32()), ("end", pa.int32())])
+_IMAGE = pa.struct(  # S6 inventory: explode() to the image side table
+    [
+        ("src", pa.string()),
+        ("alt", pa.string()),
+        ("title", pa.string()),
+        ("filename", pa.string()),
+        ("in_table", pa.bool_()),
+    ]
+)
+KERNEL_SCHEMA = pa.schema(
+    [
+        ("extracted_text", pa.string()),
+        ("spans", pa.list_(pa.field("element", _SPAN))),
+        ("tables_count", pa.int32()),
+        ("math_count", pa.int32()),
+        ("images_count", pa.int32()),
+        ("output_length", pa.int32()),
+        ("error", pa.string()),
+        ("images", pa.list_(pa.field("element", _IMAGE))),
+    ]
+)
 
 
 def _basename(src: str) -> str:
@@ -539,10 +568,11 @@ def convert_batch(
     texts,
     max_chars: int = MAX_TEXT_CHARS,
     options: ConvertOptions = DEFAULT_OPTIONS,
-):
-    """Arrow-batch kernel: ``pd.Series[str] -> pd.DataFrame`` (one call per
-    record batch inside ``mapInPandas`` — zero per-row Python dispatch from
-    Spark's side).
+) -> pa.RecordBatch:
+    """Arrow-batch kernel: an iterable of ``str``/``None`` in, one
+    ``pa.RecordBatch`` typed by ``KERNEL_SCHEMA`` out (one call per record
+    batch inside ``mapInArrow`` — zero per-row Python dispatch from Spark's
+    side).  Each output column is built straight from the per-row results.
 
     Verbatim-repeat memo: agent corpora repeat turns byte-identically
     (system prompts re-sent every episode, echoed tool banners), and
@@ -551,12 +581,10 @@ def convert_batch(
     (options are fixed per call, lifetime bounded by the Arrow batch)
     and stops inserting past a size cap so a pathological all-distinct
     batch costs one dict probe per row and bounded memory."""
-    import pandas as pd
-
     rows = []
     memo: dict = {}
     for value in texts:
-        key = None if value is None or value is pd.NA else value
+        key = value if isinstance(value, str) else None
         row = memo.get(key)
         if row is None:
             r = convert_text(key, max_chars, options)
@@ -573,16 +601,8 @@ def convert_batch(
             if len(memo) < 65536:
                 memo[key] = row
         rows.append(row)
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "extracted_text",
-            "spans",
-            "tables_count",
-            "math_count",
-            "images_count",
-            "output_length",
-            "error",
-            "images",
-        ],
+    columns = list(zip(*rows)) or [()] * len(KERNEL_SCHEMA)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(columns, KERNEL_SCHEMA)],
+        schema=KERNEL_SCHEMA,
     )

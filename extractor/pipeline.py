@@ -6,7 +6,7 @@ Replaces the reference's per-document loop + subprocess dataflow
 
     scan (pruned to needed columns)
       → [optional] explicit repartition on hash(conv_id) with skew salting
-      → mapInPandas(extraction kernel)        # one fused Arrow stage
+      → mapInArrow(extraction kernel)         # one fused Arrow stage
       → repartition(hash(conv_id)) + sortWithinPartitions(conv_id, turn_idx)
       → sink (parquet/Iceberg append) + lineage manifest
 
@@ -40,19 +40,19 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from .kernel import DEFAULT_OPTIONS, MAX_TEXT_CHARS, ConvertOptions, convert_batch
-
-SPAN_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("start", T.IntegerType()),
-            T.StructField("end", T.IntegerType()),
-        ]
-    )
+from .kernel import (
+    DEFAULT_OPTIONS,
+    KERNEL_SCHEMA,
+    MAX_TEXT_CHARS,
+    ConvertOptions,
+    convert_batch,
 )
+from .session import forget_zip_importers
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -61,27 +61,9 @@ OUTPUT_SCHEMA = T.StructType(
         T.StructField("role", T.StringType()),
         T.StructField("tool", T.StringType()),
         T.StructField("ts", T.TimestampType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("spans", SPAN_TYPE),
-        T.StructField("tables_count", T.IntegerType()),
-        T.StructField("math_count", T.IntegerType()),
-        T.StructField("images_count", T.IntegerType()),
-        T.StructField("output_length", T.IntegerType()),
-        T.StructField("error", T.StringType()),
-        T.StructField(
-            "images",  # S6 inventory: explode() to the image side table
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("src", T.StringType()),
-                        T.StructField("alt", T.StringType()),
-                        T.StructField("title", T.StringType()),
-                        T.StructField("filename", T.StringType()),
-                        T.StructField("in_table", T.BooleanType()),
-                    ]
-                )
-            ),
-        ),
+    ]
+    + from_arrow_schema(KERNEL_SCHEMA).fields
+    + [
         T.StructField("bytes_in", T.LongType()),
         T.StructField("part_id", T.IntegerType()),
         T.StructField("kernel_secs", T.DoubleType()),
@@ -94,38 +76,51 @@ _PASSTHROUGH = ("conv_id", "turn_idx", "role", "tool", "ts")
 def _make_extract_iter(
     pass_cols: tuple, options: ConvertOptions = DEFAULT_OPTIONS
 ):
-    """mapInPandas body factory: one ``convert_batch`` call per Arrow batch.
+    """mapInArrow body factory: one ``convert_batch`` call per Arrow batch.
 
-    *pass_cols* are copied from input to output untouched — this is how
-    per-conversation attributes (e.g. ``source``) ride through the kernel
-    with ZERO joins: at 10^12 turns a post-hoc "re-attach metadata" join is
-    either a full shuffle or a non-broadcastable broadcast; a passthrough
-    column is free.
+    *pass_cols* are the input batch's own arrays, copied to the output
+    untouched — this is how per-conversation attributes (e.g. ``source``)
+    ride through the kernel with ZERO joins: at 10^12 turns a post-hoc
+    "re-attach metadata" join is either a full shuffle or a
+    non-broadcastable broadcast; a passthrough column is free.
 
-    Emits executor-side observability columns: the physical partition id
-    (lineage key) and per-row amortized kernel seconds (so
-    ``sum(kernel_secs)`` over a partition = that partition's kernel time).
+    Emits executor-side observability columns: ``bytes_in`` (the input's
+    length in code points, 0 for NULL), the physical partition id (lineage
+    key) and per-row amortized kernel seconds (so ``sum(kernel_secs)`` over
+    a partition = that partition's kernel time).
+
+    Spark does not check a ``mapInArrow`` result against the declared
+    schema; it reads each column with the accessor of the declared type, so
+    every array here must carry exactly that field's Arrow type.
     """
+    names = (
+        list(pass_cols)
+        + KERNEL_SCHEMA.names
+        + ["bytes_in", "part_id", "kernel_secs"]
+    )
 
-    def _extract_iter(iterator):
-        import pandas as pd
+    def _extract_iter(batches):
         from pyspark import TaskContext
 
+        forget_zip_importers()
         ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in iterator:
+        part_id = pa.scalar(ctx.partitionId() if ctx is not None else -1, pa.int32())
+        for batch in batches:
+            text = batch.column("text")
             t0 = time.monotonic()
-            result = convert_batch(pdf["text"], MAX_TEXT_CHARS, options)
+            result = convert_batch(text.to_pylist(), MAX_TEXT_CHARS, options)
             elapsed = time.monotonic() - t0
-            out = pd.DataFrame({c: pdf[c].values for c in pass_cols})
-            for c in result.columns:
-                out[c] = result[c].values
-            out["bytes_in"] = (
-                pdf["text"].str.len().fillna(0).astype("int64")
+            n = batch.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in pass_cols]
+                + result.columns
+                + [
+                    pc.fill_null(pc.utf8_length(text), 0).cast(pa.int64()),
+                    pa.repeat(part_id, n),
+                    pa.repeat(pa.scalar(elapsed / max(n, 1), pa.float64()), n),
+                ],
+                names=names,
             )
-            out["part_id"] = part_id
-            out["kernel_secs"] = elapsed / max(len(pdf), 1)
-            yield out
 
     return _extract_iter
 
@@ -205,7 +200,7 @@ def extract_transcripts(
         + extra_fields
         + list(OUTPUT_SCHEMA.fields[len(_PASSTHROUGH) :])
     )
-    out = slim.mapInPandas(_make_extract_iter(pass_cols, options), schema)
+    out = slim.mapInArrow(_make_extract_iter(pass_cols, options), schema)
 
     if sort_output:
         n_out = num_partitions or df.sparkSession.sparkContext.defaultParallelism

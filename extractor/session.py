@@ -21,6 +21,8 @@ chosen to survive a 1000-executor / 100 TB deployment:
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -36,9 +38,10 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        # local[N], local[*], local[N,F] and local[*,F]: threads before the comma
+        # local[N], local[*], local[N,F] and local[*,F]: threads before the
+        # comma; a bare "local" runs one thread
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        n = n.split(",")[0]
+        n = "1" if master == "local" else n.split(",")[0]
         shuffle_partitions = cpus if n in ("", "*") else int(n)
     builder = (
         SparkSession.builder.master(master)
@@ -58,3 +61,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def forget_zip_importers() -> None:
+    """Drop every zipimporter from ``sys.path_importer_cache``.
+
+    A Python worker runs ``importlib.invalidate_caches()`` before each task,
+    and on Python 3.11 that makes every cached zipimporter re-read its
+    archive's whole central directory: one per package imported from
+    ``pyspark.zip`` and from the Spark jars on the path, 16 in all, which
+    took 0.17-0.33 s per task on a 4-vCPU VM before the first row.  The
+    cache is only a cache: an import that needs a dropped entry builds a
+    new zipimporter, which takes the directory already held in
+    ``zipimport._zip_directory_cache`` and reads nothing.  Workers are
+    reused, so calling this at the start of each task spares every later
+    task in the same worker the re-read.
+
+    Trade-off: an archive rewritten in place while the worker lives is
+    read with its old directory.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)

@@ -7,7 +7,7 @@ snapshot-driven resumable requirement; this module adds the *continuous
 ingest* variant for transcript streams:
 
     readStream(parquet dir, file source)
-      → mapInPandas(extraction kernel)          # stateless → streaming-safe
+      → mapInArrow(extraction kernel)           # stateless → streaming-safe
       → writeStream(parquet sink, checkpointLocation, availableNow)
 
 Exactly-once: the file-source + file-sink pair is end-to-end exactly-once
@@ -55,7 +55,7 @@ def stream_extract(
         .option("latestFirst", "false")
         .parquet(input_dir)
     )
-    extracted = stream.mapInPandas(_make_extract_iter(_PASSTHROUGH), OUTPUT_SCHEMA)
+    extracted = stream.mapInArrow(_make_extract_iter(_PASSTHROUGH), OUTPUT_SCHEMA)
     return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)

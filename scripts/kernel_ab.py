@@ -9,9 +9,11 @@ imports it as the package ``extractor_ref``, and times
 ``kernel.convert_batch`` of the ref and of the working tree on the
 benchmark's ``extract_markup`` corpus (32,768 generated turns in
 8192-row batches), alternating the two batch by batch in one process on
-one core.  Every pair of output frames must be equal.  Prints the
-median, min and max of the per-batch ratio ref time / working-tree time
-(above 1 means the working tree is faster).
+one core.  Both sides get the same batch; every pair of outputs must be
+equal, a ref whose kernel returns a pandas frame being compared after
+conversion to a record batch of ``kernel.KERNEL_SCHEMA`` (outside the
+timing).  Prints the median, min and max of the per-batch ratio ref time
+/ working-tree time (above 1 means the working tree is faster).
 
 Why one process: the same kernel code measured 1.75-2.96 s of CPU per
 corpus across separate processes on one 4-vCPU VM, far more than a
@@ -59,7 +61,7 @@ def import_ref(ref: str, dest: str):
 
 def corpus_batches(seed: int) -> list:
     """The benchmark's extract_markup turns, cut into Arrow-batch-sized
-    Series (the unit ``mapInPandas`` hands the kernel)."""
+    Series, which every version of ``convert_batch`` accepts."""
     import pandas as pd
 
     from extractor.session import ARROW_BATCH_ROWS
@@ -85,6 +87,15 @@ def timed(fn, batch):
     return time.perf_counter() - t0, out
 
 
+def as_record_batch(out, schema):
+    """*out* as a record batch: older kernels return a pandas frame."""
+    import pyarrow as pa
+
+    if isinstance(out, pa.RecordBatch):
+        return out
+    return pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--ref", required=True, help="git ref to compare against")
@@ -108,7 +119,8 @@ def main() -> int:
                 times, outs = [0.0, 0.0], [None, None]
                 for side in (first, 1 - first):
                     times[side], outs[side] = timed(sides[side], batch)
-                assert outs[0].equals(outs[1]), f"output differs from {args.ref}"
+                ref_out, out = (as_record_batch(o, kernel.KERNEL_SCHEMA) for o in outs)
+                assert ref_out.equals(out), f"output differs from {args.ref}"
                 ratios.append(times[0] / times[1])
     print(
         f"ref={args.ref} seed={args.seed} pairs={len(ratios)} "

@@ -10,7 +10,7 @@ from pathlib import Path
 import pytest
 
 from extractor.fixtures import FIXTURE_CASES, oversized_case
-from extractor.kernel import clean_markdown, convert_batch, convert_text
+from extractor.kernel import KERNEL_SCHEMA, clean_markdown, convert_batch, convert_text
 
 GOLDEN = json.loads(
     (Path(__file__).parent.parent / "fixtures" / "golden_kernel.json").read_text()
@@ -77,9 +77,24 @@ def test_batch_kernel_equals_scalar():
 
     texts = list(FIXTURE_CASES.values())
     out = convert_batch(pd.Series(texts, dtype=object))
-    assert len(out) == len(texts)
+    assert out.schema == KERNEL_SCHEMA
+    assert out.num_rows == len(texts)
+    extracted = out.column("extracted_text").to_pylist()
     for i, text in enumerate(texts):
-        assert out.iloc[i]["extracted_text"] == convert_text(text).extracted_text
+        assert extracted[i] == convert_text(text).extracted_text
+
+
+def test_kernel_schema_survives_the_spark_schema():
+    """The pipeline's Spark output schema takes its kernel fields from
+    ``KERNEL_SCHEMA``; converted back to Arrow they must be the very types
+    ``convert_batch`` emits, or ``mapInArrow`` would get other vectors."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from extractor.pipeline import OUTPUT_SCHEMA
+
+    arrow = to_arrow_schema(OUTPUT_SCHEMA)
+    assert pa.schema([arrow.field(n) for n in KERNEL_SCHEMA.names]) == KERNEL_SCHEMA
 
 
 def test_duplicate_math_spans_distinct():

@@ -93,6 +93,22 @@ def test_lineage_manifest(spark):
     assert sum(m["null_rows"] for m in manifest) > 0
 
 
+def test_bytes_in_counts_code_points(spark):
+    """``bytes_in`` is the input's length in code points, as Python
+    ``len()`` counts it (a multi-byte and an astral-plane character count
+    one each), and 0 for a NULL text."""
+    texts = [None, "", "é", "\U0001F600", "a\U0001F600é"]
+    df = spark.createDataFrame(
+        [(f"c{i}", i, t) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, text string",
+    )
+    got = {
+        r["turn_idx"]: r["bytes_in"]
+        for r in extract_transcripts(df, sort_output=False).collect()
+    }
+    assert got == {i: len(t or "") for i, t in enumerate(texts)}
+
+
 def test_salting_splits_hot_conversations(spark):
     """A conversation above the salt threshold must actually spread across
     multiple kernel-stage partitions (the whole point of salting), while

@@ -8,11 +8,13 @@ not just any plan that returns correct rows (100 TB posture):
 - aggregations are partial (two HashAggregate levels, map-side combine)
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from extractor.ops import relational
 from extractor.pipeline import extract_transcripts
 from extractor.plan_lint import formatted_plan
+from extractor.transcripts import transcripts_df
 
 SF = "/root/testdata/sf0.001"
 
@@ -70,7 +72,40 @@ def test_map_only_extraction_no_shuffle(spark):
     out = extract_transcripts(df, partition_mode="map_only", sort_output=False)
     plan = formatted_plan(out)
     assert "Exchange" not in plan, f"map-only plan must not shuffle:\n{plan}"
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
+
+
+def _transcripts_parquet(spark, path: str):
+    """A small transcripts corpus read back from parquet, so the plan's
+    only Python stage is the one under test (``transcripts_df`` itself
+    generates rows in a ``mapInPandas``)."""
+    transcripts_df(spark, n_convs=6, mean_turns=4, seed=5).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("mode", ["map_only", "hash_conv"])
+def test_extraction_stage_is_map_in_arrow(spark, tmp_path, mode):
+    """The extraction kernel takes and returns Arrow batches: no pandas
+    conversion on either side of it."""
+    df = _transcripts_parquet(spark, str(tmp_path / "in"))
+    plan = formatted_plan(extract_transcripts(df, partition_mode=mode))
+    assert "MapInArrow" in plan, plan
+    assert "MapInPandas" not in plan, plan
+
+
+def test_stream_extract_stage_is_map_in_arrow(spark, tmp_path, capsys):
+    from extractor.streaming import stream_extract
+
+    _transcripts_parquet(spark, str(tmp_path / "in"))
+    q = stream_extract(
+        spark, str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+    capsys.readouterr()
+    q.explain()
+    plan = capsys.readouterr().out
+    assert "MapInArrow" in plan, plan
+    assert "MapInPandas" not in plan, plan
 
 
 def test_sorted_output_single_shuffle(spark):
@@ -187,7 +222,7 @@ def test_entry_has_no_joins(spark):
     plan = formatted_plan(e.entry(spark))
     assert "BroadcastExchange" not in plan, plan
     assert "Join" not in plan, plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_pack_sequences_distributed_prefix_sum(spark):
