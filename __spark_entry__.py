@@ -19,7 +19,7 @@ from __future__ import annotations
 import json
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor.boilerplate import strip_boilerplate_batch
 from extractor.fanout import fan_out_scan
@@ -41,6 +41,7 @@ from extractor.pipeline import (
     lineage_manifest,
     stitch_conversations,
 )
+from extractor.session import local_frame
 from extractor.transcripts import transcripts_df
 
 
@@ -1112,7 +1113,8 @@ def _expire_checkpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 stats["snapshots_before"],
@@ -1123,8 +1125,10 @@ def _expire_checkpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stats["content_match"],
             )
         ],
-        "snapshots_before int, snapshots_after int, rows_before long, "
-        "rows_after long, turns_retained long, content_match boolean",
+        T.StructType.fromDDL(
+            "snapshots_before int, snapshots_after int, rows_before long, "
+            "rows_after long, turns_retained long, content_match boolean"
+        ),
     )
 
 

@@ -17,6 +17,9 @@ semi-join :285-287) and the queryable task-status registry
   bucket.  Resume = ``range(n_buckets)`` minus the completed buckets (the
   reference's ``failed_paths`` set filter), read from the checkpoint table
   with no input scan.
+- Status rows are built on the driver as JVM-local relations
+  (``session.local_frame``), so a status write is one JVM-only job with
+  no Python worker behind it.
 - Per-bucket turn counts come from ``df.observe`` on the write job itself
   (one conditional-sum metric per bucket in the group) — no post-commit
   re-read of the output directory.
@@ -42,7 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, ty
 
 from . import publish
 from .pipeline import extract_transcripts
-from .session import forget_zip_importers
+from .session import forget_zip_importers, local_frame
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -78,14 +81,12 @@ def _completed_buckets(
 ) -> DataFrame:
     ckpt = _read_status(spark, ckpt_dir)
     if ckpt is None:
-        return spark.createDataFrame([], "bucket int")
-    return (
-        ckpt.where(
-            (F.col("snapshot_id") == snapshot_id) & (F.col("status") == "completed")
-        )
-        .select("bucket")
-        .distinct()
-    )
+        ckpt = local_frame(spark, [], CHECKPOINT_SCHEMA)
+    # one row per completed claim, duplicates included: the caller folds
+    # them into a set, which spares a shuffle job
+    return ckpt.where(
+        (F.col("snapshot_id") == snapshot_id) & (F.col("status") == "completed")
+    ).select("bucket")
 
 
 def job_status(
@@ -99,7 +100,7 @@ def job_status(
 
     ckpt = _read_status(spark, ckpt_dir)
     if ckpt is None:
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        return local_frame(spark, [], CHECKPOINT_SCHEMA)
     if snapshot_id is not None:
         ckpt = ckpt.where(F.col("snapshot_id") == snapshot_id)
     w = Window.partitionBy("bucket", "snapshot_id").orderBy(
@@ -119,7 +120,7 @@ def _record(
     ckpt_dir: str,
     rows: list[tuple],
 ) -> None:
-    spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
+    local_frame(spark, rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(_status_path(ckpt_dir))
 

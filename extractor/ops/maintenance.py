@@ -25,10 +25,11 @@ import shutil
 import tempfile
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor import publish
 from extractor.checkpoint import content_fingerprint
+from extractor.session import local_frame
 
 _SCRATCH_REGISTERED: set[str] = set()
 _STALE_SCRATCH_SECS = 24 * 3600
@@ -140,7 +141,8 @@ def compact_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats = compact_files(spark, frag, target_files=4)
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 stats["rows"],
@@ -149,7 +151,9 @@ def compact_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stats["content_match"],
             )
         ],
-        "rows long, files_before int, files_after int, content_match boolean",
+        T.StructType.fromDDL(
+            "rows long, files_before int, files_after int, content_match boolean"
+        ),
     )
 
 

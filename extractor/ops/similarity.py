@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window
 
 from extractor.fanout import fan_out_scan
+from extractor.session import local_frame
 
 N_QUERIES = 5
 TOP_K = 5
@@ -1296,6 +1297,6 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str, k: int = KC_K) -> DataFram
         sel.append((r, top["vec_id"], top["d"]))
         chosen_codes.append(top["q_codes"])
     codes.unpersist()
-    return spark.createDataFrame(
-        sel, "round long, vec_id long, min_dist2 long"
+    return local_frame(
+        spark, sel, T.StructType.fromDDL("round long, vec_id long, min_dist2 long")
     )

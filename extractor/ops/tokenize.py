@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor.ops import md5_bucket
+from extractor.session import local_frame
 
 END_OF_WORD = "</w>"
 
@@ -344,8 +345,8 @@ def unigram_lm_em(
         (p, int(c), (int(c) + 1) * 1_000_000 // (total + v))
         for p, c in final
     ]
-    return spark.createDataFrame(
-        rows, "piece string, n_uses long, prob_ppm long"
+    return local_frame(
+        spark, rows, T.StructType.fromDDL("piece string, n_uses long, prob_ppm long")
     )
 
 

@@ -24,7 +24,9 @@ import os
 import sys
 import zipimport
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 ARROW_BATCH_ROWS = 8192
 
@@ -83,3 +85,26 @@ def forget_zip_importers() -> None:
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             sys.path_importer_cache.pop(path, None)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """A DataFrame of *rows* (tuples or ``Row`` objects, in *schema*'s field
+    order) built on the driver as an Arrow table, so Spark holds it as a
+    JVM-local relation with exactly *schema*.
+
+    ``spark.createDataFrame(list, schema)`` turns the list into a
+    ``PythonRDD``: every action on the frame starts Python worker tasks to
+    unpickle the rows, 0.35-0.5 s per action at ``local[2]`` even for a few
+    rows.  An Arrow table is handed to the JVM whole and scanned as a local
+    table (a ``ParallelCollectionRDD``), with no Python worker behind it.
+    Values go through each field's ``toInternal`` first, so naive
+    datetimes, nested structs and ``None`` mean what they mean in the list
+    path.
+    """
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([f.dataType.toInternal(r[i]) for r in rows], a.type)
+        for i, (f, a) in enumerate(zip(schema.fields, arrow_schema))
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

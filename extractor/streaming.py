@@ -34,6 +34,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from .pipeline import _PASSTHROUGH, OUTPUT_SCHEMA, _make_extract_iter
+from .session import local_frame
 from .transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -135,4 +136,4 @@ def stream_hourly_events(spark: SparkSession, sf_dir: str):
     rows = spark.table(name).collect()
     schema = spark.table(name).schema
     spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
