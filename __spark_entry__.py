@@ -439,7 +439,8 @@ def _pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pages_out.append(len(pages))
                 lines_out.append(len(flat))
                 flate.append(
-                    pdf_to_text(text_to_pdf_bytes(t, compress=True)) == pages
+                    pdf_to_text(text_to_pdf_bytes(t, stream_filter="flate"))
+                    == pages
                 )
             yield pd.DataFrame(
                 {

@@ -4,13 +4,12 @@ axis; reference analogue: the pandoc DOCX→HTML stage T1,
 into linear text" stage, re-expressed as a pure vectorized kernel).
 
 No PDF codec library ships in this container, so byte decoding is stdlib:
-payloads in our deterministic JSON layout format parse for real, and real
-PDF bytes decode for real through ``extractor/pdf.py``'s complete
-lossless-filter family (Flate, LZW, ASCIIHex/85, RunLength, predictor
-post-steps, chains) plus RC4/AESV2/AESV3 decryption — see the
-``extractor/pdf.py`` module docstring for the authoritative decode scope;
-only the JPX/JBIG2 *image* codecs remain out of scope there
-(callers get a contained error row).  Everything downstream of decode — reading-order
+payloads in our deterministic JSON layout format parse for real, and the
+PDF bytes this engine writes decode for real through ``extractor/pdf.py``
+(uncompressed, Flate and LZW content streams, chains, PNG predictors —
+see its module docstring for the authoritative decode scope); other
+filters, other predictors and encrypted documents raise there, and
+callers get a contained error row.  Everything downstream of decode — reading-order
 reconstruction, column detection, heading promotion, span bookkeeping, the
 Arrow batch plumbing — is real and tested.  DOCX bytes, by contrast, need
 no codec: ``extractor/docx.py`` decodes real OOXML packages with stdlib
@@ -60,15 +59,13 @@ class LayoutResult:
 
 def decode_layout(payload) -> dict:
     """Byte-decode boundary.  JSON layout docs decode for real; PDF bytes
-    with uncompressed OR FlateDecode streams (this engine's own
-    ``extractor/pdf.py`` output in both modes, plus the dominant
-    real-world encoding) decode for real via the stdlib content-stream
-    parser — each show-text line becomes a positioned block at the
-    writer's geometry, so the XY-cut linearizer downstream operates on
-    genuine PDF bytes.  Flate/LZW/ASCIIHex streams (chains included) and
-    TIFF/PNG predictors decode for real; image filters
-    (DCT/JPX/CCITT/JBIG2) are never decoded
-    (``NotImplementedError`` → contained error row)."""
+    in the shapes ``extractor/pdf.py:text_to_pdf_bytes`` writes
+    (uncompressed, Flate, LZW, LZW over a PNG predictor) decode for real
+    via the stdlib content-stream parser — each show-text line becomes a
+    positioned block at the writer's geometry, so the XY-cut linearizer
+    downstream operates on genuine PDF bytes.  Any other filter or
+    predictor, and an encrypted document, raise ``NotImplementedError``
+    (→ contained error row); image XObjects are skipped, never decoded."""
     if payload is None:
         raise ValueError("null payload")
     if isinstance(payload, (bytes, bytearray)):

@@ -15,26 +15,23 @@ model.  What IS exact and testable: the PDF is structurally valid (xref
 offsets, stream lengths), byte-deterministic, and its line/page counts are
 pure functions of the input text that a SQL oracle reproduces.
 
-Decoder scope (``pdf_to_text``): uncompressed AND ``/FlateDecode`` content
-streams (stdlib ``zlib``), literal strings with full PDF escape semantics
-(octal, ``\\n``-family, line continuations, balanced parens), hex strings,
-and the ``Tj`` / ``'`` / ``"`` / ``TJ`` show-text operators — i.e. the text
-layer of the overwhelming majority of real-world PDFs.  Filters:
-``FlateDecode`` (stdlib zlib), ``LZWDecode`` (own TIFF-convention codec:
-MSB-first variable-width 9→12-bit codes, 256=Clear/257=EOD, EarlyChange
-honored), ``ASCIIHexDecode``, ``ASCII85Decode`` (stdlib ``base64``, Adobe
-framing, ``z`` shortcut), ``RunLengthDecode`` (PDF 1.7 §7.4.5 packbits-style
-RLE), chains thereof, and ``/Predictor`` post-steps (TIFF 2 horizontal
-differencing; PNG 10-15 per-row None/Sub/Up/Average/Paeth with
-``/Columns``/``/Colors``/``/BitsPerComponent`` at 1/2/4/8/16-bit
-components).  That is the complete lossless-filter family.  Image XObjects
-(``/Subtype /Image``) are SKIPPED by ``pdf_to_text``: they carry no text,
-and a real-world document with an embedded photo must not fail text
-extraction (the router counts them instead; images are sniffed and
-counted, never decoded).  Encrypted documents
-(standard security handler, every generation: RC4 R2/R3, AESV2 R4, and
-the PDF 2.0 AESV3 R6 hardened handler; empty user password) decrypt for
-real via ``extractor/pdfcrypt.py`` + ``extractor/aescodec.py``.
+Decoder scope (``pdf_to_text``): the filters and operators
+``text_to_pdf_bytes`` writes, at their full spec semantics.  Content
+streams uncompressed, ``FlateDecode`` (stdlib zlib) or
+``LZWDecode`` (own TIFF-convention codec: MSB-first variable-width
+9→12-bit codes, 256=Clear/257=EOD, EarlyChange honored), chains of the
+two, and a ``/Predictor`` post-step of 1 (none) or ≥10 (PNG, every row
+type, ``/Columns``/``/Colors``/``/BitsPerComponent`` at 1/2/4/8/16-bit
+components).  Literal strings with full PDF escape semantics (octal,
+``\\n``-family, line continuations, balanced parens), hex strings, and
+the ``Tj`` / ``'`` / ``"`` / ``TJ`` show-text operators.  Any other filter
+or predictor raises ``NotImplementedError``, and so does a trailer that
+declares ``/Encrypt``: the reference only ever writes PDFs (Word COM
+export) and never reads one, so the readable set is this engine's own
+output, and anything else becomes a contained error row downstream.
+Image XObjects (``/Subtype /Image``) are SKIPPED by ``pdf_to_text``: they
+carry no text, and the router counts them with the same test
+(:func:`image_count`); their pixels are never decoded.
 """
 from __future__ import annotations
 
@@ -210,84 +207,6 @@ def lzw_decode(data: bytes, early_change: int = 1) -> bytes:
     return bytes(out)
 
 
-def rle_encode(data: bytes) -> bytes:
-    """PDF ``RunLengthDecode``-compatible encoder (PDF 1.7 §7.4.5, public
-    spec — packbits convention): length byte 0-127 → the next length+1
-    bytes are literal; 129-255 → the next byte repeats 257-length times;
-    128 = EOD.  Runs ≥3 are emitted as repeats, else literals; max chunk
-    128 either way.  Deterministic."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        # measure the run at i
-        j = i + 1
-        while j < n and j - i < 128 and data[j] == data[i]:
-            j += 1
-        if j - i >= 3:
-            out.append(257 - (j - i))
-            out.append(data[i])
-            i = j
-            continue
-        # literal stretch: until a run of ≥3 starts or 128 bytes
-        k = i
-        while k < n and k - i < 128:
-            if k + 2 < n and data[k] == data[k + 1] == data[k + 2]:
-                break
-            k += 1
-        out.append(k - i - 1)
-        out += data[i:k]
-        i = k
-    out.append(128)
-    return bytes(out)
-
-
-def rle_decode(data: bytes) -> bytes:
-    """Decode PDF ``RunLengthDecode`` streams (PDF 1.7 §7.4.5)."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        length = data[i]
-        i += 1
-        if length == 128:  # EOD
-            break
-        if length < 128:
-            chunk = data[i : i + length + 1]
-            if len(chunk) != length + 1:
-                raise ValueError("corrupt RunLength stream: short literal")
-            out += chunk
-            i += length + 1
-        else:
-            if i >= n:
-                raise ValueError("corrupt RunLength stream: dangling repeat")
-            out += bytes([data[i]]) * (257 - length)
-            i += 1
-    return bytes(out)
-
-
-def a85_encode(data: bytes) -> bytes:
-    """PDF ``ASCII85Decode``-compatible encoder: stdlib ``base64`` Adobe
-    framing minus the non-standard ``<~`` prefix PDF writers omit (the
-    stream is just base-85 groups terminated by ``~>``)."""
-    import base64
-
-    return base64.a85encode(data, adobe=True)[2:]
-
-
-def a85_decode(data: bytes) -> bytes:
-    """Decode PDF ``ASCII85Decode`` streams via stdlib ``base64``
-    (Adobe framing; whitespace ignored; ``z`` zero-group honored; a
-    missing ``~>`` EOD is tolerated as seen in the wild)."""
-    import base64
-
-    body = bytes(data).strip()
-    if not body.endswith(b"~>"):
-        body += b"~>"
-    try:
-        return base64.a85decode(body, adobe=True)
-    except ValueError as exc:
-        raise ValueError("corrupt ASCII85 stream: %s" % exc) from exc
-
-
 def png_predict_encode(
     data: bytes, columns: int, colors: int = 1, bpc: int = 8,
     filter_type: int = 2,
@@ -382,57 +301,6 @@ def png_predict_decode(
     return bytes(out)
 
 
-def tiff_predict_decode(data: bytes, columns: int, colors: int = 1,
-                        bpc: int = 8) -> bytes:
-    """Undo TIFF ``/Predictor 2`` horizontal differencing.  Unlike the
-    PNG filters (bytewise at every depth), TIFF differencing is per
-    SAMPLE: 8-bit adds bytes, 16-bit adds big-endian words mod 2^16,
-    and 1/2/4-bit unpacks each row's packed samples, prefix-sums per
-    color channel mod 2^bpc, and repacks (TIFF 6.0 §14, public)."""
-    if bpc not in (1, 2, 4, 8, 16):
-        raise ValueError("tiff predictor: bpc must be 1/2/4/8/16")
-    rowlen = (columns * colors * bpc + 7) // 8
-    out = bytearray(data)
-    if bpc == 8:
-        bpp = colors
-        for r0 in range(0, len(out), rowlen):
-            end = min(r0 + rowlen, len(out))
-            for i in range(r0 + bpp, end):
-                out[i] = (out[i] + out[i - bpp]) & 0xFF
-        return bytes(out)
-    if bpc == 16:
-        step = colors * 2
-        for r0 in range(0, len(out), rowlen):
-            end = min(r0 + rowlen, len(out))
-            for i in range(r0 + step, end - 1, 2):
-                v = (out[i] << 8 | out[i + 1]) + (
-                    out[i - step] << 8 | out[i - step + 1]
-                )
-                out[i], out[i + 1] = (v >> 8) & 0xFF, v & 0xFF
-        return bytes(out)
-    # sub-byte: unpack → per-channel cumulative sum → repack
-    mask = (1 << bpc) - 1
-    per_byte = 8 // bpc
-    for r0 in range(0, len(out), rowlen):
-        row = out[r0 : r0 + rowlen]
-        samples = [
-            (b >> (8 - bpc * (j + 1))) & mask
-            for b in row
-            for j in range(per_byte)
-        ][: columns * colors]
-        for i in range(colors, len(samples)):
-            samples[i] = (samples[i] + samples[i - colors]) & mask
-        for bi in range(len(row)):
-            acc = 0
-            for j in range(per_byte):
-                si = bi * per_byte + j
-                acc = (acc << bpc) | (
-                    samples[si] if si < len(samples) else 0
-                )
-            out[r0 + bi] = acc
-    return bytes(out)
-
-
 def _pdf_escape(line: str) -> bytes:
     """PDF literal-string escaping; non-Latin-1 chars degrade to '?'
     (Helvetica/WinAnsi has no wider repertoire — documented scope)."""
@@ -443,24 +311,17 @@ def _pdf_escape(line: str) -> bytes:
 PRED_COLUMNS = 64  # /Columns for the predictor-coded write mode
 
 
-def text_to_pdf_bytes(
-    text: str, compress: bool = False, stream_filter: str | None = None
-) -> bytes:
+def text_to_pdf_bytes(text: str, stream_filter: str | None = None) -> bytes:
     """Render *text* to a complete, valid, deterministic PDF 1.4 file.
 
-    ``compress=True`` Flate-compresses each page content stream
-    (``/Filter /FlateDecode``, fixed zlib level → still deterministic);
-    the default stays uncompressed so the s9 oracle's byte-length math
-    remains SQL-expressible.  ``stream_filter`` selects the encoding
-    explicitly: ``"flate"``, ``"lzw"`` (``/Filter /LZWDecode``, own
-    codec), ``"lzw-png"`` (LZW over a PNG Up-predictor pre-pass,
+    ``stream_filter`` selects the content-stream encoding: ``None``
+    (uncompressed, the default, so the s9 oracle's byte-length math
+    remains SQL-expressible), ``"flate"`` (``/Filter /FlateDecode``,
+    fixed zlib level), ``"lzw"`` (``/Filter /LZWDecode``, own codec) or
+    ``"lzw-png"`` (LZW over a PNG Up-predictor pre-pass,
     ``/DecodeParms << /Predictor 12 /Columns 64 >>`` — the layout real
-    xref-stream-era PDFs use), ``"rle"`` (``/RunLengthDecode``), ``"a85"``
-    (``/ASCII85Decode``), or ``"a85-flate"`` (the chained
-    ``[/ASCII85Decode /FlateDecode]`` array form).  All modes
-    byte-deterministic."""
-    if compress and stream_filter is None:
-        stream_filter = "flate"
+    xref-stream-era PDFs use).  These four are the shapes
+    :func:`pdf_to_text` reads back; all are byte-deterministic."""
     lines = wrap_lines(text)
     pages = [
         lines[i : i + LINES_PER_PAGE]
@@ -513,26 +374,6 @@ def text_to_pdf_bytes(
                 b"<< /Length %d /Filter /LZWDecode /DecodeParms "
                 b"<< /Predictor 12 /Columns %d >> >>\nstream\n%s\nendstream"
                 % (len(body), PRED_COLUMNS, body)
-            )
-        elif stream_filter == "rle":
-            body = rle_encode(body)
-            objects.append(
-                b"<< /Length %d /Filter /RunLengthDecode >>"
-                b"\nstream\n%s\nendstream" % (len(body), body)
-            )
-        elif stream_filter == "a85":
-            body = a85_encode(body)
-            objects.append(
-                b"<< /Length %d /Filter /ASCII85Decode >>"
-                b"\nstream\n%s\nendstream" % (len(body), body)
-            )
-        elif stream_filter == "a85-flate":
-            # classic chained layout: stored = a85(flate(text)); the
-            # decoder applies the Filter array in order a85 → flate
-            body = a85_encode(zlib.compress(body, 6))
-            objects.append(
-                b"<< /Length %d /Filter [ /ASCII85Decode /FlateDecode ] >>"
-                b"\nstream\n%s\nendstream" % (len(body), body)
             )
         elif stream_filter is None:
             objects.append(
@@ -677,20 +518,14 @@ def _filter_parms(dict_bytes: bytes, names: list[bytes]) -> list[bytes]:
     (PDF 1.7 §7.3.8.2: with an array Filter, DecodeParms is an array of
     the same length whose elements are dicts or ``null``).  A lone dict
     against an array Filter (spec-invalid but seen in the wild) is paired
-    with the first compression filter; absent parms yield ``b""``."""
+    with the first filter; absent parms yield ``b""``."""
     m = re.search(rb"/(?:DecodeParms|DP)\b", dict_bytes)
     if not m:
         return [b""] * len(names)
     rest = dict_bytes[m.end() :].lstrip()
     if rest.startswith(b"<<"):
         j = rest.find(b">>")
-        d = rest[: j + 2] if j >= 0 else rest
-        out = [b""] * len(names)
-        for i, nm in enumerate(names):
-            if nm in (b"FlateDecode", b"LZWDecode"):
-                out[i] = d
-                break
-        return out
+        return [rest[: j + 2] if j >= 0 else rest] + [b""] * (len(names) - 1)
     if not rest.startswith(b"["):
         return [b""] * len(names)
     out, i = [], 1
@@ -713,16 +548,25 @@ def _filter_parms(dict_bytes: bytes, names: list[bytes]) -> list[bytes]:
     return out
 
 
+_IMAGE_RE = re.compile(rb"/Subtype\s*/Image\b")
+_XREF_RE = re.compile(rb"/Type\s*/XRef\b")
+_ENCRYPT_RE = re.compile(rb"/Encrypt\b")
+
+
+def _is_image_xobject(dict_bytes: bytes) -> bool:
+    """Whether a stream dict declares an image XObject — skipped by
+    :func:`pdf_to_text`, counted by :func:`image_count`."""
+    return _IMAGE_RE.search(dict_bytes) is not None
+
+
 def _decode_stream(dict_bytes: bytes, body: bytes) -> bytes:
     """Apply the stream dict's filter(s) to the raw body, in order.
-    Supported: ``FlateDecode`` (stdlib zlib), ``LZWDecode`` (own codec,
-    :func:`lzw_decode`), ``ASCIIHexDecode``, and chains thereof; a
-    ``/Predictor`` in a filter's ``/DecodeParms`` entry (TIFF 2 or PNG
-    10-15, 8-bit components, ``/Columns``/``/Colors``/``/EarlyChange``
-    honored) is undone after THAT filter — DecodeParms array elements are
-    paired with their Filter array positions per PDF 1.7 §7.3.8.2.
-    Image filters (DCT, JPX, CCITT, JBIG2) raise ``NotImplementedError``:
-    image pixels carry no text and are never decoded."""
+    Supported: ``FlateDecode`` (:func:`inflate`), ``LZWDecode``
+    (:func:`lzw_decode`, ``/EarlyChange`` honored) and chains of the two;
+    a PNG ``/Predictor`` (≥10) in a filter's ``/DecodeParms`` entry is
+    undone after THAT filter — DecodeParms array elements are paired with
+    their Filter array positions per PDF 1.7 §7.3.8.2.  Any other filter
+    or predictor raises ``NotImplementedError``."""
     filters = re.findall(rb"/Filter\s*(?:\[\s*((?:/\w+\s*)+)\]|/(\w+))", dict_bytes)
     names: list[bytes] = []
     for arr, single in filters:
@@ -732,16 +576,11 @@ def _decode_stream(dict_bytes: bytes, body: bytes) -> bytes:
             names.extend(re.findall(rb"/(\w+)", arr))
     if not names:
         return body
-    supported = {
-        b"FlateDecode", b"LZWDecode", b"ASCIIHexDecode",
-        b"ASCII85Decode", b"RunLengthDecode",
-    }
-    bad = [x for x in names if x not in supported]
+    bad = [x for x in names if x not in (b"FlateDecode", b"LZWDecode")]
     if bad:
         raise NotImplementedError(
-            "unsupported PDF stream filter(s) %s (the lossless family — "
-            "Flate/LZW/ASCIIHex/ASCII85/RunLength — and uncompressed "
-            "streams decode in this environment)"
+            "unsupported PDF stream filter(s) %s (FlateDecode, LZWDecode "
+            "and uncompressed streams decode in this environment)"
             % [x.decode() for x in bad]
         )
 
@@ -753,25 +592,11 @@ def _decode_stream(dict_bytes: bytes, body: bytes) -> bytes:
             return int(m.group(1)) if m else default
 
         predictor = _parm(b"Predictor", 1)
-        columns = _parm(b"Columns", 1)
-        colors = _parm(b"Colors", 1)
-        bpc = _parm(b"BitsPerComponent", 8)
-        early = _parm(b"EarlyChange", 1)
-        if name == b"ASCIIHexDecode":
-            hx = re.sub(rb"[\s>]", b"", body)
-            if len(hx) % 2:
-                hx += b"0"
-            try:
-                body = bytes.fromhex(hx.decode("ascii"))
-            except (ValueError, UnicodeDecodeError) as exc:
-                raise ValueError("corrupt ASCIIHex stream: %s" % exc) from exc
-            continue
-        if name == b"ASCII85Decode":
-            body = a85_decode(body)
-            continue
-        if name == b"RunLengthDecode":
-            body = rle_decode(body)
-            continue
+        if predictor != 1 and predictor < 10:
+            raise NotImplementedError(
+                "unsupported PDF predictor %d (1 and the PNG predictors, "
+                ">= 10, decode in this environment)" % predictor
+            )
         if name == b"FlateDecode":
             try:
                 body = inflate(body)
@@ -780,23 +605,23 @@ def _decode_stream(dict_bytes: bytes, body: bytes) -> bytes:
                     "corrupt FlateDecode stream: %s" % exc
                 ) from exc
         else:  # LZWDecode
-            body = lzw_decode(body, early_change=early)
+            body = lzw_decode(body, early_change=_parm(b"EarlyChange", 1))
         if predictor >= 10:
-            body = png_predict_decode(body, columns, colors, bpc)
-        elif predictor == 2:
-            body = tiff_predict_decode(body, columns, colors, bpc)
+            body = png_predict_decode(
+                body,
+                _parm(b"Columns", 1),
+                _parm(b"Colors", 1),
+                _parm(b"BitsPerComponent", 8),
+            )
     return body
 
 
 def _iter_streams(payload: bytes):
-    """Yield ``(dict_bytes, raw_body, obj_num, gen, body_at)`` for every
-    stream object.  The body is delimited by the dict's direct
-    ``/Length N`` when present and consistent (binary-safe — compressed
-    data may contain ``endstream`` as a byte pattern), falling back to
-    an ``endstream`` scan for indirect or absent lengths.  ``obj_num``/
-    ``gen`` come from the owning ``N G obj`` header (0/0 if absent) —
-    the crypt layer needs them for per-object keys; ``body_at`` is the
-    body's byte offset (the encrypt fixture rewrites in place)."""
+    """Yield ``(dict_bytes, raw_body)`` for every stream object.  The body
+    is delimited by the dict's direct ``/Length N`` when present and
+    consistent (binary-safe — compressed data may contain ``endstream``
+    as a byte pattern), falling back to an ``endstream`` scan for
+    indirect or absent lengths."""
     pos = 0
     n = len(payload)
     while True:
@@ -815,14 +640,6 @@ def _iter_streams(payload: bytes):
         # the stream's own dict: from the owning "N 0 obj" (bounded lookback)
         d0 = payload.rfind(b"obj", max(0, s - 4096), s)
         dict_bytes = payload[d0 if d0 >= 0 else max(0, s - 512) : s]
-        num = gen = 0
-        if d0 >= 0:
-            hm = re.search(
-                rb"(\d+)\s+(\d+)\s+$",
-                payload[max(0, d0 - 24) : d0],
-            )
-            if hm:
-                num, gen = int(hm.group(1)), int(hm.group(2))
         body = None
         m = re.search(rb"/Length\s+(\d+)(?!\s+\d+\s+R)", dict_bytes)
         if m:
@@ -838,43 +655,51 @@ def _iter_streams(payload: bytes):
                 return  # torn stream: stop rather than loop
             body = payload[b0:e].rstrip(b"\r\n")
             pos = e
-        yield dict_bytes, body, num, gen, b0
+        yield dict_bytes, body
+
+
+def image_count(payload: bytes) -> int:
+    """Number of image XObject streams in a PDF (never decoded)."""
+    streams = _iter_streams(bytes(payload))
+    return sum(_is_image_xobject(d) for d, _ in streams)
+
+
+def _encrypted(payload: bytes, streams) -> bool:
+    """Whether the trailer declares ``/Encrypt``: the dict after the last
+    ``trailer`` keyword, or the dict of a ``/Type /XRef`` stream.  Neither
+    includes content-stream bytes, so text that spells ``/Encrypt`` reads
+    back normally."""
+    at = payload.rfind(b"trailer")
+    if at >= 0 and _ENCRYPT_RE.search(payload[at:].split(b"startxref", 1)[0]):
+        return True
+    return any(
+        _XREF_RE.search(d) and _ENCRYPT_RE.search(d) for d, _ in streams
+    )
 
 
 def pdf_to_text(payload: bytes) -> list[list[str]]:
     """Decode text back OUT of a PDF (the byte-decode side of the
     T1/layout axis): returns pages as lists of lines, one page per content
     stream containing a ``BT`` text block, parsed per the module-docstring
-    decoder scope (the complete lossless filter family — Flate, LZW,
-    ASCIIHex/85, RunLength, predictors, chains — plus decryption;
-    ``Tj``/``'``/``\"``/``TJ`` operators; literal + hex strings).
-    Anything non-PDF raises ``ValueError``."""
+    decoder scope.  Anything non-PDF raises ``ValueError``; an encrypted
+    document, or a filter or predictor outside that scope, raises
+    ``NotImplementedError``."""
     if payload is None:
         raise ValueError("null payload")
     payload = bytes(payload)
     if not payload.startswith(b"%PDF-"):
         raise ValueError("not a PDF payload")
-    from extractor.pdfcrypt import decrypt_stream, decryption_key
-
-    crypt = decryption_key(payload)  # None = unencrypted
+    streams = list(_iter_streams(payload))
+    if _encrypted(payload, streams):
+        raise NotImplementedError("encrypted PDF")
     pages: list[list[str]] = []
-    found_text = False
-    for dict_bytes, raw, onum, ogen, _at in _iter_streams(payload):
-        if re.search(rb"/Subtype\s*/Image\b", dict_bytes):
+    for dict_bytes, raw in streams:
+        if _is_image_xobject(dict_bytes):
             continue  # image XObject: no text
-        # cross-reference streams are NEVER encrypted (ISO 32000-1
-        # §7.5.8.2) — "decrypting" one garbles it and the zlib/AES error
-        # would fail the whole document; they carry no text either way
-        if crypt is not None and not re.search(
-            rb"/Type\s*/XRef\b", dict_bytes
-        ):
-            raw = decrypt_stream(crypt[0], crypt[1], onum, ogen, raw)
         body = _decode_stream(dict_bytes, raw)
-        if b"BT" not in body:
-            continue
-        found_text = True
-        pages.append(_content_lines(body))
-    if not found_text:
+        if b"BT" in body:
+            pages.append(_content_lines(body))
+    if not pages:
         raise ValueError("no text content streams found in PDF")
     return pages
 

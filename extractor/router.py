@@ -22,7 +22,7 @@ sniffs the *content*:
 
 Images are sniffed and counted, never decoded — the reference counts the
 extracted media files and renders no pixels, and the PDF branch here
-already counts ``/Subtype /Image`` objects the same way.
+counts image XObject streams the same way (``pdf.image_count``).
 
 Everything runs inside one Arrow ``mapInPandas`` kernel: sniff + decode +
 convert per record batch, zero per-row Python dispatch from Spark's side,
@@ -40,6 +40,7 @@ import zipfile
 from .docx import decode_docx
 from .kernel import DEFAULT_OPTIONS, MAX_TEXT_CHARS, ConvertOptions, convert_text
 from .layout import parse_layout
+from .pdf import image_count
 
 FORMATS = (
     "empty", "pdf", "docx", "zip", "layout_json", "html", "text", "image",
@@ -136,8 +137,8 @@ def route_payload(
     Returns ``{"format", "extracted_text", "tables_count", "math_count",
     "images_count", "error"}`` — table/math counts are 0 for the
     non-DOM formats (PDF/layout/text carry no table/math structure
-    after linearization); PDF ``images_count`` counts embedded
-    ``/Subtype /Image`` XObjects (the A1/A3 statistics parity for
+    after linearization); PDF ``images_count`` counts embedded image
+    XObject streams (the A1/A3 statistics parity for
     scanned documents) and an image payload counts 1 — pixels are never
     decoded."""
     fmt = sniff_format(payload)
@@ -156,13 +157,7 @@ def route_payload(
             r = parse_layout(payload)
             out["extracted_text"], out["error"] = r.text, r.error
             if fmt == "pdf":
-                raw = (
-                    payload.encode("utf-8")
-                    if isinstance(payload, str) else bytes(payload)
-                )
-                out["images_count"] = len(
-                    re.findall(rb"/Subtype\s*/Image\b", raw)
-                )
+                out["images_count"] = image_count(payload)
         elif fmt == "docx":
             html = decode_docx(
                 payload.encode("utf-8") if isinstance(payload, str) else payload

@@ -41,7 +41,7 @@ def test_pdf_flate_roundtrip_matches_uncompressed(t):
     """The FlateDecode write path decodes to the identical structure as
     the uncompressed one for arbitrary latin-1 text — writer compression
     and decoder inflation are exact inverses."""
-    blob = text_to_pdf_bytes(t, compress=True)
+    blob = text_to_pdf_bytes(t, stream_filter="flate")
     assert is_valid_pdf(blob)
     pages = pdf_to_text(blob)
     assert [l for p in pages for l in p] == wrap_lines(t)
@@ -82,17 +82,3 @@ def test_docx_run_text_roundtrips(t):
     import html as h
 
     assert html == f"<p>{h.escape(t, quote=False)}</p>"
-
-
-# --- PDF stream filter properties -------------------------------------------
-
-binary_blob = st.binary(min_size=0, max_size=2048)
-
-
-@settings(max_examples=150, deadline=None)
-@given(binary_blob)
-def test_rle_a85_roundtrip_arbitrary_bytes(data):
-    from extractor.pdf import a85_decode, a85_encode, rle_decode, rle_encode
-
-    assert rle_decode(rle_encode(data)) == data
-    assert a85_decode(a85_encode(data)) == data

@@ -99,6 +99,8 @@ def _one_stream_pdf(dict_extra: bytes, body: bytes) -> bytes:
 
 
 def test_pdf_to_text_rejects_unsupported_filters():
+    import zlib
+
     import pytest
 
     from extractor.pdf import pdf_to_text
@@ -115,6 +117,35 @@ def test_pdf_to_text_rejects_unsupported_filters():
     # corrupt flate data is a ValueError, not a crash
     with pytest.raises(ValueError, match="corrupt"):
         pdf_to_text(_one_stream_pdf(b"/Filter /FlateDecode", b"BT not-zlib ET"))
+    # only the filters the writer emits decode: Flate and LZW
+    for name, body in (
+        (b"ASCIIHexDecode", b"BT (x) Tj ET".hex().encode() + b">"),
+        (b"ASCII85Decode", b"z~>"),
+        (b"RunLengthDecode", bytes([0]) + b"x" + bytes([128])),
+    ):
+        with pytest.raises(NotImplementedError, match=name.decode()):
+            pdf_to_text(_one_stream_pdf(b"/Filter /" + name, body))
+    # only predictors 1 and PNG (>= 10): the TIFF predictor is rejected
+    with pytest.raises(NotImplementedError, match="predictor 2"):
+        pdf_to_text(
+            _one_stream_pdf(
+                b"/Filter /FlateDecode /DecodeParms << /Predictor 2 >>",
+                zlib.compress(b"BT (x) Tj ET"),
+            )
+        )
+    # a trailer declaring /Encrypt: classic trailer and xref stream
+    plain = text_to_pdf_bytes("locked")
+    with pytest.raises(NotImplementedError, match="encrypted PDF"):
+        pdf_to_text(
+            plain.replace(b"/Root 1 0 R >>", b"/Root 1 0 R /Encrypt 5 0 R >>")
+        )
+    body = plain.rsplit(b"xref\n", 1)[0]
+    xref_stream = (
+        b"9 0 obj\n<< /Type /XRef /Root 1 0 R /Encrypt 5 0 R /Length 0 >>"
+        b"\nstream\n\nendstream\nendobj\nstartxref\n%d\n%%%%EOF\n" % len(body)
+    )
+    with pytest.raises(NotImplementedError, match="encrypted PDF"):
+        pdf_to_text(body + xref_stream)
 
 
 def test_lzw_matches_pdf_spec_vector():
@@ -199,17 +230,17 @@ def test_decodeparms_paired_per_filter():
     assert pdf_to_text(pdf) == [["chain line"]]
     # EarlyChange parms on the second (LZW) element, null on the first
     pdf = _one_stream_pdf(
-        b"/Filter [/ASCIIHexDecode /LZWDecode] "
+        b"/Filter [/FlateDecode /LZWDecode] "
         b"/DecodeParms [null << /EarlyChange 0 >>]",
-        lzw_encode(body, early_change=0).hex().encode(),
+        zlib.compress(lzw_encode(body, early_change=0)),
     )
     assert pdf_to_text(pdf) == [["chain line"]]
     # spec-invalid lone dict with an array Filter: pairs with the first
-    # compression filter (here LZW), not with ASCIIHex
+    # filter (here LZW), not with the Flate stage after it
     pdf = _one_stream_pdf(
-        b"/Filter [/ASCIIHexDecode /LZWDecode] "
+        b"/Filter [/LZWDecode /FlateDecode] "
         b"/DecodeParms << /EarlyChange 0 >>",
-        lzw_encode(body, early_change=0).hex().encode(),
+        lzw_encode(zlib.compress(body), early_change=0),
     )
     assert pdf_to_text(pdf) == [["chain line"]]
 
@@ -228,8 +259,8 @@ def test_png_predictor_roundtrip_all_filters():
 
 
 def test_predictor_and_lzw_filter_streams_decode():
-    """A stream dict carrying /LZWDecode (+ PNG predictor DecodeParms,
-    + EarlyChange 0, + /Predictor 2 TIFF) decodes through pdf_to_text."""
+    """A stream dict carrying /LZWDecode (+ EarlyChange 0) or Flate with
+    PNG predictor DecodeParms decodes through pdf_to_text."""
     import zlib
 
     from extractor.pdf import lzw_encode, pdf_to_text, png_predict_encode
@@ -248,22 +279,6 @@ def test_predictor_and_lzw_filter_streams_decode():
         zlib.compress(png_predict_encode(body, 8)),
     )
     assert pdf_to_text(pdf) == [["lzw line"]]
-    # TIFF predictor 2 (horizontal differencing, colors=1: per-row delta)
-    row = bytearray(body)
-    for i in range(len(row) - 1, 0, -1):  # single logical row: Columns big
-        row[i] = (row[i] - row[i - 1]) & 0xFF
-    pdf = _one_stream_pdf(
-        b"/Filter /FlateDecode /DecodeParms << /Predictor 2 /Columns 4096 >>",
-        zlib.compress(bytes(row)),
-    )
-    assert pdf_to_text(pdf) == [["lzw line"]]
-    # ASCIIHex, and an AHx -> LZW chain
-    pdf = _one_stream_pdf(b"/Filter /ASCIIHexDecode", body.hex().encode() + b">")
-    assert pdf_to_text(pdf) == [["lzw line"]]
-    pdf = _one_stream_pdf(
-        b"/Filter [/ASCIIHexDecode /LZWDecode]", lzw_encode(body).hex().encode()
-    )
-    assert pdf_to_text(pdf) == [["lzw line"]]
 
 
 def test_lzw_write_modes_roundtrip():
@@ -279,17 +294,21 @@ def test_lzw_write_modes_roundtrip():
 
 
 def test_flate_roundtrip_exact():
-    """compress=True output decodes to the identical line/page structure —
-    the writer/decoder pair covers the dominant real-world PDF encoding."""
+    """stream_filter="flate" output decodes to the identical line/page
+    structure — the writer/decoder pair covers the dominant real-world PDF
+    encoding.  Page text that spells an ``/Encrypt`` reference (dangling
+    or not) is text: only the trailer can declare encryption."""
     from extractor.pdf import pdf_to_text
 
     for t in (
         "hello (world) \\ test\n" + "x" * 200 + "\n\nlast",
         "",
+        "x /Encrypt 1 0 R",
+        "x /Encrypt 9 0 R",
         "\n".join("line %d (%s) \\" % (i, "a" * (i % 120)) for i in range(300)),
     ):
-        blob = text_to_pdf_bytes(t, compress=True)
-        assert blob == text_to_pdf_bytes(t, compress=True)  # deterministic
+        blob = text_to_pdf_bytes(t, stream_filter="flate")
+        assert blob == text_to_pdf_bytes(t, stream_filter="flate")
         assert is_valid_pdf(blob)
         assert len(blob) < len(text_to_pdf_bytes(t)) or len(t) < 400
         pages = pdf_to_text(blob)
@@ -342,92 +361,6 @@ def test_layout_decodes_own_pdf_bytes():
     assert r.text.split() == ["alpha", "beta", "gamma"]  # reading order
 
 
-def test_rle_codec_roundtrip_and_spec_shapes():
-    """RunLengthDecode (PDF 1.7 §7.4.5): literal chunks, ≥3-byte runs as
-    repeats, 128-byte chunk caps, EOD byte — plus random roundtrips."""
-    import random
-
-    from extractor.pdf import rle_decode, rle_encode
-
-    # spec framing: repeat of 130 zeros → two repeat chunks (128 + 2 → a
-    # 2-run is emitted literal), literal 'ab' → length byte 1
-    assert rle_encode(b"ab") == bytes([1]) + b"ab" + bytes([128])
-    assert rle_encode(b"A" * 3) == bytes([257 - 3, ord("A"), 128])
-    assert rle_decode(bytes([257 - 128]) + b"Z" + bytes([128])) == b"Z" * 128
-    for data in (b"", b"x", b"\x00" * 1000, b"A" * 129, b"AB" * 200):
-        assert rle_decode(rle_encode(data)) == data
-    rnd = random.Random(11)
-    for _ in range(100):
-        data = bytes(
-            rnd.choice((0, 255, rnd.randrange(256)))
-            for _ in range(rnd.randrange(0, 512))
-        )
-        assert rle_decode(rle_encode(data)) == data
-    import pytest
-
-    with pytest.raises(ValueError, match="corrupt"):
-        rle_decode(bytes([5]) + b"ab")  # short literal
-    with pytest.raises(ValueError, match="corrupt"):
-        rle_decode(bytes([200]))  # dangling repeat
-
-
-def test_a85_codec_roundtrip_and_leniency():
-    """ASCII85Decode: z shortcut, whitespace, missing ~> EOD tolerated."""
-    import random
-
-    from extractor.pdf import a85_decode, a85_encode
-
-    assert a85_decode(b"z~>") == b"\x00\x00\x00\x00"
-    assert a85_decode(b" z \n ") == b"\x00\x00\x00\x00"  # no EOD, spaces
-    rnd = random.Random(13)
-    for _ in range(100):
-        data = bytes(rnd.randrange(256) for _ in range(rnd.randrange(0, 256)))
-        assert a85_decode(a85_encode(data)) == data
-    import pytest
-
-    with pytest.raises(ValueError, match="corrupt"):
-        a85_decode(b"\x01\x02~>")
-
-
-def test_rle_a85_write_modes_roundtrip():
-    """The rle / a85 / chained a85-flate write modes all read back to the
-    identical line structure as the uncompressed render."""
-    from extractor.pdf import is_valid_pdf, pdf_to_text
-
-    t = "\n".join("line %d (%s) \\" % (i, "a" * (i % 120)) for i in range(300))
-    base = pdf_to_text(text_to_pdf_bytes(t))
-    for mode in ("rle", "a85", "a85-flate"):
-        b = text_to_pdf_bytes(t, stream_filter=mode)
-        assert is_valid_pdf(b)
-        assert b == text_to_pdf_bytes(t, stream_filter=mode)  # deterministic
-        assert pdf_to_text(b) == base
-
-
-def test_foreign_rle_a85_filter_streams_decode():
-    """Filter dicts our writer never emits: bare and chained forms."""
-    import zlib
-
-    from extractor.pdf import a85_encode, pdf_to_text, rle_encode
-
-    body = b"BT (mixed line) Tj ET"
-    pdf = _one_stream_pdf(b"/Filter /RunLengthDecode", rle_encode(body))
-    assert pdf_to_text(pdf) == [["mixed line"]]
-    pdf = _one_stream_pdf(b"/Filter /ASCII85Decode", a85_encode(body))
-    assert pdf_to_text(pdf) == [["mixed line"]]
-    # real-world chain: a85 wrapping flate
-    pdf = _one_stream_pdf(
-        b"/Filter [/ASCII85Decode /FlateDecode]",
-        a85_encode(zlib.compress(body)),
-    )
-    assert pdf_to_text(pdf) == [["mixed line"]]
-    # triple chain incl. RLE
-    pdf = _one_stream_pdf(
-        b"/Filter [/ASCII85Decode /RunLengthDecode /FlateDecode]",
-        a85_encode(rle_encode(zlib.compress(body))),
-    )
-    assert pdf_to_text(pdf) == [["mixed line"]]
-
-
 def _image_pdf(text: str, images) -> bytes:
     """Splice /Subtype /Image XObjects into a rendered text PDF.  The
     decoder iterates streams without the xref, so appended objects are
@@ -460,39 +393,12 @@ def test_pdf_to_text_skips_image_xobjects():
 
 def test_predictors_all_bit_depths():
     """PNG filters act bytewise at 1/2/4/8/16-bit components (PNG spec
-    §6: step = max(1, colors*bpc/8)); TIFF differencing is per SAMPLE
-    (TIFF 6.0 §14) — roundtrip both against reference encoders."""
+    §6: step = max(1, colors*bpc/8)) — roundtrip every row type."""
     import random
 
-    from extractor.pdf import (
-        png_predict_decode,
-        png_predict_encode,
-        tiff_predict_decode,
-    )
+    from extractor.pdf import png_predict_decode, png_predict_encode
 
     rng = random.Random(3)
-
-    def unpack(row, bpc, n):
-        mask, pb = (1 << bpc) - 1, 8 // bpc
-        return [
-            (b >> (8 - bpc * (j + 1))) & mask
-            for b in row
-            for j in range(pb)
-        ][:n]
-
-    def pack(samples, bpc, nbytes):
-        mask, pb = (1 << bpc) - 1, 8 // bpc
-        out = bytearray()
-        for bi in range(nbytes):
-            acc = 0
-            for j in range(pb):
-                si = bi * pb + j
-                acc = (acc << bpc) | (
-                    samples[si] if si < len(samples) else 0
-                )
-            out.append(acc)
-        return bytes(out)
-
     for bpc in (1, 2, 4, 8, 16):
         for colors in (1, 3):
             cols = 11
@@ -506,48 +412,6 @@ def test_predictors_all_bit_depths():
                     png_predict_decode(enc, cols, colors=colors, bpc=bpc)
                     == data
                 ), (bpc, colors, ft)
-
-            # TIFF: sample-wise forward differencing as the reference
-            if bpc < 8:  # zero the row padding bits so repack is exact
-                data = b"".join(
-                    pack(
-                        unpack(data[r : r + rowlen], bpc, cols * colors),
-                        bpc,
-                        rowlen,
-                    )
-                    for r in range(0, len(data), rowlen)
-                )
-            diff = bytearray()
-            for r in range(0, len(data), rowlen):
-                row = data[r : r + rowlen]
-                if bpc == 16:
-                    ws = [
-                        row[i] << 8 | row[i + 1]
-                        for i in range(0, len(row), 2)
-                    ]
-                    ds = list(ws)
-                    for i in range(colors, len(ws)):
-                        ds[i] = (ws[i] - ws[i - colors]) & 0xFFFF
-                    for w in ds:
-                        diff += bytes([(w >> 8) & 0xFF, w & 0xFF])
-                elif bpc == 8:
-                    rb = list(row)
-                    for i in range(len(rb) - 1, colors - 1, -1):
-                        rb[i] = (rb[i] - rb[i - colors]) & 0xFF
-                    diff += bytes(rb)
-                else:
-                    s = unpack(row, bpc, cols * colors)
-                    d = list(s)
-                    mask = (1 << bpc) - 1
-                    for i in range(colors, len(s)):
-                        d[i] = (s[i] - s[i - colors]) & mask
-                    diff += pack(d, bpc, rowlen)
-            assert (
-                tiff_predict_decode(
-                    bytes(diff), cols, colors=colors, bpc=bpc
-                )
-                == data
-            ), (bpc, colors)
 
 
 def test_sub8bit_predictor_stream_decodes():

@@ -85,11 +85,10 @@ def test_every_extractor_module_is_reached_from_an_entry_point():
     assert sorted(_all_modules() - _reachable() - TEST_TOOLING) == []
 
 
-# test-input encoders and reference forms kept on purpose: encoders that
-# write the fixtures the decoders are tested on, and the reference's own
-# form of a function the pipeline runs in a faster shape
+# defs only tests call, kept on purpose: the reference's own form of a
+# function the pipeline runs in a faster shape, and small test-input and
+# read-back helpers
 EXTRA_ROOTS = {
-    "_encrypt_block_public",
     "_escape_md_section_unguarded",
     "relative_image_path",
     "read_export_manifest",
@@ -98,8 +97,10 @@ EXTRA_ROOTS = {
 
 
 def _referenced(nodes):
-    """Names *nodes* refer to: loaded or assigned names, attribute names,
-    imported names, and the strings of an ``__all__`` list."""
+    """Names *nodes* refer to: loaded or assigned names, attribute names
+    and imported names.  The strings of an ``__all__`` list are not
+    references: a module exporting a name does not make anything call
+    it."""
     out = set()
     for top in nodes:
         for node in ast.walk(top):
@@ -109,15 +110,6 @@ def _referenced(nodes):
                 out.add(node.attr)
             elif isinstance(node, ast.alias):
                 out.add(node.name.rpartition(".")[2])
-            elif isinstance(node, ast.Assign) and any(
-                isinstance(t, ast.Name) and t.id == "__all__"
-                for t in node.targets
-            ):
-                out.update(
-                    c.value
-                    for c in ast.walk(node.value)
-                    if isinstance(c, ast.Constant) and isinstance(c.value, str)
-                )
     return out
 
 

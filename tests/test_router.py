@@ -156,6 +156,10 @@ def test_pdf_images_count():
 
     base = text_to_pdf_bytes("with image")
     assert route_payload(base)["images_count"] == 0
+    # page text that spells the image subtype is text, not an image
+    assert route_payload(text_to_pdf_bytes("a /Subtype /Image b"))[
+        "images_count"
+    ] == 0
     # the body is never decoded, so any bytes stand in for the pixels
     body = b"\xff\xd8\xff\xe0" + bytes(range(256))
     obj = (
@@ -167,3 +171,17 @@ def test_pdf_images_count():
     r = route_payload(pdf)
     assert r["images_count"] == 1 and r["error"] is None
     assert r["extracted_text"].startswith("with image")
+
+
+def test_encrypted_pdf_is_an_error_row():
+    """A trailer declaring /Encrypt is outside the decodable set: the
+    router contains it as a pdf error row instead of raising."""
+    from extractor.pdf import text_to_pdf_bytes
+    from extractor.router import route_payload
+
+    pdf = text_to_pdf_bytes("locked").replace(
+        b"/Root 1 0 R >>", b"/Root 1 0 R /Encrypt 5 0 R >>"
+    )
+    r = route_payload(pdf)
+    assert r["format"] == "pdf" and r["extracted_text"] is None
+    assert "encrypted PDF" in r["error"]
