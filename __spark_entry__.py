@@ -87,11 +87,7 @@ def _boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def kernel(iterator):
         for pdf in iterator:
-            # stopword_threshold=0: jusText's language-independent mode —
-            # the corpus is multilingual (en/zh/es/de/fr), so an English
-            # stopword gate would misclassify all main content as
-            # boilerplate; chrome is still dropped by link/tag density
-            out = strip_boilerplate_batch(pdf["html"], stopword_threshold=0.0)
+            out = strip_boilerplate_batch(pdf["html"])
             out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
@@ -258,7 +254,7 @@ def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins every element's value."""
     from extractor.ops import multimodal as mm
 
-    media = mm.synth_media_df(spark, n=200, seed=42)
+    media = mm.synth_media_df(spark)
     feats = mm.extract_features(media)
     fsum = F.aggregate("features", F.lit(0.0), lambda a, x: a + x.cast("double"))
     fsq = F.aggregate(
@@ -681,10 +677,9 @@ def _url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain crawl-frontier rollup over canonicalized links (count /
     distinct-URL / distinct-source / min-URL seed) — map-only
     canonicalization then the standard two-level multi-distinct agg
-    (Expand + two exchanges; the exact path the oracle can check —
-    ``url_frontier(approx=True)`` is the plan-gated single-shuffle HLL
-    variant for 100 TB).  Oracle: the same rollup in SQL over the
-    reconstructed canonical URLs."""
+    (Expand + two exchanges; the exact path the oracle can check).
+    Oracle: the same rollup in SQL over the reconstructed canonical
+    URLs."""
     from extractor.ops.links import url_frontier
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
@@ -737,7 +732,7 @@ def _domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return hits(edges, iterations=3)
+    return hits(edges)
 
 
 def _layered_domain_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -779,7 +774,7 @@ def _domain_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs over the identical generated graph."""
     from extractor.ops.links import kcore
 
-    return kcore(_layered_domain_graph(spark, sf_dir), k=3, rounds=4)
+    return kcore(_layered_domain_graph(spark, sf_dir))
 
 
 def _domain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,7 +785,7 @@ def _domain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode-vote rounds (argmax via count desc, label asc row_number)."""
     from extractor.ops.links import label_propagation
 
-    return label_propagation(_layered_domain_graph(spark, sf_dir), rounds=3)
+    return label_propagation(_layered_domain_graph(spark, sf_dir))
 
 
 def _linkpred_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -886,7 +881,7 @@ def _bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seeds = nodes.where(F.pmod(F.col("node"), F.lit(17)) == 0)
-    return bfs_hop_distance(edges, seeds, max_hops=6)
+    return bfs_hop_distance(edges, seeds)
 
 
 def _triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -994,7 +989,7 @@ def _media_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_oracle_emulation.py) and replays the bit chain."""
     from extractor.ops import multimodal as mm
 
-    media = mm.synth_media_df(spark, n=200, seed=42)
+    media = mm.synth_media_df(spark)
     return mm.dhash_groups(mm.extract_features(media))
 
 
@@ -1048,7 +1043,7 @@ def _politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(d, F.lit(250)).cast("string"),
     )
     return politeness_schedule(
-        docs.select(domain.alias("domain"), url.alias("url")), limit=200
+        docs.select(domain.alias("domain"), url.alias("url"))
     )
 
 
@@ -1105,7 +1100,7 @@ def _expire_checkpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for b, n in sorted(counts.items())
                 ],
             )
-        stats = expire_checkpoint_history(spark, ckpt, keep_last=2)
+        stats = expire_checkpoint_history(spark, ckpt)
         turns_retained = (
             spark.read.schema(CHECKPOINT_SCHEMA)
             .parquet(f"{ckpt}/status")
@@ -1149,7 +1144,7 @@ def _asof_view_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "value"
     )
     return asof_join(
-        clicks, views, on="ts", by="user_id", right_cols=("event_id", "value")
+        clicks, views, right_cols=("event_id", "value")
     )
 
 
@@ -1463,7 +1458,7 @@ def _media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays rows-only; codecs are stubbed)."""
     from extractor.ops import multimodal as mm
 
-    media = mm.synth_media_df(spark, n=200, seed=42)
+    media = mm.synth_media_df(spark)
     return media.select(
         "media_id",
         "kind",

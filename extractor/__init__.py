@@ -8,7 +8,8 @@ pipeline over multi-turn transcript tables:
 - ``extractor.pipeline``  — DataFrame pipeline: partition/salt/sort/extract,
                              plus per-partition lineage + throughput
                              metrics (``lineage_manifest``)
-- ``extractor.checkpoint``— partition-level checkpoint + resume (left-anti join)
+- ``extractor.checkpoint``— partition-level checkpoint + resume (a driver-side
+                             set difference over the status table)
 - ``extractor.publish``   — the directory commit (stage, swap, crash recovery)
                              behind every sink that replaces a directory
 - ``extractor.transcripts``— deterministic synthetic transcripts generator

@@ -14,19 +14,20 @@ link-density idea):
    - ``text_len``        — characters of visible text
    - ``link_density``    — chars of text under <a> / text_len
    - ``tag_density``     — inline tag count / words (tag-density heuristic)
-   - ``stopword_density``— stopword tokens / tokens
    - ``markup_ratio``    — text chars / (text chars + serialized markup
                             chars) (text-to-markup ratio)
-3. Classify (context-free pass, jusText-style thresholds):
+3. Classify (context-free pass, jusText's language-independent mode: no
+   stopword list, so a multilingual corpus's main content is not taken
+   for boilerplate):
    - ``bad``  if link_density > 0.33, or text too markup-heavy
               (markup_ratio < 0.25), or tag_density > 1.0
-   - ``good`` if text_len >= LONG_BLOCK and stopword_density >= 0.20
-   - ``near_good`` if text_len >= SHORT_BLOCK and stopword_density >= 0.20
+   - ``good`` if text_len >= LONG_BLOCK
+   - ``near_good`` if text_len >= SHORT_BLOCK
    - else ``short``
-4. Context pass: ``near_good``/``short`` blocks adjacent to a ``good``
-   block are promoted (jusText's neighbor smoothing, one iteration).
+4. Context pass: ``near_good`` blocks adjacent to a ``good`` block are
+   promoted (jusText's neighbor smoothing, one iteration).
 5. ``main_text`` = good+promoted blocks joined by blank lines; headings
-   (h1–h6) are kept if any neighbor content survives.
+   (h1–h6) are kept if the following block is good.
 
 Boilerplate in, prose out — nav menus, footer link farms, and tag-only
 chrome are dropped.  Distributed via the same Arrow-batch pattern as the
@@ -35,21 +36,12 @@ converter kernel (``strip_boilerplate_batch``); per-row errors contained.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from .dom import Element, parse_html
 
 LONG_BLOCK = 80
 SHORT_BLOCK = 20
-
-STOPWORDS = frozenset(
-    """a about above after again all also an and any are as at be because been
-    but by can could did do does for from had has have he her his how i if in
-    into is it its just like me more most my no not of on one only or other
-    our out over she so some such than that the their them then there these
-    they this to under up was we were what when where which while who will
-    with would you your""".split()
-)
 
 _BLOCK_TAGS = frozenset(
     {
@@ -70,8 +62,7 @@ class Block:
     link_chars: int
     inline_tags: int
     markup_chars: int
-    label: str = "short"
-    is_heading: bool = False
+    is_heading: bool
 
     @property
     def text_len(self) -> int:
@@ -80,13 +71,6 @@ class Block:
     @property
     def link_density(self) -> float:
         return self.link_chars / self.text_len if self.text_len else 1.0
-
-    @property
-    def stopword_density(self) -> float:
-        toks = self.text.lower().split()
-        if not toks:
-            return 0.0
-        return sum(1 for t in toks if t in STOPWORDS) / len(toks)
 
     @property
     def tag_density(self) -> float:
@@ -144,47 +128,36 @@ def _segment(doc: Element) -> list[Block]:
     return blocks
 
 
-def _classify(blocks: list[Block], stopword_threshold: float = 0.20) -> None:
-    """*stopword_threshold* = jusText's ``stopwords_high``; 0.0 selects the
-    published language-independent mode (no stopword list: classification
-    by link/tag density and length only) — the right setting for
-    multilingual or non-natural-language corpora where an English stopword
-    list would misclassify all main content as boilerplate."""
+def _classify(blocks: list[Block]) -> list[str]:
+    """Each block's final label: ``good`` blocks are the main text."""
+    labels = []
     for b in blocks:
         if b.is_heading:
-            b.label = "heading"
+            labels.append("heading")
         elif (
             b.link_density > 0.33
             or b.markup_ratio < 0.25
             or b.tag_density > 1.0
         ):
-            b.label = "bad"
-        elif b.text_len >= LONG_BLOCK and b.stopword_density >= stopword_threshold:
-            b.label = "good"
-        elif b.text_len >= SHORT_BLOCK and b.stopword_density >= stopword_threshold:
-            b.label = "near_good"
+            labels.append("bad")
+        elif b.text_len >= LONG_BLOCK:
+            labels.append("good")
+        elif b.text_len >= SHORT_BLOCK:
+            labels.append("near_good")
         else:
-            b.label = "short"
+            labels.append("short")
 
-    # neighbor smoothing (one jusText-style pass)
-    labels = [b.label for b in blocks]
-    for i, b in enumerate(blocks):
-        if b.label in ("near_good", "short"):
-            prev_good = any(
-                labels[j] == "good" for j in range(max(0, i - 1), i)
-            )
-            next_good = any(
-                labels[j] == "good" for j in range(i + 1, min(len(blocks), i + 2))
-            )
-            if prev_good or next_good:
-                b.label = "good" if b.label == "near_good" else b.label
+    # neighbor smoothing (one jusText-style pass over the first labels)
+    first = list(labels)
+    for i, label in enumerate(first):
+        if label == "near_good" and "good" in first[max(0, i - 1) : i + 2]:
+            labels[i] = "good"
     # headings survive if the following block is good
-    for i, b in enumerate(blocks):
-        if b.label == "heading":
-            nxt = next(
-                (x for x in blocks[i + 1 :] if x.label != "heading"), None
-            )
-            b.label = "good" if nxt is not None and nxt.label == "good" else "bad"
+    for i, label in enumerate(labels):
+        if label == "heading":
+            nxt = next((x for x in labels[i + 1 :] if x != "heading"), None)
+            labels[i] = "good" if nxt == "good" else "bad"
+    return labels
 
 
 @dataclass
@@ -193,24 +166,16 @@ class BoilerplateResult:
     n_blocks: int = 0
     n_good: int = 0
     boilerplate_ratio: float = 0.0
-    blocks: list = field(default_factory=list)
     error: str | None = None
 
 
-def strip_boilerplate(
-    html: str | None,
-    stopword_threshold: float = 0.20,
-    want_blocks: bool = True,
-) -> BoilerplateResult:
-    """*want_blocks=False* skips materializing the per-block debug dicts
-    (the batch/Arrow path discards them; they cost ~17% of kernel time)."""
+def strip_boilerplate(html: str | None) -> BoilerplateResult:
     if html is None:
         return BoilerplateResult(None, error="null_input")
     try:
-        doc = parse_html(html)
-        blocks = _segment(doc)
-        _classify(blocks, stopword_threshold)
-        good = [b for b in blocks if b.label == "good"]
+        blocks = _segment(parse_html(html))
+        labels = _classify(blocks)
+        good = [b for b, label in zip(blocks, labels) if label == "good"]
         total_chars = sum(b.text_len for b in blocks) or 1
         kept_chars = sum(b.text_len for b in good)
         return BoilerplateResult(
@@ -218,35 +183,18 @@ def strip_boilerplate(
             n_blocks=len(blocks),
             n_good=len(good),
             boilerplate_ratio=round(1.0 - kept_chars / total_chars, 4),
-            blocks=[
-                {
-                    "text": b.text,
-                    "label": b.label,
-                    "link_density": round(b.link_density, 4),
-                    "stopword_density": round(b.stopword_density, 4),
-                    "tag_density": round(b.tag_density, 4),
-                    "markup_ratio": round(b.markup_ratio, 4),
-                }
-                for b in blocks
-            ]
-            if want_blocks
-            else [],
         )
     except Exception as exc:
         return BoilerplateResult(None, error=f"boilerplate_error: {exc}")
 
 
-def strip_boilerplate_batch(texts, stopword_threshold: float = 0.20):
+def strip_boilerplate_batch(texts):
     """Arrow-batch wrapper (pd.Series -> pd.DataFrame), mapInPandas-ready."""
     import pandas as pd
 
     rows = []
     for value in texts:
-        r = strip_boilerplate(
-            None if value is None or value is pd.NA else value,
-            stopword_threshold,
-            want_blocks=False,
-        )
+        r = strip_boilerplate(None if value is None or value is pd.NA else value)
         rows.append(
             (r.main_text, r.n_blocks, r.n_good, r.boilerplate_ratio, r.error)
         )

@@ -89,9 +89,7 @@ def _completed_buckets(
     ).select("bucket")
 
 
-def job_status(
-    spark: SparkSession, ckpt_dir: str, snapshot_id: str | None = None
-) -> DataFrame:
+def job_status(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     """Latest status row per (bucket, snapshot) — the pollable task
     registry.  Query it from another session/thread while a batch run is
     in flight: buckets show ``running`` while their group's job executes,
@@ -101,8 +99,6 @@ def job_status(
     ckpt = _read_status(spark, ckpt_dir)
     if ckpt is None:
         return local_frame(spark, [], CHECKPOINT_SCHEMA)
-    if snapshot_id is not None:
-        ckpt = ckpt.where(F.col("snapshot_id") == snapshot_id)
     w = Window.partitionBy("bucket", "snapshot_id").orderBy(
         F.col("recorded_at").desc(),
         # same-timestamp tie: terminal states win over 'running'
@@ -281,18 +277,20 @@ def run_with_checkpoint(
     return summary
 
 
-def expire_checkpoint_history(
-    spark: SparkSession, ckpt_dir: str, keep_last: int = 2
-) -> dict:
+# snapshot_ids an expiry keeps
+KEEP_SNAPSHOTS = 2
+
+
+def expire_checkpoint_history(spark: SparkSession, ckpt_dir: str) -> dict:
     """Snapshot-history expiration (Iceberg ``expire_snapshots`` /
     Delta ``VACUUM`` retention analogue) for the checkpoint store: keep
-    only the newest *keep_last* snapshot_ids — ordered by each
+    only the newest ``KEEP_SNAPSHOTS`` snapshot_ids — ordered by each
     snapshot's latest ``recorded_at`` in the status table
     (``{ckpt_dir}/status``) — and rewrite the table without the expired
     rows.  The checkpoint store is append-only by design (a running +
     completed row per bucket per run), so at 10^12-turn cadence it
     accumulates history that resume never reads again; expiration
-    bounds it at O(keep_last · n_buckets) rows.
+    bounds it at O(KEEP_SNAPSHOTS · n_buckets) rows.
 
     Safety: the rewrite is content-verified BEFORE the swap (the
     retained subset's ``content_fingerprint`` must be identical in the
@@ -312,7 +310,7 @@ def expire_checkpoint_history(
         r["snapshot_id"]
         for r in recency.orderBy(F.desc("ts"), "snapshot_id").collect()
     ]
-    kept = set(snaps[:keep_last])
+    kept = set(snaps[:KEEP_SNAPSHOTS])
 
     keep_status = status.where(F.col("snapshot_id").isin(kept))
     before = content_fingerprint(keep_status)

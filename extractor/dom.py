@@ -99,14 +99,12 @@ class Element:
             node = node.parent
         return False
 
-    def find_all(self, names, class_filter=None) -> list:
+    def find_all(self, names) -> list:
         """Document-order descendants with tag in *names* (a tag name or a
         sequence of them).
 
-        *class_filter*, if given, is called once per class token (and with
-        ``None`` when the element has no class attribute) — bs4's callable
-        ``class_`` semantics.  The walk is ``iter_elements``' stack loop,
-        inlined: this is the table converter's per-row and per-cell call.
+        The walk is ``iter_elements``' stack loop, inlined: this is the
+        table converter's per-row and per-cell call.
         """
         if isinstance(names, str):
             names = (names,)
@@ -121,17 +119,8 @@ class Element:
             children = el.children
             if children:
                 extend(children[::-1])
-            if el.tag not in names:
-                continue
-            if class_filter is not None:
-                tokens = el.classes
-                if tokens:
-                    if not any(class_filter(t) for t in tokens):
-                        continue
-                else:
-                    if not class_filter(None):
-                        continue
-            out.append(el)
+            if el.tag in names:
+                out.append(el)
         return out
 
     def find(self, name: str, **attr_eq):

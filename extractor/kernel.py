@@ -66,6 +66,10 @@ _MATH_DELIM_RE = re.compile(r"[\\$]+")
 #     heading texts — which is what ``include_toc`` produces here.
 MATH_ENGINES = ("mathml", "latex", "mathjax")
 
+# pandoc --toc-depth (reference app/config.py:35): deeper headings stay
+# out of the TOC
+TOC_DEPTH = 4
+
 
 @dataclass(frozen=True)
 class ConvertOptions:
@@ -76,7 +80,6 @@ class ConvertOptions:
 
     math_engine: str = "latex"
     include_toc: bool = False
-    toc_depth: int = 4
 
     def __post_init__(self):
         if self.math_engine not in MATH_ENGINES:
@@ -472,7 +475,7 @@ _BQ_PREFIX = re.compile(r">\s*(.*)", re.DOTALL)
 _HEADING_TAGS = ("h1", "h2", "h3", "h4", "h5", "h6")
 
 
-def _toc_block(doc: Element, toc_depth: int) -> str:
+def _toc_block(doc: Element) -> str:
     """Markdown TOC: what pandoc --toc's <nav> of internal #links becomes
     under the pinned html2text config (skip_internal_links → bare heading
     texts in a nested bullet list, our list indent convention)."""
@@ -482,7 +485,7 @@ def _toc_block(doc: Element, toc_depth: int) -> str:
     for el in doc.iter_elements():
         if el.tag in _HEADING_TAGS:
             level = int(el.tag[1])
-            if level > toc_depth:
+            if level > TOC_DEPTH:
                 continue
             inner = _inline_text(el)
             if inner:
@@ -491,14 +494,12 @@ def _toc_block(doc: Element, toc_depth: int) -> str:
 
 
 def convert_text(
-    text: str | None,
-    max_chars: int = MAX_TEXT_CHARS,
-    options: ConvertOptions = DEFAULT_OPTIONS,
+    text: str | None, options: ConvertOptions = DEFAULT_OPTIONS
 ) -> ExtractionResult:
     """Full T2–T10 pipeline over one turn's text. Never raises (O4)."""
     if text is None:
         return ExtractionResult(None, error="null_input")
-    if len(text) > max_chars:  # F3 size predicate → quarantine row
+    if len(text) > MAX_TEXT_CHARS:  # F3 size predicate → quarantine row
         return ExtractionResult(None, error=f"size_exceeded:{len(text)}")
     if "<" not in text and "&" not in text:
         # Plain-prose fast path: with no markup and no entities, the full
@@ -527,9 +528,7 @@ def convert_text(
         )
     try:
         doc = parse_html(text)
-        toc = (
-            _toc_block(doc, options.toc_depth) if options.include_toc else ""
-        )
+        toc = _toc_block(doc) if options.include_toc else ""
         tables, maths, images = _extract_special_elements(
             doc, math_engine=options.math_engine
         )
@@ -565,9 +564,7 @@ def convert_text(
 
 
 def convert_batch(
-    texts,
-    max_chars: int = MAX_TEXT_CHARS,
-    options: ConvertOptions = DEFAULT_OPTIONS,
+    texts, options: ConvertOptions = DEFAULT_OPTIONS
 ) -> pa.RecordBatch:
     """Arrow-batch kernel: an iterable of ``str``/``None`` in, one
     ``pa.RecordBatch`` typed by ``KERNEL_SCHEMA`` out (one call per record
@@ -587,7 +584,7 @@ def convert_batch(
         key = value if isinstance(value, str) else None
         row = memo.get(key)
         if row is None:
-            r = convert_text(key, max_chars, options)
+            r = convert_text(key, options)
             row = (
                 r.extracted_text,
                 r.spans,

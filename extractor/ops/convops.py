@@ -84,9 +84,9 @@ DTR_CTE = """
 _LCP_CAP = 64
 
 
-def strip_repeated_prefix(turns: DataFrame, cap: int = _LCP_CAP) -> DataFrame:
+def strip_repeated_prefix(turns: DataFrame) -> DataFrame:
     """Repeated-context stripping: for each turn, the length of the
-    longest common prefix (capped at *cap* chars) shared with the
+    longest common prefix (capped at ``_LCP_CAP`` chars) shared with the
     PREVIOUS turn of the same conversation, plus the text with that
     prefix removed.  Agent transcripts echo context verbatim between
     adjacent turns (system prompts re-sent, tool output quoted back);
@@ -99,8 +99,8 @@ def strip_repeated_prefix(turns: DataFrame, cap: int = _LCP_CAP) -> DataFrame:
 
     The LCP is a pure codegen'd expression: prefix equality is monotone
     (equal at k ⇒ equal at every j<k), so a bounded
-    ``aggregate(sequence(1, cap), ...)`` of substr comparisons returns
-    exactly the capped LCP — no Python, no quadratic blowup (cap², not
+    ``aggregate(sequence(1, _LCP_CAP), ...)`` of substr comparisons returns
+    exactly the capped LCP — no Python, no quadratic blowup (_LCP_CAP², not
     len², comparisons per row).  One window (lag) over the conv_id
     partitioning; see module docstring for why that shuffle is free in
     a fused pipeline."""
@@ -110,7 +110,7 @@ def strip_repeated_prefix(turns: DataFrame, cap: int = _LCP_CAP) -> DataFrame:
         "CASE WHEN prev_text IS NULL"
         "       OR least(length(text), length(prev_text)) < 1 THEN 0"
         f"     ELSE aggregate(sequence(1, least(length(text),"
-        f"                    length(prev_text), {cap})), 0,"
+        f"                    length(prev_text), {_LCP_CAP})), 0,"
         "                    (acc, k) -> IF(substr(text, 1, k)"
         "                                 = substr(prev_text, 1, k),"
         "                                 k, acc)) END"
@@ -130,10 +130,12 @@ def strip_repeated_prefix(turns: DataFrame, cap: int = _LCP_CAP) -> DataFrame:
     )
 
 
-def truncate_to_token_budget(turns: DataFrame,
-                             budget: int = 400) -> DataFrame:
+TOKEN_BUDGET = 400  # tokens a truncated conversation keeps
+
+
+def truncate_to_token_budget(turns: DataFrame) -> DataFrame:
     """Context-window truncation: keep, per conversation, the longest
-    SUFFIX of turns whose total token estimate fits *budget* — the
+    SUFFIX of turns whose total token estimate fits ``TOKEN_BUDGET`` — the
     standard "drop the oldest context first" policy for fitting a
     transcript into a model's window.  Token estimate is the chars/4
     proxy (``ceil(len/4)``), kept integer-exact so the cut is
@@ -158,7 +160,7 @@ def truncate_to_token_budget(turns: DataFrame,
     return (
         turns.select("conv_id", "turn_idx", tok)
         .withColumn("cum_from_end", F.sum("tok").over(w))
-        .where(F.col("cum_from_end") <= budget)
+        .where(F.col("cum_from_end") <= TOKEN_BUDGET)
     )
 
 
@@ -206,7 +208,7 @@ def conv_role_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return role_sequence_stats(derived_transcripts(spark, sf_dir))
 
 
-def detect_repeat_runs(turns: DataFrame, sig_col: str = "sig") -> DataFrame:
+def detect_repeat_runs(turns: DataFrame) -> DataFrame:
     """Stuck-loop detection: find runs of CONSECUTIVE turns within a
     conversation that carry the same content signature — the
     agent-transcript failure mode where a tool call or a model reply
@@ -226,16 +228,16 @@ def detect_repeat_runs(turns: DataFrame, sig_col: str = "sig") -> DataFrame:
     (the extraction partitioning — zero extra data movement in a fused
     pipeline); per-conversation state is O(1)."""
     w_all = Window.partitionBy("conv_id").orderBy("turn_idx")
-    w_val = Window.partitionBy("conv_id", "role", sig_col).orderBy("turn_idx")
+    w_val = Window.partitionBy("conv_id", "role", "sig").orderBy("turn_idx")
     islands = turns.select(
         "conv_id",
         "role",
-        sig_col,
+        "sig",
         (F.row_number().over(w_all) - F.row_number().over(w_val)).alias(
             "island"
         ),
     )
-    runs = islands.groupBy("conv_id", "role", sig_col, "island").agg(
+    runs = islands.groupBy("conv_id", "role", "sig", "island").agg(
         F.count(F.lit(1)).alias("run_len")
     )
     return runs.groupBy("conv_id").agg(
@@ -261,14 +263,12 @@ _SFT_WINDOW_TURNS = 8
 _SFT_BUDGET_CHARS = 600
 
 
-def assemble_sft_pairs(turns: DataFrame,
-                       window_turns: int = _SFT_WINDOW_TURNS,
-                       budget_chars: int = _SFT_BUDGET_CHARS) -> DataFrame:
+def assemble_sft_pairs(turns: DataFrame) -> DataFrame:
     """SFT training-pair assembly: for every **assistant** turn (the
     training target), build its conversational context — the up-to-
-    *window_turns* immediately preceding turns rendered as
+    ``_SFT_WINDOW_TURNS`` immediately preceding turns rendered as
     ``role: text`` and joined with newlines, then cut to the LAST
-    *budget_chars* characters (drop-oldest, mid-line cuts allowed, the
+    ``_SFT_BUDGET_CHARS`` characters (drop-oldest, mid-line cuts allowed, the
     standard char-budget fallback when no tokenizer is in the loop).
     This is the step that turns a curated transcript corpus into
     (context, target) example pairs for supervised fine-tuning.
@@ -279,8 +279,8 @@ def assemble_sft_pairs(turns: DataFrame,
     truncation, not just counts.
 
     Scale posture (10^12 turns): the context frame is BOUNDED (``ROWS
-    BETWEEN window_turns PRECEDING AND 1 PRECEDING``), so per-row state
-    is O(window_turns · turn_len) no matter how long the conversation
+    BETWEEN _SFT_WINDOW_TURNS PRECEDING AND 1 PRECEDING``), so per-row state
+    is O(_SFT_WINDOW_TURNS · turn_len) no matter how long the conversation
     is — an unbounded ``collect_list`` prefix would be O(conv_len²)
     characters on the Zipf-tail conversations and is exactly what this
     design avoids.  One window over the (conv_id, turn_idx) extraction
@@ -290,7 +290,7 @@ def assemble_sft_pairs(turns: DataFrame,
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx")
-        .rowsBetween(-window_turns, -1)
+        .rowsBetween(-_SFT_WINDOW_TURNS, -1)
     )
     rendered = F.concat_ws(": ", F.col("role"), F.col("text"))
     ctx_arr = F.collect_list(rendered).over(w)
@@ -298,7 +298,7 @@ def assemble_sft_pairs(turns: DataFrame,
         turns.withColumn("ctx_arr", ctx_arr)
         .where(F.col("role") == "assistant")
         .withColumn("ctx_full", F.array_join("ctx_arr", "\n"))
-        .withColumn("ctx", F.expr(f"right(ctx_full, {budget_chars})"))
+        .withColumn("ctx", F.expr(f"right(ctx_full, {_SFT_BUDGET_CHARS})"))
         .select(
             "conv_id",
             "turn_idx",
@@ -407,9 +407,7 @@ CONV_BAND_SIZE = 2    # components per LSH band -> 4 bands
 CONV_MAX_BUCKET = 40  # hot-bucket guard (skip degenerate mega-buckets)
 
 
-def conversation_minhash_pairs(turns: DataFrame,
-                               max_bucket: int = CONV_MAX_BUCKET
-                               ) -> DataFrame:
+def conversation_minhash_pairs(turns: DataFrame) -> DataFrame:
     """Conversation-level near-duplicate detection: MinHash over the
     TURN-set of each conversation (one signature component per seed =
     the min turn-text hash), banded LSH bucketing, then candidate pairs
@@ -429,7 +427,7 @@ def conversation_minhash_pairs(turns: DataFrame,
     rows one per conv per partition); band explosion is 4 rows per
     conversation; the (band, bucket) aggregate is the second shuffle;
     pair generation happens INSIDE buckets already capped at
-    *max_bucket* members (collect_list is bounded by the cap — the m²
+    ``CONV_MAX_BUCKET`` members (collect_list is bounded by the cap — the m²
     trap handled the same way as ``minhash_jaccard_estimate``), with
     agreement computed from the carried signatures — no sig re-join,
     no all-pairs anything."""
@@ -477,7 +475,7 @@ def conversation_minhash_pairs(turns: DataFrame,
                 F.collect_list(F.struct("conv_id", "sig"))
             ).alias("ms")
         )
-        .where((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
+        .where((F.size("ms") >= 2) & (F.size("ms") <= CONV_MAX_BUCKET))
     )
     pairs = members.select(
         F.explode(
@@ -615,10 +613,13 @@ def conv_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audit_turn_integrity(derived_transcripts_dirty(spark, sf_dir))
 
 
-def mine_preference_pairs(turns: DataFrame, n_groups: int = 8) -> DataFrame:
+PREF_GROUPS = 8  # episode families (conv_id % PREF_GROUPS)
+
+
+def mine_preference_pairs(turns: DataFrame) -> DataFrame:
     """DPO/RLHF preference-pair mining over retried agent episodes:
     conversations are grouped into episode families (here the
-    deterministic ``conv_id % n_groups`` — in production the cluster id
+    deterministic ``conv_id % PREF_GROUPS`` — in production the cluster id
     from ``conversation_minhash_pairs``), each conversation is scored
     by an all-integer response-quality proxy (total assistant chars +
     assistant turn count), and each family emits ONE (chosen, rejected)
@@ -635,7 +636,7 @@ def mine_preference_pairs(turns: DataFrame, n_groups: int = 8) -> DataFrame:
     rejected_score, margin)``, all BIGINT.
 
     Plan: two hash aggregates — per-conv score (map-side combined on
-    the extraction partitioning), then an ``n_groups``-row max/min
+    the extraction partitioning), then a ``PREF_GROUPS``-row max/min
     struct agg; no window, no join, nothing driver-side.  Struct
     min/max keeps it a single pass where a row_number formulation
     would need two window sorts."""
@@ -648,7 +649,7 @@ def mine_preference_pairs(turns: DataFrame, n_groups: int = 8) -> DataFrame:
                 + F.count(F.lit(1)).cast("long")
             ).alias("score")
         )
-        .withColumn("group_id", F.pmod(F.col("conv_id"), F.lit(n_groups)))
+        .withColumn("group_id", F.pmod(F.col("conv_id"), F.lit(PREF_GROUPS)))
     )
     best = (
         score.groupBy("group_id")
@@ -739,10 +740,9 @@ def mine_contrastive_triplets(turns: DataFrame,
 PREFIX_TURNS = 2  # leading turns hashed into the KV-prefix key
 
 
-def shared_prefix_stats(turns: DataFrame,
-                        n_prefix: int = PREFIX_TURNS) -> DataFrame:
+def shared_prefix_stats(turns: DataFrame) -> DataFrame:
     """KV-cache shared-prefix profile: key each conversation by the md5
-    of its first *n_prefix* turns (in turn order), group conversations
+    of its first ``PREFIX_TURNS`` turns (in turn order), group conversations
     by that key, and report how many share each prefix and the chars a
     prefix-caching serving/training stack would save (``(n_convs−1) ×
     prefix_chars`` — every copy after the first is cache-served).
@@ -755,15 +755,15 @@ def shared_prefix_stats(turns: DataFrame,
     the result doesn't depend on collision structure.
 
     Plan: one row_number window on the extraction partitioning keeps
-    the first *n_prefix* turns; one per-conv agg builds the ordered
-    concat (``sort_array(collect_list)`` over ≤ n_prefix rows — bounded,
+    the first ``PREFIX_TURNS`` turns; one per-conv agg builds the ordered
+    concat (``sort_array(collect_list)`` over ≤ PREFIX_TURNS rows — bounded,
     never conversation-sized); one small agg groups by key.  The
     prefix-key relation is one row per conversation, so the second
     shuffle is corpus-count-of-conversations sized, not turn-sized."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     first_n = (
         turns.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_prefix)
+        .where(F.col("rn") <= PREFIX_TURNS)
         .groupBy("conv_id")
         .agg(
             F.array_join(
@@ -796,13 +796,12 @@ def prefix_sharing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 SFT_NEARDUP_MIN_AGREE = 6  # ≥6/8 signature agreement ≈ Jaccard 0.75
 
 
-def curate_sft_corpus(turns: DataFrame,
-                      min_agree: int = SFT_NEARDUP_MIN_AGREE) -> DataFrame:
+def curate_sft_corpus(turns: DataFrame) -> DataFrame:
     """The composed SFT curation pipeline — what actually runs between
     raw transcript landing and fine-tuning: (1) conversation quality
     gate (:func:`conversation_quality`, keep=1 only), (2) conversation-
     level near-dup prune (:func:`conversation_minhash_pairs` — the
-    HIGHER conv_id of every pair agreeing on ≥ *min_agree* of 8
+    HIGHER conv_id of every pair agreeing on ≥ ``SFT_NEARDUP_MIN_AGREE`` of 8
     signature components is dropped, min-id episode survives), (3)
     (context, target) pair assembly (:func:`assemble_sft_pairs`) over
     the surviving conversations.  One entry point so the integration —
@@ -820,7 +819,7 @@ def curate_sft_corpus(turns: DataFrame,
     )
     pruned = (
         conversation_minhash_pairs(turns)
-        .where(F.col("n_agree") >= min_agree)
+        .where(F.col("n_agree") >= SFT_NEARDUP_MIN_AGREE)
         .select(F.col("conv_b").alias("conv_id"))
         .distinct()
     )
@@ -885,10 +884,13 @@ DTR_RETRIED_CTE = DTR_CTE + """,
 """
 
 
-def loss_mask_spans(turns: DataFrame, sep_len: int = 2) -> DataFrame:
+SEP_LEN = 2  # chars of the separator between stitched turns
+
+
+def loss_mask_spans(turns: DataFrame) -> DataFrame:
     """SFT loss-masking spans: for each turn, the [start, end) character
     offsets of its text inside the conversation's stitched training
-    document (turns joined in ``turn_idx`` order by a ``sep_len``-char
+    document (turns joined in ``turn_idx`` order by a ``SEP_LEN``-char
     separator), plus the mask bit — ``True`` (excluded from the loss)
     for every non-assistant turn.  Trainers consume exactly this shape
     to zero out user/tool tokens in the label tensor.
@@ -906,7 +908,7 @@ def loss_mask_spans(turns: DataFrame, sep_len: int = 2) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     start = F.coalesce(
-        F.sum(F.length("text") + sep_len).over(w), F.lit(0)
+        F.sum(F.length("text") + SEP_LEN).over(w), F.lit(0)
     ).cast("long")
     return turns.select(
         "conv_id",
@@ -922,9 +924,12 @@ def loss_mask_spans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return loss_mask_spans(derived_transcripts(spark, sf_dir))
 
 
-def grounding_audit(turns: DataFrame, phrase_tokens: int = 3) -> DataFrame:
+PHRASE_TOKENS = 3  # leading tokens of an assistant turn's claim
+
+
+def grounding_audit(turns: DataFrame) -> DataFrame:
     """Attribution audit for agent transcripts: is an assistant turn's
-    leading claim phrase (its first ``phrase_tokens`` whitespace tokens)
+    leading claim phrase (its first ``PHRASE_TOKENS`` whitespace tokens)
     VERBATIM-supported by any earlier tool output in the same
     conversation?  The cheap-and-exact core of RAG groundedness checks
     (quote-level support, not semantic entailment).
@@ -944,7 +949,7 @@ def grounding_audit(turns: DataFrame, phrase_tokens: int = 3) -> DataFrame:
         "conv_id",
         "turn_idx",
         F.array_join(
-            F.slice(F.split("text", " "), 1, phrase_tokens), " "
+            F.slice(F.split("text", " "), 1, PHRASE_TOKENS), " "
         ).alias("claim"),
     )
     t = turns.where(F.col("role") == "tool").select(
@@ -1037,19 +1042,17 @@ BT_SCALE = 10 ** 6    # strength fixed-point scale
 BT_BIG = 10 ** 12     # floor-division headroom per MM term
 
 
-def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
-                per_group: int = BT_PER_GROUP, rounds: int = BT_ROUNDS,
-                scale: int = BT_SCALE, big: int = BT_BIG) -> DataFrame:
+def bt_strength(turns: DataFrame) -> DataFrame:
     """Bradley–Terry strength estimation over pairwise episode
     comparisons — the reward-model pre-step that turns a pile of
     (chosen, rejected) preference pairs into a per-policy scalar
     ranking (Elo-style leaderboards, RLHF data triage).  Fixed-round
     minorization-maximization in EXACT integer arithmetic:
 
-        p_0(i)   = scale
-        D_r(i)   = Σ_{comparisons (i,j)} big // max(p_{r-1}(i)+p_{r-1}(j), 1)
-        p'_r(i)  = wins(i) * big // D_r(i)
-        p_r      = p'_r * scale // max_i(p'_r)       (per-round max norm)
+        p_0(i)   = BT_SCALE
+        D_r(i)   = Σ_{comparisons (i,j)} BT_BIG // max(p_{r-1}(i)+p_{r-1}(j), 1)
+        p'_r(i)  = wins(i) * BT_BIG // D_r(i)
+        p_r      = p'_r * BT_SCALE // max_i(p'_r)       (per-round max norm)
 
     Every quantity is a BIGINT (integer sums + floor division + a 1-row
     max are order-independent), so a SQL oracle unrolls the identical
@@ -1059,14 +1062,14 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
 
     Comparisons are synthesized deterministically: conversations score
     by the same all-integer proxy as :func:`mine_preference_pairs`,
-    families are ``conv_id % n_groups``, each family fields its
-    ``per_group`` md5-ranked contestants, and every within-family pair
+    families are ``conv_id % BT_GROUPS``, each family fields its
+    ``BT_PER_GROUP`` md5-ranked contestants, and every within-family pair
     plays once (winner = lexicographic (score, conv_id) max).  Bounding
-    the family size caps comparisons at C(per_group, 2) per family —
+    the family size caps comparisons at C(BT_PER_GROUP, 2) per family —
     the all-pairs blowup is impossible by construction.
 
     Scale posture: the comparison table is ``localCheckpoint``-ed once
-    (≤ n_groups·C(per_group,2) rows at any corpus size — sampling, not
+    (≤ BT_GROUPS·C(BT_PER_GROUP,2) rows at any corpus size — sampling, not
     the corpus, sets its cardinality); each round BROADCASTS the
     item-cardinality strength vector onto it twice (winner/loser side),
     aggregates node-keyed partial sums, and max-normalizes via a 1-row
@@ -1083,7 +1086,7 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
                 + F.count(F.lit(1)).cast("long")
             ).alias("score")
         )
-        .withColumn("g", F.pmod(F.col("conv_id"), F.lit(n_groups)))
+        .withColumn("g", F.pmod(F.col("conv_id"), F.lit(BT_GROUPS)))
     )
     rk = F.row_number().over(
         Window.partitionBy("g").orderBy(
@@ -1095,7 +1098,7 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
             "conv_id",
         )
     )
-    samp = score.withColumn("rk", rk).where(F.col("rk") <= per_group)
+    samp = score.withColumn("rk", rk).where(F.col("rk") <= BT_PER_GROUP)
     a, c = samp.alias("a"), samp.alias("c")
     comp = (
         a.join(c, "g")
@@ -1134,9 +1137,9 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
         "conv_id", F.coalesce("wins", F.lit(0)).cast("long").alias("wins")
     ).localCheckpoint()
     p = items.select(
-        "conv_id", F.lit(scale).cast("long").alias("pv")
+        "conv_id", F.lit(BT_SCALE).cast("long").alias("pv")
     )
-    for _ in range(rounds):
+    for _ in range(BT_ROUNDS):
         t = (
             comp.join(
                 F.broadcast(
@@ -1155,7 +1158,7 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
             .select(
                 "w",
                 "l",
-                F.expr(f"{big} DIV greatest(pw + pl, 1)")
+                F.expr(f"{BT_BIG} DIV greatest(pw + pl, 1)")
                 .cast("long")
                 .alias("term"),
             )
@@ -1168,14 +1171,14 @@ def bt_strength(turns: DataFrame, n_groups: int = BT_GROUPS,
         )
         praw = wins.join(d, "conv_id").select(
             "conv_id",
-            F.expr(f"wins * {big} DIV greatest(dsum, 1)")
+            F.expr(f"wins * {BT_BIG} DIV greatest(dsum, 1)")
             .cast("long")
             .alias("raw"),
         ).localCheckpoint()
         pmax = praw.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
         p = praw.crossJoin(F.broadcast(pmax)).select(
             "conv_id",
-            F.expr(f"raw * {scale} DIV m").cast("long").alias("pv"),
+            F.expr(f"raw * {BT_SCALE} DIV m").cast("long").alias("pv"),
         ).localCheckpoint()
     return wins.join(p, "conv_id").select(
         F.col("conv_id").cast("long").alias("conv_id"),

@@ -173,9 +173,10 @@ def _bucket_pairs(exploded: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def minhash_jaccard_estimate(
-    spark: SparkSession, sf_dir: str, max_bucket: int = 20
-) -> DataFrame:
+LSH_MAX_BUCKET = 20  # hot-bucket guard: larger buckets are not paired
+
+
+def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash estimator itself, closed end-to-end: for every LSH
     candidate pair, the fraction of agreeing signature components is an
     unbiased estimate of token-set Jaccard (the property the whole
@@ -199,14 +200,14 @@ def minhash_jaccard_estimate(
     Hot-bucket containment (the LSH quadratic trap): a bucket holding m
     docs yields m(m−1)/2 pairs, and boilerplate-heavy corpora produce
     mega-buckets (this corpus: one bucket → ~90k pairs from 500 docs).
-    Buckets over ``max_bucket`` docs are EXCLUDED from pairing — standard
+    Buckets over ``LSH_MAX_BUCKET`` docs are EXCLUDED from pairing — standard
     web-scale practice (such buckets are exact-dup/boilerplate clusters,
     already handled by exact dedup and line dedup; pairwise verification
     inside them is pure waste)."""
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     docs = fan_out_scan(spark, docs, docs)
     sig = minhash_signatures(docs)
-    pairs = _bucket_pairs(_banded_explode(sig), max_bucket)
+    pairs = _bucket_pairs(_banded_explode(sig), LSH_MAX_BUCKET)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(N_HASHES)],
@@ -544,10 +545,12 @@ def duplicate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.unionByName(near).distinct()
 
 
+CC_MAX_ITERS = 20  # connected-components round budget
+
+
 def neardup_clusters(
     spark: SparkSession,
     sf_dir: str,
-    max_iters: int = 20,
     algorithm: str = "label_prop",
 ) -> DataFrame:
     """Duplicate-cluster formation: connected components over the
@@ -556,7 +559,7 @@ def neardup_clusters(
 
     Algorithm: iterative min-label propagation over the undirected edge
     list.  Each round is ONE shuffle (join labels onto edges + min-agg per
-    node); the loop runs until no label changes, bounded by *max_iters*.
+    node); the loop runs until no label changes, bounded by ``CC_MAX_ITERS``.
     Convergence needs rounds = graph diameter; duplicate clusters are
     shallow (stars + short chains), so this terminates in a handful of
     rounds.  At web scale swap the propagation step for the
@@ -579,8 +582,7 @@ def neardup_clusters(
         non_roots = _cc_two_phase(
             edges.select(
                 F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-            ),
-            max_iters=max_iters,
+            )
         )
         roots = non_roots.select(
             F.col("cluster_id").alias("doc_id"),
@@ -605,7 +607,7 @@ def neardup_clusters(
         .withColumn("cluster_id", F.col("doc_id"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         neighbor_min = (
             und.join(
                 labels.select(
@@ -641,9 +643,9 @@ def neardup_clusters(
         # never silently return a non-converged labeling: wrong cluster
         # assignments with no signal are worse than a loud failure
         raise RuntimeError(
-            f"label propagation did not converge within max_iters={max_iters}"
-            " (graph diameter exceeds the round budget; raise max_iters or"
-            " use algorithm='two_phase')"
+            f"label propagation did not converge within {CC_MAX_ITERS} rounds"
+            " (graph diameter exceeds the round budget; use"
+            " algorithm='two_phase')"
         )
     # cluster_size via a window, not agg+broadcast-join: the size table has
     # one row per CLUSTER, which at web scale is corpus-order (most dup
@@ -658,7 +660,7 @@ def neardup_clusters(
     )
 
 
-def _cc_two_phase(und: DataFrame, max_iters: int = 25) -> DataFrame:
+def _cc_two_phase(und: DataFrame) -> DataFrame:
     """Connected components via large-star / small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14 — public): O(log² n) rounds on ANY topology, vs label
@@ -710,7 +712,7 @@ def _cc_two_phase(und: DataFrame, max_iters: int = 25) -> DataFrame:
     edges = und.select("u", "v").where(F.col("u") != F.col("v")).distinct()
     edges = edges.localCheckpoint()
     fp = fingerprint(edges)
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         edges = star(star(edges, large=True), large=False).localCheckpoint()
         fp_new = fingerprint(edges)
         if fp_new == fp:
@@ -718,8 +720,8 @@ def _cc_two_phase(und: DataFrame, max_iters: int = 25) -> DataFrame:
         fp = fp_new
     else:
         raise RuntimeError(
-            f"large-star/small-star did not converge within max_iters="
-            f"{max_iters} — O(log^2 n) bound exceeded; raise max_iters"
+            f"large-star/small-star did not converge within {CC_MAX_ITERS}"
+            " rounds — O(log^2 n) bound exceeded"
         )
     # converged: every edge is (node, component_min)
     return edges.select(
@@ -727,12 +729,7 @@ def _cc_two_phase(und: DataFrame, max_iters: int = 25) -> DataFrame:
     )
 
 
-def chunk_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-) -> DataFrame:
+def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size token chunking with overlap — the tokenize-and-window
     step every training pipeline runs between extraction and packing.
     Pure ``pyspark.sql.functions`` (split → sequence of chunk starts →
@@ -741,7 +738,7 @@ def chunk_documents(
     Chunk starts step by (chunk_tokens - overlap); the final partial chunk
     is kept iff it adds at least one new token (start < n_tokens)."""
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
-    return chunk_df(docs, chunk_tokens, overlap)
+    return chunk_df(docs)
 
 
 def chunk_df(
@@ -842,12 +839,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pretrain_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-) -> DataFrame:
+def pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full pretraining-corpus preparation DAG composed as ONE
     declarative plan: quality gates → exact-dedup keeper → deterministic
     train split → token chunking.  Every stage also exists (and is
@@ -877,15 +869,14 @@ def pretrain_pipeline(
     )
     bucket = md5_bucket("split:", "doc_id", mod=1000)
     train = kept.where(bucket < 980)
-    return chunk_df(train, chunk_tokens, overlap)
+    return chunk_df(train)
 
 
-def line_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    window_words: int = 8,
-    dup_threshold: int = 5,
-) -> DataFrame:
+LINE_WINDOW_WORDS = 8  # words per line window
+LINE_DUP_THRESHOLD = 5  # a window seen this often is dropped
+
+
+def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicate-line removal (Falcon/Dolma-style): lines
     that recur across the corpus — license headers, nav chrome, templated
     footers — are dropped from every document; the document text is
@@ -894,7 +885,7 @@ def line_dedup(
     The prose corpus has no natural line structure, so lines are
     synthesized deterministically: one injected boilerplate header (two
     variants, so both recur far above threshold) + non-overlapping
-    ``window_words``-word windows of the text.  Both engines build the
+    ``LINE_WINDOW_WORDS``-word windows of the text.  Both engines build the
     identical lines, so the whole operator — global line counts, the
     threshold drop, and the ordered text rebuild — is hash-checked.
 
@@ -911,11 +902,11 @@ def line_dedup(
         F.lit("common license header variant "),
         F.pmod(F.col("doc_id"), F.lit(2)).cast("string"),
     )
-    last_w = ((F.size("toks") - F.lit(1)) / F.lit(window_words)).cast("int")
+    last_w = ((F.size("toks") - F.lit(1)) / F.lit(LINE_WINDOW_WORDS)).cast("int")
     windows = F.transform(
         F.sequence(F.lit(0), last_w),
         lambda i: F.array_join(
-            F.slice(F.col("toks"), i * window_words + 1, window_words), " "
+            F.slice(F.col("toks"), i * LINE_WINDOW_WORDS + 1, LINE_WINDOW_WORDS), " "
         ),
     )
     lines = docs.select(
@@ -929,7 +920,7 @@ def line_dedup(
     counts = lines.groupBy("line_hash").agg(F.count("*").alias("n_occur"))
     kept = (
         lines.join(counts, "line_hash")
-        .where(F.col("n_occur") < dup_threshold)
+        .where(F.col("n_occur") < LINE_DUP_THRESHOLD)
     )
     rebuilt = kept.groupBy("doc_id").agg(
         F.count("*").alias("n_kept"),
@@ -955,36 +946,38 @@ def line_dedup(
     )
 
 
+SEQ_TOKENS = 256  # tokens per packed training sequence
+PACK_BUCKET_WIDTH = 64  # doc_ids per prefix-sum bucket
+PACK_L2_WIDTH = 8  # buckets per second-level bucket
+
+
 def pack_sequences(
     spark: SparkSession,
     sf_dir: str,
-    seq_tokens: int = 256,
-    bucket_width: int = 64,
     two_level: bool = False,
-    l2_width: int = 8,
 ) -> DataFrame:
     """GPT-style sequence packing: documents are laid end-to-end in
-    ``doc_id`` order and cut into fixed ``seq_tokens`` training sequences;
+    ``doc_id`` order and cut into fixed ``SEQ_TOKENS`` training sequences;
     each document learns which sequence it starts in, its offset there,
     and whether it crosses a sequence boundary.
 
     The global running token offset is a distributed prefix sum — NOT a
     single-partition global window (the classic scale trap): documents get
-    a monotone bucket ``floor(doc_id / bucket_width)``; bucket subtotals
+    a monotone bucket ``floor(doc_id / PACK_BUCKET_WIDTH)``; bucket subtotals
     get an exclusive running sum in a tiny window; subtotal offsets
     broadcast-join back; the within-bucket window runs partitioned and
     parallel.  Equivalent by construction to the flat cumsum the DuckDB
     oracle runs, because the bucket key is monotone in ``doc_id``.
 
     Sizing rule at scale: the subtotal window and the broadcast both see
-    ``n_docs / bucket_width`` rows, so choose ``bucket_width ≈ n_docs /
+    ``n_docs / PACK_BUCKET_WIDTH`` rows, so choose ``PACK_BUCKET_WIDTH ≈ n_docs /
     10^6`` (one cheap ``count()`` if unknown) to cap that side at ~10^6
     rows regardless of corpus size; within-bucket windows then hold
-    ``bucket_width`` rows each — both sides bounded.  ``two_level=True``
+    ``PACK_BUCKET_WIDTH`` rows each — both sides bounded.  ``two_level=True``
     IS the nested construction for truly unbounded corpora: bucket
-    subtotals are themselves bucketed (``l2_width``) and prefix-summed the
+    subtotals are themselves bucketed (``PACK_L2_WIDTH``) and prefix-summed the
     same way, so the only single-partition window sees
-    ``n_docs / (bucket_width · l2_width)`` rows — identical output
+    ``n_docs / (PACK_BUCKET_WIDTH · PACK_L2_WIDTH)`` rows — identical output
     (pytest-asserted), one extra tiny shuffle.  The default width (64)
     is sized for the test corpora."""
     from pyspark.sql import Window
@@ -994,11 +987,11 @@ def pack_sequences(
     d = docs.select(
         "doc_id",
         n_tok.cast("long").alias("n_tok"),
-        F.floor(F.col("doc_id") / bucket_width).alias("bucket"),
+        F.floor(F.col("doc_id") / PACK_BUCKET_WIDTH).alias("bucket"),
     ).where(F.col("n_tok") > 0)
     totals = d.groupBy("bucket").agg(F.sum("n_tok").alias("bucket_tok"))
     if two_level:
-        totals = totals.withColumn("b2", F.floor(F.col("bucket") / l2_width))
+        totals = totals.withColumn("b2", F.floor(F.col("bucket") / PACK_L2_WIDTH))
         t2 = totals.groupBy("b2").agg(F.sum("bucket_tok").alias("b2_tok"))
         w2 = Window.orderBy("b2").rowsBetween(Window.unboundedPreceding, -1)
         off2 = t2.select(
@@ -1046,14 +1039,14 @@ def pack_sequences(
             ).alias("start"),
         )
     )
-    seq_id = F.floor(F.col("start") / seq_tokens)
-    end_seq = F.floor((F.col("start") + F.col("n_tok") - 1) / seq_tokens)
+    seq_id = F.floor(F.col("start") / SEQ_TOKENS)
+    end_seq = F.floor((F.col("start") + F.col("n_tok") - 1) / SEQ_TOKENS)
     return placed.select(
         "doc_id",
         "n_tok",
         "start",
         seq_id.alias("seq_id"),
-        F.pmod(F.col("start"), F.lit(seq_tokens)).cast("long").alias(
+        F.pmod(F.col("start"), F.lit(SEQ_TOKENS)).cast("long").alias(
             "offset_in_seq"
         ),
         (end_seq - seq_id + 1).alias("n_seqs_spanned"),
@@ -1142,23 +1135,22 @@ CDC_K = 8          # rolling k-gram width
 CDC_DIVISOR = 64   # boundary probability 1/64 → expected ~64-char chunks
 
 
-def cdc_chunk_stats(spark: SparkSession, sf_dir: str,
-                    k: int = CDC_K, divisor: int = CDC_DIVISOR) -> DataFrame:
+def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking dedup profile (the storage-dedup
     technique of LBFS/restic/borg applied to corpus text): split every
-    document at positions where the hash of the trailing *k*-gram is
-    ≡ 0 (mod *divisor*), then measure chunk-level duplication across
+    document at positions where the hash of the trailing ``CDC_K``-gram is
+    ≡ 0 (mod ``CDC_DIVISOR``), then measure chunk-level duplication across
     the WHOLE corpus.  Because boundaries depend only on local content,
     they survive insertions/deletions — shifted copies of a passage
     still produce identical chunks, which fixed-width shingling (see
     ``substring_dup_profile``) misses.
 
-    Boundary rule: position ``p`` (1-based, ``k ≤ p < len``) ends a
-    chunk iff ``int(md5(substr(text, p-k+1, k))[:8 hex]) % divisor ==
+    Boundary rule: position ``p`` (1-based, ``CDC_K ≤ p < len``) ends a
+    chunk iff ``int(md5(substr(text, p-CDC_K+1, CDC_K))[:8 hex]) % CDC_DIVISOR ==
     0`` — the engine's shared keyed-uniform primitive, so Spark and
     DuckDB agree bit-for-bit.  The final position is always a boundary.
-    ``p ≥ k`` gives an implicit k-char minimum chunk; expected chunk
-    length is ~*divisor* chars.
+    ``p ≥ CDC_K`` gives an implicit CDC_K-char minimum chunk; expected chunk
+    length is ~``CDC_DIVISOR`` chars.
 
     Output: ONE summary row ``(total_chunks, distinct_chunks,
     dup_chunk_instances, saved_chars)`` — all integers;
@@ -1181,15 +1173,15 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str,
     # projection here — fan out the starved scan (extractor/fanout.py)
     docs = fan_out_scan(spark, docs, docs)
     md5int = (
-        f"CAST(conv(substr(md5(CAST(substr(text, i - {k - 1}, {k})"
+        f"CAST(conv(substr(md5(CAST(substr(text, i - {CDC_K - 1}, {CDC_K})"
         " AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
     )
     bounds = docs.select(
         "text",
         F.expr(
             f"concat(filter(sequence(1, length(text)),"
-            f" i -> i >= {k} AND i < length(text)"
-            f"      AND {md5int} % {divisor} = 0),"
+            f" i -> i >= {CDC_K} AND i < length(text)"
+            f"      AND {md5int} % {CDC_DIVISOR} = 0),"
             f" array(length(text)))"
         ).alias("bounds"),
     )
@@ -1295,8 +1287,7 @@ WINNOW_K = 8  # k-gram width (chars)
 WINNOW_W = 4  # winnowing window (hashes)
 
 
-def winnowing_fingerprints(spark: SparkSession, sf_dir: str,
-                           k: int = WINNOW_K, w: int = WINNOW_W) -> DataFrame:
+def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every k-char gram, slide a
     w-hash window, keep each window's MINIMUM hash.  The selected
@@ -1317,22 +1308,22 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str,
     shared fraction in basis points."""
     docs = (
         _docs(spark, sf_dir)
-        .where(F.col("text").isNotNull() & (F.length("text") >= k + w - 1))
+        .where(F.col("text").isNotNull() & (F.length("text") >= WINNOW_K + WINNOW_W - 1))
         .select("doc_id", "text")
     )
     # per-position md5 + sliding window minima: fan out the starved scan
     docs = fan_out_scan(spark, docs, docs)
     h = (
-        f"transform(sequence(1, length(text) - {k} + 1),"
-        f" i -> CAST(conv(substring(md5(substr(text, CAST(i AS INT), {k})),"
+        f"transform(sequence(1, length(text) - {WINNOW_K} + 1),"
+        f" i -> CAST(conv(substring(md5(substr(text, CAST(i AS INT), {WINNOW_K})),"
         f" 1, 8), 16, 10) AS BIGINT))"
     )
     # hash array materialized as a column FIRST so each row computes its
     # k-gram hashes once — referencing the transform inside every window
     # lambda would re-evaluate it per window position
     fps = (
-        f"array_distinct(transform(sequence(1, size(h) - {w} + 1),"
-        f" j -> array_min(slice(h, CAST(j AS INT), {w}))))"
+        f"array_distinct(transform(sequence(1, size(h) - {WINNOW_W} + 1),"
+        f" j -> array_min(slice(h, CAST(j AS INT), {WINNOW_W}))))"
     )
     doc_fp = docs.withColumn("h", F.expr(h)).select(
         "doc_id", F.explode(F.expr(fps)).alias("fp")
@@ -1358,27 +1349,27 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str,
     )
 
 
-def winnowing_containment_pairs(
-    spark: SparkSession, sf_dir: str,
-    k: int = WINNOW_K, w: int = WINNOW_W,
-    min_shared: int = 5, max_fp_docs: int = 20,
-) -> DataFrame:
+WINNOW_MIN_SHARED = 5  # shared fingerprints for a containment pair
+WINNOW_MAX_FP_DOCS = 20  # hot-fingerprint guard
+
+
+def winnowing_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment-pair detection over winnowing fingerprints — the MOSS
     end state: find document pairs that share a local passage (quote,
     boilerplate block, copied section), which whole-document MinHash
     misses when the rest of the documents differ.  Candidate pairs are
     generated ONLY through shared fingerprints; a shared passage of
     length ≥ k+w−1 guarantees ≥1 shared fingerprint (the winnowing
-    theorem), and ≥ ``min_shared`` shared fingerprints is the verdict.
+    theorem), and ≥ ``WINNOW_MIN_SHARED`` shared fingerprints is the verdict.
 
     Containment is PLANTED deterministically so the detector has ground
     truth: docs in md5 bucket ≡0 (mod 5) append the first 80 chars of
     neighbor ``doc_id+1``'s text (both engines rebuild the plant).
 
-    The m² guard: fingerprints shared by more than ``max_fp_docs``
+    The m² guard: fingerprints shared by more than ``WINNOW_MAX_FP_DOCS``
     documents (corpus-wide boilerplate grams) are EXCLUDED from pair
     generation — the same hot-bucket cap as MinHash-LSH/conv-LSH, which
-    bounds any fingerprint's pair contribution at max_fp_docs² instead
+    bounds any fingerprint's pair contribution at WINNOW_MAX_FP_DOCS² instead
     of letting one stop-gram produce a quadratic blowup.  Scale shape:
     fp-keyed count + self-join on the capped fp relation + one pair
     agg; per-doc fingerprint sets are pre-deduped so joins move
@@ -1405,19 +1396,19 @@ def winnowing_containment_pairs(
             .otherwise(F.col("text"))
             .alias("text"),
         )
-        .where(F.length("text") >= k + w - 1)
+        .where(F.length("text") >= WINNOW_K + WINNOW_W - 1)
     )
     # the planted view is broadcast-joined onto the starved scan layout;
     # fan it out before the per-position fingerprint projection
     planted = fan_out_scan(spark, planted, docs)
     h = (
-        f"transform(sequence(1, length(text) - {k} + 1),"
-        f" i -> CAST(conv(substring(md5(substr(text, CAST(i AS INT), {k})),"
+        f"transform(sequence(1, length(text) - {WINNOW_K} + 1),"
+        f" i -> CAST(conv(substring(md5(substr(text, CAST(i AS INT), {WINNOW_K})),"
         f" 1, 8), 16, 10) AS BIGINT))"
     )
     fps = (
-        f"array_distinct(transform(sequence(1, size(h) - {w} + 1),"
-        f" j -> array_min(slice(h, CAST(j AS INT), {w}))))"
+        f"array_distinct(transform(sequence(1, size(h) - {WINNOW_W} + 1),"
+        f" j -> array_min(slice(h, CAST(j AS INT), {WINNOW_W}))))"
     )
     doc_fp = planted.withColumn("h", F.expr(h)).select(
         "doc_id", F.explode(F.expr(fps)).alias("fp")
@@ -1425,7 +1416,7 @@ def winnowing_containment_pairs(
     cold = (
         doc_fp.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs").between(2, max_fp_docs))
+        .where(F.col("n_docs").between(2, WINNOW_MAX_FP_DOCS))
         .select("fp")
     )
     cf = doc_fp.join(cold, "fp")
@@ -1437,7 +1428,7 @@ def winnowing_containment_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
-        .where(F.col("shared_fps") >= min_shared)
+        .where(F.col("shared_fps") >= WINNOW_MIN_SHARED)
     )
     n_fps = doc_fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fps"))
     return (
@@ -1483,20 +1474,18 @@ def nextfit_chain(lengths, cap: int):
     return bins, fills
 
 
-def bin_pack_nextfit(spark: SparkSession, sf_dir: str,
-                     cap: int = BINPACK_CAP,
-                     shards: int = BINPACK_SHARDS) -> DataFrame:
+def bin_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-document next-fit-decreasing bin packing — the SFT packing
     shape that never splits a document across context windows (the
     complement of :func:`pack_sequences`, which cuts a token stream at
     exact boundaries).  Docs are sharded, ordered (length desc, doc_id)
     within each shard, and greedily placed: a doc that no longer fits
-    closes the bin and opens the next.  An oversized doc (> cap) gets a
+    closes the bin and opens the next.  An oversized doc (> BINPACK_CAP) gets a
     bin of its own — the standard degradation.
 
     Scale topology (100 TB): greedy packing is inherently sequential,
     so parallelism comes from SHARDING, not from the algorithm — one
-    hash shuffle into ``shards`` groups, then a per-shard Arrow batch
+    hash shuffle into ``BINPACK_SHARDS`` groups, then a per-shard Arrow batch
     walk (`applyInPandas`, the mandate's custom-stateful-operator
     fallback: the data dependency chain genuinely can't be a window).
     Shard count scales with the cluster; per-shard state is two ints.
@@ -1508,7 +1497,7 @@ def bin_pack_nextfit(spark: SparkSession, sf_dir: str,
         .where(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.pmod("doc_id", F.lit(shards)).cast("long").alias("shard"),
+            F.pmod("doc_id", F.lit(BINPACK_SHARDS)).cast("long").alias("shard"),
             F.length("text").cast("long").alias("n"),
         )
     )
@@ -1519,7 +1508,7 @@ def bin_pack_nextfit(spark: SparkSession, sf_dir: str,
         pdf = pdf.sort_values(
             ["n", "doc_id"], ascending=[False, True], kind="mergesort"
         )
-        bins, fills = nextfit_chain(pdf["n"], cap)
+        bins, fills = nextfit_chain(pdf["n"], BINPACK_CAP)
         out = pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"].to_numpy(),
@@ -1540,8 +1529,7 @@ FUZZY_MAX_DIST = 5      # edit-distance acceptance threshold
 FUZZY_BLOCK_EXPR = "split_part(p_name, ' ', 1)"
 
 
-def fuzzy_match_parts(spark: SparkSession, sf_dir: str,
-                      max_dist: int = FUZZY_MAX_DIST) -> DataFrame:
+def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution by blocked fuzzy string matching: for every
     part, its single best fuzzy duplicate — the lowest-edit-distance
     OTHER part name within the same block, ties broken by the lower
@@ -1556,7 +1544,7 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str,
       partitioning and per-block pair counts bound the work; skewed
       mega-blocks would be salted or length-sub-blocked exactly like
       ``salted_skew_join``.
-    - A **length-band prune** (``|len(a)-len(b)| <= max_dist``, a lower
+    - A **length-band prune** (``|len(a)-len(b)| <= FUZZY_MAX_DIST``, a lower
       bound on edit distance) discards candidates BEFORE the O(n*m)
       ``levenshtein`` kernel runs — the classic cheap-filter/expensive-
       verify cascade, same shape as the LSH-then-Jaccard dedup path.
@@ -1565,7 +1553,7 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str,
       sort, map-side combinable.
 
     Output: ``(p_partkey, match_key, dist)``, one row per part that has
-    a block-mate within ``max_dist`` edits.  Both engines compute
+    a block-mate within ``FUZZY_MAX_DIST`` edits.  Both engines compute
     classic Levenshtein, so the oracle matches exactly (the DuckDB twin
     breaks ties with a row_number window; struct-min is the same
     ordering).
@@ -1625,14 +1613,14 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str,
     ).alias("y")
     name_pairs = (
         x.join(y, "b")
-        .where(F.abs(F.col("ln") - F.col("ln2")) <= F.lit(max_dist))
+        .where(F.abs(F.col("ln") - F.col("ln2")) <= F.lit(FUZZY_MAX_DIST))
         .select(
             F.col("n").alias("n1"), "k1", "k2m",
             F.levenshtein(
-                F.col("n"), F.col("n2"), threshold=max_dist
+                F.col("n"), F.col("n2"), threshold=FUZZY_MAX_DIST
             ).alias("d"),
         )
-        .where((F.col("d") >= F.lit(0)) & (F.col("d") <= F.lit(max_dist)))
+        .where((F.col("d") >= F.lit(0)) & (F.col("d") <= F.lit(FUZZY_MAX_DIST)))
     )
     # Attach candidates back to keys: one row per (part, matching name
     # group), never per key pair.  k1 != k except inside the probe's own
@@ -1659,8 +1647,7 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str,
     )
 
 
-def split_leakage_audit(spark: SparkSession, sf_dir: str,
-                        max_bucket: int = 20) -> DataFrame:
+def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test contamination audit: LSH near-duplicate candidate
     pairs whose two documents landed in DIFFERENT splits — the leakage
     every eval-integrity review hunts for (a test doc with a train-side
@@ -1687,7 +1674,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str,
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     docs = fan_out_scan(spark, docs, docs)
     sig = minhash_signatures(docs)
-    pairs = _bucket_pairs(_banded_explode(sig), max_bucket)
+    pairs = _bucket_pairs(_banded_explode(sig), LSH_MAX_BUCKET)
     sp = train_split_assign(spark, sf_dir).select("doc_id", "split")
     labeled = (
         pairs.join(
@@ -1743,14 +1730,12 @@ def infer_batch_chain(lengths, budget: int):
     return batches, ns, cells
 
 
-def inference_batch_pack(spark: SparkSession, sf_dir: str,
-                         budget: int = IBATCH_BUDGET,
-                         shards: int = IBATCH_SHARDS) -> DataFrame:
+def inference_batch_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic micro-batching for inference/scoring sweeps — the
     serving-side twin of :func:`bin_pack_nextfit`: sequences are padded
     to their batch's max length, so naive arrival-order batching wastes
     compute as pad cells; sorting by length first makes batches
-    length-homogeneous and caps the padded tensor at ``budget`` cells
+    length-homogeneous and caps the padded tensor at ``IBATCH_BUDGET`` cells
     (vLLM/TGI-style length-grouped batching, the standard trick for
     classifier sweeps over a corpus).
 
@@ -1768,7 +1753,7 @@ def inference_batch_pack(spark: SparkSession, sf_dir: str,
         .where(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.pmod("doc_id", F.lit(shards)).cast("long").alias("shard"),
+            F.pmod("doc_id", F.lit(IBATCH_SHARDS)).cast("long").alias("shard"),
             F.length("text").cast("long").alias("n"),
         )
     )
@@ -1779,7 +1764,7 @@ def inference_batch_pack(spark: SparkSession, sf_dir: str,
         pdf = pdf.sort_values(
             ["n", "doc_id"], ascending=[False, True], kind="mergesort"
         )
-        batches, ns, cells = infer_batch_chain(pdf["n"], budget)
+        batches, ns, cells = infer_batch_chain(pdf["n"], IBATCH_BUDGET)
         return pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"].to_numpy(),

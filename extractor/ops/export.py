@@ -35,30 +35,26 @@ from extractor import publish
 MANIFEST_NAME = "_export_manifest.json"
 
 
-def export_jsonl_shards(df: DataFrame, out_dir: str,
-                        shard_col: str = "shard") -> dict:
-    """Write *df* as gzip JSONL shard files partitioned by *shard_col*,
+def export_jsonl_shards(df: DataFrame, out_dir: str) -> dict:
+    """Write *df* as gzip JSONL shard files partitioned by ``shard``,
     publish atomically, and return the verified manifest (per-shard row
     counts computed from the staged files).  Overwrites any previous
     export at *out_dir*."""
     spark = df.sparkSession
     tmp = publish.stage(out_dir)
     (
-        df.repartition(F.col(shard_col))
+        df.repartition(F.col("shard"))
         .write.mode("overwrite")
-        .partitionBy(shard_col)
+        .partitionBy("shard")
         .option("compression", "gzip")
         .json(tmp)
     )
-    has_data = any(
-        f.startswith("shard") or f.startswith(f"{shard_col}=")
-        for f in os.listdir(tmp)
-    )
+    has_data = any(f.startswith("shard") for f in os.listdir(tmp))
     if has_data:
         staged = spark.read.json(tmp)
         counts = {
-            int(r[shard_col]): int(r["n"])
-            for r in staged.groupBy(shard_col)
+            int(r["shard"]): int(r["n"])
+            for r in staged.groupBy("shard")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
@@ -86,10 +82,12 @@ def read_export_manifest(out_dir: str) -> dict:
         return json.load(f)
 
 
-def export_training_shards(spark: SparkSession, sf_dir: str,
-                           seqs_per_shard: int = 4) -> DataFrame:
+SEQS_PER_SHARD = 4  # packed sequences per exported shard
+
+
+def export_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end export entry: pack the corpus (``dedup.pack_sequences``),
-    assign ``shard = floor(seq_id / seqs_per_shard)``, export JSONL
+    assign ``shard = floor(seq_id / SEQS_PER_SHARD)``, export JSONL
     shards to a scratch directory, then RE-READ the published files and
     return per-shard ``(shard, n_docs, sum_tok)`` — so the oracle
     comparison certifies the bytes that actually landed on disk against
@@ -99,7 +97,7 @@ def export_training_shards(spark: SparkSession, sf_dir: str,
     from extractor.ops.dedup import pack_sequences
 
     packed = pack_sequences(spark, sf_dir).withColumn(
-        "shard", F.floor(F.col("seq_id") / seqs_per_shard)
+        "shard", F.floor(F.col("seq_id") / SEQS_PER_SHARD)
     )
     out_dir = os.path.join(
         tempfile.mkdtemp(prefix="export-demo-"), "shards"

@@ -28,9 +28,8 @@ from extractor.ops import md5_bucket
 LINK_SCHEMA = "doc_id long, href string, anchor string"
 
 
-def extract_links(df: DataFrame, html_col: str = "html",
-                  id_col: str = "doc_id") -> DataFrame:
-    """One output row per ``<a href=...>`` in *html_col* (document order,
+def extract_links(df: DataFrame) -> DataFrame:
+    """One output row per ``<a href=...>`` in ``html`` (document order,
     nested anchors' text included verbatim): ``(doc_id, href, anchor,
     is_internal, domain)``.  ``is_internal`` marks fragment-only links
     (``#...``); ``domain`` is the lowercased host for absolute URLs, null
@@ -43,7 +42,7 @@ def extract_links(df: DataFrame, html_col: str = "html",
 
         for batch in iterator:
             ids, hrefs, anchors = [], [], []
-            for doc_id, html in zip(batch[id_col], batch[html_col]):
+            for doc_id, html in zip(batch["doc_id"], batch["html"]):
                 if html is None:
                     continue
                 try:
@@ -59,7 +58,7 @@ def extract_links(df: DataFrame, html_col: str = "html",
                     anchors.append(el.get_text())
             yield pd.DataFrame({"doc_id": ids, "href": hrefs, "anchor": anchors})
 
-    out = df.select(F.col(id_col), F.col(html_col)).mapInPandas(
+    out = df.select(F.col("doc_id"), F.col("html")).mapInPandas(
         kernel, LINK_SCHEMA
     )
     return out.select(
@@ -121,58 +120,55 @@ def normalize_url(col) -> "F.Column":
     return F.when(ok, F.concat(proto, F.lit("://"), host, path, query))
 
 
-def normalize_links(links: DataFrame, href_col: str = "href") -> DataFrame:
+def normalize_links(links: DataFrame) -> DataFrame:
     """Add ``url`` (canonical) + ``url_domain`` columns to a link table.
 
     Map-only: both are column expressions over the existing rows, so the
     link table keeps its partitioning — at 100 TB this is a free pass over
     the extract_links output, not a job."""
-    url = normalize_url(href_col)
+    url = normalize_url("href")
     return links.withColumns({
         "url": url,
         "url_domain": F.parse_url(url, F.lit("HOST")),
     })
 
 
-def url_frontier(links: DataFrame, href_col: str = "href",
-                 approx: bool = False) -> DataFrame:
+def url_frontier(links: DataFrame) -> DataFrame:
     """Per-domain crawl-frontier rollup over canonicalized links.
 
     ``(domain, n_links, n_urls, n_src_docs, sample_url)`` — total anchor
     count, distinct canonical URLs, distinct linking documents, and the
     bytewise-min canonical URL as a deterministic seed sample.
 
-    Scale shape: canonicalization is map-only, then the aggregation.
-    Exact mode (the oracle path) pays the standard two-level
-    multi-distinct plan — Expand (3× the link rows, partial-aggregated
-    map-side) → exchange on (domain, url, doc, gid) → exchange on domain;
-    correct but the first shuffle carries near-link-cardinality keys.
-    ``approx=True`` is the 100 TB path: HLL++ ``approx_count_distinct``
-    partials are constant-size and mergeable, so the whole rollup is ONE
-    shuffle on domain with no Expand (plan-gated in tests), and domain
-    cardinality (~10^8 domains vs ~10^11 pages) keeps reducer keys
-    small."""
-    n = normalize_links(links, href_col).where(F.col("url").isNotNull())
-    distinct = F.approx_count_distinct if approx else F.countDistinct
+    Scale shape: canonicalization is map-only, then the exact aggregation
+    the oracle checks: the standard two-level multi-distinct plan —
+    Expand (3× the link rows, partial-aggregated map-side) → exchange on
+    (domain, url, doc, gid) → exchange on domain; the first shuffle
+    carries near-link-cardinality keys."""
+    n = normalize_links(links).where(F.col("url").isNotNull())
     return n.groupBy(F.col("url_domain").alias("domain")).agg(
         F.count(F.lit(1)).alias("n_links"),
-        distinct("url").alias("n_urls"),
-        distinct("doc_id").alias("n_src_docs"),
+        F.countDistinct("url").alias("n_urls"),
+        F.countDistinct("doc_id").alias("n_src_docs"),
         F.min("url").alias("sample_url"),
     )
 
 
+PAGERANK_DAMPING_PCT = 85  # damping d, in percent
+PAGERANK_SCALE = 10 ** 12  # rank fixed-point scale
+
+
+
 def pagerank(edges: DataFrame, iterations: int = 5,
-             damping_pct: int = 85, scale: int = 10 ** 12,
              materialize: bool = True) -> DataFrame:
     """Fixed-iteration PageRank over a (src, dst) edge table, in EXACT
     integer arithmetic: ``(node, rank)`` with
 
-        rank_0(v)   = scale
-        rank_k+1(v) = scale*(100-d)//100
+        rank_0(v)   = PAGERANK_SCALE
+        rank_k+1(v) = PAGERANK_SCALE*(100-d)//100
                       + Σ_{u→v} rank_k(u)*d // (100*outdeg(u))
 
-    (d = ``damping_pct``).  Floor-division contributions make every value
+    (d = ``PAGERANK_DAMPING_PCT``).  Floor-division contributions make every value
     exactly reproducible on any engine and any partitioning — integer
     sums are order-independent, float sums are not — so a SQL oracle can
     check the result bit-for-bit; dangling-node mass is dropped (the
@@ -213,8 +209,8 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     if materialize:
         weighted = weighted.persist()
         nodes = nodes.persist()
-    base = scale * (100 - damping_pct) // 100
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
+    base = PAGERANK_SCALE * (100 - PAGERANK_DAMPING_PCT) // 100
+    ranks = nodes.select("node", F.lit(PAGERANK_SCALE).cast("long").alias("rank"))
     for it in range(iterations):
         contribs = (
             weighted.join(
@@ -222,7 +218,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
             )
             .select(
                 "dst",
-                (F.col("rank") * F.lit(damping_pct))
+                (F.col("rank") * F.lit(PAGERANK_DAMPING_PCT))
                 .cast("long")
                 .alias("num"),
                 "denom",
@@ -335,10 +331,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     return n_nodes.crossJoin(n_edges).crossJoin(n_tri)
 
 
-def bfs_hop_distance(edges: DataFrame, seeds: DataFrame,
-                     max_hops: int = 6) -> DataFrame:
+BFS_MAX_HOPS = 6  # hops from the seeds
+
+
+
+def bfs_hop_distance(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Multi-source BFS over a directed (src, dst) edge table: one row
-    ``(node, hops)`` per node reachable from *seeds* within *max_hops*,
+    ``(node, hops)`` per node reachable from *seeds* within ``BFS_MAX_HOPS``,
     where ``hops`` is the exact shortest hop count (0 for the seeds).
     The crawl-depth / link-distance primitive of a frontier scheduler —
     "how far is every page from the seed list" — and the third member of
@@ -357,7 +356,7 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame,
     usually tiny) frontier onto it, so per-round cost is one map-side
     semi-join over edges plus two node-cardinality hash ops (the
     anti-join and the union-dedup).  ``dist`` stays node-sized.  Rounds
-    are bounded by *max_hops* (graph diameter in practice — O(log n) on
+    are bounded by ``BFS_MAX_HOPS`` (graph diameter in practice — O(log n) on
     web graphs); the one driver-side action per round is an empty-check
     on the frontier, which also cuts lineage via ``localCheckpoint``."""
     e = edges.select("src", "dst").persist()
@@ -366,7 +365,7 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame,
         F.lit(0).cast("long").alias("hops"),
     ).localCheckpoint()
     frontier = dist.select("node")
-    for k in range(1, max_hops + 1):
+    for k in range(1, BFS_MAX_HOPS + 1):
         reached = (
             e.join(F.broadcast(frontier), e["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
@@ -383,8 +382,7 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame,
     return dist
 
 
-def blocklist_filter(links: DataFrame, blocklist: list[str],
-                     domain_col: str = "domain") -> DataFrame:
+def blocklist_filter(links: DataFrame, blocklist: list[str]) -> DataFrame:
     """UT1-style domain-blocklist verdicts — the URL-filtering stage
     every web-curation pipeline runs before fetch/ingest (C4, RefinedWeb
     and friends all gate on domain blocklists).  An entry blocks the
@@ -403,7 +401,7 @@ def blocklist_filter(links: DataFrame, blocklist: list[str],
     Output adds ``blocked`` (0/1) and ``matched_entry`` (most specific
     match, null if clean) to the input's columns."""
     bl = F.array(*[F.lit(b) for b in blocklist])
-    parts = F.split(F.col(domain_col), r"\.")
+    parts = F.split(F.col("domain"), r"\.")
     suffixes = F.transform(
         parts,
         lambda _, i: F.array_join(
@@ -420,7 +418,11 @@ def blocklist_filter(links: DataFrame, blocklist: list[str],
     )
 
 
-def politeness_schedule(urls: DataFrame, limit: int = 200) -> DataFrame:
+POLITENESS_LIMIT = 200  # schedule rows emitted
+
+
+
+def politeness_schedule(urls: DataFrame) -> DataFrame:
     """Per-domain round-robin fetch schedule — crawl politeness: no two
     consecutive fetches hit the same host until every other pending host
     has been visited.  Each URL gets a per-domain round number
@@ -430,11 +432,11 @@ def politeness_schedule(urls: DataFrame, limit: int = 200) -> DataFrame:
 
     Scale shape: the per-domain window is the frontier's natural
     partitioning (one shuffle); the global ordering NEVER materializes —
-    the emitted schedule is cut to ``limit`` rows via
+    the emitted schedule is cut to ``POLITENESS_LIMIT`` rows via
     TakeOrderedAndProject, and a full-corpus schedule would simply write
     ``(round, domain)`` as the sink's sort key (the order is defined by
     the key, not by a global sort).  The closing position window runs
-    over the ≤``limit`` surviving rows only.
+    over the ≤``POLITENESS_LIMIT`` surviving rows only.
 
     Input: distinct ``(domain, url)`` pairs.  Output: ``(position,
     fetch_round, domain, url)``."""
@@ -446,7 +448,7 @@ def politeness_schedule(urls: DataFrame, limit: int = 200) -> DataFrame:
         .distinct()
         .withColumn("fetch_round", F.row_number().over(w) - 1)
         .orderBy("fetch_round", "domain", "url")
-        .limit(limit)
+        .limit(POLITENESS_LIMIT)
     )
     w_pos = Window.orderBy("fetch_round", "domain", "url")
     return top.select(
@@ -457,16 +459,20 @@ def politeness_schedule(urls: DataFrame, limit: int = 200) -> DataFrame:
     )
 
 
-def hits(edges: DataFrame, iterations: int = 3,
-         scale: int = 10 ** 6, materialize: bool = True) -> DataFrame:
+HITS_ITERATIONS = 3  # hub/authority rounds
+HITS_SCALE = 10 ** 6  # score fixed-point scale
+
+
+
+def hits(edges: DataFrame, materialize: bool = True) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg hubs & authorities) over a
     (src, dst) edge table, in EXACT integer arithmetic:
 
-        auth_0 = hub_0 = scale
+        auth_0 = hub_0 = HITS_SCALE
         auth'_{k+1}(v) = Σ_{u→v} hub_k(u)
-        auth_{k+1}    = auth' * scale // max(auth')        (per round)
+        auth_{k+1}    = auth' * HITS_SCALE // max(auth')   (per round)
         hub'_{k+1}(u) = Σ_{u→v} auth_{k+1}(v)
-        hub_{k+1}     = hub' * scale // max(hub')
+        hub_{k+1}     = hub' * HITS_SCALE // max(hub')
 
     Max-normalization replaces the usual L2 norm so every value stays a
     BIGINT — integer sums and a 1-row max are order-independent, so a
@@ -504,9 +510,9 @@ def hits(edges: DataFrame, iterations: int = 3,
     def _cut(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=False) if materialize else df
 
-    auth = nodes.select("node", F.lit(scale).cast("long").alias("auth"))
-    hub = nodes.select("node", F.lit(scale).cast("long").alias("hub"))
-    for _ in range(iterations):
+    auth = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("auth"))
+    hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("hub"))
+    for _ in range(HITS_ITERATIONS):
         a_raw = (
             e.join(F.broadcast(hub), e["src"] == hub["node"])
             .groupBy("dst")
@@ -523,7 +529,7 @@ def hits(edges: DataFrame, iterations: int = 3,
         amax = auth.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
         auth = auth.crossJoin(F.broadcast(amax)).select(
             "node",
-            F.expr(f"raw * {scale} DIV m").cast("long").alias("auth"),
+            F.expr(f"raw * {HITS_SCALE} DIV m").cast("long").alias("auth"),
         )
         auth = _cut(auth)
         h_raw = (
@@ -542,7 +548,7 @@ def hits(edges: DataFrame, iterations: int = 3,
         hmax = hub.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
         hub = hub.crossJoin(F.broadcast(hmax)).select(
             "node",
-            F.expr(f"raw * {scale} DIV m").cast("long").alias("hub"),
+            F.expr(f"raw * {HITS_SCALE} DIV m").cast("long").alias("hub"),
         )
         hub = _cut(hub)
     # one EAGER materialization at the end (cascades through the lazy
@@ -555,13 +561,17 @@ def hits(edges: DataFrame, iterations: int = 3,
     return out
 
 
-def kcore(edges: DataFrame, k: int = 3, rounds: int = 4,
-          materialize: bool = True) -> DataFrame:
+KCORE_K = 3  # minimum degree a survivor keeps
+KCORE_ROUNDS = 4  # peeling rounds
+
+
+
+def kcore(edges: DataFrame, materialize: bool = True) -> DataFrame:
     """Fixed-round k-core peeling over an undirected graph given as a
     (src, dst) edge table (either orientation; self-loops dropped,
     duplicates collapsed): each round removes every node whose degree
-    in the CURRENTLY-surviving induced subgraph is below ``k``.  After
-    ``rounds`` peels, returns the survivors with their induced degree
+    in the CURRENTLY-surviving induced subgraph is below ``KCORE_K``.
+    After ``KCORE_ROUNDS`` peels, returns the survivors with their induced degree
     ``(node, deg)``.  Fixed-iteration semantics (like :func:`hits` /
     :func:`pagerank`) keep the op exactly SQL-unrollable; at the
     convergence point a{r} == a{r-1} and the result IS the k-core —
@@ -600,10 +610,10 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4,
             .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         )
 
-    for _ in range(rounds):
+    for _ in range(KCORE_ROUNDS):
         alive = (
             _induced_degree(alive)
-            .where(F.col("deg") >= k)
+            .where(F.col("deg") >= KCORE_K)
             .select(F.col("src").alias("node"))
             .localCheckpoint(eager=False)
         )
@@ -619,7 +629,11 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4,
     return out
 
 
-def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
+LPA_ROUNDS = 3  # label votes
+
+
+
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Fixed-round synchronous label-propagation community detection
     (Raghavan et al. 2007) over an undirected (src, dst) edge table:
     every node starts as its own label; each round it adopts the MODE
@@ -640,7 +654,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     node ids (nonnegative), so ``max(struct(cnt, -label))`` encodes
     "highest count, then smallest label" without a sort.
 
-    Output: ``(node, label)`` after ``rounds`` votes."""
+    Output: ``(node, label)`` after ``LPA_ROUNDS`` votes."""
     e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     e = (
         e0.union(
@@ -655,7 +669,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
         .select("node", F.col("node").cast("long").alias("label"))
         .localCheckpoint()
     )
-    for _ in range(rounds):
+    for _ in range(LPA_ROUNDS):
         votes = (
             e.join(
                 F.broadcast(
@@ -684,11 +698,12 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     return out
 
 
-def jaccard_linkpred(
-    edges: DataFrame,
-    max_degree: int = 8,
-    top_n: int = 30,
-) -> DataFrame:
+LINKPRED_MAX_DEGREE = 8  # hot-center cap
+LINKPRED_TOP_N = 30  # candidate edges returned
+
+
+
+def jaccard_linkpred(edges: DataFrame) -> DataFrame:
     """Jaccard link prediction (Liben-Nowell & Kleinberg 2003) over an
     undirected (src, dst) edge table: for every NON-adjacent pair (a, b)
     sharing at least one common neighbor, score the missing edge by the
@@ -697,7 +712,7 @@ def jaccard_linkpred(
     oracle can reproduce it bit-for-bit (no float sums).
 
     Hub exclusion: common neighbors are only counted through *wedge
-    centers* of degree ≤ ``max_degree``, and the neighborhoods N'(v)
+    centers* of degree ≤ ``LINKPRED_MAX_DEGREE``, and the neighborhoods N'(v)
     are restricted to those centers too — so the score stays an exact
     Jaccard of the FILTERED neighbor sets.  This is the standard guard
     against the quadratic wedge blow-up (a degree-d hub emits d² pairs;
@@ -706,12 +721,12 @@ def jaccard_linkpred(
 
     Scale posture (~10^11 edges): degrees are one map-side-combined
     count; the wedge self-join is keyed on the center z (shuffle on z,
-    bounded by the cap: ≤ max_degree² pairs per center); the result agg
+    bounded by the cap: ≤ LINKPRED_MAX_DEGREE² pairs per center); the result agg
     is one shuffle on (a, b); the final top-n is TakeOrderedAndProject
     (no global sort materialized).  The degree table is node-sized —
     broadcast here, a shuffle join at 10^9+ nodes.
 
-    Output: ``(a, b, common, score_ppm)``, the top_n candidate edges by
+    Output: ``(a, b, common, score_ppm)``, the ``LINKPRED_TOP_N`` candidate edges by
     (score_ppm desc, a, b)."""
     e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     e = (
@@ -722,7 +737,7 @@ def jaccard_linkpred(
         .persist()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    centers = deg.where(F.col("deg") <= max_degree).select(
+    centers = deg.where(F.col("deg") <= LINKPRED_MAX_DEGREE).select(
         F.col("src").alias("z")
     )
     # adjacency through allowed centers only: (z, nb); |N'(v)| is then
@@ -757,14 +772,18 @@ def jaccard_linkpred(
             .alias("score_ppm"),
         )
         .orderBy(F.col("score_ppm").desc(), "a", "b")
-        .limit(top_n)
+        .limit(LINKPRED_TOP_N)
     )
     out = out.localCheckpoint()  # materialize before releasing the cache
     e.unpersist()
     return out
 
 
-def dag_longest_path(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
+DAG_MAX_ROUNDS = 40  # relaxation round budget
+
+
+
+def dag_longest_path(edges: DataFrame) -> DataFrame:
     """Critical-path depth of every node in a DAG: ``depth(v)`` = length
     of the LONGEST path ending at v (sources are 0).  The DAG is derived
     from the input edge table by orienting every edge small-id → big-id
@@ -782,7 +801,7 @@ def dag_longest_path(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     Iterates ``depth(v) ← max(depth(v), max over in-edges (depth(u)+1))``
     to a FIXPOINT, verified by a 1-row changed-count aggregate per round
     (same convergence contract as ``dedup._cc_two_phase``); raises if
-    ``max_rounds`` is exhausted first rather than return wrong depths.
+    ``DAG_MAX_ROUNDS`` is exhausted first rather than return wrong depths.
     Rounds needed = longest path length, O(diameter) like every
     label-relaxation algorithm here.
 
@@ -809,7 +828,7 @@ def dag_longest_path(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
         .localCheckpoint()
     )
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(DAG_MAX_ROUNDS):
         relaxed = (
             dag.join(
                 F.broadcast(
@@ -847,13 +866,17 @@ def dag_longest_path(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     if not converged:
         raise RuntimeError(
             f"dag_longest_path did not reach a fixpoint within "
-            f"max_rounds={max_rounds} — critical path exceeds the round "
-            "budget; raise max_rounds"
+            f"{DAG_MAX_ROUNDS} rounds — critical path exceeds the round "
+            "budget"
         )
     return depth.select(F.col("node").cast("long").alias("node"), "depth")
 
 
-def deepwalk_corpus(edges: DataFrame, walk_len: int = 4) -> DataFrame:
+WALK_LEN = 4  # steps per walk
+
+
+
+def deepwalk_corpus(edges: DataFrame) -> DataFrame:
     """DeepWalk-style random-walk corpus over an undirected graph —
     the graph→sequence step that turns a web/domain graph into
     skip-gram training data (Perozzi et al. 2014).  One walk starts at
@@ -867,7 +890,7 @@ def deepwalk_corpus(edges: DataFrame, walk_len: int = 4) -> DataFrame:
 
     Scale shape (~10^11 edges): the symmetrized ranked adjacency is
     built once (one row_number window on the src partitioning + a
-    degree join) and persisted; each of the ``walk_len`` steps is ONE
+    degree join) and persisted; each of the ``WALK_LEN`` steps is ONE
     node-keyed equi-join of the (node-cardinality) frontier against
     it — no edge re-shuffle, no per-walk Python.  Walk length is the
     unrolled-iteration budget, like :func:`pagerank` / :func:`hits`.
@@ -891,7 +914,7 @@ def deepwalk_corpus(edges: DataFrame, walk_len: int = 4) -> DataFrame:
         "start", F.col("start").alias("node")
     )
     frames = [cur.select("start", F.lit(0).alias("step"), "node")]
-    for s in range(1, walk_len + 1):
+    for s in range(1, WALK_LEN + 1):
         pick = (
             F.pmod(md5_bucket("walk:", "node", F.lit(f":{s}")), F.col("deg"))
             + 1

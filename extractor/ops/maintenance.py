@@ -83,32 +83,31 @@ def _list_parquet_files(path: str) -> list[str]:
     )
 
 
+COMPACT_TARGET_BYTES = 128 << 20  # input bytes per output file
+
+
 def compact_files(
     spark: SparkSession,
     table_dir: str,
-    target_file_bytes: int = 128 << 20,
     target_files: int | None = None,
-    codec: str | None = None,
 ) -> dict:
-    """Rewrite *table_dir* into ``target_files`` (or size-derived) files.
+    """Rewrite *table_dir* into ``target_files`` files, or one per
+    ``COMPACT_TARGET_BYTES`` of input.
 
     Returns a stats dict; raises if the rewritten content fingerprint does
     not equal the source's (the rewrite is then rolled back by simply not
-    publishing it; the next call's ``publish.stage`` clears it).  Idempotent: re-running on a compacted table rewrites to
-    the same file count.  *codec* (e.g. ``zstd``) recompresses during the
-    rewrite — the Iceberg rewrite-with-codec-change maintenance case."""
+    publishing it; the next call's ``publish.stage`` clears it).
+    Idempotent: re-running on a compacted table rewrites to the same file
+    count."""
     tmp = publish.stage(table_dir)
     files_before = _list_parquet_files(table_dir)
     bytes_before = sum(os.path.getsize(f) for f in files_before)
     df = spark.read.parquet(table_dir)
     before = content_fingerprint(df)
     n_target = target_files or max(
-        1, math.ceil(bytes_before / target_file_bytes)
+        1, math.ceil(bytes_before / COMPACT_TARGET_BYTES)
     )
-    writer = df.repartition(n_target).write.mode("overwrite")
-    if codec:
-        writer = writer.option("compression", codec)
-    writer.parquet(tmp)
+    df.repartition(n_target).write.mode("overwrite").parquet(tmp)
 
     after = content_fingerprint(spark.read.parquet(tmp))
     if after != before:
@@ -161,8 +160,10 @@ BUCKET_N = 16  # bucket count for the co-located join layout
 
 
 def write_bucketed(
-    df: DataFrame, spark: SparkSession, table: str, key: str,
-    n_buckets: int = BUCKET_N,
+    df: DataFrame,
+    spark: SparkSession,
+    table: str,
+    key: str,
 ) -> None:
     """Persist *df* as a bucketed, bucket-sorted external parquet table —
     the layout that makes repeated joins/aggregations on *key*
@@ -176,7 +177,7 @@ def write_bucketed(
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     (
         df.write.format("parquet")
-        .bucketBy(n_buckets, key)
+        .bucketBy(BUCKET_N, key)
         .sortBy(key)
         .option("path", f"{_session_scratch(spark, 'bucketed')}/{table}")
         .mode("overwrite")

@@ -54,7 +54,11 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def synth_media_df(spark: SparkSession, n: int = 200, seed: int = 42) -> DataFrame:
+MEDIA_ROWS = 200  # synthetic media rows
+MEDIA_SEED = 42  # their payload seed
+
+
+def synth_media_df(spark: SparkSession) -> DataFrame:
     """Deterministic synthetic media table — generated on executors, like
     ``extractor.transcripts`` (no driver-side data)."""
 
@@ -67,7 +71,7 @@ def synth_media_df(spark: SparkSession, n: int = 200, seed: int = 42) -> DataFra
         for pdf in iterator:
             for i in pdf["id"]:
                 i = int(i)
-                h = hashlib.md5(f"{seed}:{i}".encode()).digest()
+                h = hashlib.md5(f"{MEDIA_SEED}:{i}".encode()).digest()
                 width = 16 + h[0] % 64
                 height = 16 + h[1] % 64
                 fmt = fmts[h[2] % 3]
@@ -91,7 +95,7 @@ def synth_media_df(spark: SparkSession, n: int = 200, seed: int = 42) -> DataFra
             )
             rows = []
 
-    return spark.range(n).mapInPandas(gen, MEDIA_SCHEMA)
+    return spark.range(MEDIA_ROWS).mapInPandas(gen, MEDIA_SCHEMA)
 
 
 def decode_payload(payload: bytes) -> tuple[int, int, bytes]:
@@ -146,7 +150,10 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(kernel, FEATURE_SCHEMA)
 
 
-def dhash_groups(features: DataFrame, bits: int = 8) -> DataFrame:
+DHASH_BITS = 8  # dHash bits per image
+
+
+def dhash_groups(features: DataFrame) -> DataFrame:
     """Perceptual-hash (dHash) near-duplicate bucketing over the feature
     vectors — image dedup for a multimodal corpus: the gradient hash
     (Krawetz's dHash, public) sets bit *i* iff ``f[i] > f[i+1]``, so
@@ -163,7 +170,7 @@ def dhash_groups(features: DataFrame, bits: int = 8) -> DataFrame:
     engine-reproducible.  Output: ``(dhash, n_media, min_media_id,
     max_media_id)`` for each candidate group."""
     sig = F.expr(
-        f"aggregate(sequence(0, {bits - 1}), CAST(0 AS BIGINT),"
+        f"aggregate(sequence(0, {DHASH_BITS - 1}), CAST(0 AS BIGINT),"
         " (acc, i) -> acc + CAST(CASE WHEN"
         "   element_at(features, CAST(i + 1 AS INT)) >"
         "   element_at(features, CAST(i + 2 AS INT))"
@@ -183,7 +190,10 @@ def dhash_groups(features: DataFrame, bits: int = 8) -> DataFrame:
     )
 
 
-def frame_sample_plan(media: DataFrame, max_frames: int = 8) -> DataFrame:
+MAX_FRAMES = 8  # frames sampled per video at most
+
+
+def frame_sample_plan(media: DataFrame) -> DataFrame:
     """Deterministic video frame-sampling PLAN: for every ``video`` row,
     the evenly-spaced frame indices a decode stage would extract — the
     Spark-side half of video ingestion (the actual frame decode needs a
@@ -194,13 +204,13 @@ def frame_sample_plan(media: DataFrame, max_frames: int = 8) -> DataFrame:
     Stream parameters derive deterministically from the typed metadata
     (no codec probe): ``duration_s = 5 + (width - 16)`` and fps by
     container format (png→24, jpg→30, bmp→60 — stand-ins for real
-    containers).  ``n = min(max_frames, total_frames)`` indices, the
+    containers).  ``n = min(MAX_FRAMES, total_frames)`` indices, the
     i-th at ``frame_idx = i * total_frames DIV n`` (the uniform sampler
     every video pipeline uses), with its millisecond timestamp
     ``ts_ms = frame_idx * 1000 DIV fps``.
 
     Scale shape: map-only — one ``sequence``/``posexplode`` per video
-    row (≤ max_frames rows out per video, never total_frames), all
+    row (≤ MAX_FRAMES rows out per video, never total_frames), all
     JVM-side; no shuffle, no Python.  Partition count follows the
     input, so a downstream decode kernel (Arrow-batched, like
     ``extract_features``) inherits sane batch sizes.
@@ -220,7 +230,7 @@ def frame_sample_plan(media: DataFrame, max_frames: int = 8) -> DataFrame:
     vids = vids.withColumn(
         "total_frames", F.col("duration_s") * F.col("fps")
     ).withColumn(
-        "n", F.least(F.lit(max_frames).cast("long"), F.col("total_frames"))
+        "n", F.least(F.lit(MAX_FRAMES).cast("long"), F.col("total_frames"))
     )
     return vids.select(
         "media_id",

@@ -478,7 +478,11 @@ def morton_key(x, y, bits: int = 16):
     )
 
 
-def zorder_key(spark: SparkSession, sf_dir: str, bits: int = 16) -> DataFrame:
+ZORDER_BITS = 16  # bits per interleaved coordinate
+
+
+
+def zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over two dimensions — the layout
     optimization behind OPTIMIZE ZORDER BY / Iceberg sort orders: rows
     sorted by the interleaved-bit key cluster locally in BOTH dimensions,
@@ -489,9 +493,9 @@ def zorder_key(spark: SparkSession, sf_dir: str, bits: int = 16) -> DataFrame:
     the range-partitioned write that would consume it (``repartitionByRange
     (z_key).sortWithinPartitions(z_key)``) is one shuffle at any scale."""
     ev = _read(spark, sf_dir, "events")
-    x = F.pmod(F.col("user_id"), F.lit(1 << bits))
-    y = F.pmod(F.col("event_id"), F.lit(1 << bits))
-    z = morton_key(x, y, bits)
+    x = F.pmod(F.col("user_id"), F.lit(1 << ZORDER_BITS))
+    y = F.pmod(F.col("event_id"), F.lit(1 << ZORDER_BITS))
+    z = morton_key(x, y, ZORDER_BITS)
     return ev.select(
         "event_id",
         "user_id",
@@ -501,9 +505,11 @@ def zorder_key(spark: SparkSession, sf_dir: str, bits: int = 16) -> DataFrame:
     )
 
 
-def salted_skew_join(
-    spark: SparkSession, sf_dir: str, salt_buckets: int = 8
-) -> DataFrame:
+SKEW_SALT_BUCKETS = 8  # copies of each dimension row
+
+
+
+def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit key-salting for a skewed equi join — the classic hot-key
     topology for joining a fact table on a low-cardinality / Zipf key
     (per-domain stats onto a web corpus, per-language models onto mixed
@@ -530,10 +536,10 @@ def salted_skew_join(
         "lang",
         "lang_docs",
         "lang_chars",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("salt"),
+        F.explode(F.sequence(F.lit(0), F.lit(SKEW_SALT_BUCKETS - 1))).alias("salt"),
     )
     fact = docs.select("doc_id", "lang", "n_chars").withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)).cast("int")
+        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(SKEW_SALT_BUCKETS)).cast("int")
     )
     return (
         fact.join(salted_dim.hint("shuffle_hash"), ["lang", "salt"])
@@ -762,9 +768,11 @@ def referential_integrity_audit(spark: SparkSession,
     return out
 
 
-def pareto_frontier(
-    spark: SparkSession, sf_dir: str, bucket_width: int = 256
-) -> DataFrame:
+PARETO_BUCKET_WIDTH = 256  # x values per suffix-max bucket
+
+
+
+def pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline / Pareto-frontier query over the document corpus: the set
     of (x, y) points not DOMINATED by any other point (q dominates p iff
     q.x >= p.x, q.y >= p.y and q is strictly better on at least one
@@ -778,8 +786,8 @@ def pareto_frontier(
     distributed prefix sum):
 
     1. collapse to DISTINCT points with multiplicity (one shuffle);
-    2. bucket by ``x DIV bucket_width``; per-bucket max-y (map-side
-       combined) → a suffix-max over the ≤ max_x/bucket_width bucket
+    2. bucket by ``x DIV PARETO_BUCKET_WIDTH``; per-bucket max-y (map-side
+       combined) → a suffix-max over the ≤ max_x/PARETO_BUCKET_WIDTH bucket
        rows via a single-partition window over that TINY relation only
        (never the data);
     3. broadcast the per-bucket "best y in any strictly-higher bucket"
@@ -797,13 +805,13 @@ def pareto_frontier(
         docs.select(F.col("n_chars").cast("long").alias("x"), y.alias("y"))
         .groupBy("x", "y")
         .agg(F.count("*").cast("long").alias("n_docs"))
-        .withColumn("bx", F.expr(f"x DIV {bucket_width}"))
+        .withColumn("bx", F.expr(f"x DIV {PARETO_BUCKET_WIDTH}"))
     )
     bmax = pts.groupBy("bx").agg(F.max("y").alias("by"))
     w_suffix = Window.orderBy(F.desc("bx")).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    # single-partition window: ONLY over the <= max_x/bucket_width
+    # single-partition window: ONLY over the <= max_x/PARETO_BUCKET_WIDTH
     # bucket-summary rows, never the point data (two-level contract)
     suffix = bmax.coalesce(1).select(
         "bx", F.max("by").over(w_suffix).alias("hi")
@@ -828,8 +836,7 @@ def pareto_frontier(
 K_ANON_K = 5  # minimum group size for a quasi-identifier cell
 
 
-def k_anonymity_audit(spark: SparkSession, sf_dir: str,
-                      k: int = K_ANON_K) -> DataFrame:
+def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit over the events table — the privacy gate run
     before releasing activity data: a quasi-identifier cell (here
     ``(event_type, day, hour)``) occupied by fewer than *k* distinct
@@ -858,7 +865,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str,
         F.count(F.lit(1)).cast("long").alias("n_users"),
         F.sum("n").cast("long").alias("n_rows"),
     )
-    return cells.where(F.col("n_users") < k).select(
+    return cells.where(F.col("n_users") < K_ANON_K).select(
         "event_type",
         F.col("day").cast("long").alias("day"),
         F.col("hour").cast("long").alias("hour"),

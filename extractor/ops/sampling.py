@@ -11,8 +11,8 @@ hash both engines share, so each op has a bit-exact DuckDB oracle.
 Scale posture (100 TB): the per-doc decisions are map-only (hash + integer
 compare, codegen'd, no shuffle); ``corpus_mix_sample`` adds one tiny
 per-stratum aggregate that is broadcast back onto the unshuffled corpus;
-``training_order`` shuffles once on the shard key — parallelism = n_shards,
-so pick n_shards ≈ a few × executor count at scale (16 here).
+``training_order`` shuffles once on the shard key — parallelism = ORDER_SHARDS,
+so pick ORDER_SHARDS ≈ a few × executor count at scale (16 here).
 """
 
 from __future__ import annotations
@@ -106,18 +106,22 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def training_order(spark: SparkSession, sf_dir: str, n_shards: int = 16) -> DataFrame:
+ORDER_SHARDS = 16  # shard streams of a training order
+
+
+
+def training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-order shuffle: every document gets a
     shard and a position inside it, both pure functions of doc_id.  Readers
     stream shard 0..n-1 in position order and see a fixed pseudo-random
     permutation of the corpus — reproducible across runs and engines.
 
     One shuffle (on shard), per-shard sort inside the window; no global
-    sort, no driver collect.  n_shards bounds parallelism — use a few ×
+    sort, no driver collect.  ORDER_SHARDS bounds parallelism — use a few ×
     executor count at real scale."""
     docs = _docs(spark, sf_dir)
     okey = F.md5(F.concat(F.lit("order:"), F.col("doc_id").cast("string")))
-    shard = md5_bucket("shard:", "doc_id", mod=n_shards)
+    shard = md5_bucket("shard:", "doc_id", mod=ORDER_SHARDS)
     w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
     return (
         docs.select(
@@ -128,9 +132,11 @@ def training_order(spark: SparkSession, sf_dir: str, n_shards: int = 16) -> Data
     )
 
 
-def global_exact_k_sample(
-    spark: SparkSession, sf_dir: str, k: int = 100
-) -> DataFrame:
+EXACT_K = 100  # corpus-wide sample size
+
+
+
+def global_exact_k_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-k corpus-wide keyed sample: rank every document by its md5
     key and keep the first k — the deterministic replacement for
     ``df.sample()`` when the output size must be exact (eval sets, human
@@ -143,13 +149,15 @@ def global_exact_k_sample(
     return (
         docs.select("doc_id", "lang", "source", okey.alias("sample_key"))
         .orderBy("sample_key", "doc_id")
-        .limit(k)
+        .limit(EXACT_K)
     )
 
 
-def per_stratum_topk_sample(
-    spark: SparkSession, sf_dir: str, k: int = 5
-) -> DataFrame:
+STRATUM_K = 5  # sample size per source
+
+
+
+def per_stratum_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size keyed sample per stratum (k docs per source) — the
     deterministic analogue of per-group reservoir sampling: rank documents
     inside each source by their hash key and keep the first k.  One shuffle
@@ -161,7 +169,7 @@ def per_stratum_topk_sample(
     return (
         docs.select("doc_id", "source", okey.alias("sample_key"))
         .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= STRATUM_K)
         .select("doc_id", "source", F.col("rk").cast("int").alias("rk"))
     )
 
@@ -170,8 +178,7 @@ WBK_K = 50
 WBK_TOKENS_PER_TICKET = 5
 
 
-def weighted_bottomk_sample(spark: SparkSession, sf_dir: str,
-                            k: int = WBK_K) -> DataFrame:
+def weighted_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-proportional sampling without replacement via a bottom-k
     ticket sketch (Cohen's bottom-k framework; the exact-integer
     alternative to Efraimidis–Spirakis priorities, whose −ln(u)/w keys
@@ -217,7 +224,7 @@ def weighted_bottomk_sample(spark: SparkSession, sf_dir: str,
             ),
         )
     )
-    return ticketed.orderBy("min_ticket").limit(k)
+    return ticketed.orderBy("min_ticket").limit(WBK_K)
 
 
 def length_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,8 +359,7 @@ def mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def epoch_training_order(spark: SparkSession, sf_dir: str,
-                         n_shards: int = 16) -> DataFrame:
+def epoch_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-epoch training order over the MATERIALIZED fractional-epoch
     mixture — the composition practitioners get wrong: each epoch must
     see a DIFFERENT pseudo-random permutation (salting the order key
@@ -378,7 +384,7 @@ def epoch_training_order(spark: SparkSession, sf_dir: str,
             F.col("doc_id").cast("string"),
         )
     )
-    shard = md5_bucket("eshard:", "epoch", F.lit(":"), "doc_id", mod=n_shards)
+    shard = md5_bucket("eshard:", "epoch", F.lit(":"), "doc_id", mod=ORDER_SHARDS)
     w = Window.partitionBy("epoch", "shard").orderBy("order_key", "doc_id")
     return (
         epochs.select(

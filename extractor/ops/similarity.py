@@ -430,12 +430,11 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kmeans_topics(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 8,
-    max_iters: int = 5,
-) -> DataFrame:
+KMEANS_K = 8  # clusters
+KMEANS_ITERS = 5  # Lloyd rounds at most
+
+
+def kmeans_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd's k-means over the embedding corpus — topic-style
     clustering without MLlib, the iterative-NUMERIC sibling of the
     iterative-graph connected components (``dedup._cc_two_phase``).
@@ -460,11 +459,11 @@ def kmeans_topics(
     # seed = first k rows by vec_id ORDER (not `vec_id < k`, which silently
     # under-seeds on sparse/non-0-based ids); bounded collect of k rows
     cent_rows = (
-        emb.orderBy("vec_id").limit(k).select("embedding").collect()
+        emb.orderBy("vec_id").limit(KMEANS_K).select("embedding").collect()
     )
-    if len(cent_rows) < k:
+    if len(cent_rows) < KMEANS_K:
         raise ValueError(
-            f"kmeans_topics needs >= k={k} embeddings, found {len(cent_rows)}"
+            f"kmeans_topics needs >= k={KMEANS_K} embeddings, found {len(cent_rows)}"
         )
     cents = np.stack([np.array(r["embedding"], dtype=np.float64) for r in cent_rows])
 
@@ -534,7 +533,7 @@ def kmeans_topics(
 
         return partials
 
-    for _ in range(max_iters):
+    for _ in range(KMEANS_ITERS):
         # kernel emits <= k partial rows per Arrow batch; a map-side-
         # combined (cluster, slot) sum reduces them to k*(dim+1) scalars
         sums = (
@@ -605,8 +604,7 @@ RRF_TOP = 20        # fused results returned
 RRF_QUERY_ID = 0    # vec_id whose embedding is the semantic query
 
 
-def quantized_dot_ranking(emb: DataFrame, query_id: int = RRF_QUERY_ID,
-                          k: int = RRF_LIST_K) -> DataFrame:
+def quantized_dot_ranking(emb: DataFrame) -> DataFrame:
     """Semantic ranking with EXACT-INTEGER scores: both corpus vectors
     and the query vector go through the :func:`embedding_quantize_int8`
     transform (symmetric per-vector int8, ``round(x · 127/max|x|)``),
@@ -616,12 +614,12 @@ def quantized_dot_ranking(emb: DataFrame, query_id: int = RRF_QUERY_ID,
     vector stores actually score at scale: SIMD int8 dot products over
     quantized codes, floats never touching the hot loop.
 
-    Output: ``(vec_id, dot_q, rank_sem)`` — top-*k* by (dot desc,
+    Output: ``(vec_id, dot_q, rank_sem)`` — top-``RRF_LIST_K`` by (dot desc,
     vec_id asc).
 
     Plan: quantization is a map-only HOF projection; the 1-row query
     vector cross-joins (broadcast) onto the unshuffled corpus; the
-    top-k is TakeOrderedAndProject; the rank window sorts *k* rows,
+    top-k is TakeOrderedAndProject; the rank window sorts ``RRF_LIST_K`` rows,
     never the corpus."""
     maxabs = F.array_max(F.transform("embedding", lambda x: F.abs(x)))
     scale = F.when(maxabs > 0, F.lit(127.0) / maxabs).otherwise(F.lit(0.0))
@@ -632,7 +630,7 @@ def quantized_dot_ranking(emb: DataFrame, query_id: int = RRF_QUERY_ID,
             lambda x: F.round(x * scale).cast("int"),
         ).alias("q_codes"),
     )
-    query = q.where(F.col("vec_id") == query_id).select(
+    query = q.where(F.col("vec_id") == RRF_QUERY_ID).select(
         F.col("q_codes").alias("p_codes")
     )
     dot = F.aggregate(
@@ -646,7 +644,7 @@ def quantized_dot_ranking(emb: DataFrame, query_id: int = RRF_QUERY_ID,
         q.crossJoin(F.broadcast(query))
         .select("vec_id", dot.alias("dot_q"))
         .orderBy(F.desc("dot_q"), "vec_id")
-        .limit(k)
+        .limit(RRF_LIST_K)
     )
     return top.withColumn(
         "rank_sem",
@@ -654,8 +652,7 @@ def quantized_dot_ranking(emb: DataFrame, query_id: int = RRF_QUERY_ID,
     )
 
 
-def rrf_fuse(lex: DataFrame, sem: DataFrame, k_rrf: int = RRF_K,
-             top: int = RRF_TOP) -> DataFrame:
+def rrf_fuse(lex: DataFrame, sem: DataFrame) -> DataFrame:
     """Reciprocal-rank fusion (Cormack/Clarke/Büttcher) of a lexical and
     a semantic ranking — the standard hybrid-retrieval combiner (every
     BM25+vector search stack ships exactly this).  Score =
@@ -670,7 +667,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k_rrf: int = RRF_K,
     ``(vec_id, rank_sem)``; ids share a domain.
 
     Plan: a full outer join of two ≤ list-k row relations (broadcast;
-    both inputs are already top-k's), then a top-*top* sort of ≤ 2k
+    both inputs are already top-k's), then a top-``RRF_TOP`` sort of ≤ 2k
     rows — the fusion stage costs nothing regardless of corpus size;
     all the scale lives in the two input rankings."""
     fused = lex.select(
@@ -683,11 +680,11 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k_rrf: int = RRF_K,
     contrib = (
         F.when(
             F.col("rank_lex").isNotNull(),
-            F.expr(f"1000000000 DIV (CAST({k_rrf} AS BIGINT) + rank_lex)"),
+            F.expr(f"1000000000 DIV (CAST({RRF_K} AS BIGINT) + rank_lex)"),
         ).otherwise(F.lit(0).cast("long"))
         + F.when(
             F.col("rank_sem").isNotNull(),
-            F.expr(f"1000000000 DIV (CAST({k_rrf} AS BIGINT) + rank_sem)"),
+            F.expr(f"1000000000 DIV (CAST({RRF_K} AS BIGINT) + rank_sem)"),
         ).otherwise(F.lit(0).cast("long"))
     )
     return (
@@ -698,7 +695,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k_rrf: int = RRF_K,
             contrib.cast("long").alias("rrf_nano"),
         )
         .orderBy(F.desc("rrf_nano"), "doc_id")
-        .limit(top)
+        .limit(RRF_TOP)
     )
 
 
@@ -722,8 +719,7 @@ SEMDEDUP_THR_MILLI = 950        # cosine threshold, milli-units (0.95)
 SEMDEDUP_SIGN_IDX = (1, 17, 33, 49)  # 1-based axis-plane coordinates
 
 
-def semdedup_assign(emb: DataFrame,
-                    sign_idx: tuple = SEMDEDUP_SIGN_IDX) -> DataFrame:
+def semdedup_assign(emb: DataFrame) -> DataFrame:
     """Cell assignment for :func:`semdedup_prune`: int8-quantize each
     vector (the :func:`embedding_quantize_int8` formula) and bucket it
     by the SIGN BITS of fixed coordinates — axis-aligned hyperplane
@@ -749,7 +745,7 @@ def semdedup_assign(emb: DataFrame,
         lambda acc, x: acc + x,
     )
     cell = None
-    for bit, idx in enumerate(sign_idx):
+    for bit, idx in enumerate(SEMDEDUP_SIGN_IDX):
         term = F.when(
             F.element_at("qcodes", idx) >= 0, F.lit(1 << bit)
         ).otherwise(F.lit(0))
@@ -792,8 +788,7 @@ def planted_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def semdedup_core(emb: DataFrame,
-                  thr_milli: int = SEMDEDUP_THR_MILLI) -> DataFrame:
+def semdedup_core(emb: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by pruning,
     within each embedding-space cell, every vector whose cosine to a
     LOWER-id cell-mate clears the threshold — the min-id representative
@@ -813,7 +808,7 @@ def semdedup_core(emb: DataFrame,
 
     Scale shape (100 TB): assignment is map-only; the pair search is a
     self-equi-join ON CELL (hash-partitioned by cell — never all-pairs;
-    widen ``sign_idx`` so expected cell size stays bounded as the
+    widen ``SEMDEDUP_SIGN_IDX`` so expected cell size stays bounded as the
     corpus grows, exactly how SemDeDup scales k with corpus size);
     the prune applies via one distinct + left anti-style join keyed on
     vec_id.  Skewed mega-cells split under AQE; a production run salts
@@ -832,7 +827,7 @@ def semdedup_core(emb: DataFrame,
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    thr2 = int(thr_milli) * int(thr_milli)
+    thr2 = SEMDEDUP_THR_MILLI * SEMDEDUP_THR_MILLI
     pruned = (
         a.join(b, "cell")
         .where(F.col("va") < F.col("vb"))
@@ -860,15 +855,14 @@ def semdedup_core(emb: DataFrame,
     )
 
 
-def semdedup_prune(spark: SparkSession, sf_dir: str,
-                   thr_milli: int = SEMDEDUP_THR_MILLI) -> DataFrame:
+def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`semdedup_core` over the planted-duplicate view — see
     :func:`planted_dup_embeddings` for why the test corpus needs
     planting.  The planted view inherits the starved scan layout, so it
     is fanned out before the quantize/cell/pair stages."""
     planted = planted_dup_embeddings(spark, sf_dir)
     planted = fan_out_scan(spark, planted, _emb(spark, sf_dir))
-    return semdedup_core(planted, thr_milli)
+    return semdedup_core(planted)
 
 
 CONV_MOD = 40  # vec_id → conv_id mapping, aligned with the dtr view
@@ -1118,13 +1112,7 @@ CB_QUERY_DOC = 0       # whose token vectors are the query
 CB_TOP = 10
 
 
-def colbert_maxsim_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    toks_per_doc: int = CB_TOKS_PER_DOC,
-    query_doc: int = CB_QUERY_DOC,
-    top: int = CB_TOP,
-) -> DataFrame:
+def colbert_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction retrieval (ColBERT, Khattab & Zaharia 2020):
     documents and queries are BAGS of token vectors, and the relevance
     score is MaxSim — for every query token take the best-matching
@@ -1134,7 +1122,7 @@ def colbert_maxsim_topk(
     vector stores (PLAID, Vespa, Lucene 9 joins) implement natively.
 
     Token vectors are modeled on the embeddings table: contiguous
-    ``toks_per_doc`` blocks of ``vec_id`` form a pseudo-document (the
+    ``CB_TOKS_PER_DOC`` blocks of ``vec_id`` form a pseudo-document (the
     same deterministic grouping device as ``conv_embedding_pool``'s
     conversation axis).  Scoring runs over
     :func:`embedding_quantize_int8` codes, so every dot product is
@@ -1142,7 +1130,7 @@ def colbert_maxsim_topk(
     exactly how production multi-vector stores score (SIMD int8).
 
     Scale shape (100 TB): quantization is a map-only HOF projection of
-    the UNSHUFFLED corpus token table; the query's ≤``toks_per_doc``
+    the UNSHUFFLED corpus token table; the query's ≤``CB_TOKS_PER_DOC``
     token rows broadcast onto it (nested-loop of corpus × |Q|, the
     irreducible MaxSim work); the per-(doc, query-token) max and the
     per-doc sum are both map-side-combinable aggregates whose shuffle
@@ -1151,14 +1139,14 @@ def colbert_maxsim_topk(
     stage (``ann_topk``) so the broadcast hits candidates, not the full
     corpus — the scoring plan is identical.
 
-    Output: ``(doc_id, n_qtok, maxsim)`` — top-*top* by (maxsim desc,
+    Output: ``(doc_id, n_qtok, maxsim)`` — top-``CB_TOP`` by (maxsim desc,
     doc_id)."""
     toks = _int8_codes(_emb(spark, sf_dir)).select(
-        F.expr(f"vec_id DIV {toks_per_doc}").alias("doc_id"),
+        F.expr(f"vec_id DIV {CB_TOKS_PER_DOC}").alias("doc_id"),
         F.col("vec_id").alias("tok_id"),
         "q_codes",
     )
-    qtoks = toks.where(F.col("doc_id") == query_doc).select(
+    qtoks = toks.where(F.col("doc_id") == CB_QUERY_DOC).select(
         F.col("tok_id").alias("q_tok"), F.col("q_codes").alias("p_codes")
     )
     dot = F.aggregate(
@@ -1179,7 +1167,7 @@ def colbert_maxsim_topk(
             F.sum("best").cast("long").alias("maxsim"),
         )
         .orderBy(F.desc("maxsim"), "doc_id")
-        .limit(top)
+        .limit(CB_TOP)
     )
 
 
@@ -1187,12 +1175,7 @@ HN_QUERIES = 5  # vec_ids whose embeddings act as anchors
 HN_K = 5        # hard negatives returned per anchor
 
 
-def hard_negative_mining(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = HN_QUERIES,
-    k: int = HN_K,
-) -> DataFrame:
+def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive embedding training: for
     each anchor vector, the top-k most-similar vectors with a
     DIFFERENT label — the negatives that actually move a contrastive
@@ -1204,7 +1187,7 @@ def hard_negative_mining(
     :func:`embedding_quantize_int8` codes — pure bigint, hash-checkable
     cross-engine, and the production scoring path.
 
-    Scale shape: the anchor set (≤ ``n_queries`` rows) broadcasts onto
+    Scale shape: the anchor set (≤ ``HN_QUERIES`` rows) broadcasts onto
     the UNSHUFFLED quantized corpus; the label-mismatch predicate rides
     the join; per-anchor top-k is a WindowGroupLimit on the
     (anchor-keyed) ranked stream — the corpus never shuffles.  At
@@ -1213,7 +1196,7 @@ def hard_negative_mining(
 
     Output: ``(query_id, vec_id, dot_q, rank)`` — k rows per anchor."""
     codes = _int8_codes(_emb(spark, sf_dir), "label")
-    anchors = codes.where(F.col("vec_id") < n_queries).select(
+    anchors = codes.where(F.col("vec_id") < HN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
         F.col("q_codes").alias("p_codes"),
@@ -1232,7 +1215,7 @@ def hard_negative_mining(
     w = Window.partitionBy("query_id").orderBy(F.desc("dot_q"), "vec_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= HN_K)
         .select(
             "query_id",
             "vec_id",
@@ -1245,7 +1228,7 @@ def hard_negative_mining(
 KC_K = 6  # coreset size (seed + 5 greedy picks)
 
 
-def kcenter_coreset(spark: SparkSession, sf_dir: str, k: int = KC_K) -> DataFrame:
+def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center coreset selection (Gonzalez 1985; the diversity
     data-pruning strategy of Sener & Savarese 2018): repeatedly pick
     the point FARTHEST from everything already chosen — the k points
@@ -1284,7 +1267,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str, k: int = KC_K) -> DataFram
     seed = codes.where(F.col("vec_id") == 0).collect()[0]
     sel = [(0, 0, 0)]
     chosen_codes = [seed["q_codes"]]
-    for r in range(1, k):
+    for r in range(1, KC_K):
         mind = dist2_to(chosen_codes[0])
         for c in chosen_codes[1:]:
             mind = F.least(mind, dist2_to(c))

@@ -28,8 +28,7 @@ HEADING_SCHEMA = (
 _H_TAGS = ["h1", "h2", "h3", "h4", "h5", "h6"]
 
 
-def extract_headings(df: DataFrame, html_col: str = "html",
-                     id_col: str = "doc_id") -> DataFrame:
+def extract_headings(df: DataFrame) -> DataFrame:
     """One output row per ``<h1>``–``<h6>`` in document order:
     ``(doc_id, pos, level, section_no, text)``.
 
@@ -47,7 +46,7 @@ def extract_headings(df: DataFrame, html_col: str = "html",
 
         for batch in iterator:
             ids, poss, lvls, secs, texts = [], [], [], [], []
-            for doc_id, html in zip(batch[id_col], batch[html_col]):
+            for doc_id, html in zip(batch["doc_id"], batch["html"]):
                 if html is None:
                     continue
                 try:
@@ -78,6 +77,6 @@ def extract_headings(df: DataFrame, html_col: str = "html",
             )
 
     return (
-        df.select(F.col(id_col), F.col(html_col))
+        df.select(F.col("doc_id"), F.col("html"))
         .mapInPandas(kernel, schema=HEADING_SCHEMA)
     )

@@ -36,23 +36,19 @@ def _epoch_us(c: Column) -> Column:
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "ts",
-    by: str = "user_id",
     right_cols: tuple = (),
-    tolerance_us: int | None = None,
 ) -> DataFrame:
     """Backward as-of join: for every left row attach the latest right row
-    of the same ``by`` key with ``right.on <= left.on`` (ties: the right
+    of the same ``user_id`` with ``right.ts <= left.ts`` (ties: the right
     row at the exact same instant matches).  Right columns come back
     prefixed ``asof_``, plus ``asof_lag_us`` (exact integer microsecond
-    gap); all NULL when no right row precedes the left row, or when the
-    gap exceeds ``tolerance_us``.
+    gap); all NULL when no right row precedes the left row.
 
     Scale shape: union the two sides (map-only), ONE shuffle partitioning
-    by ``by``, one ordered window doing last-non-null carry-forward, then
+    by ``user_id``, one ordered window doing last-non-null carry-forward, then
     filter back to left rows.  No join node at all, so no skew/broadcast
     decision to get wrong; cost is a sort within each key partition.
-    Right rows sharing an exact (by, on) instant must be unique (dedup
+    Right rows sharing an exact (user_id, ts) instant must be unique (dedup
     upstream) — carry-forward would otherwise pick the last in sort
     order, which is nondeterministic across engines."""
     right_cols = tuple(right_cols)
@@ -66,18 +62,18 @@ def asof_join(
     )
     r = right.select(
         *[
-            F.col(c) if c in (on, by) else F.lit(None).cast(
+            F.col(c) if c in ("ts", "user_id") else F.lit(None).cast(
                 left.schema[c].dataType
             ).alias(c)
             for c in left_cols
         ],
         F.lit(0).alias("_side"),
         *[F.col(c).alias(f"_r_{c}") for c in right_cols],
-        _epoch_us(F.col(on)).alias("_r_us"),
+        _epoch_us(F.col("ts")).alias("_r_us"),
     )
     w = (
-        Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), F.col("_side").asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = l.unionByName(r).select(
@@ -88,34 +84,21 @@ def asof_join(
         F.last("_r_us", ignorenulls=True).over(w).alias("_m_us"),
     )
     out = carried.where(F.col("_side") == 1).drop("_side")
-    lag = _epoch_us(F.col(on)) - F.col("_m_us")
-    if tolerance_us is not None:
-        ok = lag <= F.lit(int(tolerance_us))
-        out = out.select(
-            *left_cols,
-            *[F.when(ok, F.col(f"asof_{c}")).alias(f"asof_{c}")
-              for c in right_cols],
-            F.when(ok, lag).alias("asof_lag_us"),
-        )
-    else:
-        out = out.select(
-            *left_cols,
-            *[F.col(f"asof_{c}") for c in right_cols],
-            lag.alias("asof_lag_us"),
-        )
-    return out
+    lag = _epoch_us(F.col("ts")) - F.col("_m_us")
+    return out.select(
+        *left_cols,
+        *[F.col(f"asof_{c}") for c in right_cols],
+        lag.alias("asof_lag_us"),
+    )
 
 
 def range_join(
     points: DataFrame,
     ranges: DataFrame,
-    point_ts: str = "ts",
-    range_start: str = "start_ts",
-    range_end: str = "end_ts",
     bin_us: int = 4 * 3600 * 1_000_000,
 ) -> DataFrame:
     """Interval-containment join: every (point, range) pair with
-    ``range_start <= point_ts <= range_end`` (inclusive both ends).
+    ``start_ts <= ts <= end_ts`` (inclusive both ends).
     Returns all point columns + all range columns.
 
     Scale shape: each range explodes to the ``ceil(len/bin)+1`` fixed
@@ -128,38 +111,34 @@ def range_join(
     own plan for the raw inequality predicate is a nested-loop cross —
     O(points × ranges) — which this composition avoids entirely."""
     p = points.withColumn(
-        "_bin", F.floor(_epoch_us(F.col(point_ts)) / F.lit(bin_us))
+        "_bin", F.floor(_epoch_us(F.col("ts")) / F.lit(bin_us))
     )
     r = ranges.withColumn(
         "_bin",
         F.explode(
             F.sequence(
-                F.floor(_epoch_us(F.col(range_start)) / F.lit(bin_us)),
-                F.floor(_epoch_us(F.col(range_end)) / F.lit(bin_us)),
+                F.floor(_epoch_us(F.col("start_ts")) / F.lit(bin_us)),
+                F.floor(_epoch_us(F.col("end_ts")) / F.lit(bin_us)),
             )
         ),
     )
     return (
         p.join(r, "_bin")
         .where(
-            F.col(point_ts).between(F.col(range_start), F.col(range_end))
+            F.col("ts").between(F.col("start_ts"), F.col("end_ts"))
         )
         .drop("_bin")
     )
 
 
-def gap_fill_locf(
-    events: DataFrame,
-    by: str = "user_id",
-    ts: str = "ts",
-    val: str = "value",
-    tiebreak: str = "event_id",
-    unit_us: int = 3_600 * 1_000_000,
-) -> DataFrame:
+LOCF_UNIT_US = 3_600 * 1_000_000  # grid step: one hour
+
+
+def gap_fill_locf(events: DataFrame) -> DataFrame:
     """Time-series resampling with last-observation-carried-forward: each
-    ``by`` key's events are bucketed onto a regular *unit_us* grid spanning
-    its own [min, max] bucket range; buckets with events keep the LAST
-    event's value (latest ``ts``, ``tiebreak`` desc — deterministic under
+    ``user_id``'s events are bucketed onto a regular ``LOCF_UNIT_US`` grid
+    spanning its own [min, max] bucket range; buckets with events keep the
+    LAST event's ``value`` (latest ``ts``, ``event_id`` desc — deterministic under
     same-instant events), empty buckets carry the previous bucket's value
     forward and are flagged ``is_gap``.  The batch analogue of a
     watermarked streaming resample, and the alignment step every
@@ -173,13 +152,13 @@ def gap_fill_locf(
     key over grid-sized (not event-sized) data.  No Python, no driver
     loops; value is carried verbatim (no float arithmetic), so the
     output is hash-exact against an independent engine."""
-    unit = F.lit(unit_us)
+    unit = F.lit(LOCF_UNIT_US)
     e = events.select(
-        F.col(by).alias("k"),
-        _epoch_us(F.col(ts)).alias("us"),
-        F.col(val).alias("v"),
-        F.col(tiebreak).alias("tb"),
-    ).withColumn("bucket", F.expr(f"us DIV {unit_us}"))
+        F.col("user_id").alias("k"),
+        _epoch_us(F.col("ts")).alias("us"),
+        F.col("value").alias("v"),
+        F.col("event_id").alias("tb"),
+    ).withColumn("bucket", F.expr(f"us DIV {LOCF_UNIT_US}"))
     w_last = Window.partitionBy("k", "bucket").orderBy(
         F.desc("us"), F.desc("tb")
     )
@@ -202,7 +181,7 @@ def gap_fill_locf(
     return (
         grid.join(per_bucket, ["k", "bucket"], "left")
         .select(
-            F.col("k").alias(by),
+            F.col("k").alias("user_id"),
             (F.col("bucket") * unit).alias("bucket_us"),
             F.last("v", ignorenulls=True).over(w_fill).alias("value_filled"),
             F.col("has_row").isNull().alias("is_gap"),
@@ -214,18 +193,16 @@ ZSCORE_WINDOW = 20
 ZSCORE_Z2 = 4  # flag when z² > 4, i.e. |z| > 2
 
 
-def zscore_outliers(events: DataFrame,
-                    window: int = ZSCORE_WINDOW,
-                    z2: int = ZSCORE_Z2) -> DataFrame:
+def zscore_outliers(events: DataFrame) -> DataFrame:
     """Rolling z-score outlier detection per user: flag an event whose
-    value deviates more than |z| > √*z2* standard deviations from the
-    trailing *window* events' mean — the batch analogue of a streaming
+    value deviates more than |z| > √ZSCORE_Z2 standard deviations from the
+    trailing ``ZSCORE_WINDOW`` events' mean — the batch analogue of a streaming
     anomaly monitor, in EXACT integer arithmetic.
 
     Values are fixed-pointed to milli-units; the trailing frame
-    (``ROWS BETWEEN window PRECEDING AND 1 PRECEDING`` — the current
+    (``ROWS BETWEEN ZSCORE_WINDOW PRECEDING AND 1 PRECEDING`` — the current
     row never contaminates its own baseline) accumulates Σx and Σx² as
-    int64, and the test ``(n·v − s)² > z2·(n·q − s²)`` is the z² > z2
+    int64, and the test ``(n·v − s)² > ZSCORE_Z2·(n·q − s²)`` is the z² > ZSCORE_Z2
     inequality cleared of divisions and square roots — every compared
     quantity is an exact integer, so engines agree bit-for-bit and a
     SQL oracle can check the flagged set directly (float window sums
@@ -233,12 +210,12 @@ def zscore_outliers(events: DataFrame,
     order, DuckDB uses segment trees).  Only rows with a FULL trailing
     window are eligible (a short history has no stable baseline).
 
-    Magnitude safety: with values ≤ ~5·10^5 milli-units and window ≤
+    Magnitude safety: with values ≤ ~5·10^5 milli-units and a window ≤
     ~10³, every term stays ≤ ~10^15 < 2^63.
 
     Plan: one window over (user_id ORDER BY ts, event_id) — a single
     hash partition + in-partition sort, streaming state of one
-    ``window``-row ring buffer; no joins, no Python.  Output: the
+    ``ZSCORE_WINDOW``-row ring buffer; no joins, no Python.  Output: the
     flagged events ``(event_id, user_id, value_milli, win_sum,
     win_sumsq)``."""
     v = F.round(F.col("value") * 1000).cast("long")
@@ -246,7 +223,7 @@ def zscore_outliers(events: DataFrame,
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
-        .rowsBetween(-window, -1)
+        .rowsBetween(-ZSCORE_WINDOW, -1)
     )
     framed = base.select(
         "event_id",
@@ -265,15 +242,14 @@ def zscore_outliers(events: DataFrame,
     dev2 = (n * v0 - s) * (n * v0 - s)
     var_n2 = n * q - s * s
     return framed.where(
-        (n == window) & (dev2 > F.lit(z2) * var_n2)
+        (n == ZSCORE_WINDOW) & (dev2 > F.lit(ZSCORE_Z2) * var_n2)
     ).select("event_id", "user_id", "value_milli", "win_sum", "win_sumsq")
 
 
 RETENTION_EPOCH = "2024-01-01"  # week-index origin (testdata starts here)
 
 
-def retention_cohorts(events: DataFrame,
-                      epoch: str = RETENTION_EPOCH) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Weekly retention-cohort matrix — the standard activation/churn
     rollup of any event-stream product analytics (and, for a training
     pipeline, the user-activity weighting signal): users are cohorted
@@ -297,7 +273,7 @@ def retention_cohorts(events: DataFrame,
     user) before the final cell rollup, so reducer keys never exceed
     user-cardinality.  Nothing driver-side."""
     wk = F.expr(
-        f"CAST(floor(datediff(CAST(ts AS DATE), DATE'{epoch}') / 7)"
+        f"CAST(floor(datediff(CAST(ts AS DATE), DATE'{RETENTION_EPOCH}') / 7)"
         " AS BIGINT)"
     )
     e = events.select("user_id", wk.alias("wk"))
@@ -324,7 +300,7 @@ COGROUP_ASOF_SCHEMA = (
 )
 
 
-def cogroup_merge_asof(spark, sf_dir: str, buckets: int | None = None) -> DataFrame:
+def cogroup_merge_asof(spark, sf_dir: str) -> DataFrame:
     """Backward as-of attribution of every click to the user's latest
     preceding view, via the one Pandas-on-Spark operator family the
     engine didn't yet exercise: ``groupBy().cogroup().applyInPandas``.
@@ -363,11 +339,7 @@ def cogroup_merge_asof(spark, sf_dir: str, buckets: int | None = None) -> DataFr
 
     Output: ``(user_id, click_event, click_us, view_event, view_us,
     gap_us)``; view columns NULL when no view precedes the click."""
-    if buckets is None:
-        buckets = max(spark.sparkContext.defaultParallelism * 4, 16)
-    if buckets < 1:
-        # pmod(.., 0) is NULL: every user would collapse into one bucket
-        raise ValueError(f"buckets must be >= 1, got {buckets}")
+    buckets = max(spark.sparkContext.defaultParallelism * 4, 16)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     us = _epoch_us(F.col("ts"))
     # NULL users get the reserved bucket -1 (pmod is always in [0, B)):
@@ -498,8 +470,7 @@ LATE_WATERMARK_S = 3600   # audited watermark: 1 hour
 LATE_MAX_DELAY_S = 7200   # synthetic arrival skew: 0..2h
 
 
-def late_data_audit(spark, sf_dir: str,
-                    watermark_s: int = LATE_WATERMARK_S) -> DataFrame:
+def late_data_audit(spark, sf_dir: str) -> DataFrame:
     """Watermark-tuning audit — the batch replay every streaming team
     runs before picking ``withWatermark``'s delay: with arrival order
     reconstructed, how many rows would a W-second watermark DROP (rows
@@ -545,11 +516,11 @@ def late_data_audit(spark, sf_dir: str,
     )
     return flagged.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum((F.col("lateness_s") > watermark_s).cast("long"))
+        F.sum((F.col("lateness_s") > LATE_WATERMARK_S).cast("long"))
         .cast("long")
         .alias("n_late"),
         F.expr(
-            f"CAST(sum(CASE WHEN lateness_s > {watermark_s} THEN 1 ELSE 0"
+            f"CAST(sum(CASE WHEN lateness_s > {LATE_WATERMARK_S} THEN 1 ELSE 0"
             " END) * 1000000 DIV count(*) AS BIGINT)"
         ).alias("late_ppm"),
         F.max("lateness_s").cast("long").alias("max_lateness_s"),

@@ -141,15 +141,17 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lang_id_chargram(
-    spark: SparkSession, sf_dir: str, top_n: int = 20
-) -> DataFrame:
+CHARGRAM_TOP_N = 20  # char-grams kept per language profile
+
+
+
+def lang_id_chargram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-bigram language ID — the n-gram-profile method (Cavnar &
     Trenkle 1994, public) that works where word markers can't (Chinese has
     no spaces, so ``lang_id``'s marker words never fire).
 
     Self-trained on the corpus's own labels: each language's profile is
-    its ``top_n`` most frequent char bigrams; a document's score per
+    its ``CHARGRAM_TOP_N`` most frequent char bigrams; a document's score per
     language is how many of its bigram OCCURRENCES fall in that profile,
     and the prediction is the integer-deterministic argmax (hit count
     desc, language asc — all hits share the doc's denominator, so ordering
@@ -188,7 +190,7 @@ def lang_id_chargram(
         doc_bg.groupBy(F.col("lang").alias("plang"), "bg")
         .agg(F.count("*").alias("c"))
         .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= top_n)
+        .where(F.col("rk") <= CHARGRAM_TOP_N)
         .select("plang", "bg")
     )
     scored = (
@@ -276,11 +278,11 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tok_arr(col="text"):
+def _tok_arr():
     """Shared corpus tokenizer: lowercase, split on explicit ASCII
     whitespace (RE2 ∩ Java \\s common subset), drop empties."""
     return F.filter(
-        F.split(F.lower(F.trim(col)), r"[ \t\r\n\f\v]+"), lambda x: x != ""
+        F.split(F.lower(F.trim("text")), r"[ \t\r\n\f\v]+"), lambda x: x != ""
     )
 
 
@@ -300,7 +302,11 @@ def vocab_topk(spark: SparkSession, sf_dir: str, k: int = 100) -> DataFrame:
     )
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+TFIDF_K = 3  # top terms per document
+
+
+
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-k characteristic terms by TF-IDF.
 
     The ranking key is (term frequency DESC, token ASC) — all-integer, so
@@ -334,7 +340,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
             F.sum("c").over(w_doc).alias("doc_toks"),
             F.row_number().over(w_rank).alias("rk"),
         )
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= TFIDF_K)
     )
     n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
     return ranked.crossJoin(F.broadcast(n_docs)).select(
@@ -475,18 +481,21 @@ def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def inverted_index(spark: SparkSession, sf_dir: str,
-                   max_postings: int = 16) -> DataFrame:
+MAX_POSTINGS = 16  # doc_ids listed per term
+
+
+
+def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build — the IR-side companion to ``vocab_topk``:
     one row per distinct token with its document frequency, total term
-    frequency, and a CAPPED ascending posting list (first *max_postings*
+    frequency, and a CAPPED ascending posting list (first ``MAX_POSTINGS``
     doc_ids, comma-joined so the oracle hash is string-exact).
 
     Scale shape: (tok, doc_id) term frequencies are one map-side-combined
     agg shuffle; the posting cap is applied with a row_number window over
     the SAME tok partitioning BEFORE the final collect_list, so a
     stop-word token ("the": ~every doc on the open web) contributes at
-    most *max_postings* elements to any in-memory list — an UNCAPPED
+    most ``MAX_POSTINGS`` elements to any in-memory list — an UNCAPPED
     collect_list per token is the classic inverted-index OOM at web
     scale.  df/tf still aggregate over the full relation, exactly."""
     from pyspark.sql.window import Window
@@ -506,7 +515,7 @@ def inverted_index(spark: SparkSession, sf_dir: str,
             F.transform(
                 F.array_sort(
                     F.collect_list(
-                        F.when(F.col("rn") <= max_postings, F.col("doc_id"))
+                        F.when(F.col("rn") <= MAX_POSTINGS, F.col("doc_id"))
                     )
                 ),
                 lambda x: x.cast("string"),
@@ -705,12 +714,16 @@ def collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bpe_pair_counts(spark: SparkSession, sf_dir: str, k: int = 200) -> DataFrame:
+BPE_PAIR_K = 200  # most frequent pairs returned
+
+
+
+def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide adjacent character-pair counts — the distributed
     counting kernel of one byte-pair-encoding merge step (Sennrich et
     al. 2016: each BPE round merges the corpus's most frequent adjacent
     symbol pair; tokenizer training is this count iterated).  Output:
-    the top-*k* pairs as ``(pair, n)``, total-ordered by
+    the top-``BPE_PAIR_K`` pairs as ``(pair, n)``, total-ordered by
     (n DESC, pair ASC) so the cut is engine-exact.
 
     Plan: a map-only pair generation — ``transform(sequence(...))`` +
@@ -736,7 +749,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str, k: int = 200) -> DataFrame
         pairs.groupBy("pair")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("pair"))
-        .limit(k)
+        .limit(BPE_PAIR_K)
     )
 
 
@@ -872,8 +885,7 @@ def doc_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEG_SAMPLE_TOPK = 200
 
 
-def unigram_neg_sampling_weights(spark: SparkSession, sf_dir: str,
-                                 k: int = NEG_SAMPLE_TOPK) -> DataFrame:
+def unigram_neg_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The word2vec negative-sampling distribution (Mikolov et al.):
     token drawn proportionally to ``count^0.75`` — the smoothing every
     contrastive text-embedding trainer uses to keep frequent tokens
@@ -884,7 +896,7 @@ def unigram_neg_sampling_weights(spark: SparkSession, sf_dir: str,
     micro-units before the normalizing sum (the PMI/BM25 pattern);
     probabilities are integer floor-division in parts-per-million.
 
-    Output: top-*k* tokens by count (tok tiebreak):
+    Output: top-``NEG_SAMPLE_TOPK`` tokens by count (tok tiebreak):
     ``(tok, cnt, w_micro, samp_ppm)``.
 
     Scale shape: the token count is the corpus's one big map-side-
@@ -915,7 +927,7 @@ def unigram_neg_sampling_weights(spark: SparkSession, sf_dir: str,
             ),
         )
         .orderBy(F.desc("cnt"), "tok")
-        .limit(k)
+        .limit(NEG_SAMPLE_TOPK)
     )
 
 
@@ -1097,7 +1109,11 @@ CMS_W = 128  # count–min sketch width (buckets per row; sized so the
 # synthetic corpus vocabulary actually collides and the upward bias shows)
 
 
-def cms_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+CMS_K = 20  # heavy hitters returned
+
+
+
+def cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count–min-sketch heavy hitters (Cormode & Muthukrishnan 2005):
     the mergeable frequency sketch every streaming/telemetry pipeline
     uses where exact per-key counts don't fit.  The sketch is BUILT
@@ -1145,11 +1161,15 @@ def cms_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
             (F.col("est") - F.col("exact_n")).alias("overcount"),
         )
         .orderBy(F.desc("est"), F.asc("tok"))
-        .limit(k)
+        .limit(CMS_K)
     )
 
 
-def kn_continuation(spark: SparkSession, sf_dir: str, k: int = 30) -> DataFrame:
+KN_K = 30  # words returned
+
+
+
+def kn_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kneser–Ney continuation counts — the lower-order distribution of
     the best-performing classical n-gram smoother (Kneser & Ney 1995;
     Chen & Goodman 1999): a word's unigram weight is the number of
@@ -1193,7 +1213,7 @@ def kn_continuation(spark: SparkSession, sf_dir: str, k: int = 30) -> DataFrame:
             ),
         )
         .orderBy(F.desc("cont_types"), F.asc("w"))
-        .limit(k)
+        .limit(KN_K)
     )
 
 
@@ -1636,8 +1656,7 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 OOV_VOCAB_K = 50
 
 
-def oov_rate_report(spark: SparkSession, sf_dir: str,
-                    k: int = OOV_VOCAB_K) -> DataFrame:
+def oov_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-coverage audit — the tokenizer-eval step between
     vocabulary training and committing to it: against the corpus's own
     top-``k`` token vocabulary, what fraction of each source's token
@@ -1651,7 +1670,7 @@ def oov_rate_report(spark: SparkSession, sf_dir: str,
     exact.
 
     Output: ``(source, n_tokens, n_oov, oov_ppm)``."""
-    vocab = vocab_topk(spark, sf_dir, k).select(
+    vocab = vocab_topk(spark, sf_dir, OOV_VOCAB_K).select(
         "tok", F.lit(1).alias("_in")
     )
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
@@ -1668,15 +1687,15 @@ def oov_rate_report(spark: SparkSession, sf_dir: str,
     )
 
 
-def term_chi2_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    pos_lang: str = "en",
-    k: int = 25,
-    min_df: int = 5,
-) -> DataFrame:
+CHI2_POS_LANG = "en"  # the positive class
+CHI2_K = 25  # terms returned
+CHI2_MIN_DF = 5  # document-frequency floor
+
+
+
+def term_chi2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square feature selection of vocabulary terms against a binary
-    document label (here ``lang == pos_lang``) — the term-selection step
+    document label (here ``lang == CHI2_POS_LANG``) — the term-selection step
     of a fastText-style quality/domain classifier (pick the terms whose
     presence is most dependent on the label, then hash only those).
 
@@ -1706,19 +1725,19 @@ def term_chi2_topk(
     (term) aggregate carrying both counts → scalar totals via a 1-row
     aggregate (bounded driver read, same contract as the centroid /
     bucket-list collects) → map-only scoring → TakeOrderedAndProject
-    top-k.  The ``min_df`` gate prunes the hapax tail before scoring.
+    top-k.  The ``CHI2_MIN_DF`` gate prunes the hapax tail before scoring.
 
     Output: ``(tok, df, pos_df, chi2_micro)`` top-k by score."""
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     totals = docs.agg(
         F.count("*").alias("n"),
-        F.sum((F.col("lang") == pos_lang).cast("long")).alias("p"),
+        F.sum((F.col("lang") == CHI2_POS_LANG).cast("long")).alias("p"),
     ).first()
     n_docs, n_pos = int(totals["n"]), int(totals["p"])
     n_neg = n_docs - n_pos
     if n_pos == 0 or n_neg == 0:
         raise ValueError(
-            f"term_chi2_topk needs both classes present: lang={pos_lang!r} "
+            f"term_chi2_topk needs both classes present: lang={CHI2_POS_LANG!r} "
             f"labels {n_pos} of {n_docs} docs"
         )
     # 128-bit safety bound (see docstring): worst-case numerator
@@ -1733,7 +1752,7 @@ def term_chi2_topk(
         )
     per_term = (
         docs.select(
-            (F.col("lang") == pos_lang).cast("long").alias("pos"),
+            (F.col("lang") == CHI2_POS_LANG).cast("long").alias("pos"),
             F.explode(F.array_distinct(_tok_arr())).alias("tok"),
         )
         .groupBy("tok")
@@ -1741,7 +1760,7 @@ def term_chi2_topk(
             F.count("*").cast("long").alias("df"),
             F.sum("pos").cast("long").alias("pos_df"),
         )
-        .where(F.col("df") >= min_df)
+        .where(F.col("df") >= CHI2_MIN_DF)
     )
     num = F.col("pos_df") * F.lit(n_neg) - (
         F.col("df") - F.col("pos_df")
@@ -1769,7 +1788,7 @@ def term_chi2_topk(
             .alias("chi2_micro"),
         )
         .orderBy(F.desc("chi2_micro"), F.asc("tok"))
-        .limit(k)
+        .limit(CHI2_K)
     )
 
 
@@ -1956,8 +1975,7 @@ def classifier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 UNCERTAIN_K = 20  # most-uncertain docs returned
 
 
-def uncertainty_sample(spark: SparkSession, sf_dir: str,
-                       k: int = UNCERTAIN_K) -> DataFrame:
+def uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin-based uncertainty sampling — the active-learning loop's
     acquisition step: the documents the classifier is LEAST sure about
     (smallest gap between its best and second-best class scores) are
@@ -1990,5 +2008,5 @@ def uncertainty_sample(spark: SparkSession, sf_dir: str,
             (best - second).cast("long").alias("margin"),
         )
         .orderBy("margin", "doc_id")
-        .limit(k)
+        .limit(UNCERTAIN_K)
     )

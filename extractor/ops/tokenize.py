@@ -40,15 +40,14 @@ END_OF_WORD = "</w>"
 
 # ---------------------------------------------------------------- learning
 
-def word_counts(docs: DataFrame, col: str = "text",
-                max_vocab: int = 10_000) -> DataFrame:
+def word_counts(docs: DataFrame, max_vocab: int = 10_000) -> DataFrame:
     """Distinct-word frequency table, capped to the *max_vocab* most
     frequent words (ties broken by word ASC — engine-exact cut).  The
     single distributed pass of BPE training: split on ASCII whitespace,
     lowercase, one count-distinct aggregate, top-k without global sort."""
-    words = docs.where(F.col(col).isNotNull()).select(
+    words = docs.where(F.col("text").isNotNull()).select(
         F.explode(
-            F.split(F.lower(F.trim(F.col(col))), r"[ \t\r\n\f\v]+")
+            F.split(F.lower(F.trim(F.col("text"))), r"[ \t\r\n\f\v]+")
         ).alias("word")
     ).where(F.col("word") != "")
     return (
@@ -113,16 +112,15 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return seq
 
 
-def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
-               col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Map-only distributed encode: broadcast the merge ranks, Arrow
     ``mapInPandas`` over the corpus, per-word memo cache.  Output one
-    row per input row: ``(id_col, n_words, n_tokens, tokens_md5)`` —
+    row per input row: ``(doc_id, n_words, n_tokens, tokens_md5)`` —
     the md5 is over the space-joined token stream, so the oracle-style
     golden checks pin the exact segmentation, not just counts."""
     ranks = {p: i for i, p in enumerate(merges)}
     out_schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
+        T.StructField("doc_id", T.LongType()),
         T.StructField("n_words", T.LongType()),
         T.StructField("n_tokens", T.LongType()),
         T.StructField("tokens_md5", T.StringType()),
@@ -146,7 +144,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
 
         for pdf in batches:
             ids, nw, nt, h = [], [], [], []
-            for rid, text in zip(pdf[id_col], pdf[col]):
+            for rid, text in zip(pdf["doc_id"], pdf["text"]):
                 words = [w for w in ws.split((text or "").lower().strip())
                          if w]
                 toks: list[str] = []
@@ -157,26 +155,29 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
                 nt.append(len(toks))
                 h.append(hashlib.md5(" ".join(toks).encode()).hexdigest())
             yield pd.DataFrame(
-                {id_col: ids, "n_words": nw, "n_tokens": nt,
+                {"doc_id": ids, "n_words": nw, "n_tokens": nt,
                  "tokens_md5": h})
 
-    return docs.select(id_col, col).mapInPandas(encode_batches, out_schema)
+    return docs.select("doc_id", "text").mapInPandas(encode_batches, out_schema)
 
 
 # ------------------------------------------------------- (spark, sf_dir)
 
-def bpe_encode_corpus(spark: SparkSession, sf_dir: str,
-                      n_merges: int = 50,
-                      max_vocab: int = 2_000) -> DataFrame:
+BPE_MERGES = 50  # merges learned
+BPE_MAX_VOCAB = 2_000  # word types the merges are learned from
+
+
+
+def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end tokenizer pass over the ``documents`` table: learn
-    *n_merges* merges from the capped word-frequency table, then encode
+    ``BPE_MERGES`` merges from the capped word-frequency table, then encode
     every document.  Deterministic (count then word tiebreaks
     throughout), so the rows-only driver check is stable and the pytest
     goldens pin exact token streams."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     wf = [(r["word"], r["n"])
-          for r in word_counts(docs, max_vocab=max_vocab).collect()]
-    merges = learn_merges(wf, n_merges)
+          for r in word_counts(docs, max_vocab=BPE_MAX_VOCAB).collect()]
+    merges = learn_merges(wf, BPE_MERGES)
     return bpe_encode(docs.where(F.col("text").isNotNull()), merges)
 
 
@@ -234,15 +235,14 @@ def _viterbi_segment(word, logp, max_piece_len):
     return pieces
 
 
-def unigram_lm_em(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = 2,
-    max_piece_len: int = 4,
-    max_vocab: int = 300,
-    max_words: int = 2000,
-    top_k: int = 50,
-) -> DataFrame:
+ULM_ROUNDS = 2  # EM rounds
+ULM_MAX_PIECE_LEN = 4  # longest candidate piece (chars)
+ULM_MAX_VOCAB = 300  # seed pieces kept
+ULM_MAX_WORDS = 2000  # word types trained on
+ULM_TOP_K = 50  # pieces returned
+
+
+def unigram_lm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SentencePiece-style unigram-LM tokenizer training (Kudo 2018) —
     the probabilistic counterpart of :func:`bpe_encode_corpus`: seed a
     substring vocabulary, then EM rounds of (Viterbi-segment every word
@@ -250,10 +250,10 @@ def unigram_lm_em(
 
     Same scale posture as BPE learning: ONE corpus pass builds the
     distinct (word, count) table (the only data shuffle), capped to the
-    top ``max_words`` (Zipf: the head carries the mass).  Seeding is a
+    top ``ULM_MAX_WORDS`` (Zipf: the head carries the mass).  Seeding is a
     JVM-side substring explode + one aggregate over that capped table;
     the vocab is ALL single characters (guaranteeing segmentability)
-    plus the top ``max_vocab`` longer pieces.  Each E-step runs
+    plus the top ``ULM_MAX_VOCAB`` longer pieces.  Each E-step runs
     distributed — the piece log-prob dict (vocab-sized) broadcasts into
     an Arrow ``mapInPandas`` Viterbi kernel over the word table, usage
     aggregates with map-side combine — and the M-step collects only the
@@ -265,7 +265,7 @@ def unigram_lm_em(
     invariants (exact reconstruction, mass conservation, multi-char
     concentration, determinism) are pytest-pinned.
 
-    Output: top ``top_k`` pieces by final usage, ``(piece, n_uses,
+    Output: top ``ULM_TOP_K`` pieces by final usage, ``(piece, n_uses,
     prob_ppm)`` with ppm from exact integer division."""
     import math
 
@@ -284,22 +284,22 @@ def unigram_lm_em(
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("n"))
         .orderBy(F.desc("n"), F.asc("word"))
-        .limit(max_words)
+        .limit(ULM_MAX_WORDS)
         .persist()
     )
-    seed = substring_counts(words, max_piece_len)
+    seed = substring_counts(words, ULM_MAX_PIECE_LEN)
     chars = seed.where(F.length("piece") == 1)
     longer = (
         seed.where(F.length("piece") > 1)
         .orderBy(F.desc("count"), F.asc("piece"))
-        .limit(max_vocab)
+        .limit(ULM_MAX_VOCAB)
     )
     vocab_rows = chars.unionByName(longer).collect()  # bounded:
-    # ≤ alphabet + max_vocab rows — the M-step working set, never data
+    # ≤ alphabet + ULM_MAX_VOCAB rows — the M-step working set, never data
     counts = {r["piece"]: r["count"] for r in vocab_rows}
 
     out_schema = "piece string, n_uses long"
-    for _ in range(rounds):
+    for _ in range(ULM_ROUNDS):
         total = sum(counts.values())
         v = len(counts)
         logp = {
@@ -308,7 +308,7 @@ def unigram_lm_em(
         }
         blogp = spark.sparkContext.broadcast(logp)
 
-        def estep(batches, _mpl=max_piece_len):
+        def estep(batches, _mpl=ULM_MAX_PIECE_LEN):
             import pandas as pd
 
             for pdf in batches:
@@ -340,7 +340,7 @@ def unigram_lm_em(
     v = len(counts)
     final = sorted(
         counts.items(), key=lambda kv: (-kv[1], kv[0])
-    )[:top_k]
+    )[:ULM_TOP_K]
     rows = [
         (p, int(c), (int(c) + 1) * 1_000_000 // (total + v))
         for p, c in final
@@ -356,32 +356,27 @@ SPAN_BLOCK = 20   # tokens per corruption block
 SPAN_LEN = 3      # masked span length (3/20 = the T5 15% rate)
 
 
-def span_corruption_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    block: int = SPAN_BLOCK,
-    span_len: int = SPAN_LEN,
-) -> DataFrame:
+def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5-style span-corruption PLAN: for every document, the spans to
     mask and the sentinel each span maps to — the deterministic spec a
     denoising-pretraining data pipeline materializes before tensorizing
     (Raffel et al. 2020 §3.1.4: 15% corruption, mean span 3).
 
     Randomness is replaced by the engine's keyed-uniform primitive so
-    the plan is a pure function of the corpus: each ``block``-token
-    window masks exactly one ``span_len``-token span whose offset is
-    ``md5("span:" doc ":" blk) mod (block − span_len + 1)`` — the
-    corruption rate is exactly ``span_len/block`` and spans can never
+    the plan is a pure function of the corpus: each ``SPAN_BLOCK``-token
+    window masks exactly one ``SPAN_LEN``-token span whose offset is
+    ``md5("span:" doc ":" blk) mod (SPAN_BLOCK − SPAN_LEN + 1)`` — the
+    corruption rate is exactly ``SPAN_LEN/SPAN_BLOCK`` and spans can never
     overlap (one per block), the property sequential samplers get from
     rejection loops.  Sentinel ids are the block index.
 
     Scale shape: map-only — token count, block sequence, and the hash
     offset are all codegen'd expressions; ONE ``posexplode``-style
-    Generate bounded by n_tokens/block rows per doc; no shuffle, no
+    Generate bounded by n_tokens/SPAN_BLOCK rows per doc; no shuffle, no
     Python (plan-gated in pytest).
 
     Output: ``(doc_id, sentinel_id, span_start, span_len)`` — token
-    offsets, docs with ≥ ``block`` tokens."""
+    offsets, docs with ≥ ``SPAN_BLOCK`` tokens."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("text").isNotNull()
     )
@@ -391,21 +386,21 @@ def span_corruption_plan(
         )
     )
     d = docs.select("doc_id", n.alias("n_tokens")).where(
-        F.col("n_tokens") >= block
+        F.col("n_tokens") >= SPAN_BLOCK
     )
     b = d.select(
         "doc_id",
         F.explode(
-            F.sequence(F.lit(0), F.expr(f"n_tokens DIV {block}") - 1)
+            F.sequence(F.lit(0), F.expr(f"n_tokens DIV {SPAN_BLOCK}") - 1)
         ).alias("blk"),
     )
     off = F.pmod(
         md5_bucket("span:", "doc_id", F.lit(":"), "blk"),
-        F.lit(block - span_len + 1),
+        F.lit(SPAN_BLOCK - SPAN_LEN + 1),
     )
     return b.select(
         "doc_id",
         F.col("blk").cast("long").alias("sentinel_id"),
-        (F.col("blk") * block + off).cast("long").alias("span_start"),
-        F.lit(span_len).cast("long").alias("span_len"),
+        (F.col("blk") * SPAN_BLOCK + off).cast("long").alias("span_start"),
+        F.lit(SPAN_LEN).cast("long").alias("span_len"),
     )

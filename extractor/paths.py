@@ -28,6 +28,9 @@ import posixpath
 
 from pyspark.sql import Column, functions as F
 
+# the folder the reference's caller hardcodes (html_processor.py:67-69)
+IMAGES_FOLDER = "images"
+
 
 def relative_image_path(
     html_path: str,
@@ -46,9 +49,7 @@ def relative_image_path(
         return html_images.replace("\\", "/")
 
 
-def relative_image_path_col(
-    html_path: Column, md_path: Column, images_folder: str = "images"
-) -> Column:
+def relative_image_path_col(html_path: Column, md_path: Column) -> Column:
     """Distributed :func:`relative_image_path` (posix flavor): computed
     per row with JVM higher-order functions — the form the engine uses
     when the corpus carries per-document output locations.
@@ -56,14 +57,14 @@ def relative_image_path_col(
     Algorithm: split both directories on '/', fold a common-prefix length
     (the accumulator advances only while every prior segment matched),
     then emit ``'..' × (len(md_dir) − k)`` followed by the unmatched target
-    segments; an empty result is '.' (same-dir case is ``images_folder``
+    segments; an empty result is '.' (same-dir case is ``IMAGES_FOLDER``
     itself since the target always ends with it)."""
     def _dir_segments(p: Column) -> Column:
         parts = F.split(p, "/")
         return F.slice(parts, 1, F.size(parts) - 1)
 
     target = F.concat(
-        _dir_segments(html_path), F.array(F.lit(images_folder))
+        _dir_segments(html_path), F.array(F.lit(IMAGES_FOLDER))
     )
     md_dir = _dir_segments(md_path)
     bound = F.least(F.size(md_dir), F.size(target))

@@ -48,7 +48,6 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from .kernel import (
     DEFAULT_OPTIONS,
     KERNEL_SCHEMA,
-    MAX_TEXT_CHARS,
     ConvertOptions,
     convert_batch,
 )
@@ -108,7 +107,7 @@ def _make_extract_iter(
         for batch in batches:
             text = batch.column("text")
             t0 = time.monotonic()
-            result = convert_batch(text.to_pylist(), MAX_TEXT_CHARS, options)
+            result = convert_batch(text.to_pylist(), options)
             elapsed = time.monotonic() - t0
             n = batch.num_rows
             yield pa.RecordBatch.from_arrays(
@@ -151,7 +150,6 @@ def salted_partition_key(
 def extract_transcripts(
     df: DataFrame,
     partition_mode: str = "map_only",
-    num_partitions: int | None = None,
     salt_threshold: int = 500,
     salt_buckets: int = 8,
     sort_output: bool = True,
@@ -188,7 +186,7 @@ def extract_transcripts(
             )
 
     if partition_mode == "hash_conv":
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+        n = df.sparkSession.sparkContext.defaultParallelism * 2
         slim = salted_partition_key(slim, salt_threshold, salt_buckets)
         slim = slim.repartition(n, "part_key").drop("part_key")
     elif partition_mode != "map_only":
@@ -203,7 +201,7 @@ def extract_transcripts(
     out = slim.mapInArrow(_make_extract_iter(pass_cols, options), schema)
 
     if sort_output:
-        n_out = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        n_out = df.sparkSession.sparkContext.defaultParallelism
         out = out.repartition(n_out, "conv_id").sortWithinPartitions(
             "conv_id", "turn_idx"
         )

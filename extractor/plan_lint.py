@@ -123,8 +123,7 @@ def lint_plan(df: DataFrame) -> list[dict]:
         elif text.startswith("Expand"):
             hit("multi_distinct_expand", text,
                 "multi-distinct aggregate multiplies shuffle volume; "
-                "consider approx_count_distinct partials (cf. "
-                "links.url_frontier approx mode)")
+                "consider approx_count_distinct partials")
         elif text.startswith("Exchange") and "SinglePartition" in text:
             hit("single_partition_exchange", text,
                 "whole input funnels through one task; fine for tiny "

@@ -38,7 +38,7 @@ import re
 import zipfile
 
 from .docx import decode_docx
-from .kernel import DEFAULT_OPTIONS, MAX_TEXT_CHARS, ConvertOptions, convert_text
+from .kernel import convert_text
 from .layout import parse_layout
 from .pdf import image_count
 
@@ -127,11 +127,7 @@ def sniff_format(payload) -> str:
     return "text"
 
 
-def route_payload(
-    payload,
-    max_chars: int = MAX_TEXT_CHARS,
-    options: ConvertOptions = DEFAULT_OPTIONS,
-) -> dict:
+def route_payload(payload) -> dict:
     """Sniff + decode + convert one payload.  Never raises.
 
     Returns ``{"format", "extracted_text", "tables_count", "math_count",
@@ -162,7 +158,7 @@ def route_payload(
             html = decode_docx(
                 payload.encode("utf-8") if isinstance(payload, str) else payload
             )
-            res = convert_text(html, max_chars, options)
+            res = convert_text(html)
             out.update(
                 extracted_text=res.extracted_text,
                 tables_count=res.tables_count,
@@ -176,7 +172,7 @@ def route_payload(
                 if isinstance(payload, str)
                 else bytes(payload).decode("utf-8")
             )
-            res = convert_text(text, max_chars, options)
+            res = convert_text(text)
             out.update(
                 extracted_text=res.extracted_text,
                 tables_count=res.tables_count,
@@ -203,21 +199,13 @@ def route_payload(
     return out
 
 
-def route_batch(
-    payloads,
-    max_chars: int = MAX_TEXT_CHARS,
-    options: ConvertOptions = DEFAULT_OPTIONS,
-):
+def route_batch(payloads):
     """Arrow-batch wrapper: ``pd.Series -> pd.DataFrame`` (one call per
     record batch inside ``mapInPandas``)."""
     import pandas as pd
 
     rows = [
-        route_payload(
-            None if value is None or value is pd.NA else value,
-            max_chars,
-            options,
-        )
+        route_payload(None if value is None or value is pd.NA else value)
         for value in payloads
     ]
     return pd.DataFrame(

@@ -36,8 +36,9 @@ def test_boilerplate_keeps_content_drops_chrome():
     assert "Privacy" not in r.main_text
     assert "Rel 1" not in r.main_text
     assert "(c) 2026" not in r.main_text
-    labels = {b["text"][:7]: b["label"] for b in r.blocks}
-    assert labels["Home | "] == "bad"
+    # the link-dense nav block is dropped: main text opens on the heading
+    assert r.main_text.startswith("The Article Title\n\nThis is the main")
+    assert (r.n_blocks, r.n_good) == (7, 3)
     assert 0 < r.boilerplate_ratio < 1
 
 

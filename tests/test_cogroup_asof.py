@@ -60,15 +60,18 @@ def events_dir(spark, tmp_path_factory):
     return path
 
 
-@pytest.mark.parametrize("buckets", [0, -1])
-def test_bucket_count_below_one_rejected(spark, events_dir, buckets):
-    with pytest.raises(ValueError, match="buckets must be >= 1"):
-        cogroup_merge_asof(spark, events_dir, buckets=buckets)
+@pytest.mark.parametrize("parallelism", [1, 7, 64])
+def test_bucketed_asof_semantics_and_invariance(
+    spark, events_dir, parallelism, monkeypatch
+):
+    """The bucket count follows the cluster's parallelism (16, 28 and 256
+    buckets here); the result must not."""
+    from pyspark import SparkContext
 
-
-@pytest.mark.parametrize("buckets", [1, 7, 64])
-def test_bucketed_asof_semantics_and_invariance(spark, events_dir, buckets):
-    rows = cogroup_merge_asof(spark, events_dir, buckets=buckets).collect()
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: parallelism)
+    )
+    rows = cogroup_merge_asof(spark, events_dir).collect()
     got = {
         r["click_event"]: (r["view_event"], r["gap_us"]) for r in rows
     }

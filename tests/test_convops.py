@@ -6,6 +6,7 @@ independent of the DuckDB oracle parity checks in test_entry_contract."""
 import pandas as pd
 import pytest
 
+from extractor.ops import convops
 from extractor.ops.convops import (
     role_sequence_stats,
     strip_repeated_prefix,
@@ -64,11 +65,12 @@ def test_strip_repeated_prefix_cap_and_empty(spark):
     assert rows[(3, 1)]["lcp"] == 0 and rows[(3, 1)]["head"] == ""
 
 
-def test_truncate_to_token_budget(spark):
+def test_truncate_to_token_budget(spark, monkeypatch):
     # tok = ceil(len/4); texts of length 40 -> 10 tokens each
     rows = [(i, 1, i, "user", "a" * 40) for i in range(10)]
     df = _turns(spark, rows)
-    out = truncate_to_token_budget(df, budget=35).collect()
+    monkeypatch.setattr(convops, "TOKEN_BUDGET", 35)
+    out = truncate_to_token_budget(df).collect()
     # from the end: cum 10,20,30,40 -> only the last 3 turns fit
     kept = sorted(r["turn_idx"] for r in out)
     assert kept == [7, 8, 9]
@@ -108,12 +110,15 @@ def test_bfs_hop_distance(spark):
     assert out == {0: 0, 1: 1, 2: 2, 3: 3, 4: 3}
 
 
-def test_bfs_hop_distance_max_hops_cap(spark):
+def test_bfs_hop_distance_max_hops_cap(spark, monkeypatch):
+    from extractor.ops import links
+
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(0,)], "node long")
-    out = bfs_hop_distance(edges, seeds, max_hops=3).collect()
+    monkeypatch.setattr(links, "BFS_MAX_HOPS", 3)
+    out = bfs_hop_distance(edges, seeds).collect()
     assert {r["node"]: r["hops"] for r in out} == {0: 0, 1: 1, 2: 2, 3: 3}
 
 
@@ -178,8 +183,7 @@ def test_assemble_sft_pairs(spark):
     )
     out = {
         (r["conv_id"], r["turn_idx"]): r
-        for r in assemble_sft_pairs(df, window_turns=8,
-                                    budget_chars=600).collect()
+        for r in assemble_sft_pairs(df).collect()
     }
     assert set(out) == {(1, 1), (1, 3), (2, 0)}
     # turn (1,1): one context turn "user: hello" (11 chars)
@@ -197,16 +201,17 @@ def test_assemble_sft_pairs(spark):
     assert out[(2, 0)]["n_ctx_turns"] == 0 and out[(2, 0)]["ctx_chars"] == 0
 
 
-def test_assemble_sft_pairs_budget_cut_and_frame_bound(spark):
+def test_assemble_sft_pairs_budget_cut_and_frame_bound(spark, monkeypatch):
     from extractor.ops.convops import assemble_sft_pairs
 
+    monkeypatch.setattr(convops, "_SFT_WINDOW_TURNS", 3)
+    monkeypatch.setattr(convops, "_SFT_BUDGET_CHARS", 30)
     rows = [(i, 1, i, "user" if i % 2 == 0 else "assistant",
              f"turn-{i:02d} " + "z" * 20) for i in range(12)]
     df = _turns(spark, rows)
     out = {
         r["turn_idx"]: r
-        for r in assemble_sft_pairs(df, window_turns=3,
-                                    budget_chars=30).collect()
+        for r in assemble_sft_pairs(df).collect()
     }
     # frame bound: at turn 11 only turns 8..10 are in the window
     assert out[11]["n_ctx_turns"] == 3
@@ -336,17 +341,19 @@ def test_conversation_minhash_pairs_finds_retried_episode(spark):
     assert out[0]["n_agree"] == 8
 
 
-def test_conversation_minhash_pairs_hot_bucket_excluded(spark):
+def test_conversation_minhash_pairs_hot_bucket_excluded(spark, monkeypatch):
     from extractor.ops.convops import conversation_minhash_pairs
 
-    # 5 identical conversations: with max_bucket=4 the single mega
+    # 5 identical conversations: with a bucket cap of 4 the single mega
     # bucket is skipped entirely -> no pairs (the m^2 guard)
     rows = [(c * 10 + i, c, i, "user", f"same turn {i}")
             for c in range(5) for i in range(3)]
     df = _turns(spark, rows)
-    assert conversation_minhash_pairs(df, max_bucket=4).count() == 0
+    monkeypatch.setattr(convops, "CONV_MAX_BUCKET", 4)
+    assert conversation_minhash_pairs(df).count() == 0
     # raising the cap re-admits the bucket: C(5,2)=10 pairs
-    assert conversation_minhash_pairs(df, max_bucket=10).count() == 10
+    monkeypatch.setattr(convops, "CONV_MAX_BUCKET", 10)
+    assert conversation_minhash_pairs(df).count() == 10
 
 
 # ---------------------------------------------------------------- r4 late ops
@@ -387,7 +394,7 @@ def test_audit_turn_integrity_flags_dups_gaps_and_offset(spark):
     assert out[3]["clean"] == 0  # non-zero start
 
 
-def test_preference_pairs_scoring_and_tiebreaks(spark):
+def test_preference_pairs_scoring_and_tiebreaks(spark, monkeypatch):
     # group 0 (mod 4): convs 0, 4, 8 — scores 11, 31, 31 (len+count)
     # tie at the top -> chosen = higher conv_id = 8
     df = _turns(
@@ -400,7 +407,8 @@ def test_preference_pairs_scoring_and_tiebreaks(spark):
             (4, 2, 0, "user", "no assistant turns in group 2"),
         ],
     )
-    rows = mine_preference_pairs(df, n_groups=4).collect()
+    monkeypatch.setattr(convops, "PREF_GROUPS", 4)
+    rows = mine_preference_pairs(df).collect()
     assert len(rows) == 1  # group 1 has 1 conv; group 2 has none
     r = rows[0]
     assert r["group_id"] == 0
@@ -550,7 +558,7 @@ def test_turn_latency_transitions(spark):
     assert out["assistant->user"]["n_gaps"] == 1
 
 
-def test_bt_strength_invariants(spark):
+def test_bt_strength_invariants(spark, monkeypatch):
     from extractor.ops.convops import BT_SCALE, bt_strength
 
     turns = spark.createDataFrame(
@@ -561,7 +569,10 @@ def test_bt_strength_invariants(spark):
         ],
         ["conv_id", "turn_idx", "role", "text"],
     )
-    rows = bt_strength(turns, n_groups=4, per_group=4, rounds=2).collect()
+    monkeypatch.setattr(convops, "BT_GROUPS", 4)
+    monkeypatch.setattr(convops, "BT_PER_GROUP", 4)
+    monkeypatch.setattr(convops, "BT_ROUNDS", 2)
+    rows = bt_strength(turns).collect()
     assert rows, "comparisons must exist"
     by_id = {r["conv_id"]: r for r in rows}
     assert len(by_id) == len(rows)  # one row per item

@@ -25,7 +25,7 @@ def _seed(spark, ckpt, snaps=("s1", "s2", "s3")):
 def test_expire_keeps_newest(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _seed(spark, ckpt)
-    stats = expire_checkpoint_history(spark, ckpt, keep_last=2)
+    stats = expire_checkpoint_history(spark, ckpt)
     assert stats["snapshots_before"] == 3
     assert stats["snapshots_after"] == 2
     assert stats["rows_before"] == 24 and stats["rows_after"] == 16
@@ -41,7 +41,7 @@ def test_expire_keeps_newest(spark, tmp_path):
     # the status table is the whole store: nothing beside it, no leftovers
     assert sorted(os.listdir(ckpt)) == ["status"]
     # job_status of a retained snapshot is unchanged in content
-    st = job_status(spark, ckpt, "s2")
+    st = job_status(spark, ckpt).where("snapshot_id = 's2'")
     assert st.count() == 8
     assert {r["status"] for r in st.collect()} == {"completed"}
 
@@ -49,8 +49,8 @@ def test_expire_keeps_newest(spark, tmp_path):
 def test_expire_idempotent(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _seed(spark, ckpt)
-    expire_checkpoint_history(spark, ckpt, keep_last=2)
-    stats = expire_checkpoint_history(spark, ckpt, keep_last=2)
+    expire_checkpoint_history(spark, ckpt)
+    stats = expire_checkpoint_history(spark, ckpt)
     assert stats["snapshots_before"] == 2
     assert stats["snapshots_after"] == 2
     assert stats["rows_before"] == stats["rows_after"] == 16
@@ -63,7 +63,7 @@ def test_expire_crash_recovery(spark, tmp_path):
     # replacement never landed
     os.rename(f"{ckpt}/status", f"{ckpt}/status.bak")
     assert not os.path.exists(f"{ckpt}/status")
-    stats = expire_checkpoint_history(spark, ckpt, keep_last=2)
+    stats = expire_checkpoint_history(spark, ckpt)
     assert stats["snapshots_after"] == 2
     assert not os.path.exists(f"{ckpt}/status.bak")
     assert os.path.exists(f"{ckpt}/status")

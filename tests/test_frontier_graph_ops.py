@@ -23,7 +23,7 @@ def test_linkpred_pairs_are_nonedges_with_valid_scores(spark):
     from extractor.ops.links import jaccard_linkpred
 
     g = _graph(spark)
-    out = jaccard_linkpred(g, max_degree=8, top_n=30).collect()
+    out = jaccard_linkpred(g).collect()
     assert 0 < len(out) <= 30
     edges = {
         (min(r.src, r.dst), max(r.src, r.dst))
@@ -37,15 +37,18 @@ def test_linkpred_pairs_are_nonedges_with_valid_scores(spark):
         assert r.common >= 1
 
 
-def test_linkpred_degree_cap_excludes_hub_centers(spark):
+def test_linkpred_degree_cap_excludes_hub_centers(spark, monkeypatch):
     """With the cap at 1, only degree-1 wedge centers count — strictly
     fewer (or equal) candidate pairs than the uncapped run, and every
     score still a valid Jaccard."""
-    from extractor.ops.links import jaccard_linkpred
+    from extractor.ops import links
 
     g = _graph(spark)
-    tight = jaccard_linkpred(g, max_degree=1, top_n=1000).count()
-    loose = jaccard_linkpred(g, max_degree=1000, top_n=1000).count()
+    monkeypatch.setattr(links, "LINKPRED_TOP_N", 1000)
+    monkeypatch.setattr(links, "LINKPRED_MAX_DEGREE", 1)
+    tight = links.jaccard_linkpred(g).count()
+    monkeypatch.setattr(links, "LINKPRED_MAX_DEGREE", 1000)
+    loose = links.jaccard_linkpred(g).count()
     assert tight <= loose
 
 
@@ -73,24 +76,28 @@ def test_dag_depth_satisfies_edge_recurrence(spark):
             assert dep == 1 + max(depth[s] for s in in_edges[node])
 
 
-def test_dag_raises_when_round_budget_too_small(spark):
-    from extractor.ops.links import dag_longest_path
+def test_dag_raises_when_round_budget_too_small(spark, monkeypatch):
+    from extractor.ops import links
 
+    monkeypatch.setattr(links, "DAG_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        dag_longest_path(_graph(spark), max_rounds=1)
+        links.dag_longest_path(_graph(spark))
 
 
-def test_term_chi2_requires_both_classes(spark):
-    from extractor.ops.textops import term_chi2_topk
+def test_term_chi2_requires_both_classes(spark, monkeypatch):
+    from extractor.ops import textops
 
+    monkeypatch.setattr(textops, "CHI2_POS_LANG", "nosuchlang")
     with pytest.raises(ValueError, match="both classes"):
-        term_chi2_topk(spark, SF, pos_lang="nosuchlang")
+        textops.term_chi2_topk(spark, SF)
 
 
-def test_term_chi2_scores_nonnegative_and_df_gated(spark):
-    from extractor.ops.textops import term_chi2_topk
+def test_term_chi2_scores_nonnegative_and_df_gated(spark, monkeypatch):
+    from extractor.ops import textops
 
-    rows = term_chi2_topk(spark, SF, k=10, min_df=2).collect()
+    monkeypatch.setattr(textops, "CHI2_K", 10)
+    monkeypatch.setattr(textops, "CHI2_MIN_DF", 2)
+    rows = textops.term_chi2_topk(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.chi2_micro >= 0
@@ -100,13 +107,14 @@ def test_term_chi2_scores_nonnegative_and_df_gated(spark):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_pareto_frontier_matches_naive_dominance(spark):
+def test_pareto_frontier_matches_naive_dominance(spark, monkeypatch):
     """The two-level decomposition must equal the O(n²) definition."""
-    from extractor.ops.relational import pareto_frontier
+    from extractor.ops import relational
 
+    monkeypatch.setattr(relational, "PARETO_BUCKET_WIDTH", 64)
     got = {
         (r.x, r.y, r.n_docs)
-        for r in pareto_frontier(spark, SF, bucket_width=64).collect()
+        for r in relational.pareto_frontier(spark, SF).collect()
     }
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     y = md5_bucket("pareto:", "doc_id", mod=1000000)
@@ -127,23 +135,23 @@ def test_pareto_frontier_matches_naive_dominance(spark):
     assert got == naive and got
 
 
-def test_pareto_frontier_bucket_width_invariant(spark):
-    from extractor.ops.relational import pareto_frontier
+def test_pareto_frontier_bucket_width_invariant(spark, monkeypatch):
+    from extractor.ops import relational
 
-    a = sorted(
-        map(tuple, pareto_frontier(spark, SF, bucket_width=16).collect())
-    )
-    b = sorted(
-        map(tuple, pareto_frontier(spark, SF, bucket_width=4096).collect())
-    )
+    monkeypatch.setattr(relational, "PARETO_BUCKET_WIDTH", 16)
+    a = sorted(map(tuple, relational.pareto_frontier(spark, SF).collect()))
+    monkeypatch.setattr(relational, "PARETO_BUCKET_WIDTH", 4096)
+    b = sorted(map(tuple, relational.pareto_frontier(spark, SF).collect()))
     assert a == b
 
 
-def test_frame_sample_plan_shape_and_bounds(spark):
+def test_frame_sample_plan_shape_and_bounds(spark, monkeypatch):
+    from extractor.ops import multimodal
     from extractor.ops.multimodal import frame_sample_plan, synth_media_df
 
-    media = synth_media_df(spark, n=60)
-    out = frame_sample_plan(media, max_frames=8)
+    monkeypatch.setattr(multimodal, "MEDIA_ROWS", 60)
+    media = synth_media_df(spark)
+    out = frame_sample_plan(media)
     rows = out.collect()
     assert rows
     n_videos = media.where(F.col("kind") == "video").count()
@@ -167,6 +175,6 @@ def test_frame_sample_plan_is_map_only(spark):
     from extractor.ops.multimodal import frame_sample_plan, synth_media_df
 
     plan = frame_sample_plan(
-        synth_media_df(spark, n=40)
+        synth_media_df(spark)
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

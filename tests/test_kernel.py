@@ -10,7 +10,13 @@ from pathlib import Path
 import pytest
 
 from extractor.fixtures import FIXTURE_CASES, oversized_case
-from extractor.kernel import KERNEL_SCHEMA, clean_markdown, convert_batch, convert_text
+from extractor.kernel import (
+    KERNEL_SCHEMA,
+    MAX_TEXT_CHARS,
+    clean_markdown,
+    convert_batch,
+    convert_text,
+)
 
 GOLDEN = json.loads(
     (Path(__file__).parent.parent / "fixtures" / "golden_kernel.json").read_text()
@@ -51,9 +57,16 @@ def test_spans_slice_back_to_snippets():
 
 
 def test_size_cap_quarantines():
-    r = convert_text(oversized_case(1000), max_chars=1000)
+    """The cap is the pipeline's own constant (50 MB, the reference's
+    MAX_FILE_SIZE): one char past it quarantines, in the scalar kernel and
+    in the batch kernel the pipeline runs."""
+    text = oversized_case(MAX_TEXT_CHARS)
+    r = convert_text(text)
     assert r.extracted_text is None
-    assert r.error.startswith("size_exceeded:")
+    assert r.error == "size_exceeded:52428801"
+    row = convert_batch([text]).to_pylist()[0]
+    assert row["extracted_text"] is None
+    assert row["error"] == "size_exceeded:52428801"
 
 
 def test_cleanup_chain_order():

@@ -7,13 +7,19 @@ from extractor.ops import similarity
 SF = "/root/testdata/sf0.001"
 
 
+def _kmeans(spark, monkeypatch, sf, k, iters):
+    monkeypatch.setattr(similarity, "KMEANS_K", k)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", iters)
+    return similarity.kmeans_topics(spark, sf)
+
+
 def _inertia(rows):
     return sum(r["sq_dist"] for r in rows)
 
 
-def test_kmeans_partitions_and_improves(spark):
-    one_round = similarity.kmeans_topics(spark, SF, k=8, max_iters=1).collect()
-    many = similarity.kmeans_topics(spark, SF, k=8, max_iters=5).collect()
+def test_kmeans_partitions_and_improves(spark, monkeypatch):
+    one_round = _kmeans(spark, monkeypatch, SF, 8, 1).collect()
+    many = _kmeans(spark, monkeypatch, SF, 8, 5).collect()
     n = spark.read.parquet(f"{SF}/embeddings.parquet").count()
     assert len(many) == n
     assert {r["cluster"] for r in many} <= set(range(8))
@@ -24,26 +30,26 @@ def test_kmeans_partitions_and_improves(spark):
     assert all(r["sq_dist"] >= -1e-9 for r in many)
 
 
-def test_kmeans_deterministic(spark):
+def test_kmeans_deterministic(spark, monkeypatch):
     a = sorted(
         (r["vec_id"], r["cluster"])
-        for r in similarity.kmeans_topics(spark, SF, k=8, max_iters=3).collect()
+        for r in _kmeans(spark, monkeypatch, SF, 8, 3).collect()
     )
     b = sorted(
         (r["vec_id"], r["cluster"])
-        for r in similarity.kmeans_topics(spark, SF, k=8, max_iters=3).collect()
+        for r in _kmeans(spark, monkeypatch, SF, 8, 3).collect()
     )
     assert a == b
 
 
-def test_kmeans_converged_assignment_is_nearest_centroid(spark):
+def test_kmeans_converged_assignment_is_nearest_centroid(spark, monkeypatch):
     """Run to convergence (the loop breaks when centroids stop moving):
     at a Lloyd fixed point, centroids equal their clusters' means, so each
     vector's assigned cluster must be the argmin-distance centroid of the
     means rebuilt from the emitted assignment itself."""
     import numpy as np
 
-    rows = similarity.kmeans_topics(spark, SF, k=8, max_iters=60).collect()
+    rows = _kmeans(spark, monkeypatch, SF, 8, 60).collect()
     emb = {
         r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
         for r in spark.read.parquet(f"{SF}/embeddings.parquet").collect()
@@ -65,7 +71,7 @@ def test_kmeans_converged_assignment_is_nearest_centroid(spark):
         ), (r["vec_id"], r["cluster"], best)
 
 
-def test_kmeans_sparse_vec_ids_and_too_few_rows(spark, tmp_path):
+def test_kmeans_sparse_vec_ids_and_too_few_rows(spark, monkeypatch, tmp_path):
     """Seeding must use the first k rows by vec_id ORDER, not `vec_id < k`:
     sparse / non-0-based ids would otherwise silently under-seed."""
     import numpy as np
@@ -85,9 +91,9 @@ def test_kmeans_sparse_vec_ids_and_too_few_rows(spark, tmp_path):
     )
     sf = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(f"{sf}/embeddings.parquet")
-    out = similarity.kmeans_topics(spark, sf, k=4, max_iters=3).collect()
+    out = _kmeans(spark, monkeypatch, sf, 4, 3).collect()
     assert len(out) == 24
     assert len({r["cluster"] for r in out}) > 1
 
     with pytest.raises(ValueError, match="needs >= k"):
-        similarity.kmeans_topics(spark, sf, k=100, max_iters=1)
+        _kmeans(spark, monkeypatch, sf, 100, 1)

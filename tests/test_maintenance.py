@@ -39,10 +39,13 @@ def test_idempotent(spark, tmp_path):
     assert stats2["files_before"] == 3 and stats2["files_after"] == 3
 
 
-def test_size_derived_target(spark, tmp_path):
+def test_size_derived_target(spark, tmp_path, monkeypatch):
+    from extractor.ops import maintenance
+
     path = _frag(spark, tmp_path)
     total = sum(os.path.getsize(f) for f in _list_parquet_files(path))
-    stats = compact_files(spark, path, target_file_bytes=total // 2 + 1)
+    monkeypatch.setattr(maintenance, "COMPACT_TARGET_BYTES", total // 2 + 1)
+    stats = compact_files(spark, path)
     assert stats["files_after"] == 2
 
 
@@ -54,19 +57,6 @@ def test_stale_tmp_and_bak_cleaned(spark, tmp_path):
     assert stats["files_after"] == 2
     assert not os.path.exists(f"{path}.tmp")
     assert not os.path.exists(f"{path}.bak")
-
-
-def test_codec_change_during_rewrite(spark, tmp_path):
-    """Rewrite-with-recompression: zstd output is smaller than an
-    uncompressed source, content identical."""
-    path = str(tmp_path / "tbl")
-    spark.range(20000).select(
-        "id", F.md5(F.col("id").cast("string")).alias("s")
-    ).repartition(8).write.option("compression", "none").parquet(path)
-    before_bytes = sum(os.path.getsize(f) for f in _list_parquet_files(path))
-    stats = compact_files(spark, path, target_files=2, codec="zstd")
-    assert stats["content_match"] and stats["files_after"] == 2
-    assert stats["bytes_after"] < before_bytes
 
 
 def test_crash_between_swap_renames_recovers(spark, tmp_path):

@@ -5,8 +5,8 @@ from extractor.ops import multimodal as mm
 
 
 def test_synth_media_deterministic(spark):
-    a = mm.synth_media_df(spark, n=50).collect()
-    b = mm.synth_media_df(spark, n=50).collect()
+    a = mm.synth_media_df(spark).collect()
+    b = mm.synth_media_df(spark).collect()
     am = {r["media_id"]: bytes(r["payload"]) for r in a}
     bm = {r["media_id"]: bytes(r["payload"]) for r in b}
     assert am == bm
@@ -14,8 +14,9 @@ def test_synth_media_deterministic(spark):
     assert row["meta"]["n_bytes"] == len(bytes(row["payload"]))
 
 
-def test_extract_features_shapes_and_errors(spark):
-    media = mm.synth_media_df(spark, n=40)
+def test_extract_features_shapes_and_errors(spark, monkeypatch):
+    monkeypatch.setattr(mm, "MEDIA_ROWS", 40)
+    media = mm.synth_media_df(spark)
     feats = mm.extract_features(media).collect()
     assert len(feats) == 40
     ok = [r for r in feats if r["error"] is None]

@@ -8,6 +8,7 @@ import posixpath
 
 import pytest
 
+from extractor import paths
 from extractor.paths import relative_image_path, relative_image_path_col
 
 BATTERY = [
@@ -42,20 +43,20 @@ def test_different_drive_fallback():
     assert got == "C:/out/conv/images"
 
 
-def test_column_variant_matches_scalar(spark):
+def test_column_variant_matches_scalar(spark, monkeypatch):
     rows = [(h, m, f) for h, m, f in BATTERY]
     df = spark.createDataFrame(rows, "html string, md string, folder string")
-    # folder differs per row; compute per distinct folder value
+    # folder differs per row; the expression reads the folder constant on
+    # the driver, so patch it per distinct folder value
     for folder in sorted({f for _, _, f in BATTERY}):
+        monkeypatch.setattr(paths, "IMAGES_FOLDER", folder)
         sub = df.where(f"folder = '{folder}'")
         got = {
             (r["html"], r["md"]): r["rel"]
             for r in sub.select(
                 "html",
                 "md",
-                relative_image_path_col(
-                    sub["html"], sub["md"], folder
-                ).alias("rel"),
+                relative_image_path_col(sub["html"], sub["md"]).alias("rel"),
             ).collect()
         }
         for (h, m), rel in got.items():

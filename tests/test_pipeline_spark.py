@@ -123,7 +123,7 @@ def test_salting_splits_hot_conversations(spark):
 
     out = extract_transcripts(
         df, partition_mode="hash_conv", salt_threshold=60, salt_buckets=4,
-        num_partitions=16, sort_output=False,
+        sort_output=False,
     )
     spread = (
         out.groupBy("conv_id")
@@ -342,7 +342,7 @@ def test_minhash_estimator_error_bound(spark):
     assert s["mae"] < 0.25, s
 
 
-def test_two_phase_cc_equals_label_prop(spark):
+def test_two_phase_cc_equals_label_prop(spark, monkeypatch):
     """The large-star/small-star alternation (the documented web-scale
     swap) must produce the identical (doc_id, cluster_id, cluster_size)
     assignment as min-label propagation — on the corpus graph AND on an
@@ -370,7 +370,8 @@ def test_two_phase_cc_equals_label_prop(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(80)] + [(500, 501)], "u long, v long"
     )
-    got = dedup._cc_two_phase(chain, max_iters=10).collect()
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 10)
+    got = dedup._cc_two_phase(chain).collect()
     labels = {r["doc_id"]: r["cluster_id"] for r in got}
     for i in range(1, 81):
         assert labels[i] == 0, (i, labels.get(i))
@@ -406,18 +407,20 @@ def test_chunk_documents_reconstruct(spark):
         assert all(r["doc_tokens"] == len(toks) for r in rows)
 
 
-def test_neardup_clusters_raises_on_iteration_cap(spark):
+def test_neardup_clusters_raises_on_iteration_cap(spark, monkeypatch):
     """A non-converged run must raise, never silently return wrong labels
-    (ADVICE r3): max_iters=0 cannot converge on any non-empty graph."""
+    (ADVICE r3): a round budget of 0 cannot converge on any non-empty
+    graph."""
     import pytest
 
     from extractor.ops import dedup
 
     sf = "/root/testdata/sf0.001"
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_clusters(spark, sf, max_iters=0)
+        dedup.neardup_clusters(spark, sf)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_clusters(spark, sf, max_iters=0, algorithm="two_phase")
+        dedup.neardup_clusters(spark, sf, algorithm="two_phase")
 
 
 def test_km_minhash_matches_python_reference(spark):

@@ -580,8 +580,7 @@ def test_domain_hits_broadcast_power_iteration(spark):
     # eager localCheckpoint's ExistingRDD scan — gate the REAL lazy plan
     # via the materialize=False seam (same pattern as the kcore gate)
     plan = formatted_plan(
-        hits(e._layered_domain_graph(spark, SF), iterations=3,
-             materialize=False)
+        hits(e._layered_domain_graph(spark, SF), materialize=False)
     )
     # every half-round joins the node-sized score vector onto the edge
     # table as a BROADCAST hash join; the per-round max-normalize is a
@@ -632,8 +631,7 @@ def test_domain_kcore_edges_never_reshuffle(spark):
     # the op localCheckpoints its result (materialize before releasing
     # the edge cache), which hides the join plan behind an ExistingRDD
     # scan — gate the REAL lazy plan via the materialize=False seam
-    df = kcore(e._layered_domain_graph(spark, SF), k=3, rounds=4,
-               materialize=False)
+    df = kcore(e._layered_domain_graph(spark, SF), materialize=False)
     plan = formatted_plan(df)
     # every alive-set filter is a broadcast join against the persisted
     # edge table — the only Exchanges are the initial distinct and the

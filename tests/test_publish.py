@@ -57,7 +57,7 @@ def _expiry(spark, root):
         return sorted(tuple(r) for r in df.select("snapshot_id", "bucket").collect())
 
     def commit():
-        expire_checkpoint_history(spark, ckpt, keep_last=2)
+        expire_checkpoint_history(spark, ckpt)
 
     return f"{ckpt}/status", commit, content
 
@@ -209,7 +209,7 @@ def test_checkpoint_readers_recover_status_after_expiry_crash(
     assert done == set(range(8))
 
     _record(spark, ckpt, [(b, "s4", "completed", 5, time.time(), None) for b in range(8)])
-    expire_checkpoint_history(spark, ckpt, keep_last=2)
+    expire_checkpoint_history(spark, ckpt)
     snaps = {r["snapshot_id"] for r in job_status(spark, ckpt).collect()}
     assert snaps == {"s3", "s4"}
 

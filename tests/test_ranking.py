@@ -170,7 +170,7 @@ def test_quantized_dot_ranking_self_top_and_integer(spark):
     from extractor.ops.similarity import quantized_dot_ranking
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    out = quantized_dot_ranking(emb, query_id=0, k=10).collect()
+    out = quantized_dot_ranking(emb).collect()
     # the query vector's own quantized self-dot is maximal for itself;
     # rank 1 must be vec 0 unless another vector ties-and-beats it,
     # which int8 self-dot (sum of squares of the largest codes) makes
@@ -201,7 +201,7 @@ def test_unigram_neg_sampling_smoothing_and_exactness(spark):
 
     from extractor.ops.textops import unigram_neg_sampling_weights
 
-    rows = unigram_neg_sampling_weights(spark, SF, k=50).collect()
+    rows = unigram_neg_sampling_weights(spark, SF).collect()
     assert 0 < len(rows) <= 50  # sf0.001's vocab is ~31 tokens
     # ordered by raw count desc
     cnts = [r["cnt"] for r in rows]

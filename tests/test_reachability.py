@@ -1,7 +1,9 @@
 """Every ``extractor`` module, and every top-level ``def`` and ``class`` in
 one, must be reached from an entry point: the contract module
 (``__spark_entry__.py``), the spark-submit scripts, the benchmarks.  Code
-only tests run serves no workload, so these fail when some appears."""
+only tests run serves no workload, so these fail when some appears.  The
+same holds for a parameter's non-default values: a default-valued
+parameter no entry point sets is a constant."""
 
 import ast
 import glob
@@ -168,3 +170,139 @@ def test_every_extra_root_is_an_extractor_def():
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
     }
     assert sorted(EXTRA_ROOTS - names) == []
+
+
+# default-valued parameters no entry point varies, kept on purpose
+# ("module.def.param" -> reason)
+FIXED_PARAMETER_ALLOWLIST = {
+    **{
+        f"extractor.ops.maintenance.{op}.base_dir": "deployment path"
+        for op in (
+            "backfill_partition_overwrite",
+            "dpp_partition_prune",
+            "jsonl_corrupt_read",
+            "schema_evolution_read",
+        )
+    },
+    **{
+        f"extractor.ops.links.{op}.materialize": "plan-position test seam"
+        for op in ("pagerank", "hits", "kcore")
+    },
+    "extractor.plan_lint.assert_clean.allow": "test tooling",
+    "extractor.paths.relative_image_path.images_folder": "a reference form",
+    "extractor.paths.relative_image_path.pathmod": "a reference form",
+    "extractor.pdf.lzw_encode.early_change": "decoder test input",
+    "extractor.pdf.png_predict_encode.colors": "decoder test input",
+    "extractor.pdf.png_predict_encode.bpc": "decoder test input",
+    "extractor.pdf.png_predict_encode.filter_type": "decoder test input",
+    "extractor.transcripts.transcripts_df.seed": "bench.py passes it by keyword",
+}
+
+
+def _callee(call):
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    return None
+
+
+def _signature(node):
+    """(positional names, {name: default AST}) of a def, or of a
+    dataclass's generated ``__init__``."""
+    if isinstance(node, ast.ClassDef):
+        fields = [
+            s
+            for s in node.body
+            if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+        ]
+        return (
+            [s.target.id for s in fields],
+            {s.target.id: s.value for s in fields if s.value is not None},
+        )
+    a = node.args
+    positional = [p.arg for p in a.posonlyargs + a.args]
+    defaults = dict(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+    defaults.update(
+        (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    )
+    return positional, defaults
+
+
+def _defaulted_parameters():
+    """{(module, qualname, param): default AST} over top-level defs,
+    methods and dataclasses of ``extractor/**`` and the contract module,
+    plus {callee name: [((module, qualname), positional names)]}; a
+    method's positional names leave out ``self``."""
+    params, by_name = {}, {}
+    paths = glob.glob(os.path.join(REPO, "extractor", "**", "*.py"), recursive=True)
+    paths.append(os.path.join(REPO, "__spark_entry__.py"))
+    for path in paths:
+        mod = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+        mod = mod.removesuffix(".__init__")
+        for node in _parse(path).body:
+            defs = []
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.append((node.name, node.name, node, False))
+            elif isinstance(node, ast.ClassDef):
+                if any("dataclass" in ast.dump(d) for d in node.decorator_list):
+                    defs.append((node.name, node.name, node, False))
+                for sub in node.body:
+                    if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        static = any(
+                            "staticmethod" in ast.dump(d) for d in sub.decorator_list
+                        )
+                        call_name = node.name if sub.name == "__init__" else sub.name
+                        defs.append(
+                            (f"{node.name}.{sub.name}", call_name, sub, not static)
+                        )
+            for qual, call_name, d, is_method in defs:
+                positional, defaults = _signature(d)
+                if is_method:
+                    positional = positional[1:]
+                for p, default in defaults.items():
+                    params[(mod, qual, p)] = default
+                if defaults:
+                    by_name.setdefault(call_name, []).append(
+                        ((mod, qual), positional)
+                    )
+    return params, by_name
+
+
+def _fixed_parameters():
+    """Default-valued parameters that no call in an entry point or in
+    ``extractor/`` passes a value other than the default's AST.  Calls
+    match defs by name only, and ``*args``/``**kw`` vary nothing."""
+    params, by_name = _defaulted_parameters()
+    varied = set()
+    callers = glob.glob(os.path.join(REPO, "extractor", "**", "*.py"), recursive=True)
+    for pattern in ENTRY_POINTS:
+        callers += glob.glob(os.path.join(REPO, pattern))
+    for path in callers:
+        for call in ast.walk(_parse(path)):
+            if not isinstance(call, ast.Call) or _callee(call) not in by_name:
+                continue
+            for key, positional in by_name[_callee(call)]:
+                passed = []
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred) or i >= len(positional):
+                        break
+                    passed.append((positional[i], arg))
+                passed += [(k.arg, k.value) for k in call.keywords if k.arg]
+                for p, value in passed:
+                    default = params.get(key + (p,))
+                    if default is not None and ast.dump(value) != ast.dump(default):
+                        varied.add(key + (p,))
+    return sorted(".".join(k) for k in params if k not in varied)
+
+
+def test_every_default_parameter_is_set_by_an_entry_point():
+    """A default no caller changes is a constant spelt as an option: only
+    tests can reach its other values, and the code those values select.
+    An allowlist entry that names no parameter would keep nothing."""
+    fixed = set(_fixed_parameters())
+    assert sorted(fixed - set(FIXED_PARAMETER_ALLOWLIST)) == []
+    params, _ = _defaulted_parameters()
+    named = {".".join(k) for k in params}
+    assert sorted(set(FIXED_PARAMETER_ALLOWLIST) - named) == []

@@ -8,6 +8,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from extractor import checkpoint
 from extractor.checkpoint import run_with_checkpoint, with_bucket
 from extractor.pipeline import extract_transcripts
 from extractor.transcripts import transcripts_df
@@ -189,7 +190,9 @@ def test_job_status_pollable_mid_run(spark, corpus, tmp_path):
     assert sum(r["turns"] for r in final.values()) == corpus.count()
 
 
-def test_resume_leaves_session_overwrite_mode_alone(spark, corpus, tmp_path):
+def test_resume_leaves_session_overwrite_mode_alone(
+    spark, corpus, tmp_path, monkeypatch
+):
     """Dynamic partition overwrite is an option of the checkpoint's own
     writer: a fault run and its resume leave the session's
     ``partitionOverwriteMode`` as they found it, so later partitioned
@@ -222,5 +225,6 @@ def test_resume_leaves_session_overwrite_mode_alone(spark, corpus, tmp_path):
     )
     assert got == _clean_rows(spark, corpus)
     # the status table is the whole checkpoint store
-    expire_checkpoint_history(spark, ckpt, keep_last=1)
+    monkeypatch.setattr(checkpoint, "KEEP_SNAPSHOTS", 1)
+    expire_checkpoint_history(spark, ckpt)
     assert os.listdir(ckpt) == ["status"]

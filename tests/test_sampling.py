@@ -195,7 +195,7 @@ def test_per_stratum_topk_exact_k(spark):
         assert by_src.get(src, 0) == min(5, n), src
 
 
-def test_weighted_bottomk_sample(spark, tmp_path):
+def test_weighted_bottomk_sample(spark, tmp_path, monkeypatch):
     import pandas as pd
 
     # one heavy doc (500 tokens), many light docs (1 token each)
@@ -209,9 +209,11 @@ def test_weighted_bottomk_sample(spark, tmp_path):
             "n_chars": [len(t) for t in texts],
         }
     ).to_parquet(tmp_path / "documents.parquet", index=False)
+    from extractor.ops import sampling
     from extractor.ops.sampling import weighted_bottomk_sample
 
-    out = weighted_bottomk_sample(spark, str(tmp_path), k=5).collect()
+    monkeypatch.setattr(sampling, "WBK_K", 5)
+    out = weighted_bottomk_sample(spark, str(tmp_path)).collect()
     assert len(out) == 5
     rows = {r["doc_id"]: r for r in out}
     # weight = 1 + tokens // 5: heavy doc 101 tickets, light docs 1
@@ -224,7 +226,7 @@ def test_weighted_bottomk_sample(spark, tmp_path):
     # with 101 of 131 tickets, the heavy doc is essentially always in
     assert 0 in rows
     # deterministic across runs
-    again = weighted_bottomk_sample(spark, str(tmp_path), k=5).collect()
+    again = weighted_bottomk_sample(spark, str(tmp_path)).collect()
     assert sorted(r["doc_id"] for r in again) == sorted(rows)
     # min_ticket is an md5 hex string
     assert all(len(r["min_ticket"]) == 32 for r in out)

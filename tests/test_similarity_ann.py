@@ -169,7 +169,8 @@ def test_semdedup_prunes_exact_copy_keeps_min_id(spark):
     assert out[0]["cell"] == out[1]["cell"]
 
 
-def test_semdedup_threshold_boundary_integer_exact(spark):
+def test_semdedup_threshold_boundary_integer_exact(spark, monkeypatch):
+    from extractor.ops import similarity
     from extractor.ops.similarity import semdedup_core
 
     # v0 = all ones; v1 agrees on 62 of 64 coords, negates 2:
@@ -183,9 +184,8 @@ def test_semdedup_threshold_boundary_integer_exact(spark):
     out = {r["vec_id"]: r for r in semdedup_core(df).collect()}
     if out[0]["cell"] == out[1]["cell"]:  # same cell by construction
         assert out[1]["kept"] == 1
-    out_low = {
-        r["vec_id"]: r for r in semdedup_core(df, thr_milli=930).collect()
-    }
+    monkeypatch.setattr(similarity, "SEMDEDUP_THR_MILLI", 930)
+    out_low = {r["vec_id"]: r for r in semdedup_core(df).collect()}
     assert out_low[1]["kept"] == 0
 
 

@@ -56,7 +56,7 @@ df = transcripts_df(spark, n_convs=24, mean_turns=10, seed=42)
 def rows(inject_failure):
     out = extract_transcripts(
         df, partition_mode="hash_conv", salt_threshold=5, salt_buckets=4,
-        num_partitions=4, sort_output=False,
+        sort_output=False,
     )
     if inject_failure:
         out = inject(out)
@@ -102,7 +102,7 @@ spark.createDataFrame(
 
 
 def rows(inject_failure):
-    out = cogroup_merge_asof(spark, sf_dir, buckets=8)
+    out = cogroup_merge_asof(spark, sf_dir)
     if inject_failure:
         out = inject(out)
     return sorted((tuple(r) for r in out.collect()), key=lambda r: r[1])

@@ -48,18 +48,6 @@ def test_asof_backward_and_ties_and_no_match(spark, sides):
     assert got[4]["asof_event_id"] is None
 
 
-def test_asof_tolerance_nulls_stale_matches(spark, sides):
-    left, right = sides
-    out = asof_join(
-        left, right, right_cols=("event_id",), tolerance_us=60 * 1_000_000
-    )
-    got = {r["event_id"]: r.asDict() for r in out.collect()}
-    # 2-minute-old match exceeds the 1-minute tolerance
-    assert got[1]["asof_event_id"] is None and got[1]["asof_lag_us"] is None
-    # 0-lag match survives
-    assert got[2]["asof_event_id"] == 101 and got[2]["asof_lag_us"] == 0
-
-
 def test_asof_plan_single_shuffle_no_join(spark, sides):
     left, right = sides
     plan = (asof_join(left, right, right_cols=("value",))

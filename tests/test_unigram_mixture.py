@@ -43,14 +43,16 @@ def test_viterbi_prefers_higher_score_not_greedy_length():
     assert _viterbi_segment("abc", logp, 2) == ["a", "bc"]
 
 
-def test_unigram_em_mass_conservation(spark):
-    """With top_k large enough to return every surviving piece, the
+def test_unigram_em_mass_conservation(spark, monkeypatch):
+    """With ULM_TOP_K large enough to return every surviving piece, the
     total character mass of segmented pieces equals the character mass
     of the capped word table — every word is segmented exactly, no
     characters created or lost (the E-step's reconstruction identity)."""
-    out = tokenize.unigram_lm_em(
-        spark, SF, rounds=1, max_words=300, max_vocab=100, top_k=100000
-    ).collect()
+    monkeypatch.setattr(tokenize, "ULM_ROUNDS", 1)
+    monkeypatch.setattr(tokenize, "ULM_MAX_WORDS", 300)
+    monkeypatch.setattr(tokenize, "ULM_MAX_VOCAB", 100)
+    monkeypatch.setattr(tokenize, "ULM_TOP_K", 100000)
+    out = tokenize.unigram_lm_em(spark, SF).collect()
     piece_mass = sum(len(r["piece"]) * r["n_uses"] for r in out)
     docs = spark.read.parquet(f"{SF}/documents.parquet").where(
         F.col("text").isNotNull()
