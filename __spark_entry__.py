@@ -686,21 +686,16 @@ def _url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return url_frontier(_frontier_hrefs(docs))
 
 
-def _domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration PageRank over a deterministic domain graph,
-    HASH-CHECKED: edges (src = doc_id%50, dst = (7·src + doc_id÷50)%50,
-    one-third of rows dropped by a (src+2t)%3 predicate so out-degrees
-    vary) run 4 rounds of the EXACT integer-arithmetic power iteration
-    (``extractor/ops/links.py::pagerank`` — floor-division contributions,
-    order-independent sums), and the oracle unrolls the same 4 rounds as
-    chained SQL CTEs.  The classic iterative web-graph algorithm, in a
-    formulation an engine-independent oracle can verify bit-for-bit."""
-    from extractor.ops.links import pagerank
-
+def _domain_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic domain graph shared by ``domain_pagerank``,
+    ``domain_hits`` and ``bfs_hop_distance``: edges src = doc_id%50,
+    dst = (7·src + doc_id÷50)%50, with one-third of rows dropped by a
+    (src+2t)%3 predicate so out-degrees vary; duplicates collapsed.  ONE
+    generator, as ``_layered_domain_graph`` is for the layered graph."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     s = F.pmod(F.col("doc_id"), F.lit(50))
     t = F.expr("doc_id DIV 50")
-    edges = (
+    return (
         docs.where(F.pmod(s + F.lit(2) * t, F.lit(3)) != 0)
         .select(
             s.alias("src"),
@@ -708,7 +703,19 @@ def _domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return pagerank(edges, iterations=4)
+
+
+def _domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-iteration PageRank over the deterministic domain graph
+    (``_domain_graph``), HASH-CHECKED: 4 rounds of the EXACT
+    integer-arithmetic power iteration
+    (``extractor/ops/links.py::pagerank`` — floor-division contributions,
+    order-independent sums), and the oracle unrolls the same 4 rounds as
+    chained SQL CTEs.  The classic iterative web-graph algorithm, in a
+    formulation an engine-independent oracle can verify bit-for-bit."""
+    from extractor.ops.links import pagerank
+
+    return pagerank(_domain_graph(spark, sf_dir))
 
 
 def _domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -721,18 +728,7 @@ def _domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the crawl-seeding signal PageRank's single score can't give."""
     from extractor.ops.links import hits
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    s = F.pmod(F.col("doc_id"), F.lit(50))
-    t = F.expr("doc_id DIV 50")
-    edges = (
-        docs.where(F.pmod(s + F.lit(2) * t, F.lit(3)) != 0)
-        .select(
-            s.alias("src"),
-            F.pmod(F.lit(7) * s + t, F.lit(50)).alias("dst"),
-        )
-        .distinct()
-    )
-    return hits(edges)
+    return hits(_domain_graph(spark, sf_dir))
 
 
 def _layered_domain_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -855,8 +851,7 @@ def _retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS crawl depth over the SAME deterministic domain
-    graph as ``domain_pagerank`` (src = doc_id%50, dst = (7·src +
-    doc_id÷50)%50, one-third of rows dropped), seeds = the graph nodes
+    graph as ``domain_pagerank`` (``_domain_graph``), seeds = the graph nodes
     divisible by 17, HASH-CHECKED: the frontier-expansion loop
     (``extractor/ops/links.py::bfs_hop_distance`` — edges persisted and
     never re-shuffled, node-sized broadcast frontier per round) must
@@ -864,17 +859,7 @@ def _bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE.  Exact integer hops: engine-independent bit-for-bit."""
     from extractor.ops.links import bfs_hop_distance
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    s = F.pmod(F.col("doc_id"), F.lit(50))
-    t = F.expr("doc_id DIV 50")
-    edges = (
-        docs.where(F.pmod(s + F.lit(2) * t, F.lit(3)) != 0)
-        .select(
-            s.alias("src"),
-            F.pmod(F.lit(7) * s + t, F.lit(50)).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _domain_graph(spark, sf_dir)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))

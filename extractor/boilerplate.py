@@ -58,7 +58,6 @@ _HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 @dataclass
 class Block:
     text: str
-    tag: str
     link_chars: int
     inline_tags: int
     markup_chars: int
@@ -93,7 +92,6 @@ def _segment(doc: Element) -> list[Block]:
             blocks.append(
                 Block(
                     text=text,
-                    tag=tag,
                     link_chars=buf["link"],
                     inline_tags=buf["tags"],
                     markup_chars=buf["markup"],

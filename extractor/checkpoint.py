@@ -41,7 +41,7 @@ from __future__ import annotations
 import time
 
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F, types as T
 
 from . import publish
 from .pipeline import extract_transcripts
@@ -127,15 +127,20 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def fingerprint_aggs(columns: list[str]) -> list[Column]:
+    """The ``(n, h)`` table fingerprint as two named aggregates: ``n`` =
+    row count, ``h`` = exact decimal SUM of per-row xxhash64 over
+    *columns* (sorted), so it is order-insensitive but
+    multiplicity-sensitive (``[A,A] -> [B,B]`` changes it), and
+    decimal(38,0) holds 10^12 rows x 2^63 without overflow."""
+    h = F.sum(F.xxhash64(*sorted(columns)).cast(T.DecimalType(38, 0)))
+    return [F.count("*").alias("n"), h.alias("h")]
+
+
 def content_fingerprint(df: DataFrame) -> tuple:
-    """Whole-table ``(n, h)`` fingerprint, the check a directory rewrite
-    must pass before it is published: ``n`` = row count, ``h`` = exact
-    decimal SUM of per-row xxhash64 over every column (sorted), so it is
-    order-insensitive but multiplicity-sensitive (``[A,A] -> [B,B]``
-    changes it), and decimal(38,0) holds 10^12 rows x 2^63 without
-    overflow."""
-    h = F.sum(F.xxhash64(*sorted(df.columns)).cast(T.DecimalType(38, 0)))
-    return tuple(df.agg(F.count("*").alias("n"), h.alias("h")).first())
+    """Whole-table ``fingerprint_aggs`` over every column, the check a
+    directory rewrite must pass before it is published."""
+    return tuple(df.agg(*fingerprint_aggs(df.columns)).first())
 
 
 def run_with_checkpoint(

@@ -20,12 +20,15 @@ an ANSI/DuckDB SQL oracle used by the driver's correctness gate:
 
 The keyed-uniform bucket (first 8 md5 hex digits of ``salt || key``)
 has one Spark helper, ``md5_bucket`` below; its DuckDB twin is
-``__spark_entry__._dd_md5_bucket``.
+``__spark_entry__._dd_md5_bucket``.  The iterative operators run their
+rounds through ``fixpoint`` below.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 
 def md5_bucket(
@@ -43,3 +46,36 @@ def md5_bucket(
         F.substring(F.md5(F.concat(F.lit(salt), *cols)), 1, 8), 16, 10
     ).cast("long")
     return h if mod is None else h % mod
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    signature: list[Column],
+    max_rounds: int,
+) -> tuple[DataFrame, bool]:
+    """Run ``state = step(state, r)`` for ``r = 1..max_rounds`` until a
+    round leaves *signature* (named aggregate Columns over the state)
+    unchanged; return ``(state, converged)``, ``converged=False`` when
+    the budget runs out first.  The initial state and each round's are
+    materialized by one eager ``localCheckpoint``, and the signature is
+    read off that same job with ``DataFrame.observe``: convergence costs
+    no Spark action of its own.
+
+    Exact only if, between consecutive rounds, the signature changes
+    whenever the state does: e.g. a sum of values that only grow (or
+    only fall) over a fixed key set, the row count of a set that only
+    grows, or a multiset hash up to its collision rate."""
+
+    def settle(df: DataFrame) -> tuple[DataFrame, dict]:
+        obs = Observation()
+        df = df.observe(obs, *signature).localCheckpoint()
+        return df, obs.get
+
+    state, sig = settle(state)
+    for r in range(1, max_rounds + 1):
+        state, new = settle(step(state, r))
+        if new == sig:
+            return state, True
+        sig = new
+    return state, False

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor.fanout import fan_out_scan, post_shuffle_filter
-from extractor.ops import md5_bucket
+from extractor.ops import fixpoint, md5_bucket
 
 N_HASHES = 8
 BAND_SIZE = 2  # 4 bands of 2 hashes
@@ -565,9 +565,10 @@ def neardup_clusters(
     rounds.  At web scale swap the propagation step for the
     large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14) — O(log n) rounds on any
-    topology with the same join/agg shape.  Per-round driver work is one
-    bounded ``count()`` on the changed-label set; ``localCheckpoint``
-    truncates the growing lineage each round.
+    topology with the same join/agg shape.  Rounds run through
+    :func:`extractor.ops.fixpoint`: labels only fall over a fixed node
+    set, so ``sum(cluster_id)``, observed on each round's checkpoint
+    job, stops changing exactly when no label does.
 
     Output: (doc_id, cluster_id, cluster_size) for every node in the
     graph, cluster_size > 1 by construction.
@@ -601,13 +602,13 @@ def neardup_clusters(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
         )
     ).localCheckpoint()
-    labels = (
+    labels0 = (
         und.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint()
     )
-    for _ in range(CC_MAX_ITERS):
+
+    def propagate(labels: DataFrame, _r: int) -> DataFrame:
         neighbor_min = (
             und.join(
                 labels.select(
@@ -620,26 +621,20 @@ def neardup_clusters(
             .agg(F.min("nbr_label").alias("nbr_min"))
             .select(F.col("doc_a").alias("doc_id"), "nbr_min")
         )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "cluster_id", F.coalesce("nbr_min", "cluster_id")
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
+        return labels.join(neighbor_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                "cluster_id", F.coalesce("nbr_min", "cluster_id")
+            ).alias("cluster_id"),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
+
+    labels, converged = fixpoint(
+        labels0,
+        propagate,
+        [F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("label_sum")],
+        CC_MAX_ITERS,
+    )
+    if not converged:
         # never silently return a non-converged labeling: wrong cluster
         # assignments with no signal are worse than a loud failure
         raise RuntimeError(
@@ -651,8 +646,6 @@ def neardup_clusters(
     # one row per CLUSTER, which at web scale is corpus-order (most dup
     # clusters are pairs) — never a broadcast side.  One shuffle on
     # cluster_id either way; the window skips the join entirely.
-    from pyspark.sql.window import Window as _W
-
     return labels.select(
         "doc_id",
         "cluster_id",
@@ -675,10 +668,14 @@ def _cc_two_phase(und: DataFrame) -> DataFrame:
     - small-star(u):  over edges with v ≤ u only, emit (v, m) ∪ (u, m)
       for the same local min m
 
-    Convergence: the edge multiset stops changing (compared by a tiny
-    count + hash-sum aggregate, one row); converged state is a star from
-    every node to its component min."""
+    Convergence: the rounds run through :func:`extractor.ops.fixpoint`
+    and stop when the edge multiset stops changing, compared by the
+    ``checkpoint.fingerprint_aggs`` (count, xxhash64 sum) pair that each
+    round's own ``localCheckpoint`` job observes; converged state is a
+    star from every node to its component min."""
     from pyspark.sql.window import Window
+
+    from extractor.checkpoint import fingerprint_aggs
 
     def star(edges: DataFrame, large: bool) -> DataFrame:
         # symmetric neighborhoods of the center column "u"
@@ -702,23 +699,13 @@ def _cc_two_phase(und: DataFrame) -> DataFrame:
             )
         return out.where(F.col("u") != F.col("v")).distinct()
 
-    def fingerprint(edges: DataFrame):
-        row = edges.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    edges = und.select("u", "v").where(F.col("u") != F.col("v")).distinct()
-    edges = edges.localCheckpoint()
-    fp = fingerprint(edges)
-    for _ in range(CC_MAX_ITERS):
-        edges = star(star(edges, large=True), large=False).localCheckpoint()
-        fp_new = fingerprint(edges)
-        if fp_new == fp:
-            break
-        fp = fp_new
-    else:
+    edges, converged = fixpoint(
+        und.select("u", "v").where(F.col("u") != F.col("v")).distinct(),
+        lambda edges, _r: star(star(edges, large=True), large=False),
+        fingerprint_aggs(["u", "v"]),
+        CC_MAX_ITERS,
+    )
+    if not converged:
         raise RuntimeError(
             f"large-star/small-star did not converge within {CC_MAX_ITERS}"
             " rounds — O(log^2 n) bound exceeded"

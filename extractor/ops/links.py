@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from extractor.ops import md5_bucket
+from extractor.ops import fixpoint, md5_bucket
 
 LINK_SCHEMA = "doc_id long, href string, anchor string"
 
@@ -156,13 +156,14 @@ def url_frontier(links: DataFrame) -> DataFrame:
 
 PAGERANK_DAMPING_PCT = 85  # damping d, in percent
 PAGERANK_SCALE = 10 ** 12  # rank fixed-point scale
+PAGERANK_ITERATIONS = 4  # power-iteration rounds
 
 
 
-def pagerank(edges: DataFrame, iterations: int = 5,
-             materialize: bool = True) -> DataFrame:
-    """Fixed-iteration PageRank over a (src, dst) edge table, in EXACT
-    integer arithmetic: ``(node, rank)`` with
+def pagerank(edges: DataFrame, materialize: bool = True) -> DataFrame:
+    """Fixed-iteration PageRank (``PAGERANK_ITERATIONS`` rounds) over a
+    (src, dst) edge table, in EXACT integer arithmetic: ``(node, rank)``
+    with
 
         rank_0(v)   = PAGERANK_SCALE
         rank_k+1(v) = PAGERANK_SCALE*(100-d)//100
@@ -211,7 +212,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
         nodes = nodes.persist()
     base = PAGERANK_SCALE * (100 - PAGERANK_DAMPING_PCT) // 100
     ranks = nodes.select("node", F.lit(PAGERANK_SCALE).cast("long").alias("rank"))
-    for it in range(iterations):
+    for it in range(PAGERANK_ITERATIONS):
         contribs = (
             weighted.join(
                 F.broadcast(ranks), weighted["src"] == ranks["node"]
@@ -237,7 +238,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
         # lineage cut BETWEEN iterations: every earlier round reads one
         # materialized node-cardinality vector instead of replaying the
         # whole k-round chain
-        if materialize and it < iterations - 1:
+        if materialize and it < PAGERANK_ITERATIONS - 1:
             ranks = ranks.localCheckpoint(eager=False)
     if materialize:
         # eager materialization (cascades the lazy per-round checkpoints
@@ -356,16 +357,15 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     usually tiny) frontier onto it, so per-round cost is one map-side
     semi-join over edges plus two node-cardinality hash ops (the
     anti-join and the union-dedup).  ``dist`` stays node-sized.  Rounds
-    are bounded by ``BFS_MAX_HOPS`` (graph diameter in practice — O(log n) on
-    web graphs); the one driver-side action per round is an empty-check
-    on the frontier, which also cuts lineage via ``localCheckpoint``."""
+    run through :func:`extractor.ops.fixpoint`, capped at ``BFS_MAX_HOPS``
+    (graph diameter in practice — O(log n) on web graphs).  Round k's
+    frontier is ``dist``'s hop-(k-1) rows and ``dist`` only grows by new
+    nodes, so its row count, observed on the round's own checkpoint
+    job, stops changing exactly when no node is new."""
     e = edges.select("src", "dst").persist()
-    dist = seeds.select(
-        F.col("node").cast("long").alias("node"),
-        F.lit(0).cast("long").alias("hops"),
-    ).localCheckpoint()
-    frontier = dist.select("node")
-    for k in range(1, BFS_MAX_HOPS + 1):
+
+    def expand(dist: DataFrame, k: int) -> DataFrame:
+        frontier = dist.where(F.col("hops") == k - 1).select("node")
         reached = (
             e.join(F.broadcast(frontier), e["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
@@ -373,11 +373,15 @@ def bfs_hop_distance(edges: DataFrame, seeds: DataFrame) -> DataFrame:
         )
         new = reached.join(dist, "node", "left_anti").select(
             "node", F.lit(k).cast("long").alias("hops")
-        ).localCheckpoint()  # eager: the isEmpty probe reads it next
-        if new.rdd.isEmpty():
-            break
-        dist = dist.unionAll(new).localCheckpoint(eager=False)
-        frontier = new.select("node")
+        )
+        return dist.unionAll(new)
+
+    seeded = seeds.select(
+        F.col("node").cast("long").alias("node"),
+        F.lit(0).cast("long").alias("hops"),
+    )
+    # the hop cap is a cap, not an error: `converged` goes unread
+    dist, _ = fixpoint(seeded, expand, [F.count("*").alias("n")], BFS_MAX_HOPS)
     e.unpersist()
     return dist
 
@@ -561,6 +565,16 @@ def hits(edges: DataFrame, materialize: bool = True) -> DataFrame:
     return out
 
 
+def undirected_edges(edges: DataFrame) -> DataFrame:
+    """The symmetric simple graph of a (src, dst) edge table (self-loops
+    dropped, both orientations, duplicates collapsed), lazy: each caller
+    persists it as its own materialization policy allows."""
+    e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
+    return e0.union(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
 KCORE_K = 3  # minimum degree a survivor keeps
 KCORE_ROUNDS = 4  # peeling rounds
 
@@ -586,10 +600,7 @@ def kcore(edges: DataFrame, materialize: bool = True) -> DataFrame:
     ``localCheckpoint``-ed to keep lineage linear.  At 10^8+ surviving
     nodes, swap the broadcasts for src/dst-bucketed semi-joins; the
     edge table still never moves."""
-    e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    e = e0.union(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    e = undirected_edges(edges)
     if materialize:
         # plan-gate callers (materialize=False) get a pure lazy plan —
         # nothing cached, nothing for them to release
@@ -655,14 +666,7 @@ def label_propagation(edges: DataFrame) -> DataFrame:
     "highest count, then smallest label" without a sort.
 
     Output: ``(node, label)`` after ``LPA_ROUNDS`` votes."""
-    e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    e = (
-        e0.union(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
+    e = undirected_edges(edges).persist()
     labels = (
         e.select(F.col("src").alias("node"))
         .distinct()
@@ -728,14 +732,7 @@ def jaccard_linkpred(edges: DataFrame) -> DataFrame:
 
     Output: ``(a, b, common, score_ppm)``, the ``LINKPRED_TOP_N`` candidate edges by
     (score_ppm desc, a, b)."""
-    e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    e = (
-        e0.union(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
+    e = undirected_edges(edges).persist()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     centers = deg.where(F.col("deg") <= LINKPRED_MAX_DEGREE).select(
         F.col("src").alias("z")
@@ -799,16 +796,16 @@ def dag_longest_path(edges: DataFrame) -> DataFrame:
     every round re-relaxes all edges Bellman-Ford-style).
 
     Iterates ``depth(v) ← max(depth(v), max over in-edges (depth(u)+1))``
-    to a FIXPOINT, verified by a 1-row changed-count aggregate per round
-    (same convergence contract as ``dedup._cc_two_phase``); raises if
-    ``DAG_MAX_ROUNDS`` is exhausted first rather than return wrong depths.
-    Rounds needed = longest path length, O(diameter) like every
-    label-relaxation algorithm here.
+    to a FIXPOINT through :func:`extractor.ops.fixpoint` (depths only
+    grow over a fixed node set, so ``sum(depth)`` stops changing exactly
+    when no depth does); raises if ``DAG_MAX_ROUNDS`` is exhausted first
+    rather than return wrong depths.  Rounds needed = longest path
+    length, O(diameter) like every label-relaxation algorithm here.
 
     Scale posture: the edge table never re-shuffles; each round joins it
     against a BROADCAST of the (node-sized) depth vector, one map-side
-    combined max per dst, and the convergence check is a 1-row count —
-    the driver never sees per-node data.
+    combined max per dst, and the convergence read is one observed sum
+    on the round's own job — the driver never sees per-node data.
 
     Output: ``(node, depth)``."""
     dag = (
@@ -820,15 +817,14 @@ def dag_longest_path(edges: DataFrame) -> DataFrame:
         .distinct()
         .persist()
     )
-    depth = (
+    depth0 = (
         dag.select(F.col("src").alias("node"))
         .union(dag.select(F.col("dst").alias("node")))
         .distinct()
         .select("node", F.lit(0).cast("long").alias("depth"))
-        .localCheckpoint()
     )
-    converged = False
-    for _ in range(DAG_MAX_ROUNDS):
+
+    def relax(depth: DataFrame, _r: int) -> DataFrame:
         relaxed = (
             dag.join(
                 F.broadcast(
@@ -842,26 +838,19 @@ def dag_longest_path(edges: DataFrame) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg((F.max("d_src") + F.lit(1)).alias("d_in"))
         )
-        new_depth = (
-            depth.join(relaxed, "node", "left")
-            .select(
-                "node",
-                F.greatest(
-                    F.col("depth"), F.coalesce(F.col("d_in"), F.lit(0))
-                ).cast("long").alias("depth"),
-            )
-            .localCheckpoint()
+        return depth.join(relaxed, "node", "left").select(
+            "node",
+            F.greatest(
+                F.col("depth"), F.coalesce(F.col("d_in"), F.lit(0))
+            ).cast("long").alias("depth"),
         )
-        changed = (
-            new_depth.alias("n")
-            .join(depth.alias("o"), "node")
-            .where(F.col("n.depth") != F.col("o.depth"))
-            .count()
-        )
-        depth = new_depth
-        if changed == 0:
-            converged = True
-            break
+
+    depth, converged = fixpoint(
+        depth0,
+        relax,
+        [F.sum(F.col("depth").cast("decimal(38,0)")).alias("depth_sum")],
+        DAG_MAX_ROUNDS,
+    )
     dag.unpersist()
     if not converged:
         raise RuntimeError(
@@ -898,14 +887,7 @@ def deepwalk_corpus(edges: DataFrame) -> DataFrame:
     Output: ``(start, step, node)`` — step 0 is the start node."""
     from pyspark.sql.window import Window
 
-    e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    e = (
-        e0.union(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
+    e = undirected_edges(edges).persist()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     adj = e.withColumn(
         "rk", F.row_number().over(Window.partitionBy("src").orderBy("dst"))

@@ -76,6 +76,38 @@ def test_dag_depth_satisfies_edge_recurrence(spark):
             assert dep == 1 + max(depth[s] for s in in_edges[node])
 
 
+@pytest.mark.parametrize(
+    "max_rounds, value, converged, n_jobs",
+    [(10, 5, True, 1 + 6), (3, 3, False, 1 + 3)],
+)
+def test_fixpoint_one_job_per_materialization(
+    spark, max_rounds, value, converged, n_jobs
+):
+    """``fixpoint`` over a plan with no exchange, so that one
+    localCheckpoint is one Spark job: every value climbs by one per
+    round, capped at 5, so round 6 is the first that changes nothing.
+    The convergence read must add no job of its own."""
+    from extractor.ops import fixpoint
+
+    start = spark.range(4).select("id", F.lit(0).cast("long").alias("v"))
+
+    def climb(df, _r):
+        return df.select("id", F.least(F.col("v") + 1, F.lit(5)).alias("v"))
+
+    sc = spark.sparkContext
+    group = f"fixpoint-{max_rounds}"
+    sc.setJobGroup(group, group)
+    try:
+        state, done = fixpoint(
+            start, climb, [F.sum("v").alias("v_sum")], max_rounds
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r.v for r in state.collect()] == [value] * 4
+    assert done is converged
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs
+
+
 def test_dag_raises_when_round_budget_too_small(spark, monkeypatch):
     from extractor.ops import links
 

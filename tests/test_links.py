@@ -133,25 +133,27 @@ def test_pagerank_hand_computed_one_iteration(spark, monkeypatch):
     from extractor.ops.links import pagerank
 
     monkeypatch.setattr(links, "PAGERANK_SCALE", 1000)
+    monkeypatch.setattr(links, "PAGERANK_ITERATIONS", 1)
     # a -> b, a -> c, b -> c : outdeg(a)=2, outdeg(b)=1
     edges = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("b", "c")], "src string, dst string"
     )
-    got = {r["node"]: r["rank"]
-           for r in pagerank(edges, iterations=1).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
     # base = 1000*15//100 = 150; contrib(a->x) = 1000*85 // 200 = 425;
     # contrib(b->c) = 1000*85 // 100 = 850
     assert got == {"a": 150, "b": 150 + 425, "c": 150 + 425 + 850}
 
 
-def test_pagerank_mass_and_determinism(spark):
+def test_pagerank_mass_and_determinism(spark, monkeypatch):
+    from extractor.ops import links
     from extractor.ops.links import pagerank
 
+    monkeypatch.setattr(links, "PAGERANK_ITERATIONS", 3)
     edges = spark.createDataFrame(
         [(i % 7, (3 * i + 1) % 7) for i in range(20)], "src long, dst long"
     ).distinct()
-    a = sorted(map(tuple, pagerank(edges, iterations=3).collect()))
-    b = sorted(map(tuple, pagerank(edges, iterations=3).collect()))
+    a = sorted(map(tuple, pagerank(edges).collect()))
+    b = sorted(map(tuple, pagerank(edges).collect()))
     assert a == b  # exact integer arithmetic: bit-identical across runs
     total = sum(r for _, r in a)
     n = len(a)
@@ -160,14 +162,16 @@ def test_pagerank_mass_and_determinism(spark):
     assert total > n * 10 ** 12 - n * 3 * 10 ** 3
 
 
-def test_pagerank_broadcasts_ranks_not_edges(spark):
+def test_pagerank_broadcasts_ranks_not_edges(spark, monkeypatch):
+    from extractor.ops import links
     from extractor.ops.links import pagerank
 
+    monkeypatch.setattr(links, "PAGERANK_ITERATIONS", 2)
     edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
     # the default (materialize=True) eagerly checkpoints the final vector
     # (and releases its caches), hiding the iteration plan behind an
     # ExistingRDD scan — gate the REAL lazy plan via materialize=False
-    plan = (pagerank(edges, iterations=2, materialize=False)
+    plan = (pagerank(edges, materialize=False)
             ._jdf.queryExecution().executedPlan().toString())
     # each iteration's rank-onto-edges join is broadcast, as is the
     # outdeg join feeding the weighted edge table; the remaining

@@ -596,13 +596,14 @@ def test_domain_hits_broadcast_power_iteration(spark):
     assert all("Cross" in pair for pair in nlj), nlj[:5]
 
 
-def test_domain_pagerank_broadcast_power_iteration(spark):
+def test_domain_pagerank_broadcast_power_iteration(spark, monkeypatch):
     import __spark_entry__ as e
+    from extractor.ops import links
     from extractor.ops.links import pagerank
 
+    monkeypatch.setattr(links, "PAGERANK_ITERATIONS", 3)
     plan = formatted_plan(
-        pagerank(e._layered_domain_graph(spark, SF), iterations=3,
-                 materialize=False)
+        pagerank(e._layered_domain_graph(spark, SF), materialize=False)
     )
     # ranks broadcast onto the edge table every round; contributions
     # aggregate on dst (node-cardinality); no cartesian anywhere
