@@ -21,9 +21,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from extractor.boilerplate import strip_boilerplate_batch
+from extractor.boilerplate import strip_boilerplate
 from extractor.fanout import fan_out_scan
-from extractor.layout import parse_layout_batch, synth_layout_doc
+from extractor.layout import parse_layout, synth_layout_doc
 from extractor.ops import (
     convops,
     dedup,
@@ -41,13 +41,16 @@ from extractor.pipeline import (
     lineage_manifest,
     stitch_conversations,
 )
-from extractor.session import local_frame
+from extractor.session import arrow_stage, local_frame
 from extractor.transcripts import transcripts_df
 
 
-# Fan-out cap for the mapInPandas kernels below: measured per-task
-# Python-worker overhead makes 8-16 tasks the flat optimum for a ~1 s
-# kernel; full-core fan-out regresses.
+# Fan-out cap for the Python kernels below.  It was set when every task
+# paid a Python-worker setup cost, most of it the zip-directory re-read
+# that ``arrow_stage`` now spares each later task in a worker: at sf0.1 on
+# a 4-vCPU host (local[8]), 8 tasks instead of 4 cost ``boilerplate_strip``
+# +0.24 s with the re-read and +0.07 s without it.  The 16 is the earlier
+# many-core optimum and has not been re-measured on such a host.
 _PY_KERNEL_FAN_OUT = 16
 
 
@@ -85,13 +88,18 @@ def _boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def kernel(iterator):
-        for pdf in iterator:
-            out = strip_boilerplate_batch(pdf["html"])
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
+    def kernel(batch):
+        res = [strip_boilerplate(h) for h in batch.column("html").to_pylist()]
+        return (
+            batch.column("doc_id"),
+            [r.main_text for r in res],
+            [r.n_blocks for r in res],
+            [r.n_good for r in res],
+            [r.boilerplate_ratio for r in res],
+            [r.error for r in res],
+        )
 
-    return wrapped.mapInPandas(kernel, schema)
+    return arrow_stage(wrapped, kernel, schema)
 
 
 def _layout_linearize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,26 +118,21 @@ def _layout_linearize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def kernel(iterator):
-        import pandas as pd
+    def kernel(batch):
+        res = [
+            parse_layout(synth_layout_doc(42, i))
+            for i in batch.column("id").to_pylist()
+        ]
+        return (
+            batch.column("id"),
+            [r.n_pages for r in res],
+            [r.n_blocks for r in res],
+            [len(r.text or "") for r in res],
+            [len(r.spans) for r in res],
+            [r.error for r in res],
+        )
 
-        for pdf in iterator:
-            payloads = pd.Series(
-                [synth_layout_doc(42, int(i)) for i in pdf["id"]], dtype=object
-            )
-            out = parse_layout_batch(payloads)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["id"].values,
-                    "n_pages": out["n_pages"],
-                    "n_blocks": out["n_blocks"],
-                    "text_len": out["text"].str.len().fillna(0).astype("int32"),
-                    "n_spans": out["spans"].map(len),
-                    "error": out["error"],
-                }
-            )
-
-    return spark.range(300).mapInPandas(kernel, schema)
+    return arrow_stage(spark.range(300), kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -192,7 +195,8 @@ def _images_side_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _conversation_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Downstream-trainer view: one markdown doc per conversation via
-    applyInPandas over hash(conv_id) groups.  Rows-only (kernel-fed)."""
+    a grouped Arrow stage over hash(conv_id) groups.  Rows-only
+    (kernel-fed)."""
     df = transcripts_df(spark, n_convs=100, mean_turns=10, seed=42)
     out = extract_transcripts(df, sort_output=False)
     return stitch_conversations(out)
@@ -200,7 +204,7 @@ def _conversation_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _conv_stitch_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stitch operator itself under a DuckDB oracle: run the REAL
-    ``stitch_conversations`` (applyInPandas, in-group sort, null/empty
+    ``stitch_conversations`` (grouped Arrow stage, in-group sort, null/empty
     skip, ``[role]`` headers, blank-line joins) over the deterministic
     documents-derived transcript view with planted extraction errors,
     and hash the assembled markdown — so the exact concatenation order
@@ -333,27 +337,19 @@ def _docx_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     T2-normalized to ``images/``), header tables (T4 pipe tables), and OMML
     superscript math (T6 span-math mode).  The oracle rebuilds the exact
     markdown per doc_id in SQL."""
-    import pandas as pd
     from extractor.docx import decode_docx, synth_docx_bytes
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
 
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "conv_id": ids.astype(str),
-                    "turn_idx": 0,
-                    "text": [
-                        decode_docx(synth_docx_bytes(int(i))) for i in ids
-                    ],
-                }
-            )
+    def gen(batch):
+        ids = batch.column("doc_id").to_pylist()
+        return (
+            [str(i) for i in ids],
+            [0] * len(ids),
+            [decode_docx(synth_docx_bytes(i)) for i in ids],
+        )
 
-    turns = docs.mapInPandas(
-        gen, "conv_id string, turn_idx int, text string"
-    )
+    turns = arrow_stage(docs, gen, "conv_id string, turn_idx int, text string")
     out = extract_transcripts(turns, sort_output=False)
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"),
@@ -374,7 +370,6 @@ def _s9_pdf_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose text contains the literal ``) Tj`` would inflate), so the
     oracle's wrap-math reconstruction checks the renderer's actual
     output, not a shared formula."""
-    import pandas as pd
     from extractor.pdf import is_valid_pdf, pdf_to_text, text_to_pdf_bytes
 
     docs = (
@@ -383,21 +378,19 @@ def _s9_pdf_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    def render(iterator):
-        for pdf in iterator:
-            blobs = [text_to_pdf_bytes(t) for t in pdf["text"]]
-            parsed = [pdf_to_text(b) for b in blobs]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_lines": [sum(len(p) for p in pgs) for pgs in parsed],
-                    "n_pages": [len(pgs) for pgs in parsed],
-                    "pdf_bytes": [len(b) for b in blobs],
-                    "valid": [is_valid_pdf(b) for b in blobs],
-                }
-            )
+    def render(batch):
+        blobs = [text_to_pdf_bytes(t) for t in batch.column("text").to_pylist()]
+        parsed = [pdf_to_text(b) for b in blobs]
+        return (
+            batch.column("doc_id"),
+            [sum(len(p) for p in pgs) for pgs in parsed],
+            [len(pgs) for pgs in parsed],
+            [len(b) for b in blobs],
+            [is_valid_pdf(b) for b in blobs],
+        )
 
-    out = docs.mapInPandas(
+    out = arrow_stage(
+        docs,
         render,
         "doc_id long, n_lines long, n_pages long, pdf_bytes long, valid boolean",
     )
@@ -415,7 +408,6 @@ def _pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts the two decodes agree page-for-page.  Proves the layout
     byte-decode path operates on genuine PDF bytes — both encodings —
     not a shared in-memory model."""
-    import pandas as pd
     from extractor.pdf import pdf_to_text, text_to_pdf_bytes, wrap_lines
 
     docs = (
@@ -424,31 +416,23 @@ def _pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    def kernel(iterator):
-        for pdf in iterator:
-            ok, flate, pages_out, lines_out = [], [], [], []
-            for t in pdf["text"]:
-                pages = pdf_to_text(text_to_pdf_bytes(t))
-                flat = [l for p in pages for l in p]
-                degraded = t.encode("latin-1", "replace").decode("latin-1")
-                ok.append(flat == wrap_lines(degraded))
-                pages_out.append(len(pages))
-                lines_out.append(len(flat))
-                flate.append(
-                    pdf_to_text(text_to_pdf_bytes(t, stream_filter="flate"))
-                    == pages
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_lines": lines_out,
-                    "n_pages": pages_out,
-                    "roundtrip_ok": ok,
-                    "flate_ok": flate,
-                }
+    def kernel(batch):
+        ok, flate, pages_out, lines_out = [], [], [], []
+        for t in batch.column("text").to_pylist():
+            pages = pdf_to_text(text_to_pdf_bytes(t))
+            flat = [l for p in pages for l in p]
+            degraded = t.encode("latin-1", "replace").decode("latin-1")
+            ok.append(flat == wrap_lines(degraded))
+            pages_out.append(len(pages))
+            lines_out.append(len(flat))
+            flate.append(
+                pdf_to_text(text_to_pdf_bytes(t, stream_filter="flate"))
+                == pages
             )
+        return batch.column("doc_id"), lines_out, pages_out, ok, flate
 
-    return docs.mapInPandas(
+    return arrow_stage(
+        docs,
         kernel,
         "doc_id long, n_lines long, n_pages long, "
         "roundtrip_ok boolean, flate_ok boolean",
@@ -467,7 +451,6 @@ def _pdf_lzw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictor-coded mode.  Closes the last closable codec boundary on the
     document-decode axis (reference export path:
     scripts/convert_docx_to_pdf.py:32-66)."""
-    import pandas as pd
     from extractor.pdf import pdf_to_text, text_to_pdf_bytes, wrap_lines
 
     docs = (
@@ -479,32 +462,22 @@ def _pdf_lzw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contract; spread the starved single-split scan (guide §2.2)
     docs = fan_out_scan(spark, docs, docs, cap=_PY_KERNEL_FAN_OUT)
 
-    def kernel(iterator):
-        for pdf in iterator:
-            lzw_ok, pred_ok, pages_out, lines_out = [], [], [], []
-            for t in pdf["text"]:
-                degraded = t.encode("latin-1", "replace").decode("latin-1")
-                want = wrap_lines(degraded)
-                pages = pdf_to_text(text_to_pdf_bytes(t, stream_filter="lzw"))
-                flat = [l for p in pages for l in p]
-                lzw_ok.append(flat == want)
-                pages_out.append(len(pages))
-                lines_out.append(len(flat))
-                pred = pdf_to_text(
-                    text_to_pdf_bytes(t, stream_filter="lzw-png")
-                )
-                pred_ok.append(pred == pages)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_lines": lines_out,
-                    "n_pages": pages_out,
-                    "lzw_ok": lzw_ok,
-                    "pred_ok": pred_ok,
-                }
-            )
+    def kernel(batch):
+        lzw_ok, pred_ok, pages_out, lines_out = [], [], [], []
+        for t in batch.column("text").to_pylist():
+            degraded = t.encode("latin-1", "replace").decode("latin-1")
+            want = wrap_lines(degraded)
+            pages = pdf_to_text(text_to_pdf_bytes(t, stream_filter="lzw"))
+            flat = [l for p in pages for l in p]
+            lzw_ok.append(flat == want)
+            pages_out.append(len(pages))
+            lines_out.append(len(flat))
+            pred = pdf_to_text(text_to_pdf_bytes(t, stream_filter="lzw-png"))
+            pred_ok.append(pred == pages)
+        return batch.column("doc_id"), lines_out, pages_out, lzw_ok, pred_ok
 
-    return docs.mapInPandas(
+    return arrow_stage(
+        docs,
         kernel,
         "doc_id long, n_lines long, n_pages long, "
         "lzw_ok boolean, pred_ok boolean",
@@ -560,64 +533,55 @@ def _format_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the reference's extension dispatch
     (``app/core/document_converter.py:285-290``) content-sniffed for a
     world where inputs are opaque binary columns, not named files."""
-    import pandas as pd
     from extractor.docx import synth_docx_bytes
     from extractor.pdf import text_to_pdf_bytes
-    from extractor.router import route_batch
+    from extractor.router import route_payload
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                m, a, b = i % 5, i % 7, i % 3
-                if m == 0:
-                    payloads.append(
-                        f"<h1>Doc {a}</h1><p>body {b} &amp; tail</p>".encode()
-                    )
-                elif m == 1:
-                    payloads.append(synth_docx_bytes(i))
-                elif m == 2:
-                    payloads.append(
-                        text_to_pdf_bytes(f"pdf doc {a}\nline two {b}")
-                    )
-                elif m == 3:
-                    payloads.append(
-                        json.dumps(
-                            {
-                                "pages": [
-                                    {
-                                        "page": 1,
-                                        "width": 612.0,
-                                        "blocks": [
-                                            {
-                                                "x": 72.0,
-                                                "y": 0.0,
-                                                "w": 100.0,
-                                                "h": 12.0,
-                                                "size": 10.0,
-                                                "text": f"layout {a}",
-                                            }
-                                        ],
-                                    }
-                                ]
-                            }
-                        ).encode()
-                    )
-                else:
-                    payloads.append(f"plain *text* {a}\r\nline {b}".encode())
-            routed = route_batch(pd.Series(payloads))
-            routed.insert(0, "doc_id", ids.values)
-            yield routed
-
-    return docs.mapInPandas(
-        gen,
+    schema = T.StructType.fromDDL(
         "doc_id long, format string, extracted_text string, "
-        "tables_count int, math_count int, images_count int, error string",
-    ).select(
+        "tables_count int, math_count int, images_count int, error string"
+    )
+
+    def gen(batch):
+        routed = []
+        for i in batch.column("doc_id").to_pylist():
+            m, a, b = i % 5, i % 7, i % 3
+            if m == 0:
+                payload = f"<h1>Doc {a}</h1><p>body {b} &amp; tail</p>".encode()
+            elif m == 1:
+                payload = synth_docx_bytes(i)
+            elif m == 2:
+                payload = text_to_pdf_bytes(f"pdf doc {a}\nline two {b}")
+            elif m == 3:
+                payload = json.dumps(
+                    {
+                        "pages": [
+                            {
+                                "page": 1,
+                                "width": 612.0,
+                                "blocks": [
+                                    {
+                                        "x": 72.0,
+                                        "y": 0.0,
+                                        "w": 100.0,
+                                        "h": 12.0,
+                                        "size": 10.0,
+                                        "text": f"layout {a}",
+                                    }
+                                ],
+                            }
+                        ]
+                    }
+                ).encode()
+            else:
+                payload = f"plain *text* {a}\r\nline {b}".encode()
+            routed.append(route_payload(payload))
+        return [batch.column("doc_id")] + [
+            [r[name] for r in routed] for name in schema.names[1:]
+        ]
+
+    return arrow_stage(docs, gen, schema).select(
         "doc_id",
         "format",
         "extracted_text",
@@ -1628,7 +1592,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exact int8 dots (Kusupati et al. matryoshka evaluation)
         "matryoshka_eval": similarity.matryoshka_eval,
         # whole-doc next-fit-decreasing packing: per-shard greedy via
-        # applyInPandas, recursive-CTE oracle replays the chain
+        # a grouped Arrow stage, recursive-CTE oracle replays the chain
         "bin_pack_nextfit": dedup.bin_pack_nextfit,
         # RAG groundedness: assistant claim phrase vs prior tool output,
         # conversation-locked verbatim-support join

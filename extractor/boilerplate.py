@@ -30,8 +30,8 @@ link-density idea):
    (h1–h6) are kept if the following block is good.
 
 Boilerplate in, prose out — nav menus, footer link farms, and tag-only
-chrome are dropped.  Distributed via the same Arrow-batch pattern as the
-converter kernel (``strip_boilerplate_batch``); per-row errors contained.
+chrome are dropped.  Distributed as an ``arrow_stage`` kernel, like the
+converter kernel (``strip_boilerplate`` per row); per-row errors contained.
 """
 
 from __future__ import annotations
@@ -184,19 +184,3 @@ def strip_boilerplate(html: str | None) -> BoilerplateResult:
         )
     except Exception as exc:
         return BoilerplateResult(None, error=f"boilerplate_error: {exc}")
-
-
-def strip_boilerplate_batch(texts):
-    """Arrow-batch wrapper (pd.Series -> pd.DataFrame), mapInPandas-ready."""
-    import pandas as pd
-
-    rows = []
-    for value in texts:
-        r = strip_boilerplate(None if value is None or value is pd.NA else value)
-        rows.append(
-            (r.main_text, r.n_blocks, r.n_good, r.boilerplate_ratio, r.error)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=["main_text", "n_blocks", "n_good", "boilerplate_ratio", "error"],
-    )

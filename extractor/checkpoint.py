@@ -45,7 +45,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions 
 
 from . import publish
 from .pipeline import extract_transcripts
-from .session import forget_zip_importers, local_frame
+from .session import arrow_stage, local_frame
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -199,14 +199,12 @@ def run_with_checkpoint(
             if failure_hook is not None:
                 hook = failure_hook  # capture for closure serialization
 
-                def _inject(batches, _hook=hook):
-                    forget_zip_importers()
-                    for batch in batches:
-                        for b in pc.unique(batch.column("bucket")).to_pylist():
-                            _hook(b)
-                        yield batch
+                def _inject(batch, _hook=hook):
+                    for b in pc.unique(batch.column("bucket")).to_pylist():
+                        _hook(b)
+                    return batch.columns
 
-                sub = sub.mapInArrow(_inject, sub.schema)
+                sub = arrow_stage(sub, _inject, sub.schema)
             out = extract_transcripts(
                 sub,
                 partition_mode=partition_mode,

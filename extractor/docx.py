@@ -6,8 +6,8 @@ into HTML, which ``app/core/html_processor.py`` then converts to markdown.
 Here the same DOCX→HTML step is a pure-Python stdlib reader — ``zipfile``
 over the OOXML package + ``xml.etree.ElementTree`` over
 ``word/document.xml`` — with NO subprocess and no per-row process spawn,
-so it is Arrow-batchable inside ``mapInPandas`` and scales with executor
-cores instead of forking pandoc 10^12 times.
+so it is Arrow-batchable inside an ``arrow_stage`` kernel and scales with
+executor cores instead of forking pandoc 10^12 times.
 
 Produced HTML is deliberately shaped for the existing DOM kernel
 (``extractor/kernel.py``): headings/paragraphs/``strong``/``em``, pipe-table

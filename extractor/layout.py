@@ -226,19 +226,6 @@ def parse_layout(payload) -> LayoutResult:
         return LayoutResult(None, error=f"layout_error: {str(exc)[:200]}")
 
 
-def parse_layout_batch(payloads):
-    """Arrow-batch wrapper for mapInPandas."""
-    import pandas as pd
-
-    rows = []
-    for value in payloads:
-        r = parse_layout(None if value is None or value is pd.NA else value)
-        rows.append((r.text, r.spans, r.n_pages, r.n_blocks, r.error))
-    return pd.DataFrame(
-        rows, columns=["text", "spans", "n_pages", "n_blocks", "error"]
-    )
-
-
 def synth_layout_doc(seed: int, doc_index: int) -> str:
     """Deterministic synthetic two-column layout document (JSON)."""
     import hashlib

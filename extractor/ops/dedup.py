@@ -8,8 +8,8 @@
 - ngram_jaccard: token-set Jaccard between adjacent doc pairs (the linear
   oracle-able variant; the quadratic candidate generation is what minhash_lsh
   replaces at scale)
-- simhash: 64-bit sign-aggregated token-hash fingerprint via a vectorized
-  pandas UDF (numpy bit math; md5-derived token hashes, so even this is
+- simhash: 64-bit sign-aggregated token-hash fingerprint via an Arrow
+  kernel (numpy bit math; md5-derived token hashes, so even this is
   oracle-checkable — DuckDB rebuilds the fingerprint with HUGEINT bit math)
 
 Scale: exact/minhash/simhash are all linear with one-or-two shuffles;
@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor.fanout import fan_out_scan, post_shuffle_filter
 from extractor.ops import fixpoint, md5_bucket
+from extractor.session import arrow_stage
 
 N_HASHES = 8
 BAND_SIZE = 2  # 4 bands of 2 hashes
@@ -278,45 +279,42 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     docs = fan_out_scan(spark, docs, docs)
 
-    def kernel(iterator):
+    def kernel(batch):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
         bit_idx = np.arange(64, dtype=np.uint64)
-        for pdf in iterator:
-            out_ids, out_hashes = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = set(str(text).lower().split())
-                if toks:
-                    # one md5 per token stays (hash identity is the oracle
-                    # contract); the per-token numpy bit math is batched
-                    # into a single (n_tok, 64) matrix op — same integer
-                    # arithmetic, ~10x less per-token Python overhead
-                    hs = np.fromiter(
-                        (
-                            int.from_bytes(
-                                hashlib.md5(t.encode()).digest()[:8], "big"
-                            )
-                            for t in toks
-                        ),
-                        dtype=np.uint64,
-                        count=len(toks),
-                    )
-                    bits = (hs[:, None] >> bit_idx) & np.uint64(1)
-                    acc = np.where(bits.astype(bool), 1, -1).sum(
-                        axis=0, dtype=np.int64
-                    )
-                else:
-                    acc = np.zeros(64, dtype=np.int64)
-                sig = int(((acc > 0).astype(np.uint64) << bit_idx).sum())
-                out_ids.append(doc_id)
-                # store as signed 64-bit
-                out_hashes.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
-            yield pd.DataFrame({"doc_id": out_ids, "simhash": out_hashes})
+        out_hashes = []
+        for text in batch.column("text").to_pylist():
+            toks = set(str(text).lower().split())
+            if toks:
+                # one md5 per token stays (hash identity is the oracle
+                # contract); the per-token numpy bit math is batched
+                # into a single (n_tok, 64) matrix op — same integer
+                # arithmetic, ~10x less per-token Python overhead
+                hs = np.fromiter(
+                    (
+                        int.from_bytes(
+                            hashlib.md5(t.encode()).digest()[:8], "big"
+                        )
+                        for t in toks
+                    ),
+                    dtype=np.uint64,
+                    count=len(toks),
+                )
+                bits = (hs[:, None] >> bit_idx) & np.uint64(1)
+                acc = np.where(bits.astype(bool), 1, -1).sum(
+                    axis=0, dtype=np.int64
+                )
+            else:
+                acc = np.zeros(64, dtype=np.int64)
+            sig = int(((acc > 0).astype(np.uint64) << bit_idx).sum())
+            # store as signed 64-bit
+            out_hashes.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
+        return batch.column("doc_id"), out_hashes
 
-    return docs.select("doc_id", "text").mapInPandas(kernel, _SIMHASH_SCHEMA)
+    return arrow_stage(docs.select("doc_id", "text"), kernel, _SIMHASH_SCHEMA)
 
 
 SIMHASH_BANDS = 4  # 16 bits each; near-dups (hamming<=3) collide in >=1 band
@@ -1151,7 +1149,7 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the closing rollup is a single-row aggregate.  The per-position
     md5 costs O(len) hashes per document — the declarative semantics
     spec; a production 100 TB run swaps in an O(1)-per-byte gear
-    rolling hash inside ``mapInPandas`` with the same boundary
+    rolling hash inside an ``arrow_stage`` kernel with the same boundary
     distribution and identical downstream topology."""
     docs = _docs(spark, sf_dir).where(
         F.col("text").isNotNull() & (F.length("text") >= 1)
@@ -1473,7 +1471,7 @@ def bin_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale topology (100 TB): greedy packing is inherently sequential,
     so parallelism comes from SHARDING, not from the algorithm — one
     hash shuffle into ``BINPACK_SHARDS`` groups, then a per-shard Arrow batch
-    walk (`applyInPandas`, the mandate's custom-stateful-operator
+    walk (a grouped ``arrow_stage``, the mandate's custom-stateful-operator
     fallback: the data dependency chain genuinely can't be a window).
     Shard count scales with the cluster; per-shard state is two ints.
     The DuckDB oracle replays the identical greedy chain as a
@@ -1489,24 +1487,13 @@ def bin_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def pack(pdf):
-        import pandas as pd
+    def pack(table):
+        table = table.sort_by([("n", "descending"), ("doc_id", "ascending")])
+        bins, fills = nextfit_chain(table.column("n").to_pylist(), BINPACK_CAP)
+        return table.column("doc_id"), table.column("shard"), bins, fills
 
-        pdf = pdf.sort_values(
-            ["n", "doc_id"], ascending=[False, True], kind="mergesort"
-        )
-        bins, fills = nextfit_chain(pdf["n"], BINPACK_CAP)
-        out = pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "shard": pdf["shard"].to_numpy(),
-                "bin_local": bins,
-                "bin_fill_after": fills,
-            }
-        )
-        return out.astype("int64")
-
-    return docs.groupBy("shard").applyInPandas(
+    return arrow_stage(
+        docs.groupBy("shard"),
         pack,
         "doc_id long, shard long, bin_local long, bin_fill_after long",
     )
@@ -1731,7 +1718,7 @@ def inference_batch_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, so Σ waste is auditable downstream.
 
     Scale shape: identical to the packer — md5-uniform shards, ONE
-    shuffle into ``applyInPandas``, each shard's chain is a linear walk
+    shuffle into a grouped ``arrow_stage``, each shard's chain is a linear walk
     over its pre-sorted frame; batch ids are shard-local (globalize with
     ``shard * K + batch_local`` downstream).  The oracle replays the
     chain as a recursive CTE per shard."""
@@ -1745,24 +1732,15 @@ def inference_batch_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def pack(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(
-            ["n", "doc_id"], ascending=[False, True], kind="mergesort"
+    def pack(table):
+        table = table.sort_by([("n", "descending"), ("doc_id", "ascending")])
+        batches, ns, cells = infer_batch_chain(
+            table.column("n").to_pylist(), IBATCH_BUDGET
         )
-        batches, ns, cells = infer_batch_chain(pdf["n"], IBATCH_BUDGET)
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "shard": pdf["shard"].to_numpy(),
-                "batch_local": batches,
-                "batch_fill_n": ns,
-                "padded_cells_after": cells,
-            }
-        ).astype("int64")
+        return table.column("doc_id"), table.column("shard"), batches, ns, cells
 
-    return docs.groupBy("shard").applyInPandas(
+    return arrow_stage(
+        docs.groupBy("shard"),
         pack,
         "doc_id long, shard long, batch_local long, batch_fill_n long,"
         " padded_cells_after long",

@@ -11,7 +11,7 @@ structured companion to the inline rendering, in the same family as the
 dedup/sampling extensions (first-class training-pipeline operators
 beyond the reference's own surface).
 
-Scale posture (100 TB): a single map-only Arrow stage — ``mapInPandas``
+Scale posture (100 TB): a single map-only Arrow stage — ``arrow_stage``
 parses each batch and yields the exploded per-link rows directly (no
 Spark-side explode, no shuffle, no UDF in the hot columns afterward);
 ``domain`` is derived JVM-side with ``F.parse_url`` so the only Python
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from extractor.ops import fixpoint, md5_bucket
+from extractor.session import arrow_stage
 
 LINK_SCHEMA = "doc_id long, href string, anchor string"
 
@@ -37,29 +38,28 @@ def extract_links(df: DataFrame) -> DataFrame:
     skipped (same rule as the linearizer's inline rendering)."""
     from ..dom import parse_html
 
-    def kernel(iterator):
-        import pandas as pd
-
-        for batch in iterator:
-            ids, hrefs, anchors = [], [], []
-            for doc_id, html in zip(batch["doc_id"], batch["html"]):
-                if html is None:
+    def kernel(batch):
+        ids, hrefs, anchors = [], [], []
+        for doc_id, html in zip(
+            batch.column("doc_id").to_pylist(), batch.column("html").to_pylist()
+        ):
+            if html is None:
+                continue
+            try:
+                root = parse_html(html)
+            except Exception:
+                continue  # per-unit containment: bad HTML emits no rows
+            for el in root.find_all(["a"]):
+                href = el.get("href")
+                if href is None:
                     continue
-                try:
-                    root = parse_html(html)
-                except Exception:
-                    continue  # per-unit containment: bad HTML emits no rows
-                for el in root.find_all(["a"]):
-                    href = el.get("href")
-                    if href is None:
-                        continue
-                    ids.append(int(doc_id))
-                    hrefs.append(href)
-                    anchors.append(el.get_text())
-            yield pd.DataFrame({"doc_id": ids, "href": hrefs, "anchor": anchors})
+                ids.append(doc_id)
+                hrefs.append(href)
+                anchors.append(el.get_text())
+        return ids, hrefs, anchors
 
-    out = df.select(F.col("doc_id"), F.col("html")).mapInPandas(
-        kernel, LINK_SCHEMA
+    out = arrow_stage(
+        df.select(F.col("doc_id"), F.col("html")), kernel, LINK_SCHEMA
     )
     return out.select(
         "doc_id",

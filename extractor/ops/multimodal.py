@@ -7,7 +7,7 @@ rule (the router sniffs and counts image payloads; ``pdf_to_text`` skips
 image XObjects).  Only the self-describing synthetic ``FAKEIMG|`` payload
 below is parsed; any other payload raises ``NotImplementedError`` →
 contained error rows.  Everything Spark-side is real and tested: the
-binary-column schema, the Arrow batch shape through ``mapInPandas`` (bytes
+binary-column schema, the Arrow batch shape through ``arrow_stage`` (bytes
 round-trip), partition-size control for large blobs, and the
 feature-extraction output schema.
 
@@ -21,6 +21,8 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from extractor.session import arrow_stage
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -62,40 +64,33 @@ def synth_media_df(spark: SparkSession) -> DataFrame:
     """Deterministic synthetic media table — generated on executors, like
     ``extractor.transcripts`` (no driver-side data)."""
 
-    def gen(iterator):
-        import pandas as pd
-
+    def gen(batch):
         kinds = ("image", "audio", "video")
         fmts = ("png", "jpg", "bmp")
         rows = []
-        for pdf in iterator:
-            for i in pdf["id"]:
-                i = int(i)
-                h = hashlib.md5(f"{MEDIA_SEED}:{i}".encode()).digest()
-                width = 16 + h[0] % 64
-                height = 16 + h[1] % 64
-                fmt = fmts[h[2] % 3]
-                body = (h * ((width * height) // len(h) + 1))[: width * height]
-                payload = f"FAKEIMG|{width}|{height}|{fmt}|".encode() + body
-                rows.append(
-                    (
-                        i,
-                        kinds[h[3] % 3],
-                        payload,
-                        {
-                            "width": width,
-                            "height": height,
-                            "format": fmt,
-                            "n_bytes": len(payload),
-                        },
-                    )
+        for i in batch.column("id").to_pylist():
+            h = hashlib.md5(f"{MEDIA_SEED}:{i}".encode()).digest()
+            width = 16 + h[0] % 64
+            height = 16 + h[1] % 64
+            fmt = fmts[h[2] % 3]
+            body = (h * ((width * height) // len(h) + 1))[: width * height]
+            payload = f"FAKEIMG|{width}|{height}|{fmt}|".encode() + body
+            rows.append(
+                (
+                    i,
+                    kinds[h[3] % 3],
+                    payload,
+                    {
+                        "width": width,
+                        "height": height,
+                        "format": fmt,
+                        "n_bytes": len(payload),
+                    },
                 )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
             )
-            rows = []
+        return [[r[k] for r in rows] for k in range(len(MEDIA_SCHEMA))]
 
-    return spark.range(MEDIA_ROWS).mapInPandas(gen, MEDIA_SCHEMA)
+    return arrow_stage(spark.range(MEDIA_ROWS), gen, MEDIA_SCHEMA)
 
 
 def decode_payload(payload: bytes) -> tuple[int, int, bytes]:
@@ -121,33 +116,30 @@ def extract_features(media: DataFrame) -> DataFrame:
     ``spark.sql.files.maxPartitionBytes`` sized so (batch rows × blob size)
     fits executor memory; the kernel itself is O(batch bytes)."""
 
-    def kernel(iterator):
+    def kernel(batch):
         import numpy as np
-        import pandas as pd
 
-        for pdf in iterator:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, body = decode_payload(
-                        bytes(payload) if payload is not None else None
-                    )
-                    arr = np.frombuffer(body, dtype=np.uint8).astype(np.float32)
-                    # deterministic pooled "embedding": mean over strided bins
-                    pad = (-len(arr)) % FEATURE_DIM
-                    if pad:
-                        arr = np.pad(arr, (0, pad))
-                    feats = arr.reshape(FEATURE_DIM, -1).mean(axis=1) / 255.0
-                    out.append(
-                        (media_id, w, h, [float(x) for x in feats], None)
-                    )
-                except Exception as exc:
-                    out.append((media_id, None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "features", "error"]
-            )
+        out = []
+        for media_id, payload in zip(
+            batch.column("media_id").to_pylist(),
+            batch.column("payload").to_pylist(),
+        ):
+            try:
+                w, h, body = decode_payload(payload)
+                arr = np.frombuffer(body, dtype=np.uint8).astype(np.float32)
+                # deterministic pooled "embedding": mean over strided bins
+                pad = (-len(arr)) % FEATURE_DIM
+                if pad:
+                    arr = np.pad(arr, (0, pad))
+                feats = arr.reshape(FEATURE_DIM, -1).mean(axis=1) / 255.0
+                out.append((media_id, w, h, [float(x) for x in feats], None))
+            except Exception as exc:
+                out.append((media_id, None, None, None, str(exc)[:200]))
+        return [[r[k] for r in out] for k in range(len(FEATURE_SCHEMA))]
 
-    return media.select("media_id", "payload").mapInPandas(kernel, FEATURE_SCHEMA)
+    return arrow_stage(
+        media.select("media_id", "payload"), kernel, FEATURE_SCHEMA
+    )
 
 
 DHASH_BITS = 8  # dHash bits per image

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window
 
 from extractor.fanout import fan_out_scan
-from extractor.session import local_frame
+from extractor.session import arrow_stage, local_frame
 
 N_QUERIES = 5
 TOP_K = 5
@@ -28,6 +28,14 @@ N_PLANES = 16
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def _embedding_matrix(batch):
+    """An Arrow batch's ``embedding`` column as an (n, dim) numpy matrix
+    of its float32 values."""
+    import numpy as np
+
+    return np.stack(batch.column("embedding").to_numpy(zero_copy_only=False))
 
 
 def _dot(a, b):
@@ -88,36 +96,26 @@ def lsh_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     float math not portable to the SQL oracle)."""
     emb = _emb(spark, sf_dir)
 
-    def kernel(iterator):
+    def kernel(batch):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
-        planes = None
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            dim = len(pdf["embedding"].iloc[0])
-            if planes is None:
-                rows = []
-                for p in range(N_PLANES):
-                    seed = int.from_bytes(
-                        hashlib.md5(f"plane{p}".encode()).digest()[:8], "big"
-                    )
-                    rng = np.random.default_rng(seed)
-                    rows.append(rng.standard_normal(dim))
-                planes = np.stack(rows)  # (P, dim)
-            mat = np.stack(pdf["embedding"].to_numpy())  # (n, dim)
-            bits = (mat @ planes.T) > 0  # (n, P)
-            weights = (1 << np.arange(N_PLANES, dtype=np.int64))
-            buckets = (bits * weights).sum(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].values, "bucket": buckets}
+        mat = _embedding_matrix(batch)  # (n, dim)
+        rows = []
+        for p in range(N_PLANES):
+            seed = int.from_bytes(
+                hashlib.md5(f"plane{p}".encode()).digest()[:8], "big"
             )
+            rng = np.random.default_rng(seed)
+            rows.append(rng.standard_normal(mat.shape[1]))
+        planes = np.stack(rows)  # (P, dim)
+        bits = (mat @ planes.T) > 0  # (n, P)
+        weights = (1 << np.arange(N_PLANES, dtype=np.int64))
+        return batch.column("vec_id"), (bits * weights).sum(axis=1)
 
-    assignments = emb.select("vec_id", "embedding").mapInPandas(
-        kernel, _BUCKET_SCHEMA
+    assignments = arrow_stage(
+        emb.select("vec_id", "embedding"), kernel, _BUCKET_SCHEMA
     )
     return (
         assignments.groupBy("bucket")
@@ -180,42 +178,31 @@ def ann_assignments(emb: DataFrame, include_embedding: bool = True) -> DataFrame
     both layouts behind the ≥0.9 recall pytest and a no-corpus-shuffle
     plan test."""
 
-    def kernel(iterator):
+    def kernel(batch):
         import numpy as np
-        import pandas as pd
 
-        planes = None
         weights = (1 << np.arange(ANN_PLANES)).astype(np.int64)
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy())
-            if planes is None:
-                planes = _ann_planes(mat.shape[1])
-            bits = (mat @ planes.T) > 0  # (n, T*P)
-            bits = bits.reshape(len(pdf), ANN_TABLES, ANN_PLANES)
-            buckets = (bits * weights).sum(axis=2)  # (n, T)
-            out = pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), ANN_TABLES),
-                    "tbl": np.tile(
-                        np.arange(ANN_TABLES, dtype=np.int32), len(pdf)
-                    ),
-                    "bucket": buckets.astype(np.int32).ravel(),
-                }
-            )
-            if include_embedding:
-                out["embedding"] = [
-                    e for e in pdf["embedding"] for _ in range(ANN_TABLES)
-                ]
-            yield out
+        n = batch.num_rows
+        mat = _embedding_matrix(batch)
+        bits = (mat @ _ann_planes(mat.shape[1]).T) > 0  # (n, T*P)
+        bits = bits.reshape(n, ANN_TABLES, ANN_PLANES)
+        buckets = (bits * weights).sum(axis=2)  # (n, T)
+        each_row = np.repeat(np.arange(n), ANN_TABLES)
+        out = [
+            batch.column("vec_id").take(each_row),
+            np.tile(np.arange(ANN_TABLES, dtype=np.int32), n),
+            buckets.astype(np.int32).ravel(),
+        ]
+        if include_embedding:
+            out.append(batch.column("embedding").take(each_row))
+        return out
 
     schema = (
         _ASSIGN_SCHEMA
         if include_embedding
         else T.StructType([f for f in _ASSIGN_SCHEMA if f.name != "embedding"])
     )
-    return emb.select("vec_id", "embedding").mapInPandas(kernel, schema)
+    return arrow_stage(emb.select("vec_id", "embedding"), kernel, schema)
 
 
 def _rerank(cands: DataFrame) -> DataFrame:
@@ -350,25 +337,14 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def assign_kernel(iterator):
-        import pandas as pd
+    def assign_kernel(batch):
+        mat = _embedding_matrix(batch).astype(np.float64)
+        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        cells = (mat @ cents.T).argmax(axis=1).astype(np.int32)
+        return batch.column("vec_id"), cells, batch.column("embedding")
 
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            cells = (mat @ cents.T).argmax(axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "cell": cells,
-                    "embedding": pdf["embedding"].values,
-                }
-            )
-
-    assign = emb.select("vec_id", "embedding").mapInPandas(
-        assign_kernel, assign_schema
+    assign = arrow_stage(
+        emb.select("vec_id", "embedding"), assign_kernel, assign_schema
     )
 
     probe_schema = T.StructType(
@@ -379,29 +355,21 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def probe_kernel(iterator):
-        import pandas as pd
+    def probe_kernel(batch):
+        mat = _embedding_matrix(batch).astype(np.float64)
+        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        order = np.argsort(-(mat @ cents.T), axis=1)[:, :IVF_NPROBE]
+        each_row = np.repeat(np.arange(batch.num_rows), IVF_NPROBE)
+        return (
+            batch.column("vec_id").take(each_row),
+            order.astype(np.int32).ravel(),
+            batch.column("embedding").take(each_row),
+        )
 
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            order = np.argsort(-(mat @ cents.T), axis=1)[:, :IVF_NPROBE]
-            out = {
-                "query_id": np.repeat(pdf["vec_id"].to_numpy(), IVF_NPROBE),
-                "cell": order.astype(np.int32).ravel(),
-            }
-            frame = pd.DataFrame(out)
-            frame["q"] = [
-                e for e in pdf["embedding"] for _ in range(IVF_NPROBE)
-            ]
-            yield frame
-
-    queries = (
-        emb.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .mapInPandas(probe_kernel, probe_schema)
+    queries = arrow_stage(
+        emb.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding"),
+        probe_kernel,
+        probe_schema,
     )
     cands = (
         assign.join(F.broadcast(queries), "cell")
@@ -477,27 +445,20 @@ def kmeans_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def make_assign(cmat):
-        def assign(iterator):
-            import pandas as pd
-
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    continue
-                mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 ; argmin ties -> lowest id
-                d2 = (
-                    (mat * mat).sum(axis=1, keepdims=True)
-                    - 2.0 * (mat @ cmat.T)
-                    + (cmat * cmat).sum(axis=1)
-                )
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].values,
-                        "cluster": d2.argmin(axis=1).astype("int32"),
-                        "sq_dist": d2.min(axis=1),
-                        "embedding": pdf["embedding"].values,
-                    }
-                )
+        def assign(batch):
+            mat = _embedding_matrix(batch).astype(np.float64)
+            # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 ; argmin ties -> lowest id
+            d2 = (
+                (mat * mat).sum(axis=1, keepdims=True)
+                - 2.0 * (mat @ cmat.T)
+                + (cmat * cmat).sum(axis=1)
+            )
+            return (
+                batch.column("vec_id"),
+                d2.argmin(axis=1).astype("int32"),
+                d2.min(axis=1),
+                batch.column("embedding"),
+            )
 
         return assign
 
@@ -510,26 +471,19 @@ def kmeans_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def make_partials(cmat):
-        def partials(iterator):
-            import pandas as pd
-
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    continue
-                mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                d2 = (
-                    (mat * mat).sum(axis=1, keepdims=True)
-                    - 2.0 * (mat @ cmat.T)
-                    + (cmat * cmat).sum(axis=1)
-                )
-                a = d2.argmin(axis=1)
-                out = []
-                for c in np.unique(a):
-                    sel = mat[a == c]
-                    out.append(
-                        (int(c), [float(len(sel))] + sel.sum(axis=0).tolist())
-                    )
-                yield pd.DataFrame(out, columns=["cluster", "acc"])
+        def partials(batch):
+            mat = _embedding_matrix(batch).astype(np.float64)
+            d2 = (
+                (mat * mat).sum(axis=1, keepdims=True)
+                - 2.0 * (mat @ cmat.T)
+                + (cmat * cmat).sum(axis=1)
+            )
+            a = d2.argmin(axis=1)
+            clusters = np.unique(a)
+            return clusters.astype(np.int32), [
+                [float((a == c).sum())] + mat[a == c].sum(axis=0).tolist()
+                for c in clusters
+            ]
 
         return partials
 
@@ -537,8 +491,11 @@ def kmeans_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
         # kernel emits <= k partial rows per Arrow batch; a map-side-
         # combined (cluster, slot) sum reduces them to k*(dim+1) scalars
         sums = (
-            emb.select("vec_id", "embedding")
-            .mapInPandas(make_partials(cents), partial_schema)
+            arrow_stage(
+                emb.select("vec_id", "embedding"),
+                make_partials(cents),
+                partial_schema,
+            )
             .select("cluster", F.posexplode("acc").alias("slot", "v"))
             .groupBy("cluster", "slot")
             .agg(F.sum("v").alias("s"))
@@ -557,8 +514,8 @@ def kmeans_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         cents = new_cents
 
-    final = emb.select("vec_id", "embedding").mapInPandas(
-        make_assign(cents), assign_schema
+    final = arrow_stage(
+        emb.select("vec_id", "embedding"), make_assign(cents), assign_schema
     )
     return final.select(
         "vec_id", "cluster", F.round(F.col("sq_dist"), 6).alias("sq_dist")

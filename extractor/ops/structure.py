@@ -10,7 +10,7 @@ outline, not a token count), structure-based quality signals (documents
 with no headings over N tokens read as boilerplate dumps), and
 hierarchical citation anchors for retrieval.
 
-Scale posture (100 TB): one map-only Arrow stage — ``mapInPandas``
+Scale posture (100 TB): one map-only Arrow stage — ``arrow_stage``
 parses each batch and yields the exploded per-heading rows directly
 (no Spark-side explode, no shuffle); section numbers are computed
 inside the same walk from a six-level counter stack, so downstream
@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from extractor.session import arrow_stage
 
 HEADING_SCHEMA = (
     "doc_id long, pos int, level int, section_no string, text string"
@@ -41,42 +43,32 @@ def extract_headings(df: DataFrame) -> DataFrame:
     signal in itself."""
     from ..dom import parse_html
 
-    def kernel(iterator):
-        import pandas as pd
+    def kernel(batch):
+        ids, poss, lvls, secs, texts = [], [], [], [], []
+        for doc_id, html in zip(
+            batch.column("doc_id").to_pylist(), batch.column("html").to_pylist()
+        ):
+            if html is None:
+                continue
+            try:
+                root = parse_html(html)
+            except Exception:
+                continue  # per-unit containment, as in extract_links
+            counters = [0] * 6
+            pos = 0
+            for el in root.find_all(_H_TAGS):
+                lvl = int(el.tag[1])
+                counters[lvl - 1] += 1
+                for k in range(lvl, 6):
+                    counters[k] = 0
+                ids.append(doc_id)
+                poss.append(pos)
+                lvls.append(lvl)
+                secs.append(".".join(str(c) for c in counters[:lvl]))
+                texts.append(el.get_text())
+                pos += 1
+        return ids, poss, lvls, secs, texts
 
-        for batch in iterator:
-            ids, poss, lvls, secs, texts = [], [], [], [], []
-            for doc_id, html in zip(batch["doc_id"], batch["html"]):
-                if html is None:
-                    continue
-                try:
-                    root = parse_html(html)
-                except Exception:
-                    continue  # per-unit containment, as in extract_links
-                counters = [0] * 6
-                pos = 0
-                for el in root.find_all(_H_TAGS):
-                    lvl = int(el.tag[1])
-                    counters[lvl - 1] += 1
-                    for k in range(lvl, 6):
-                        counters[k] = 0
-                    ids.append(int(doc_id))
-                    poss.append(pos)
-                    lvls.append(lvl)
-                    secs.append(".".join(str(c) for c in counters[:lvl]))
-                    texts.append(el.get_text())
-                    pos += 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "pos": poss,
-                    "level": lvls,
-                    "section_no": secs,
-                    "text": texts,
-                }
-            )
-
-    return (
-        df.select(F.col("doc_id"), F.col("html"))
-        .mapInPandas(kernel, schema=HEADING_SCHEMA)
+    return arrow_stage(
+        df.select(F.col("doc_id"), F.col("html")), kernel, HEADING_SCHEMA
     )

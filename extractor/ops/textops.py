@@ -12,6 +12,7 @@ from pyspark.sql.window import Window
 
 from extractor.fanout import fan_out_scan
 from extractor.ops import md5_bucket
+from extractor.session import arrow_stage
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 
@@ -530,7 +531,7 @@ def nfc_normalize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     step every multilingual training pipeline runs before dedup/hashing
     (composed vs decomposed accents otherwise defeat exact-hash dedup).
 
-    Spark has no built-in normalizer, so this is an Arrow ``mapInPandas``
+    Spark has no built-in normalizer, so this is an ``arrow_stage``
     kernel (batched, zero per-row Python round-trips) over
     ``unicodedata.normalize("NFC", ...)``; a deterministic DECOMPOSED
     suffix (combining acute/ring repeated ``doc_id % 3 + 1`` times) is
@@ -542,32 +543,23 @@ def nfc_normalize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
 
-    def kernel(iterator):
+    def kernel(batch):
         import hashlib
         import unicodedata
 
-        import pandas as pd
+        raw_len, nfc_len, digest = [], [], []
+        for doc_id, text in zip(
+            batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
+        ):
+            s = text + "é" * (doc_id % 3 + 1) + "Å"
+            n = unicodedata.normalize("NFC", s)
+            raw_len.append(len(s))
+            nfc_len.append(len(n))
+            digest.append(hashlib.md5(n.encode("utf-8")).hexdigest())
+        return batch.column("doc_id"), raw_len, nfc_len, digest
 
-        for batch in iterator:
-            ids, raw_len, nfc_len, digest = [], [], [], []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                s = text + "é" * (int(doc_id) % 3 + 1) + "Å"
-                n = unicodedata.normalize("NFC", s)
-                ids.append(int(doc_id))
-                raw_len.append(len(s))
-                nfc_len.append(len(n))
-                digest.append(hashlib.md5(n.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "len_raw": raw_len,
-                    "len_nfc": nfc_len,
-                    "nfc_md5": digest,
-                }
-            )
-
-    return docs.mapInPandas(
-        kernel, "doc_id long, len_raw long, len_nfc long, nfc_md5 string"
+    return arrow_stage(
+        docs, kernel, "doc_id long, len_raw long, len_nfc long, nfc_md5 string"
     )
 
 
@@ -734,7 +726,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject top-k — no global sort.  The transient
     per-document pair array is bounded by the max document length (the
     same bound as holding the text cell itself); for multi-GB cells
-    switch the generation to ``mapInPandas`` emitting pre-counted
+    switch the generation to an ``arrow_stage`` kernel emitting pre-counted
     (pair, n) partials — the aggregate topology is unchanged."""
     docs = _docs(spark, sf_dir).where(
         F.col("text").isNotNull() & (F.length("text") >= 2)

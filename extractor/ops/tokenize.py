@@ -21,7 +21,7 @@ Scale posture (100 TB corpus):
   memory with the classic pair-count update — per-iteration cost is the
   CHANGED words only, not a corpus rescan.
 * **Encoding** is map-only: the learned merge ranks broadcast to every
-  task as a dict, application is an Arrow ``mapInPandas`` with a
+  task as a dict, application is an ``arrow_stage`` kernel with a
   per-word memo (Zipf again: the hit rate is the corpus's type/token
   ratio).  No shuffle, no driver involvement, embarrassingly parallel —
   the plan shape the 10^12-turn target requires.  Python is unavoidable
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from extractor.ops import md5_bucket
-from extractor.session import local_frame
+from extractor.session import arrow_stage, local_frame
 
 END_OF_WORD = "</w>"
 
@@ -113,8 +113,8 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 
 
 def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
-    """Map-only distributed encode: broadcast the merge ranks, Arrow
-    ``mapInPandas`` over the corpus, per-word memo cache.  Output one
+    """Map-only distributed encode: broadcast the merge ranks, an
+    ``arrow_stage`` kernel over the corpus, per-word memo cache.  Output one
     row per input row: ``(doc_id, n_words, n_tokens, tokens_md5)`` —
     the md5 is over the space-joined token stream, so the oracle-style
     golden checks pin the exact segmentation, not just counts."""
@@ -126,39 +126,31 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
         T.StructField("tokens_md5", T.StringType()),
     ])
 
-    def encode_batches(batches):
-        import hashlib
-        import re
+    import hashlib
+    import re
 
-        import pandas as pd
+    ws = re.compile(r"[ \t\r\n\f\v]+")  # same class as word_counts
+    memo: dict[str, list[str]] = {}  # one per task: each unpickles its own
 
-        ws = re.compile(r"[ \t\r\n\f\v]+")  # same class as word_counts
+    def enc(word):
+        got = memo.get(word)
+        if got is None:
+            got = memo[word] = encode_word(word, ranks)
+        return got
 
-        memo: dict[str, list[str]] = {}
+    def encode(batch):
+        nw, nt, h = [], [], []
+        for text in batch.column("text").to_pylist():
+            words = [w for w in ws.split((text or "").lower().strip()) if w]
+            toks: list[str] = []
+            for w in words:
+                toks.extend(enc(w))
+            nw.append(len(words))
+            nt.append(len(toks))
+            h.append(hashlib.md5(" ".join(toks).encode()).hexdigest())
+        return batch.column("doc_id"), nw, nt, h
 
-        def enc(word):
-            got = memo.get(word)
-            if got is None:
-                got = memo[word] = encode_word(word, ranks)
-            return got
-
-        for pdf in batches:
-            ids, nw, nt, h = [], [], [], []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                words = [w for w in ws.split((text or "").lower().strip())
-                         if w]
-                toks: list[str] = []
-                for w in words:
-                    toks.extend(enc(w))
-                ids.append(rid)
-                nw.append(len(words))
-                nt.append(len(toks))
-                h.append(hashlib.md5(" ".join(toks).encode()).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_words": nw, "n_tokens": nt,
-                 "tokens_md5": h})
-
-    return docs.select("doc_id", "text").mapInPandas(encode_batches, out_schema)
+    return arrow_stage(docs.select("doc_id", "text"), encode, out_schema)
 
 
 # ------------------------------------------------------- (spark, sf_dir)
@@ -255,7 +247,7 @@ def unigram_lm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocab is ALL single characters (guaranteeing segmentability)
     plus the top ``ULM_MAX_VOCAB`` longer pieces.  Each E-step runs
     distributed — the piece log-prob dict (vocab-sized) broadcasts into
-    an Arrow ``mapInPandas`` Viterbi kernel over the word table, usage
+    an ``arrow_stage`` Viterbi kernel over the word table, usage
     aggregates with map-side combine — and the M-step collects only the
     vocab-sized count table (bounded, same contract as the k-means
     centroid collect).  Probabilities are add-one smoothed so every
@@ -308,21 +300,18 @@ def unigram_lm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         blogp = spark.sparkContext.broadcast(logp)
 
-        def estep(batches, _mpl=ULM_MAX_PIECE_LEN):
-            import pandas as pd
-
-            for pdf in batches:
-                acc = {}
-                model = blogp.value
-                for word, n in zip(pdf["word"], pdf["n"]):
-                    for piece in _viterbi_segment(word, model, _mpl):
-                        acc[piece] = acc.get(piece, 0) + int(n)
-                yield pd.DataFrame(
-                    {"piece": list(acc), "n_uses": list(acc.values())}
-                )
+        def estep(batch, _mpl=ULM_MAX_PIECE_LEN):
+            acc = {}
+            model = blogp.value
+            for word, n in zip(
+                batch.column("word").to_pylist(), batch.column("n").to_pylist()
+            ):
+                for piece in _viterbi_segment(word, model, _mpl):
+                    acc[piece] = acc.get(piece, 0) + n
+            return list(acc), list(acc.values())
 
         usage = (
-            words.mapInPandas(estep, out_schema)
+            arrow_stage(words, estep, out_schema)
             .groupBy("piece")
             .agg(F.sum("n_uses").cast("long").alias("n_uses"))
             .collect()

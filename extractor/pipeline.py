@@ -6,7 +6,7 @@ Replaces the reference's per-document loop + subprocess dataflow
 
     scan (pruned to needed columns)
       → [optional] explicit repartition on hash(conv_id) with skew salting
-      → mapInArrow(extraction kernel)         # one fused Arrow stage
+      → arrow_stage(extraction kernel)        # one fused mapInArrow stage
       → repartition(hash(conv_id)) + sortWithinPartitions(conv_id, turn_idx)
       → sink (parquet/Iceberg append) + lineage manifest
 
@@ -51,7 +51,7 @@ from .kernel import (
     ConvertOptions,
     convert_batch,
 )
-from .session import forget_zip_importers
+from .session import arrow_stage
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -72,10 +72,11 @@ OUTPUT_SCHEMA = T.StructType(
 _PASSTHROUGH = ("conv_id", "turn_idx", "role", "tool", "ts")
 
 
-def _make_extract_iter(
+def _make_extract_body(
     pass_cols: tuple, options: ConvertOptions = DEFAULT_OPTIONS
 ):
-    """mapInArrow body factory: one ``convert_batch`` call per Arrow batch.
+    """``arrow_stage`` body factory: one ``convert_batch`` call per Arrow
+    batch.
 
     *pass_cols* are the input batch's own arrays, copied to the output
     untouched — this is how per-conversation attributes (e.g. ``source``)
@@ -87,41 +88,29 @@ def _make_extract_iter(
     length in code points, 0 for NULL), the physical partition id (lineage
     key) and per-row amortized kernel seconds (so ``sum(kernel_secs)`` over
     a partition = that partition's kernel time).
-
-    Spark does not check a ``mapInArrow`` result against the declared
-    schema; it reads each column with the accessor of the declared type, so
-    every array here must carry exactly that field's Arrow type.
     """
-    names = (
-        list(pass_cols)
-        + KERNEL_SCHEMA.names
-        + ["bytes_in", "part_id", "kernel_secs"]
-    )
 
-    def _extract_iter(batches):
+    def extract(batch):
         from pyspark import TaskContext
 
-        forget_zip_importers()
         ctx = TaskContext.get()
         part_id = pa.scalar(ctx.partitionId() if ctx is not None else -1, pa.int32())
-        for batch in batches:
-            text = batch.column("text")
-            t0 = time.monotonic()
-            result = convert_batch(text.to_pylist(), options)
-            elapsed = time.monotonic() - t0
-            n = batch.num_rows
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in pass_cols]
-                + result.columns
-                + [
-                    pc.fill_null(pc.utf8_length(text), 0).cast(pa.int64()),
-                    pa.repeat(part_id, n),
-                    pa.repeat(pa.scalar(elapsed / max(n, 1), pa.float64()), n),
-                ],
-                names=names,
-            )
+        text = batch.column("text")
+        t0 = time.monotonic()
+        result = convert_batch(text.to_pylist(), options)
+        elapsed = time.monotonic() - t0
+        n = batch.num_rows
+        return (
+            [batch.column(c) for c in pass_cols]
+            + result.columns
+            + [
+                pc.fill_null(pc.utf8_length(text), 0).cast(pa.int64()),
+                pa.repeat(part_id, n),
+                pa.repeat(pa.scalar(elapsed / max(n, 1), pa.float64()), n),
+            ]
+        )
 
-    return _extract_iter
+    return extract
 
 
 def salted_partition_key(
@@ -198,7 +187,7 @@ def extract_transcripts(
         + extra_fields
         + list(OUTPUT_SCHEMA.fields[len(_PASSTHROUGH) :])
     )
-    out = slim.mapInArrow(_make_extract_iter(pass_cols, options), schema)
+    out = arrow_stage(slim, _make_extract_body(pass_cols, options), schema)
 
     if sort_output:
         n_out = df.sparkSession.sparkContext.defaultParallelism
@@ -250,8 +239,8 @@ STITCH_SCHEMA = T.StructType(
 
 def stitch_conversations(extracted: DataFrame) -> DataFrame:
     """Reassemble one markdown document per conversation from extracted
-    turns — the downstream-trainer view.  ``applyInPandas`` over the
-    conv_id group: each group arrives as one pandas frame, is sorted by
+    turns — the downstream-trainer view.  A grouped ``arrow_stage`` over
+    the conv_id group: each group arrives as one Arrow table, is sorted by
     turn_idx (stable order regardless of upstream salting), and rendered
     as ``[role] text`` sections.
 
@@ -261,21 +250,21 @@ def stitch_conversations(extracted: DataFrame) -> DataFrame:
     that genuinely requires conv-colocation — exactly what hash(conv_id)
     partitioning provides, one shuffle)."""
 
-    def stitch(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("turn_idx")
-        parts = []
-        for role, text in zip(pdf["role"], pdf["extracted_text"]):
-            if text:
-                parts.append(f"[{role or 'unknown'}]\n{text}")
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "n_turns": [len(pdf)],
-                "n_errors": [int(pdf["error"].notna().sum())],
-                "conversation_markdown": ["\n\n".join(parts)],
-            }
+    def stitch(table):
+        table = table.sort_by("turn_idx")
+        parts = [
+            f"[{role or 'unknown'}]\n{text}"
+            for role, text in zip(
+                table.column("role").to_pylist(),
+                table.column("extracted_text").to_pylist(),
+            )
+            if text
+        ]
+        return (
+            [table.column("conv_id")[0].as_py()],
+            [table.num_rows],
+            [table.num_rows - table.column("error").null_count],
+            ["\n\n".join(parts)],
         )
 
-    return extracted.groupBy("conv_id").applyInPandas(stitch, STITCH_SCHEMA)
+    return arrow_stage(extracted.groupBy("conv_id"), stitch, STITCH_SCHEMA)

@@ -12,8 +12,8 @@ Rules (each keyed, so callers can allowlist deliberate choices):
                               condition — fine for a tiny side, fatal
                               when both sides are data-sized.
 - ``python_row_udf``          BatchEvalPython: row-at-a-time Python in
-                              the hot path (10-100x slower than Arrow
-                              ``mapInPandas``/pandas UDFs).
+                              the hot path (10-100x slower than an
+                              Arrow-batched kernel stage).
 - ``single_partition_exchange``  Exchange SinglePartition: the whole
                               relation funnels through one task (global
                               window without partitionBy, coalesce(1),
@@ -119,7 +119,8 @@ def lint_plan(df: DataFrame) -> list[dict]:
         elif text.startswith("BatchEvalPython"):
             hit("python_row_udf", text,
                 "row-at-a-time Python UDF; rewrite as built-in "
-                "functions or an Arrow pandas UDF / mapInPandas")
+                "functions or an Arrow-batched kernel "
+                "(extractor.session.arrow_stage)")
         elif text.startswith("Expand"):
             hit("multi_distinct_expand", text,
                 "multi-distinct aggregate multiplies shuffle volume; "

@@ -24,7 +24,7 @@ Images are sniffed and counted, never decoded — the reference counts the
 extracted media files and renders no pixels, and the PDF branch here
 counts image XObject streams the same way (``pdf.image_count``).
 
-Everything runs inside one Arrow ``mapInPandas`` kernel: sniff + decode +
+Everything runs inside one ``arrow_stage`` kernel: sniff + decode +
 convert per record batch, zero per-row Python dispatch from Spark's side,
 no shuffle — the same map-only shape as the main extraction pipeline, so
 the routed path scales exactly like ``extract_transcripts`` does.
@@ -197,25 +197,3 @@ def route_payload(payload) -> dict:
         out["extracted_text"] = None
         out["error"] = f"route_error: {type(exc).__name__}: {str(exc)[:200]}"
     return out
-
-
-def route_batch(payloads):
-    """Arrow-batch wrapper: ``pd.Series -> pd.DataFrame`` (one call per
-    record batch inside ``mapInPandas``)."""
-    import pandas as pd
-
-    rows = [
-        route_payload(None if value is None or value is pd.NA else value)
-        for value in payloads
-    ]
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "format",
-            "extracted_text",
-            "tables_count",
-            "math_count",
-            "images_count",
-            "error",
-        ],
-    )

@@ -25,7 +25,7 @@ import sys
 import zipimport
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, GroupedData, SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 ARROW_BATCH_ROWS = 8192
@@ -87,6 +87,82 @@ def forget_zip_importers() -> None:
             sys.path_importer_cache.pop(path, None)
 
 
+def _arrow_columns(columns, schema: T.StructType, arrow_schema: pa.Schema) -> list:
+    """One Arrow array per field of *schema*, in field order, each with
+    exactly the field's type in *arrow_schema*.
+
+    A column that is already an Arrow array (chunked or not) is cast only
+    when its type differs.  Any other column is a sequence of Python
+    values; they go through the field's ``toInternal`` when its type needs
+    it, so naive datetimes, nested structs and ``None`` mean what they mean
+    in ``spark.createDataFrame(list)``.
+    """
+    arrays = []
+    for values, field, arrow_field in zip(
+        columns, schema.fields, arrow_schema, strict=True
+    ):
+        if isinstance(values, pa.ChunkedArray):
+            values = values.combine_chunks()
+        if isinstance(values, pa.Array):
+            if values.type != arrow_field.type:
+                values = values.cast(arrow_field.type)
+        else:
+            if field.dataType.needConversion():
+                values = [field.dataType.toInternal(v) for v in values]
+            values = pa.array(values, arrow_field.type)
+        arrays.append(values)
+    return arrays
+
+
+def _arrow_task(body, schema: T.StructType):
+    """The Python-worker side of ``arrow_stage``: an iterator function
+    over input Arrow batches that yields one output batch per non-empty
+    input batch."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def task(batches):
+        forget_zip_importers()
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                _arrow_columns(body(batch), schema, arrow_schema),
+                schema=arrow_schema,
+            )
+
+    return task
+
+
+def arrow_stage(
+    frame: DataFrame | GroupedData, body, schema: T.StructType | str
+) -> DataFrame:
+    """The Python stage of every kernel: *body* runs in the Python workers
+    over Arrow data and returns its output as columns.
+
+    Over a DataFrame this is ``mapInArrow``, and ``body(batch)`` is called
+    once per non-empty input ``pa.RecordBatch``.  Over ``GroupedData`` it is
+    ``applyInArrow``, and ``body(table)`` is called once per group with
+    that group's rows as a ``pa.Table``.  Either way *body* returns one
+    column per field of *schema* (a ``StructType`` or DDL string), in
+    field order: an Arrow array or a sequence of Python values.
+
+    Spark does not check a ``mapInArrow`` result against the declared
+    schema; it reads each column with the accessor of the declared type.
+    So every output column is built with exactly its field's Arrow type,
+    by the same builder ``local_frame`` uses.  Each task first calls
+    ``forget_zip_importers``, so the task after it skips the zip-directory
+    re-read.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    task = _arrow_task(body, schema)
+    if isinstance(frame, GroupedData):
+        return frame.applyInArrow(
+            lambda table: pa.Table.from_batches(task([table])), schema
+        )
+    return frame.mapInArrow(task, schema)
+
+
 def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
     """A DataFrame of *rows* (tuples or ``Row`` objects, in *schema*'s field
     order) built on the driver as an Arrow table, so Spark holds it as a
@@ -97,14 +173,10 @@ def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFr
     unpickle the rows, 0.35-0.5 s per action at ``local[2]`` even for a few
     rows.  An Arrow table is handed to the JVM whole and scanned as a local
     table (a ``ParallelCollectionRDD``), with no Python worker behind it.
-    Values go through each field's ``toInternal`` first, so naive
-    datetimes, nested structs and ``None`` mean what they mean in the list
-    path.
     """
     arrow_schema = to_arrow_schema(schema)
-    columns = [
-        pa.array([f.dataType.toInternal(r[i]) for r in rows], a.type)
-        for i, (f, a) in enumerate(zip(schema.fields, arrow_schema))
-    ]
-    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    columns = [[r[i] for r in rows] for i in range(len(schema.fields))]
+    table = pa.Table.from_arrays(
+        _arrow_columns(columns, schema, arrow_schema), schema=arrow_schema
+    )
     return spark.createDataFrame(table, schema)

@@ -7,7 +7,7 @@ snapshot-driven resumable requirement; this module adds the *continuous
 ingest* variant for transcript streams:
 
     readStream(parquet dir, file source)
-      → mapInArrow(extraction kernel)           # stateless → streaming-safe
+      → arrow_stage(extraction kernel)          # stateless → streaming-safe
       → writeStream(parquet sink, checkpointLocation, availableNow)
 
 Exactly-once: the file-source + file-sink pair is end-to-end exactly-once
@@ -15,7 +15,7 @@ under Spark's streaming checkpoint (source offsets + sink commit log), so a
 turn arriving in any micro-batch is extracted exactly once even across
 restarts — the streaming twin of the bucket checkpoint table.
 
-The kernel stage is identical to batch (same kernel iterator), so per-turn
+The kernel stage is identical to batch (same kernel body), so per-turn
 output is byte-identical between batch and streaming paths (tested).
 
 Scale: file-source streaming shards by arriving files; at 10^12-turn scale
@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from .pipeline import _PASSTHROUGH, OUTPUT_SCHEMA, _make_extract_iter
-from .session import local_frame
+from .pipeline import _PASSTHROUGH, OUTPUT_SCHEMA, _make_extract_body
+from .session import arrow_stage, local_frame
 from .transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -56,7 +56,7 @@ def stream_extract(
         .option("latestFirst", "false")
         .parquet(input_dir)
     )
-    extracted = stream.mapInArrow(_make_extract_iter(_PASSTHROUGH), OUTPUT_SCHEMA)
+    extracted = arrow_stage(stream, _make_extract_body(_PASSTHROUGH), OUTPUT_SCHEMA)
     return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)

@@ -4,10 +4,10 @@ text string, tool string, ts timestamp)``.
 
 Design for scale: generation itself is *distributed* — the driver only plans
 ``spark.range(n_convs)``; each executor expands its conversations into turns
-inside an Arrow-batched ``mapInPandas``.  Every value derives purely from
-``(seed, conv_index, turn_idx)``, so output is identical at any parallelism
-(the determinism test relies on this) and generation of a 10^12-turn table
-would parallelize linearly with no driver bottleneck.
+inside an ``arrow_stage`` kernel, one Arrow batch at a time.  Every value
+derives purely from ``(seed, conv_index, turn_idx)``, so output is identical
+at any parallelism (the determinism test relies on this) and generation of a
+10^12-turn table would parallelize linearly with no driver bottleneck.
 
 Payload mix per FIXTURES.md: prose, HTML tables (header/no-header/ragged/
 images-in-cells), math in all four extraction modes and both delimiters,
@@ -24,6 +24,8 @@ import datetime as dt
 import random
 
 from pyspark.sql import DataFrame, SparkSession, types as T
+
+from .session import arrow_stage
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -162,16 +164,13 @@ def transcripts_df(
 ) -> DataFrame:
     """Distributed deterministic transcripts table."""
 
-    def expand(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            out = []
-            for conv_index in pdf["id"]:
-                out.extend(generate_conversation(seed, int(conv_index), mean_turns))
-            yield pd.DataFrame(
-                out, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-            )
+    def expand(batch):
+        rows = [
+            row
+            for conv_index in batch.column("id").to_pylist()
+            for row in generate_conversation(seed, conv_index, mean_turns)
+        ]
+        return [[row[i] for row in rows] for i in range(len(TRANSCRIPT_SCHEMA))]
 
     base = spark.range(n_convs).repartition(max(spark.sparkContext.defaultParallelism, 4))
-    return base.mapInPandas(expand, TRANSCRIPT_SCHEMA)
+    return arrow_stage(base, expand, TRANSCRIPT_SCHEMA)

@@ -3,13 +3,9 @@ Spark Arrow path."""
 
 import json
 
-from extractor.boilerplate import strip_boilerplate, strip_boilerplate_batch
-from extractor.layout import (
-    linearize_layout,
-    parse_layout,
-    parse_layout_batch,
-    synth_layout_doc,
-)
+from extractor.boilerplate import strip_boilerplate
+from extractor.layout import linearize_layout, parse_layout, synth_layout_doc
+from extractor.session import _arrow_task, arrow_stage
 
 PAGE = """
 <html><body>
@@ -97,19 +93,57 @@ def test_layout_error_containment():
 
 
 def test_batch_wrappers():
-    import pandas as pd
+    """Both kernels run batch-wise through the stage helper's task body:
+    a NULL input is an error row, never a failed batch."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
-    bp = strip_boilerplate_batch(pd.Series([PAGE, None, "plain text here"]))
-    assert list(bp.columns) == [
+    def bp_body(batch):
+        res = [strip_boilerplate(h) for h in batch.column("html").to_pylist()]
+        return (
+            [r.main_text for r in res],
+            [r.n_blocks for r in res],
+            [r.n_good for r in res],
+            [r.boilerplate_ratio for r in res],
+            [r.error for r in res],
+        )
+
+    bp_task = _arrow_task(
+        bp_body,
+        T.StructType(
+            [
+                T.StructField("main_text", T.StringType()),
+                T.StructField("n_blocks", T.IntegerType()),
+                T.StructField("n_good", T.IntegerType()),
+                T.StructField("boilerplate_ratio", T.DoubleType()),
+                T.StructField("error", T.StringType()),
+            ]
+        ),
+    )
+    (bp,) = bp_task([pa.record_batch({"html": [PAGE, None, "plain text here"]})])
+    assert bp.schema.names == [
         "main_text", "n_blocks", "n_good", "boilerplate_ratio", "error",
     ]
-    assert bp.iloc[1]["error"] == "null_input"
+    assert bp.column("error")[1].as_py() == "null_input"
 
-    lay = parse_layout_batch(
-        pd.Series([synth_layout_doc(1, 1), None], dtype=object)
+    def lay_body(batch):
+        res = [parse_layout(p) for p in batch.column("payload").to_pylist()]
+        return [r.text for r in res], [r.error for r in res]
+
+    lay_task = _arrow_task(
+        lay_body,
+        T.StructType(
+            [
+                T.StructField("text", T.StringType()),
+                T.StructField("error", T.StringType()),
+            ]
+        ),
     )
-    assert lay.iloc[0]["error"] is None
-    assert lay.iloc[1]["error"].startswith("layout_error")
+    (lay,) = lay_task(
+        [pa.record_batch({"payload": [synth_layout_doc(1, 1), None]})]
+    )
+    assert lay.column("error")[0].as_py() is None
+    assert lay.column("error")[1].as_py().startswith("layout_error")
 
 
 def test_spark_paths(spark):
@@ -137,13 +171,18 @@ def test_spark_paths(spark):
         ]
     )
 
-    def bp_kernel(iterator):
-        for pdf in iterator:
-            out = strip_boilerplate_batch(pdf["html"])
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
+    def bp_kernel(batch):
+        res = [strip_boilerplate(h) for h in batch.column("html").to_pylist()]
+        return (
+            batch.column("doc_id"),
+            [r.main_text for r in res],
+            [r.n_blocks for r in res],
+            [r.n_good for r in res],
+            [r.boilerplate_ratio for r in res],
+            [r.error for r in res],
+        )
 
-    rows = wrapped.mapInPandas(bp_kernel, schema).collect()
+    rows = arrow_stage(wrapped, bp_kernel, schema).collect()
     assert rows
     for r in rows[:20]:
         if r["error"] is None and r["main_text"]:

@@ -518,6 +518,7 @@ def test_c4_and_mojibake_map_only(spark):
         assert _n_exchanges(plan) == 0, plan
         # scan -> filter -> projections only; no join, no python stage
         assert "Join" not in plan and "InPandas" not in plan
+        assert "InArrow" not in plan
 
 
 def test_matryoshka_windowgrouplimit_and_broadcast(spark):
@@ -537,7 +538,7 @@ def test_bin_pack_single_shard_shuffle(spark):
     plan = formatted_plan(bin_pack_nextfit(spark, SF))
     # exactly one Exchange: the hash shuffle into packing shards
     assert _n_exchanges(plan) == 1, plan
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
 
 
 def test_grounding_audit_conv_locked_join(spark):

@@ -91,7 +91,7 @@ def _assert_streamed_spines_shuffle_free(plan: str):
                 # next node down the first-child spine (tree indents by 3)
                 spine_depth = d if spine_depth is None else spine_depth + 3
                 assert not t.startswith("Exchange"), f"shuffle on streamed spine: {t}\n{plan}"
-                if t.startswith(("Scan", "MapInPandas", "BroadcastExchange")):
+                if t.startswith(("Scan", "MapInArrow", "BroadcastExchange")):
                     break
             j += 1
 
@@ -101,7 +101,7 @@ def test_ann_candidate_join_is_bucket_local_broadcast(spark, layout):
     plan = formatted_plan(similarity.ann_topk(spark, SF, index_layout=layout))
     assert "BroadcastHashJoin" in plan, plan
     # the corpus-side assignment kernel must feed a join directly
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     _assert_streamed_spines_shuffle_free(plan)
 
 
@@ -142,7 +142,8 @@ def test_embedding_quantize_plan_map_only(spark):
     df = embedding_quantize_int8(spark, "/root/testdata/sf0.001")
     plan = formatted_plan(df)
     assert "Exchange" not in plan, plan
-    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                 "MapInArrow"):
         assert node not in plan, node
 
 

@@ -127,5 +127,6 @@ def test_gap_fill_locf_plan_no_python_no_cartesian(spark):
     # no Python execution stage (the createDataFrame source's
     # applySchemaToPythonRDD scan is not one) and no cross product
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                 "FlatMapGroupsInPandas", "CartesianProduct"):
+                 "FlatMapGroupsInPandas", "MapInArrow",
+                 "FlatMapGroupsInArrow", "CartesianProduct"):
         assert node not in plan, node
